@@ -12,7 +12,7 @@ engine/      pure-Python row semantics (lexers, bank rule tables, state
              machines) — runs *inside* Arrow-vectorized UDF batches
 pdfio/       our own PDF byte-stream tokenizer + deterministic PDF writer
              + HTML boilerplate stripper (no pdfplumber dependency)
-pipeline.py  the Spark fidelity path: mapInPandas extraction + parsing,
+pipeline.py  the Spark fidelity path: mapInArrow extraction + parsing,
              salted repartition, metrics sidecar, snapshot/resume
 relational.py the Spark relational path: exploded lines + window-function
              block segmentation + native Catalyst expressions

@@ -1,7 +1,7 @@
 """End-to-end Spark fidelity path vs reference goldens.
 
 Runs the full job ONCE (module-scoped fixture: PDF/HTML/text payload
-mix → salted repartition → mapInPandas extract+parse → tx table +
+mix → salted repartition → mapInArrow extract+parse → tx table +
 metrics sidecar) and checks:
 
 * every (url, tx_index, date, description, amount, direction) matches

@@ -59,17 +59,25 @@ _MP_CHILD = r"""
 import json, multiprocessing as mp, os, sys, time
 sys.path.insert(0, "%(repo)s")
 from pdf_parser_spark.pages_source import fixture_pages_rows
-from pdf_parser_spark.pipeline import _parse_batches
-import pandas as pd
+from pdf_parser_spark.pipeline import _parse_arrow_batches
+import pyarrow as pa
 
 cpus = int(sys.argv[1]); repeat = int(sys.argv[2])
 rows = fixture_pages_rows(repeat=repeat)
 cols = ["url", "warc_ts", "html", "text"]
-frames = [pd.DataFrame([r[:4] for r in rows[i::cpus * 4]], columns=cols)
+
+def batches(chunk):
+    # the worker Spark runs, fed Arrow batches of the session's
+    # maxRecordsPerBatch (16) rows
+    return [pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in zip(*chunk[j:j + 16])], names=cols)
+            for j in range(0, len(chunk), 16)]
+
+frames = [batches([r[:4] for r in rows[i::cpus * 4]])
           for i in range(cpus * 4)]
 
-def work(frame):
-    return sum(len(out) for out in _parse_batches(iter([frame])))
+def work(task):
+    return sum(b.num_rows for b in _parse_arrow_batches(iter(task)))
 
 with mp.Pool(cpus) as pool:
     pool.map(work, frames[:cpus])  # warm
