@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``queries()`` exposes every SQL-expressible operator from SURVEY.md §2
-plus the training-data tier (dedup / ANN / text stats); each has a
+``queries()`` exposes the 50 driver-adjudicated operators; each has a
 DuckDB oracle in ``oracle_sql()`` generated from the same dialect-
 paired source (pdf_parser_spark/relational.py, pdf_parser_spark/ops/).
+``all_queries()``/``all_oracles()`` add every other registered
+operator (the retired tier, run by tests and tools/check_oracles.py).
 
 The non-SQL-expressible entries (the Arrow-batched fidelity pipeline
 and the multimodal decoders) are oracled against golden-expected
@@ -16,8 +17,13 @@ rows+schema+hash comparison.
 
 from __future__ import annotations
 
+import importlib
+import os
 import pathlib
 import sys
+import tempfile
+import weakref
+import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,12 +33,16 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from query_registry import QUERY_SQL  # noqa: E402
+from pdf_parser_spark.ops.similarity import (  # noqa: E402
+    pq_fit_df, pq_topk_df,
+)
+from pdf_parser_spark.warc import warc_oracle_sql  # noqa: E402
 
 _TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
            "lineitem", "events", "documents", "embeddings"]
+_GOLDEN = _REPO / "tests" / "golden"
 
-
-import weakref
+Side = Callable[[SparkSession, str], DataFrame]
 
 # session -> {(sf_dir, table): DataFrame}; weak keys so a stopped
 # session's entries vanish with it (no id()-reuse hazard, no leak)
@@ -66,32 +76,45 @@ def entry(spark: SparkSession) -> DataFrame:
     return spark.sql(QUERY_SQL["generic_relational"]["spark"])
 
 
-def _sql_query(name: str):
+def _sql_query(name: str) -> Side:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register(spark, sf_dir)
         return spark.sql(QUERY_SQL[name]["spark"])
     return run
 
 
-_PYFILES_SENT = False
+def _twin(op: str | Callable[[SparkSession], DataFrame]) -> Side:
+    """Spark side served by an operator over the registered sf tables:
+    ``op`` is ``"module:function"`` under pdf_parser_spark (imported on
+    first call) or a callable, either one called with the session."""
+    def side(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _register(spark, sf_dir)
+        if isinstance(op, str):
+            module, fn = op.split(":")
+            return getattr(importlib.import_module(
+                "pdf_parser_spark." + module), fn)(spark)
+        return op(spark)
+    return side
+
+
+# SparkContext applicationIds that already hold the package zip
+_PYFILES_SENT: set[str] = set()
 
 
 def _ensure_pyfiles(spark: SparkSession) -> None:
-    """Executors must resolve pdf_parser_spark for mapInPandas even if
-    the driver-owned session was created outside this repo: ship the
-    package once via addPyFile."""
-    global _PYFILES_SENT
-    if _PYFILES_SENT:
+    """Executors must resolve pdf_parser_spark in every Python worker
+    even if the driver-owned session was created outside this repo:
+    ship the package once per SparkContext via addPyFile."""
+    sc = spark.sparkContext
+    if sc.applicationId in _PYFILES_SENT:
         return
-    import tempfile
-    import zipfile
-
-    zpath = tempfile.mktemp(prefix="pdf_parser_spark_", suffix=".zip")
+    fd, zpath = tempfile.mkstemp(prefix="pdf_parser_spark_", suffix=".zip")
+    os.close(fd)
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
         for py in sorted((_REPO / "pdf_parser_spark").rglob("*.py")):
             z.write(py, py.relative_to(_REPO))
-    spark.sparkContext.addPyFile(zpath)
-    _PYFILES_SENT = True
+    sc.addPyFile(zpath)
+    _PYFILES_SENT.add(sc.applicationId)
 
 
 def _fidelity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,7 +213,7 @@ def _image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-envelope audio fingerprint near-dup — the WAV twin of
     image_phash_neardup riding the SAME hash-agnostic banded-Hamming
-    join; oracled against encode-side brute force (retired tier)."""
+    join; oracled against encode-side brute force."""
     from pdf_parser_spark.ops.multimodal import (
         ahash_neardup, audio_fingerprint, fixture_audio_df,
     )
@@ -203,7 +226,7 @@ def _pdf_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URI link annotations per PDF page — the outlink sidecar of PDF
     extraction (feeds the link graph when the corpus page is a PDF);
     all five sibling-writer layouts + alien-writer independence are
-    test-pinned, poison payloads yield zero rows (retired tier)."""
+    test-pinned, poison payloads yield zero rows."""
     from pdf_parser_spark.ops.spans import (
         extract_links, fixture_linked_pages_df,
     )
@@ -215,7 +238,7 @@ def _pdf_form_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AcroForm (name, value) extraction per url — dotted-name /Kids
     composition, inherited and kid-overridden /V, UTF-16BE values;
     alien-writer independence (widget-merged field dicts, hex /V) is
-    test-pinned; poison payloads yield zero rows (retired tier)."""
+    test-pinned; poison payloads yield zero rows."""
     from pdf_parser_spark.ops.spans import (
         extract_form_fields, fixture_form_pages_df,
     )
@@ -229,7 +252,7 @@ def _pdf_labels_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees), all five sibling-writer layouts; ground truth is the
     encode-side request expanded via independent LOOKUP TABLES, not
     the reader's formatter; poison and label-free docs yield zero
-    rows (retired tier)."""
+    rows."""
     from pdf_parser_spark.ops.spans import (
         extract_page_labels, fixture_labeled_pages_df,
     )
@@ -242,8 +265,7 @@ def _pdf_meta_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged with the catalog XMP packet under the documented
     precedence (XMP wins title/author; /Info keeps producer +
     ISO-normalized dates); UTF-16BE and entity-escaped values
-    pinned; poison and metadata-free docs yield zero rows (retired
-    tier)."""
+    pinned; poison and metadata-free docs yield zero rows."""
     from pdf_parser_spark.ops.spans import (
         extract_doc_metadata, fixture_meta_pages_df,
     )
@@ -256,7 +278,7 @@ def _pdf_grid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     glyph positions, cells deliberately stream-shuffled by the writer
     so only coordinates carry structure; ragged tails, empty-cell
     column skips, kern-split immunity, and prose pages (zero rows)
-    all pinned; encode-side golden-parquet oracle (retired tier)."""
+    all pinned; encode-side golden-parquet oracle."""
     from pdf_parser_spark.ops.spans import (
         extract_table_grids, fixture_table_pages_df,
     )
@@ -264,32 +286,11 @@ def _pdf_grid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_table_grids(fixture_table_pages_df(spark))
 
 
-def _kcore_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixpoint-looped k-core peeling over the persisted host graph —
-    row-identical to the unrolled kcore_peel SQL (test-pinned); the
-    contract Spark side, per the promoted-twin policy above."""
-    from pdf_parser_spark.ops.webgraph import kcore_df
-
-    _register(spark, sf_dir)
-    return kcore_df(spark)
-
-
-def _opic_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative cash-distribution OPIC over the persisted link graph
-    — row-identical to the unrolled opic_priority SQL (test-pinned);
-    the contract Spark side, per the promoted-twin policy above."""
-    from pdf_parser_spark.ops.webgraph import opic_df
-
-    _register(spark, sf_dir)
-    return opic_df(spark)
-
-
 def _pdf_outline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF document-outline extraction — depth-first (level, title,
     page) per url across all five writer layouts; UTF-16BE titles,
     closed subtrees and GoTo-action destinations are test-pinned via
-    the alien writer; poison payloads yield zero rows (retired
-    tier)."""
+    the alien writer; poison payloads yield zero rows."""
     from pdf_parser_spark.ops.spans import (
         extract_bookmarks, fixture_outlined_pages_df,
     )
@@ -301,26 +302,13 @@ def _video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video sub-clip containment: hash EVERY decoded Y4M frame, then
     Broder-style asymmetric containment over frame-hash sets (equi-join
     on the hash — inverted-index shape, no all-pairs); oracled against
-    encode-side brute force (retired tier)."""
+    encode-side brute force."""
     from pdf_parser_spark.ops.multimodal import (
         fixture_videos_df, video_clip_containment, video_frame_hashes,
     )
     _ensure_pyfiles(spark)
     return video_clip_containment(
         video_frame_hashes(fixture_videos_df(spark)))
-
-
-def _ann_ivf_amortized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Amortized IVF (round-4 ask #7): ONE sample-trained fit via the
-    production ivf_index_df machinery, centroids + cell-bucketed
-    vectors persisted as tables, TWO query batches served from the
-    persisted index.  The DuckDB oracle is the unrolled SQL twin
-    (ops/similarity.py q_ivf_amortized) — identical deterministic
-    k-means, so the production path is hash-checked end-to-end."""
-    from pdf_parser_spark.ops.similarity import amortized_ivf_demo
-
-    _register(spark, sf_dir)
-    return amortized_ivf_demo(spark)
 
 
 def _media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,836 +322,159 @@ def _media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(fixture_media_df(spark))
 
 
-# Query ordering is part of the driver contract: the round-2/3
-# scoreboards recorded exactly the first 50 dict entries (in insertion
-# order) and silently dropped the rest, so the never-adjudicated
-# multimodal queries lead and the contract is now trimmed to EXACTLY 50
-# distinct components (round-4 ask #3).
-#
-# ROTATION POLICY (round-4 verdict ask #6): the registry holds ~130
-# verified components but the driver adjudicates only 50, so each
-# round ~10 long-stable §2 showcase rows (green since round ≤3, each
-# a strict sub-stage of a surviving composite query) rotate OUT to the
-# retired tier and ~10 never-driver-adjudicated post-cap rows rotate
-# IN.  Rotated-out rows keep full verification (oracle-parity pytest +
-# tools/check_oracles.py sweep both walk all_queries()); rotated-in
-# rows get the stronger driver rows+schema+hash adjudication for the
-# first time.  Round-5 rotation:
-#   OUT: d1_amount_lexer d2_slash_dates d3_d4_d5_dates d6_first_amount
-#        d8_clean_description f_noise_battery g4_block_text
-#        c9_section_window set_union_except dedup_minhash_sigs
-#        (every one is re-exercised implicitly by the surviving parser
-#        composites: the lexers/cleaners feed every *_relational row)
-#   IN:  embed_srp_neardup dedup_substring c4_clean simhash_hamming
-#        bm25_maxscore quantile_sketch redirect_resolve
-#        trustrank_seeds label_propagation bpe_encode
-#        (the last three are served as their ITERATIVE production
-#        twins — pagerank_df/lpa_df/bpe_encode_df — with the unrolled
-#        SQL as the DuckDB oracle, same pairing the sweep checks)
-#
-# Retired rows are strict sub-stages or verbatim twins of surviving
-# rows — each stays registered in QUERY_SQL (tests + fuzz still
-# exercise them), just not driver-adjudicated:
-#   s3_lines        ⊂ every downstream stmt_lines consumer
-#   g1_block_ids    ⊂ g4_block_text (same window, minus the concat)
-#   dedup_lsh_pairs ⊂ dedup_lsh_verified (same cand CTE, projection)
-#   ifb/pnb         = generic_relational verbatim (reference ifb.py/
-#                     pnb.py clone GenericParser; fuzz asserts equality)
-#   ann_brute_big   = bench-only brute twin of ann_ivf_amortized
-#   dedup_components = post-cap addition (the near-dup keeper-selection
-#                     tier); verified by the in-repo oracle-parity
-#                     pytest + tools/check_oracles (both sweep
-#                     all_queries), kept outside the 50 so no existing
-#                     driver row loses adjudication
-#   quality_repetition / pii_scrub / decontam_13gram /
-#   quality_sampling / curation_pipeline = post-cap
-#                     additions (Gopher-style repetition filters; PII
-#                     detect+redact; 13-gram benchmark decontamination;
-#                     quality-stratified deterministic sampling; the
-#                     one-plan curation composition)
-#                     — same all_queries verification path as
-#                     dedup_components
-#   link_graph / host_pagerank / boilerplate_lines / bm25_topk =
-#                     post-cap additions (web-graph tier: anchor
-#                     extraction, integer-exact PageRank with the
-#                     production iterative twin pagerank_df, CCNet
-#                     per-host line dedup; integer-exact BM25 top-k
-#                     retrieval) — same all_queries verification path
-_SPECIALS_FIRST = ["multimodal_features",
-                   "image_phash_neardup",
-                   "fidelity_pipeline",
-                   "span_dedup",
-                   # round-5 final rotation IN: the PDF structure
-                   # extractors (links + outline), never adjudicated
-                   "pdf_link_extract", "pdf_outline_extract"]
-_DRIVER_RETIRED = {"s3_lines", "g1_block_ids", "dedup_lsh_pairs",
-                   "ifb_relational", "pnb_relational", "ann_brute_big",
-                   # round-5 late rotation OUT, making room for the
-                   # never-adjudicated sitemap_ingest +
-                   # html_meta_extract (cap stays 50): dedup_exact is
-                   # the exact-hash tier re-exercised inside the
-                   # surviving span_dedup / dedup_lsh_verified rows;
-                   # events_hourly_rollup is the simpler sibling of
-                   # the surviving events_sessions window row
-                   "dedup_exact", "events_hourly_rollup",
-                   # rotated OUT for image_phash_neardup (the rolling-
-                   # hash fingerprint showcase; its shape is
-                   # re-exercised by every dedup-tier hash-groupBy)
-                   "doc_fingerprint",
-                   # round-5 rotation OUT (see ROTATION POLICY above)
-                   "d1_amount_lexer", "d2_slash_dates", "d3_d4_d5_dates",
-                   "d6_first_amount", "d8_clean_description",
-                   "f_noise_battery", "g4_block_text",
-                   "c9_section_window", "set_union_except",
-                   "dedup_minhash_sigs",
-                   "dedup_components", "quality_repetition", "pii_scrub",
-                   "decontam_13gram", "quality_sampling", "curation_pipeline",
-                   "doc_chunking", "sequence_packing",
-                   "link_graph", "host_pagerank", "boilerplate_lines",
-                   "bm25_topk", "ccnet_ppl_buckets",
-                   "url_host_filter", "bpe_train_merges",
-                   # post-cap session-5 additions (sketch/mixing tier:
-                   # KMV cardinality sketch, Bloom frontier dedup,
-                   # temperature domain mixing, cluster-aware
-                   # leakage-safe split) — same all_queries path
-                   "kmv_distinct", "bloom_url_seen",
-                   "domain_mix_weights", "split_leakage_safe",
-                   # SemDeDup within-cell prune + DSIR importance
-                   # selection (same post-cap path)
-                   "semdedup_prune", "dsir_select", "hll_distinct",
-                   "text_normalize", "dedup_incremental",
-                   "cms_heavy_hitters",
-                   # crawl-politeness / keyword / keeper tier (post-cap
-                   # session-6 additions, same all_queries path):
-                   # RFC 9309 robots longest-match filtering, per-host
-                   # anchor-text top-k, largest-remainder fetch-budget
-                   # apportionment, per-doc tf-idf keywords, and the
-                   # keep-longest cluster-canonical dedup decision
-                   "robots_filter", "anchor_text_topk", "crawl_budget",
-                   "tfidf_keywords", "dedup_keep_best",
-                   # the crawl-tier composition: frontier verdicts with
-                   # PageRank fetch priority (edges + robots + index
-                   # state in ONE plan)
-                   "crawl_frontier",
-                   # the graph-rank tier: unrolled integer HITS
-                   # (trustrank_seeds rotated IN round 5)
-                   "hits_scores",
-                   # crawl freshness (two-snapshot diff -> recrawl
-                   # tiers) and HRW minimal-movement shard assignment
-                   "recrawl_schedule", "shard_rendezvous",
-                   # positional phrase search (bigram lead-window pass)
-                   "phrase_search",
-                   # co-citation related-host pairs (Dean & Henzinger)
-                   "cocitation_pairs",
-                   # Heritrix-style crawler-trap URL filtering
-                   "url_trap_filter",
-                   # Broder asymmetric containment (quote/subset
-                   # detection the symmetric Jaccard tier can't make)
-                   "dedup_containment",
-                   # Bharat-Broder host-pair mirror detection
-                   "mirror_hosts",
-                   # exact type-1 per-language length quantiles
-                   "length_quantiles",
-                   # RFC 9309 wildcard robots dialect ('*'/'$')
-                   "robots_wildcard_filter",
-                   # fastText-style linear quality-classifier apply
-                   "quality_classifier",
-                   # content-defined chunking (LBFS/FastCDC resync)
-                   "cdc_chunks",
-                   # degree-ordered triangle counting (Suri &
-                   # Vassilvitskii's last-reducer skew fix)
-                   "triangle_counts",
-                   # NEAR/k proximity search over positional postings
-                   "proximity_search",
-                   # per-host politeness fetch scheduling (crawl-delay
-                   # slot queues, one window per host)
-                   "politeness_schedule",
-                   # SymSpell deletion-neighborhood spell correction
-                   # (position-tagged variants, exact ed<=1 via joins)
-                   "spell_suggest",
-                   # repartitionByRange split-point planning from the
-                   # sub-bucketed mergeable histogram
-                   "range_partition_plan",
-                   # Church & Hanks PMI collocation mining (exact
-                   # staged integer ranking, top-k)
-                   "pmi_collocations",
-                   # SALSA random-walk hubs/authorities (degree-
-                   # normalized half-steps, exact integer floors)
-                   "salsa_scores",
-                   # ftfy-style mojibake repair (sloppy-cp1252 unwind,
-                   # two passes, suspect quarantine flag) — post-cap,
-                   # same all_queries path
-                   "encoding_repair",
-                   # round-5 SECOND late rotation (cap stays 50): seven
-                   # never-adjudicated session additions rotate IN
-                   # (ann_pq_codes, ann_pq_adc, feed_ingest,
-                   # script_detect, epoch_shard_plan, decontam_fuzzy,
-                   # intradoc_dedup), seven long-stable rows — each a
-                   # sub-stage or simpler sibling of a surviving row —
-                   # rotate OUT:
-                   #   ann_ivf_topk_big = the 50k-scale twin of the
-                   #     surviving ann_ivf_topk/ann_ivf_amortized pair
-                   #   dedup_ngram_jaccard ⊂ dedup_lsh_verified's
-                   #     verify core (_jaccard_ctes is shared)
-                   #   dedup_simhash ⊂ simhash_hamming (sig tier of
-                   #     the surviving banded-Hamming row)
-                   #   lang_id_heuristic → script_detect carries the
-                   #     richer classify-by-histogram adjudication
-                   #   token_stats → quality_score survives with the
-                   #     same count plumbing plus the blend
-                   #   url_canonicalize ⊂ redirect_resolve (canonical
-                   #     form feeds the surviving chain walk)
-                   #   dedup_embedding_cosine → embed_srp_neardup +
-                   #     the ANN tiers carry the cosine-verify shape
-                   "ann_ivf_topk_big", "dedup_ngram_jaccard",
-                   "dedup_simhash", "lang_id_heuristic", "token_stats",
-                   "url_canonicalize", "dedup_embedding_cosine",
-                   # post-cap final-session additions (same
-                   # all_queries verification path as the rest of the
-                   # retired tier): winnowing copied-passage matching
-                   # and the lossless prefix-filtered all-pairs join
-                   "winnow_matches", "dedup_allpairs_prefix",
-                   # post-cap final-session additions, session 2:
-                   # query-biased snippet generation (serve-side
-                   # highlighting) and k-core peeling (spam/quality
-                   # tiering of the host graph; kcore_df is the
-                   # fixpoint-looped production twin, test-pinned)
-                   # round-5 FINAL rotation (cap stays 50): the six
-                   # final-session additions rotate IN (search_snippets,
-                   # kcore_peel [twin as Spark side], headings_outline,
-                   # hyperball_nf, pdf_link_extract, pdf_outline_extract
-                   # — none ever driver-adjudicated), six long-stable
-                   # sub-stage rows rotate OUT:
-                   #   c1_detect_issuer ⊂ every parser query's
-                   #     detection gate (F16/C1 shared CASE)
-                   #   c2_direction_rules ⊂ every parser query's D20
-                   #     normalize (the shared LET'd battery)
-                   #   d13_chase_amount ⊂ chase_relational (same
-                   #     in-array amount pick)
-                   #   c11_wire_fee_multiemit ⊂ chase_relational's
-                   #     emit path
-                   #   ann_ivf_fit ⊂ ann_ivf_topk/ann_ivf_amortized
-                   #     (fit is their first stage)
-                   #   bm25_maxscore — search_snippets carries the
-                   #     full BM25 scoring chain forward
-                   "c1_detect_issuer", "c2_direction_rules",
-                   "d13_chase_amount", "c11_wire_fee_multiemit",
-                   "ann_ivf_fit", "bm25_maxscore",
-                   # round-5 LAST swap (cap stays 50): html_to_markdown
-                   # (structure-preserving extraction, never
-                   # adjudicated, engine-differential-pinned) rotates
-                   # IN; ann_cosine_topk rotates OUT — its brute
-                   # cosine top-k is the verify core the surviving
-                   # ann_ivf_topk/ann_ivf_amortized pair is measured
-                   # against (and ann_brute_big, already retired, is
-                   # its scale twin)
-                   "ann_cosine_topk",
-                   # post-cap final-session additions: rule-based
-                   # sentence segmentation (twinned prose injection)
-                   # and HTML table-to-grid extraction (the live
-                   # analogue of the reference's dead extract_tables;
-                   # engine-differential-pinned) — Python-recompute +
-                   # oracle-parity pytest and the check_oracles
-                   # sweep, same all_queries path
-                   "sentence_split", "html_table_extract",
-                   # Flesch readability bands (the curation signal
-                   # beside quality_score; same twinned prose as
-                   # sentence_split so the sentence axis varies)
-                   "readability_score",
-                   # round-5 CAP REPAIR: the last session's four
-                   # rotations IN (html_meta_extract, headings_outline,
-                   # html_to_markdown, jsonld_extract) pushed the dict
-                   # to 54 rows — past the driver's 50-row window, so
-                   # the tail would be silently dropped.  Four more
-                   # long-stable, already-adjudicated sub-stage rows
-                   # rotate OUT to restore EXACTLY 50:
-                   #   ann_ivf_topk ⊂ ann_ivf_amortized (the surviving
-                   #     row runs the identical fit/assign/probe CTEs
-                   #     plus index persistence; topk is its first
-                   #     serving batch)
-                   #   quality_score — green since round 3; its
-                   #     heuristics feed the sweep-verified
-                   #     curation_pipeline and readability rows
-                   #   validation_join — J1, green since round 2; the
-                   #     surviving resume_anti_join (J2) adjudicates
-                   #     the same broadcast-dim join machinery in anti
-                   #     form
-                   #   extraction_spans ⊂ span_dedup (same span CTE;
-                   #     the surviving row verifies spans AND the
-                   #     dedup tier over them) — moved to
-                   #     _retired_specials with its golden oracle
-                   "ann_ivf_topk", "quality_score", "validation_join",
-                   # post-cap round-5 final-session additions (same
-                   # all_queries verification path): ordered
-                   # conversion funnel (greedy-fold Spark side vs
-                   # chained-min DuckDB oracle — genuinely independent
-                   # implementations), weekly cohort retention, KMV
-                   # sketch set-algebra overlap of two crawl
-                   # snapshots, Z-order vs row-order file-layout
-                   # planning, and hreflang multilingual-variant link
-                   # extraction
-                   "events_funnel", "events_retention", "kmv_overlap",
-                   "zorder_cluster", "hreflang_alternates",
-                   # publicsuffix.org eTLD+1 extraction (broadcast
-                   # rule dim, wildcard/exception semantics) and
-                   # social-card assembly with the og->twitter->title
-                   # fallback chain
-                   "registered_domain", "opengraph_cards",
-                   # per-domain anti-domination cap (mergeable
-                   # hash-top-K shape) and declared AMP/canonical
-                   # reciprocal pairing
-                   "domain_cap_sample", "amp_canonical_pairs",
-                   # magic-byte content-type sniffing (BOM strip +
-                   # whitespace skip + ordered prefix rules over the
-                   # binary payload's hex prefix), link-farm
-                   # reciprocity spam tiers, and min/max file-skip
-                   # estimation over the z-order/row-order layouts
-                   "content_sniff", "link_spam_score",
-                   "minmax_prune_stats",
-                   # rare-anchor bitext pair mining (hash join on
-                   # translation-invariant anchors, df-capped),
-                   # three-way posting-list compression planning,
-                   # phrase+length-gated soft-404 detection, and
-                   # sitemap-vs-crawl coverage reconciliation, and
-                   # simhash recrawl drift classification
-                   "bitext_mine", "posting_compression",
-                   "soft404_detect", "sitemap_gap", "content_drift",
-                   "crawl_depth",
-                   # round-5 continuation rotation OUT, restoring the
-                   # cap to exactly 50 after the three new never-
-                   # adjudicated rows (bm25f_fielded,
-                   # microdata_extract, opic_priority) rotated IN:
-                   #   events_sessions — green r01-r04; the gap-based
-                   #     window machinery survives in the sweep-
-                   #     oracled events_funnel/events_retention and
-                   #     the streaming sessionize differential pins
-                   #   dedup_lsh_verified — green r03-r04; the banded
-                   #     MinHash/LSH + verify tier is re-adjudicated
-                   #     by the surviving span_neardup and
-                   #     decontam_fuzzy rows (same shared CTEs)
-                   #   truist_relational — green r01-r04; C7's
-                   #     direction table stays pinned by the
-                   #     reference-executed goldens + the sweep
-                   "events_sessions", "dedup_lsh_verified",
-                   "truist_relational",
-                   # …and three more for the second continuation batch
-                   # (langseg_spans, hard_negatives, template_cluster),
-                   # same policy — every retired row stays in the
-                   # registry, the pytest parity subset, and the
-                   # check_oracles sweep:
-                   #   mercury_relational — green r01-r04; the per-bank
-                   #     CASE machinery keeps 8 surviving bank rows
-                   #   span_neardup — green r04; shares its span +
-                   #     LSH CTEs with the surviving span_dedup and
-                   #     the embedding/near-dup tiers
-                   #   g7_lineage_rollup — green r01-r04; the lineage
-                   #     sidecar is re-adjudicated inside the
-                   #     surviving extraction_metrics row
-                   "mercury_relational", "span_neardup",
-                   "g7_lineage_rollup",
-                   # …and one more for index_partition_plan (never
-                   # adjudicated) rotating IN:
-                   #   extraction_metrics — green r01-r04; the lineage
-                   #     sidecar math stays driver-adjudicated through
-                   #     the surviving fidelity_pipeline row (same
-                   #     mapInPandas pass emits both) and the sweep
-                   "extraction_metrics",
-                   # …and for skipgram_pairs rotating IN:
-                   #   resume_anti_join — green r01-r04 (J2); the
-                   #     bucketed-join plan gate, the kill/rerun and
-                   #     cross-process resume tests, and the sweep
-                   #     keep the anti-join machinery pinned
-                   "resume_anti_join"}
-
-
-def _specials() -> dict:
-    return {
-        "fidelity_pipeline": _fidelity_pipeline,
-        "extraction_metrics": _extraction_metrics,
-        "extraction_spans": _extraction_spans,
-        "span_dedup": _span_dedup,
-        "multimodal_features": _media_features,
-        "multimodal_frames": _media_frames,
-        "image_phash_neardup": _image_neardup,
-        "ann_ivf_amortized": _ann_ivf_amortized,
-        "pdf_link_extract": _pdf_link_extract,
-        "pdf_outline_extract": _pdf_outline_extract,
-    }
-
-
-# rotated-in rows whose Spark side is the ITERATIVE production twin
-# (persisted per-round joins), not the unrolled oracle SQL — Catalyst
-# inlines CTE references, so the unrolled form re-derives the edge
-# pipeline once per reference and is oracle machinery only
-_PROMOTED_CALLABLES = ("trustrank_seeds", "label_propagation",
-                       "bpe_encode", "kcore_peel", "opic_priority",
-                       # round-6 perf promotions (iterative PQ twins;
-                       # unrolled forms re-derive the sub-vector
-                       # pipeline per CTE reference)
-                       "ann_pq_codes", "ann_pq_adc",
-                       # round-6: fingerprint table checkpointed once
-                       # (unrolled form re-derives it per consumer)
-                       "simhash_hamming")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    specials = _specials()
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        name: specials[name] for name in _SPECIALS_FIRST
-    }
-    for name in QUERY_SQL:
-        if name not in _DRIVER_RETIRED:
-            out[name] = _sql_query(name)
-    out["ann_ivf_amortized"] = _ann_ivf_amortized
-    callables = _retired_specials()
-    for name in _PROMOTED_CALLABLES:
-        out[name] = callables[name][0]
-    return out
-
-
-def _bm25_serve_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted inverted-index lifecycle (the text analogue of
-    ann_ivf_amortized): build term-sharded postings + additive BM25
-    stats once, then serve the standard query batch from the persisted
-    artifact with shard pruning.  The DuckDB oracle is the in-plan
-    ``bm25_topk`` SQL — identical integer scoring, so the whole
-    build→persist→prune→serve path is hash-checked end-to-end."""
-    from pdf_parser_spark.ops.retrieval import bm25_index_demo
-
-    _register(spark, sf_dir)
-    return bm25_index_demo(spark)
-
-
-def _bm25_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-maintenance lifecycle: two incremental appends, LSM
-    compaction into one generation (atomic marker-swap retirement of
-    the inputs), vacuum of the retired fragments, then a shard-pruned
-    serve from the compacted artifact.  Same DuckDB oracle as
-    bm25_serve_persisted (the in-plan ``bm25_topk`` SQL) — identical
-    integer scoring, so the whole maintenance cycle is hash-checked."""
-    from pdf_parser_spark.ops.retrieval import bm25_compact_demo
-
-    _register(spark, sf_dir)
-    return bm25_compact_demo(spark)
-
-
-def _phrase_serve_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional-index phrase serving: build the persisted index
-    (positions are written by every append), then answer the standard
-    phrase set from the position arrays alone — shard-pruned fetch,
-    doc_id equi-join, adjacency = array_intersect(p1+1, p2).  The
-    DuckDB oracle is the in-plan ``phrase_search`` SQL — identical
-    output, so the positional tokenize→persist→serve path is
-    hash-checked end-to-end."""
-    from pdf_parser_spark.ops.retrieval import phrase_serve_demo
-
-    _register(spark, sf_dir)
-    return phrase_serve_demo(spark)
-
-
-def _warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC container ingestion lifecycle: render ``documents`` into
-    real per-record-gzip WARC files, read them back through the
-    binaryFile + mapInPandas framing path, and emit the verifiable
-    (url, warc_date, n_bytes, html_md5) projection.  The DuckDB
-    oracle rebuilds identical rows by pure string math, hash-checking
-    framing, CRLF handling, gzip member iteration, and Content-Length
-    arithmetic end-to-end."""
-    from pdf_parser_spark.warc import warc_ingest_demo
-
-    _register(spark, sf_dir)
-    return warc_ingest_demo(spark)
-
-
-# rows whose Spark side is a Python callable, not the QUERY_SQL
-# string; each maps to (callable, oracle-SQL twin) and rides
-# all_queries()/all_oracles().  Names in _PROMOTED_CALLABLES are
-# additionally served by queries() (driver-adjudicated this round);
-# the rest are retired-tier only.
-def _retired_specials() -> dict:
-    from pdf_parser_spark.warc import warc_oracle_sql
-
-    return {
-        # rotated OUT in the round-5 cap repair (see _DRIVER_RETIRED):
-        # the span extraction layer, still golden-oracled for the
-        # sweep; span_dedup carries the driver adjudication forward
-        "extraction_spans": (
-            _extraction_spans, _EXPECTED_ORACLES["extraction_spans"]),
-        # rotated OUT for index_partition_plan (see _DRIVER_RETIRED
-        # note): the metrics sidecar, still golden-oracled for the
-        # sweep; fidelity_pipeline carries the mapInPandas
-        # adjudication forward
-        "extraction_metrics": (
-            _extraction_metrics, _EXPECTED_ORACLES["extraction_metrics"]),
-        # rotated OUT for conditional_revalidate (never adjudicated):
-        # frame sampling stays golden-oracled in the sweep; the
-        # surviving multimodal_features row adjudicates the same
-        # decode plumbing
-        "multimodal_frames": (
-            _media_frames, _EXPECTED_ORACLES["multimodal_frames"]),
-        "bm25_serve_persisted": (
-            _bm25_serve_persisted, QUERY_SQL["bm25_topk"]["duckdb"]),
-        "bm25_serve_compacted": (
-            _bm25_serve_compacted, QUERY_SQL["bm25_topk"]["duckdb"]),
-        "phrase_serve_persisted": (
-            _phrase_serve_persisted, QUERY_SQL["phrase_search"]["duckdb"]),
-        "warc_ingest": (_warc_ingest, warc_oracle_sql()),
-        # the iterative production twins ARE the Spark side of these
-        # rows (per-round persisted joins); the unrolled SQL stays as
-        # the DuckDB oracle — Catalyst's CTE inlining re-derives the
-        # edge pipeline once per reference (measured 3191 Exchanges vs
-        # 713 for plain PageRank), so the unrolled form is oracle
-        # machinery, not the at-scale operator
-        "trustrank_seeds": (
-            _trustrank_production, QUERY_SQL["trustrank_seeds"]["duckdb"]),
-        "hits_scores": (
-            _hits_production, QUERY_SQL["hits_scores"]["duckdb"]),
-        # round-6 promotion: the iterative pagerank twin serves the
-        # host_pagerank row (same rationale as hits/trustrank)
-        "host_pagerank": (
-            _pagerank_production, QUERY_SQL["host_pagerank"]["duckdb"]),
-        "label_propagation": (
-            _lpa_production, QUERY_SQL["label_propagation"]["duckdb"]),
-        "bpe_encode": (
-            _bpe_encode_production, QUERY_SQL["bpe_encode"]["duckdb"]),
-        # audio twin of the driver-adjudicated image_phash_neardup:
-        # same banded join, WAV decode + integer energy-envelope hash;
-        # golden-parquet oracle (encode-side brute force)
-        "audio_fp_neardup": (
-            _audio_neardup,
-            "SELECT url_a, url_b, hamming FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_audio_neardup.parquet")),
-        # AcroForm text-field extraction — the structured-data sidecar
-        # of PDF extraction (filled statements/applications carry key
-        # facts in the form layer); encode-side golden-parquet oracle
-        "pdf_form_extract": (
-            _pdf_form_extract,
-            "SELECT url, field_no, name, value"
-            " FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_pdf_forms.parquet")),
-        # k-core: the fixpoint-looped twin is the contract Spark side
-        # (the unrolled SQL re-derives the edge pipeline 3^rounds
-        # times under CTE inlining — measured 55 s at sf0.1 vs the
-        # twin's 2.0 s; same rationale as trustrank/hits above)
-        "kcore_peel": (
-            _kcore_production, QUERY_SQL["kcore_peel"]["duckdb"]),
-        # round-6 optimization: the persisted-intermediate twin is the
-        # Spark side of the (retired, bench-headliner) span_neardup
-        # row — the unrolled SQL re-derives the span/shingle pipeline
-        # once per CTE reference (260-operator plan, 10 corpus scans;
-        # plans/r06/span_neardup_before.txt); same promoted-twin
-        # rationale as trustrank/kcore, row-identity test-pinned
-        "span_neardup": (
-            _span_neardup_production, QUERY_SQL["span_neardup"]["duckdb"]),
-        # round-6: crawl_frontier's production twin (edge list
-        # materialized once + iterative pagerank_df) already existed,
-        # test-pinned — now served as the Spark side; the unrolled SQL
-        # re-derived the edge chain once per CTE reference (measured
-        # 694 parquet scans / 1444 Exchanges in one plan at sf0.1)
-        "crawl_frontier": (
-            _crawl_frontier_production,
-            QUERY_SQL["crawl_frontier"]["duckdb"]),
-        # round-6: same promotion for the BPE trainer (284 scans / 568
-        # Exchanges in the unrolled plan; iterative twin test-pinned)
-        "bpe_train_merges": (
-            _bpe_train_production, QUERY_SQL["bpe_train_merges"]["duckdb"]),
-        "opic_priority": (
-            _opic_production, QUERY_SQL["opic_priority"]["duckdb"]),
-        # round-6 perf promotions: the iterative PQ fit/search twins
-        # are the Spark side (per-round persisted sub-vectors, carry
-        # through min_by — no components re-join); the unrolled SQL
-        # stays as the DuckDB oracle (test-pinned row-identity)
-        "ann_pq_codes": (
-            _pq_codes_production, QUERY_SQL["ann_pq_codes"]["duckdb"]),
-        "ann_pq_adc": (
-            _pq_adc_production, QUERY_SQL["ann_pq_adc"]["duckdb"]),
-        # round-6 perf: persisted-intermediate AllPairs twin (the
-        # unrolled form re-derives the shingle pipeline per ``toks``
-        # consumer — 40 scans in one plan; same promoted-twin
-        # rationale as span_neardup, row-identity test-pinned)
-        "dedup_allpairs_prefix": (
-            _allpairs_prefix_production,
-            QUERY_SQL["dedup_allpairs_prefix"]["duckdb"]),
-        # round-6 perf: MaxScore twin over a checkpointed weights
-        # table (the unrolled form re-derives tokenize→stats→weights
-        # per ``wgts`` consumer — 114 scans in one plan)
-        "bm25_maxscore": (
-            _bm25_maxscore_production,
-            QUERY_SQL["bm25_maxscore"]["duckdb"]),
-        # round-6 perf: SimHash fingerprint table checkpointed once
-        # (unrolled form re-derives the 48-bit-vote pipeline per
-        # ``sh`` consumer — 16 scans in one plan)
-        "simhash_hamming": (
-            _simhash_hamming_production,
-            QUERY_SQL["simhash_hamming"]["duckdb"]),
-        # round-6 perf: incremental-dedup screen over checkpointed
-        # corpus/shingle/signature tables (72 scans unrolled) — the
-        # persisted-artifact shape its own docstring describes
-        "dedup_incremental": (
-            _dedup_incremental_production,
-            QUERY_SQL["dedup_incremental"]["duckdb"]),
-        # declared page labels — the navigation/citation sidecar of
-        # PDF extraction; encode-side golden-parquet oracle
-        "pdf_labels_extract": (
-            _pdf_labels_extract,
-            "SELECT url, page_no, label FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_pdf_labels.parquet")),
-        # /Info + XMP document metadata with precedence merge
-        "pdf_meta_extract": (
-            _pdf_meta_extract,
-            "SELECT url, field, value, source FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_pdf_meta.parquet")),
-        # coordinate-clustered table grids (the live PDF analogue of
-        # the reference's dead extract_tables, now position-true)
-        "pdf_grid_extract": (
-            _pdf_grid_extract,
-            "SELECT url, page_no, row_no, col_no, cell"
-            " FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_pdf_grids.parquet")),
-        # video leg of the modality-dedup triple: sub-clip containment
-        # over exhaustive frame hashes; golden-parquet oracle
-        "video_clip_containment": (
-            _video_containment,
-            "SELECT url_outer, url_clip, n_common, n_clip,"
-            " containment_pct, verdict FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_video_containment.parquet")),
-        # shot-boundary detection over the same exhaustive frame-hash
-        # layer; golden-parquet oracle (encode-side scene plan)
-        "video_scene_cuts": (
-            _video_scene_cuts,
-            "SELECT url, scene_no, start_frame, n_frames"
-            " FROM read_parquet('%s')"
-            % (_GOLDEN / "expected_video_scenes.parquet")),
-    }
-
-
-def _crawl_frontier_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-edges + iterative-PageRank crawl frontier (round-6
-    perf; see ops/crawl.py crawl_frontier_production_df) —
-    row-identical to the unrolled SQL oracle (test-pinned)."""
-    from pdf_parser_spark.ops.crawl import crawl_frontier_production_df
-
-    _register(spark, sf_dir)
-    return crawl_frontier_production_df(spark)
-
-
-def _bpe_train_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative BPE merge learning (per-round persisted symbol table)
-    — row-identical to the unrolled SQL oracle (test-pinned); promoted
-    round 6 (perf)."""
-    from pdf_parser_spark.ops.bpe import bpe_train_df
-
-    _register(spark, sf_dir)
-    return bpe_train_df(spark)
-
-
-def _span_neardup_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted-intermediate span near-dup twin (round-6 perf; see
-    ops/dedup.py span_neardup_df) — row-identical to the unrolled SQL
-    oracle (test-pinned)."""
-    from pdf_parser_spark.ops.dedup import span_neardup_df
-
-    _register(spark, sf_dir)
-    return span_neardup_df(spark)
-
-
-def _trustrank_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative TrustRank (two pagerank_df chains over one persisted
-    edge list + exact cross-multiplication verdict) — row-identical to
-    the unrolled SQL (test-pinned)."""
-    from pdf_parser_spark.ops.webgraph import trustrank_df
-
-    _register(spark, sf_dir)
-    return trustrank_df(spark)
-
-
-def _lpa_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative weighted label propagation over the persisted edge
-    list — row-identical to the unrolled SQL (test-pinned)."""
-    from pdf_parser_spark.ops.webgraph import lpa_df
-
-    _register(spark, sf_dir)
-    return lpa_df(spark)
-
-
-def _bpe_encode_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative train (persisted per round) + one vocab join — the
-    at-scale encode; row-identical to the unrolled SQL (test-pinned,
-    which re-derives the corpus tokenization per CTE reference)."""
-    from pdf_parser_spark.ops.bpe import bpe_encode_df
-
-    _register(spark, sf_dir)
-    return bpe_encode_df(spark)
-
-
-def _pagerank_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative PageRank over the persisted one-plan edge list —
-    row-identical to the unrolled SQL oracle (test-pinned); promoted
-    round 6 (perf)."""
-    from pdf_parser_spark.ops.webgraph import pagerank_production_df
-
-    _register(spark, sf_dir)
-    return pagerank_production_df(spark)
-
-
-def _hits_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative integer HITS over the persisted distinct edge set —
-    row-identical to the unrolled SQL (test-pinned)."""
-    from pdf_parser_spark.ops.webgraph import hits_production_df
-
-    _register(spark, sf_dir)
-    return hits_production_df(spark)
-
-
-def _pq_codes_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative PQ training + encoding (per-round persisted
-    sub-vectors, codebook round-trips as bounded M·K-row collects) —
-    row-identical to the unrolled ann_pq_codes SQL (test-pinned);
-    promoted round 6 (perf: the unrolled form re-derives the
-    sub-vector pipeline once per CTE reference — 12 parquet scans /
-    36 Exchanges in one plan at sf0.1)."""
-    from pdf_parser_spark.ops.similarity import pq_fit_df
-
-    _register(spark, sf_dir)
-    return pq_fit_df(spark.table("embeddings"))[0]
-
-
-def _pq_adc_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC search over the iteratively-fitted codebook (broadcast
-    distance tables, map-side ADC scan, shortlist re-rank) —
-    row-identical to the unrolled ann_pq_adc SQL (test-pinned);
-    promoted round 6 (perf: 28 scans / 80 Exchanges unrolled)."""
-    from pdf_parser_spark.ops.similarity import pq_topk_df
-
-    _register(spark, sf_dir)
-    return pq_topk_df(spark.table("embeddings"))
-
-
-def _simhash_hamming_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded-Hamming SimHash near-dup over a checkpointed
-    fingerprint table (see ops/dedup.py simhash_hamming_df) —
-    row-identical to the unrolled SQL oracle (test-pinned); promoted
-    round 6 (perf)."""
-    from pdf_parser_spark.ops.dedup import simhash_hamming_df
-
-    _register(spark, sf_dir)
-    return simhash_hamming_df(spark)
-
-
-def _allpairs_prefix_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted-intermediate AllPairs prefix-filter join (see
-    ops/dedup.py allpairs_prefix_df) — row-identical to the unrolled
-    SQL oracle (test-pinned); promoted round 6 (perf)."""
-    from pdf_parser_spark.ops.dedup import allpairs_prefix_df
-
-    _register(spark, sf_dir)
-    return allpairs_prefix_df(spark)
-
-
-def _dedup_incremental_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup screen over checkpointed corpus/shingle/
-    signature artifacts (see ops/dedup.py dedup_incremental_df) —
-    row-identical to the unrolled SQL oracle (test-pinned); promoted
-    round 6 (perf)."""
-    from pdf_parser_spark.ops.dedup import dedup_incremental_df
-
-    _register(spark, sf_dir)
-    return dedup_incremental_df(spark)
-
-
-def _bm25_maxscore_production(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MaxScore top-k over a checkpointed per-(query,term,doc)
-    weights table (see ops/retrieval.py bm25_maxscore_df) —
-    row-identical to the unrolled SQL oracle (test-pinned); promoted
-    round 6 (perf)."""
-    from pdf_parser_spark.ops.retrieval import bm25_maxscore_df
-
-    _register(spark, sf_dir)
-    return bm25_maxscore_df(spark)
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Driver contract PLUS the retired rows — for tests/bench only."""
-    out = queries()
-    for name in _DRIVER_RETIRED:
-        if name in QUERY_SQL:
-            out[name] = _sql_query(name)
-    for name, (fn, _) in _retired_specials().items():
-        out[name] = fn
-    return out
-
-
-_GOLDEN = _REPO / "tests" / "golden"
-
-# golden-expected parquet fixtures as oracles for the Arrow-batched
-# (non-SQL-expressible) paths; provenance documented in
-# tools/gen_expected_parquet.py
-_EXPECTED_ORACLES = {
-    "fidelity_pipeline": (
-        "SELECT url, tx_index, bank, date, description, amount, direction"
-        " FROM read_parquet('%s')" % (_GOLDEN / "expected_tx.parquet")
-    ),
-    "extraction_metrics": (
-        "SELECT url, bank, kind, pages, n_lines, n_chars, blocks_total,"
-        " blocks_kept, tx_count, text_sha256, error"
-        " FROM read_parquet('%s')" % (_GOLDEN / "expected_doc_metrics.parquet")
-    ),
-    "extraction_spans": (
-        "SELECT url, span_no, start, \"end\", n_chars, line_sha256"
-        " FROM read_parquet('%s')" % (_GOLDEN / "expected_spans.parquet")
-    ),
-    "span_dedup": (
+def _golden(columns: str, parquet: str) -> str:
+    return "SELECT %s FROM read_parquet('%s')" % (columns, _GOLDEN / parquet)
+
+
+# The driver adjudicates exactly these 50 rows, in this order (it
+# records the first 50 entries of queries() and drops the rest).  Every
+# other registered name is retired: still run and oracle-checked through
+# all_queries()/all_oracles(), just not by the driver.
+_CONTRACT = [
+    "multimodal_features", "image_phash_neardup", "fidelity_pipeline",
+    "span_dedup", "pdf_link_extract", "pdf_outline_extract",
+    "valley_relational", "chase_relational", "bofa_relational",
+    "bofa_rel_relational", "generic_relational", "wf_relational",
+    "citi_relational", "bpe_encode", "c4_clean", "intradoc_dedup",
+    "sitemap_ingest", "feed_ingest", "conditional_revalidate",
+    "decontam_fuzzy", "simhash_hamming", "dedup_substring",
+    "epoch_shard_plan", "search_snippets", "rocchio_expand",
+    "bm25f_fielded", "hard_negatives", "index_partition_plan",
+    "ann_ivf_amortized", "embed_srp_neardup", "ann_pq_codes", "ann_pq_adc",
+    "quantile_sketch", "script_detect", "bigram_lm_score", "host_reputation",
+    "langseg_spans", "skipgram_pairs", "trustrank_seeds",
+    "label_propagation", "kcore_peel", "hyperball_nf", "opic_priority",
+    "redirect_resolve", "html_meta_extract", "headings_outline",
+    "html_to_markdown", "jsonld_extract", "microdata_extract",
+    "template_cluster",
+]
+
+# name -> (Spark side, oracle) for every row whose Spark side is not
+# QUERY_SQL[name]["spark"]; a None oracle means QUERY_SQL[name]["duckdb"].
+_SIDES: dict[str, tuple[Side, str | None]] = {
+    # Arrow-batched fixture paths, oracled against golden-expected
+    # parquet (provenance in tools/gen_expected_parquet.py)
+    "fidelity_pipeline": (_fidelity_pipeline, _golden(
+        "url, tx_index, bank, date, description, amount, direction",
+        "expected_tx.parquet")),
+    "extraction_metrics": (_extraction_metrics, _golden(
+        "url, bank, kind, pages, n_lines, n_chars, blocks_total,"
+        " blocks_kept, tx_count, text_sha256, error",
+        "expected_doc_metrics.parquet")),
+    "extraction_spans": (_extraction_spans, _golden(
+        'url, span_no, start, "end", n_chars, line_sha256',
+        "expected_spans.parquet")),
+    "span_dedup": (_span_dedup, (
         "SELECT line_sha256, CAST(COUNT(*) AS BIGINT) AS n_occurrences,"
         " CAST(COUNT(DISTINCT url) AS BIGINT) AS n_docs,"
         " MIN(n_chars) AS n_chars"
         " FROM read_parquet('%s')"
         " GROUP BY line_sha256 HAVING COUNT(*) > 1"
-        % (_GOLDEN / "expected_spans.parquet")
-    ),
-    "multimodal_features": (
-        "SELECT url, media_type, n_bytes, width, height, channels,"
-        " duration_ms, mean_luma, sha256, decode_error"
-        " FROM read_parquet('%s')"
-        % (_GOLDEN / "expected_media_features.parquet")
-    ),
-    "multimodal_frames": (
-        "SELECT url, frame_no, ts_ms, frame_sha256"
-        " FROM read_parquet('%s')" % (_GOLDEN / "expected_media_frames.parquet")
-    ),
-    "image_phash_neardup": (
-        "SELECT url_a, url_b, hamming"
-        " FROM read_parquet('%s')"
-        % (_GOLDEN / "expected_image_neardup.parquet")
-    ),
-    "pdf_link_extract": (
-        "SELECT url, page_no, link_no, uri, uri_host"
-        " FROM read_parquet('%s')"
-        % (_GOLDEN / "expected_pdf_links.parquet")
-    ),
-    "pdf_outline_extract": (
-        "SELECT url, item_no, level, title, page_no"
-        " FROM read_parquet('%s')"
-        % (_GOLDEN / "expected_pdf_outline.parquet")
-    ),
+        % (_GOLDEN / "expected_spans.parquet"))),
+    "multimodal_features": (_media_features, _golden(
+        "url, media_type, n_bytes, width, height, channels,"
+        " duration_ms, mean_luma, sha256, decode_error",
+        "expected_media_features.parquet")),
+    "multimodal_frames": (_media_frames, _golden(
+        "url, frame_no, ts_ms, frame_sha256",
+        "expected_media_frames.parquet")),
+    "image_phash_neardup": (_image_neardup, _golden(
+        "url_a, url_b, hamming", "expected_image_neardup.parquet")),
+    "audio_fp_neardup": (_audio_neardup, _golden(
+        "url_a, url_b, hamming", "expected_audio_neardup.parquet")),
+    "video_clip_containment": (_video_containment, _golden(
+        "url_outer, url_clip, n_common, n_clip, containment_pct, verdict",
+        "expected_video_containment.parquet")),
+    "video_scene_cuts": (_video_scene_cuts, _golden(
+        "url, scene_no, start_frame, n_frames",
+        "expected_video_scenes.parquet")),
+    "pdf_link_extract": (_pdf_link_extract, _golden(
+        "url, page_no, link_no, uri, uri_host",
+        "expected_pdf_links.parquet")),
+    "pdf_outline_extract": (_pdf_outline_extract, _golden(
+        "url, item_no, level, title, page_no",
+        "expected_pdf_outline.parquet")),
+    "pdf_form_extract": (_pdf_form_extract, _golden(
+        "url, field_no, name, value", "expected_pdf_forms.parquet")),
+    "pdf_labels_extract": (_pdf_labels_extract, _golden(
+        "url, page_no, label", "expected_pdf_labels.parquet")),
+    "pdf_meta_extract": (_pdf_meta_extract, _golden(
+        "url, field, value, source", "expected_pdf_meta.parquet")),
+    "pdf_grid_extract": (_pdf_grid_extract, _golden(
+        "url, page_no, row_no, col_no, cell",
+        "expected_pdf_grids.parquet")),
+    # persisted-artifact lifecycles (build → persist → serve, or WARC
+    # write → read back), oracled by the in-plan SQL that must give the
+    # same rows, so the whole lifecycle is hash-checked
+    "bm25_serve_persisted": (_twin("ops.retrieval:bm25_index_demo"),
+                             QUERY_SQL["bm25_topk"]["duckdb"]),
+    "bm25_serve_compacted": (_twin("ops.retrieval:bm25_compact_demo"),
+                             QUERY_SQL["bm25_topk"]["duckdb"]),
+    "phrase_serve_persisted": (_twin("ops.retrieval:phrase_serve_demo"),
+                               QUERY_SQL["phrase_search"]["duckdb"]),
+    "warc_ingest": (_twin("warc:warc_ingest_demo"), warc_oracle_sql()),
+    # ONE sample-trained IVF fit persisted as tables, then two query
+    # batches served from it; the unrolled SQL runs the identical
+    # deterministic k-means
+    "ann_ivf_amortized": (_twin("ops.similarity:amortized_ivf_demo"), None),
+    # Iterative / persisted-intermediate twins of the unrolled SQL,
+    # which stays the DuckDB oracle (row identity is test-pinned).
+    # Catalyst inlines CTE references, so the unrolled form re-derives
+    # its shared intermediate once per reference; measured at sf0.1:
+    # crawl_frontier 694 parquet scans / 1444 Exchanges in one plan,
+    # bpe_train_merges 284 / 568, bm25_maxscore 114 scans,
+    # dedup_incremental 72, dedup_allpairs_prefix 40, ann_pq_adc 28 / 80,
+    # simhash_hamming 16, ann_pq_codes 12 / 36, span_neardup 10 scans in
+    # a 260-operator plan, kcore_peel 55 s vs 2.0 s for the twin,
+    # trustrank_seeds 3191 Exchanges vs 713 for plain PageRank.
+    "trustrank_seeds": (_twin("ops.webgraph:trustrank_df"), None),
+    "hits_scores": (_twin("ops.webgraph:hits_production_df"), None),
+    "host_pagerank": (_twin("ops.webgraph:pagerank_production_df"), None),
+    "label_propagation": (_twin("ops.webgraph:lpa_df"), None),
+    "kcore_peel": (_twin("ops.webgraph:kcore_df"), None),
+    "opic_priority": (_twin("ops.webgraph:opic_df"), None),
+    "crawl_frontier": (_twin("ops.crawl:crawl_frontier_production_df"),
+                       None),
+    "bpe_encode": (_twin("ops.bpe:bpe_encode_df"), None),
+    "bpe_train_merges": (_twin("ops.bpe:bpe_train_df"), None),
+    "span_neardup": (_twin("ops.dedup:span_neardup_df"), None),
+    "dedup_allpairs_prefix": (_twin("ops.dedup:allpairs_prefix_df"), None),
+    "simhash_hamming": (_twin("ops.dedup:simhash_hamming_df"), None),
+    "dedup_incremental": (_twin("ops.dedup:dedup_incremental_df"), None),
+    "bm25_maxscore": (_twin("ops.retrieval:bm25_maxscore_df"), None),
+    "ann_pq_codes": (
+        _twin(lambda spark: pq_fit_df(spark.table("embeddings"))[0]), None),
+    "ann_pq_adc": (
+        _twin(lambda spark: pq_topk_df(spark.table("embeddings"))), None),
 }
 
 
-def oracle_sql() -> dict[str, str]:
-    # mirror queries()' insertion order (see _SPECIALS_FIRST note)
-    out = {name: _EXPECTED_ORACLES[name] for name in _SPECIALS_FIRST}
-    for name, pair in QUERY_SQL.items():
-        if name not in _DRIVER_RETIRED:
-            out[name] = pair["duckdb"]
-    out["ann_ivf_amortized"] = QUERY_SQL["ann_ivf_amortized"]["duckdb"]
+def _rows(retired: bool) -> dict[str, tuple[Side, str]]:
+    """name -> (Spark side, oracle) for the contract rows, followed,
+    when ``retired``, by every other registered name in registration
+    order."""
+    names = [*_CONTRACT, *QUERY_SQL, *_SIDES] if retired else _CONTRACT
+    out = {}
+    for name in dict.fromkeys(names):
+        side, oracle = _SIDES.get(name, (None, None))
+        out[name] = (side or _sql_query(name),
+                     oracle or QUERY_SQL[name]["duckdb"])
     return out
+
+
+def queries() -> dict[str, Side]:
+    return {name: side for name, (side, _) in _rows(False).items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: oracle for name, (_, oracle) in _rows(False).items()}
+
+
+def all_queries() -> dict[str, Side]:
+    """Driver contract PLUS the retired rows — for tests/bench only."""
+    return {name: side for name, (side, _) in _rows(True).items()}
 
 
 def all_oracles() -> dict[str, str]:
     """oracle_sql() PLUS the retired rows — for tests/bench only."""
-    out = oracle_sql()
-    for name in _DRIVER_RETIRED:
-        if name in QUERY_SQL:
-            out[name] = QUERY_SQL[name]["duckdb"]
-    for name, (_, sql) in _retired_specials().items():
-        out[name] = sql
-    return out
+    return {name: oracle for name, (_, oracle) in _rows(True).items()}

@@ -547,7 +547,7 @@ def span_neardup_df(spark):
     computed once and persisted; every fragment below reuses the SAME
     SQL text builders as the oracle form, so semantics are
     single-sourced.  This is the identical promoted-twin rationale as
-    trustrank/kcore (__spark_entry__._PROMOTED_CALLABLES) — at 10^12
+    trustrank/kcore (the twin rows of __spark_entry__._SIDES) — at 10^12
     spans you materialize the narrow signature/shingle tables, never
     re-derive them per reference."""
     d = SPARK

@@ -27,9 +27,8 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,92 +51,6 @@ TX_COLUMNS = ["url", "tx_index", "bank", "date", "description", "amount",
 DOC_COLUMNS = ["url", "bank", "kind", "pages", "n_lines", "n_chars",
                "blocks_total", "blocks_kept", "tx_count", "text_sha256",
                "error", "part_id"]
-
-
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Executor-side worker: Arrow batch of pages → union rows."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    part_id = ctx.partitionId() if ctx else -1
-    cols = ["url", "record", "tx_index", "bank", "date", "description",
-            "amount", "direction", "kind", "pages", "n_lines", "n_chars",
-            "blocks_total", "blocks_kept", "tx_count", "text_sha256",
-            "error", "part_id"]
-    for pdf_batch in batches:
-        # columnar accumulation: pd.DataFrame(dict-of-lists) is ~5×
-        # cheaper than list-of-tuples at millions of output rows
-        t_url, t_idx, t_bank = [], [], []
-        t_date, t_desc, t_amt, t_dir = [], [], [], []
-        d_url, d_bank, d_kind, d_pages = [], [], [], []
-        d_lines, d_chars, d_bt, d_bk = [], [], [], []
-        d_txn, d_sha, d_err = [], [], []
-        for row in pdf_batch.itertuples(index=False):
-            url = row.url
-            payload = row.html
-            # pd.notna, not `is not None`: null timestamps arrive as
-            # NaT through Arrow and NaT.year is nan, not an int
-            fallback_year = (
-                row.warc_ts.year if pd.notna(row.warc_ts) else 1970
-            )
-            error = None
-            if payload is not None:
-                doc = extract_document(
-                    bytes(payload) if not isinstance(payload, bytes)
-                    else payload
-                )
-                text, kind, pages, error = (
-                    doc.text, doc.kind, doc.pages, doc.error
-                )
-            else:
-                text, kind, pages = row.text, "text", 1
-            tally: dict = {}
-            try:
-                bank, txs = parse_document(text, fallback_year, tally=tally)
-            except Exception as exc:  # poison doc: metrics row, no txs
-                bank, txs = "error", []
-                error = "%s: %s" % (type(exc).__name__, exc)
-            for i, t in enumerate(txs):
-                t_url.append(url)
-                t_idx.append(i)
-                t_bank.append(bank)
-                t_date.append(t["date"])
-                t_desc.append(t["description"])
-                t_amt.append(t["amount"])
-                t_dir.append(t["direction"])
-            d_url.append(url)
-            d_bank.append(bank)
-            d_kind.append(kind)
-            d_pages.append(pages)
-            d_lines.append(tally.get("n_lines", 0))
-            d_chars.append(len(text) if text else 0)
-            d_bt.append(tally.get("blocks_total", 0))
-            d_bk.append(tally.get("blocks_kept", 0))
-            d_txn.append(len(txs))
-            d_sha.append(
-                hashlib.sha256((text or "").encode("utf-8")).hexdigest())
-            d_err.append(error)
-        n_tx, n_doc = len(t_url), len(d_url)
-        yield pd.DataFrame({
-            "url": t_url, "record": ["tx"] * n_tx, "tx_index": t_idx,
-            "bank": t_bank, "date": t_date, "description": t_desc,
-            "amount": t_amt, "direction": t_dir,
-            "kind": [None] * n_tx, "pages": [None] * n_tx,
-            "n_lines": [None] * n_tx, "n_chars": [None] * n_tx,
-            "blocks_total": [None] * n_tx, "blocks_kept": [None] * n_tx,
-            "tx_count": [None] * n_tx, "text_sha256": [None] * n_tx,
-            "error": [None] * n_tx, "part_id": [None] * n_tx,
-        }, columns=cols)
-        yield pd.DataFrame({
-            "url": d_url, "record": ["doc"] * n_doc,
-            "tx_index": [None] * n_doc, "bank": d_bank,
-            "date": [None] * n_doc, "description": [None] * n_doc,
-            "amount": [None] * n_doc, "direction": [None] * n_doc,
-            "kind": d_kind, "pages": d_pages, "n_lines": d_lines,
-            "n_chars": d_chars, "blocks_total": d_bt, "blocks_kept": d_bk,
-            "tx_count": d_txn, "text_sha256": d_sha, "error": d_err,
-            "part_id": [part_id] * n_doc,
-        }, columns=cols)
 
 
 _PA_FIELDS = [
@@ -195,14 +108,13 @@ def _skip_unchanged_zip_rereads() -> None:
 
 
 def _parse_arrow_batches(batches):
-    """Arrow-native worker (round 6): same per-document loop as
-    ``_parse_batches`` (the pandas twin, kept for unit/differential
-    tests), but the output rows are assembled as pyarrow RecordBatches
-    directly — ``pa.nulls`` makes the 10 all-null union columns O(1)
-    instead of per-cell object conversion.  Measured: building the
-    bench corpus's output as 18-column pandas frames + Arrow
-    conversion cost ~2.3 s of worker CPU; arrow-native is ~0.28 s
-    (guide §4.2: hand whole batches to native code)."""
+    """Executor-side worker: Arrow batches of pages → union rows,
+    assembled as pyarrow RecordBatches directly — ``pa.nulls`` makes
+    the 10 all-null union columns O(1) instead of per-cell object
+    conversion.  Measured: building the bench corpus's output as
+    18-column pandas frames + Arrow conversion cost ~2.3 s of worker
+    CPU; arrow-native is ~0.28 s (hand whole batches to native
+    code)."""
     _skip_unchanged_zip_rereads()
     import pyarrow as pa
 
@@ -323,10 +235,9 @@ def parse_pages(
     )
     pruned = pages.select("url", "warc_ts", "html", "text")
     salted = salted_repartition(pruned, partitions, salt_seed)
-    # mapInArrow, not mapInPandas (round 6): the worker builds output
+    # mapInArrow, not mapInPandas: the worker builds output
     # RecordBatches natively — no pandas frame construction and no
-    # per-cell conversion of the union schema's null columns; a test
-    # pins row-identity against the pandas twin (_parse_batches)
+    # per-cell conversion of the union schema's null columns
     return salted.mapInArrow(_parse_arrow_batches, schema=PARSED_SCHEMA)
 
 

@@ -129,9 +129,11 @@ def test_format_selected_by_conf(spark, tmp_path):
 
 
 def test_null_warc_ts_falls_back_to_1970():
-    """NaT timestamps (how Arrow delivers null warc_ts) must hit the
-    1970 fallback-year path, not poison the document with nan.year."""
-    from pdf_parser_spark.pipeline import _parse_batches
+    """A NaT timestamp reaches the Arrow worker as a null warc_ts and
+    must hit the 1970 fallback-year path, not poison the document."""
+    import pyarrow as pa
+
+    from pdf_parser_spark.pipeline import _parse_arrow_batches
 
     batch = pd.DataFrame({
         "url": ["u1"],
@@ -139,12 +141,12 @@ def test_null_warc_ts_falls_back_to_1970():
         "html": [None],
         "text": ["chase.com statement\n01/03 Deposit 100.00"],
     })
-    outs = list(_parse_batches(iter([batch])))
-    txs = outs[0]
-    docs = outs[1]
-    assert docs.loc[0, "error"] is None
-    assert docs.loc[0, "bank"] == "chase"
-    assert list(txs["date"]) == ["1970-01-03"]
+    rb = pa.RecordBatch.from_pandas(batch, preserve_index=False)
+    txs, docs = (b.to_pydict()
+                 for b in _parse_arrow_batches(iter([rb])))
+    assert docs["error"] == [None]
+    assert docs["bank"] == ["chase"]
+    assert txs["date"] == ["1970-01-03"]
 
 
 def test_compaction_and_time_travel(spark, tmp_path):
