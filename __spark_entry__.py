@@ -117,6 +117,19 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     _PYFILES_SENT.add(sc.applicationId)
 
 
+def _pdf(extract: str, corpus: str) -> Side:
+    """Spark side of a PDF sidecar: ``ops.spans.<extract>`` over the
+    ``fixture_<corpus>_pages()`` corpus."""
+    def side(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from pdf_parser_spark.ops import spans
+
+        _ensure_pyfiles(spark)
+        corpus_rows = getattr(spans, "fixture_%s_pages" % corpus)()
+        return getattr(spans, extract)(spans.pdf_pages_df(spark,
+                                                          corpus_rows))
+    return side
+
+
 def _fidelity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow-batched extract+detect+parse path over the synthesized
     page corpus (PDF/HTML/text payloads).  Not SQL-expressible (PDF
@@ -222,82 +235,6 @@ def _audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                          hash_col="afp")
 
 
-def _pdf_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URI link annotations per PDF page — the outlink sidecar of PDF
-    extraction (feeds the link graph when the corpus page is a PDF);
-    all five sibling-writer layouts + alien-writer independence are
-    test-pinned, poison payloads yield zero rows."""
-    from pdf_parser_spark.ops.spans import (
-        extract_links, fixture_linked_pages_df,
-    )
-    _ensure_pyfiles(spark)
-    return extract_links(fixture_linked_pages_df(spark))
-
-
-def _pdf_form_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AcroForm (name, value) extraction per url — dotted-name /Kids
-    composition, inherited and kid-overridden /V, UTF-16BE values;
-    alien-writer independence (widget-merged field dicts, hex /V) is
-    test-pinned; poison payloads yield zero rows."""
-    from pdf_parser_spark.ops.spans import (
-        extract_form_fields, fixture_form_pages_df,
-    )
-    _ensure_pyfiles(spark)
-    return extract_form_fields(fixture_form_pages_df(spark))
-
-
-def _pdf_labels_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared page labels per url — §12.4.2 number-tree expansion
-    (roman/decimal/letter styles, prefixes, /St restarts, split /Kids
-    trees), all five sibling-writer layouts; ground truth is the
-    encode-side request expanded via independent LOOKUP TABLES, not
-    the reader's formatter; poison and label-free docs yield zero
-    rows."""
-    from pdf_parser_spark.ops.spans import (
-        extract_page_labels, fixture_labeled_pages_df,
-    )
-    _ensure_pyfiles(spark)
-    return extract_page_labels(fixture_labeled_pages_df(spark))
-
-
-def _pdf_meta_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document metadata per url — trailer /Info (every trailer form)
-    merged with the catalog XMP packet under the documented
-    precedence (XMP wins title/author; /Info keeps producer +
-    ISO-normalized dates); UTF-16BE and entity-escaped values
-    pinned; poison and metadata-free docs yield zero rows."""
-    from pdf_parser_spark.ops.spans import (
-        extract_doc_metadata, fixture_meta_pages_df,
-    )
-    _ensure_pyfiles(spark)
-    return extract_doc_metadata(fixture_meta_pages_df(spark))
-
-
-def _pdf_grid_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table grids per url — y-sweep rows × x-sweep columns over
-    glyph positions, cells deliberately stream-shuffled by the writer
-    so only coordinates carry structure; ragged tails, empty-cell
-    column skips, kern-split immunity, and prose pages (zero rows)
-    all pinned; encode-side golden-parquet oracle."""
-    from pdf_parser_spark.ops.spans import (
-        extract_table_grids, fixture_table_pages_df,
-    )
-    _ensure_pyfiles(spark)
-    return extract_table_grids(fixture_table_pages_df(spark))
-
-
-def _pdf_outline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PDF document-outline extraction — depth-first (level, title,
-    page) per url across all five writer layouts; UTF-16BE titles,
-    closed subtrees and GoTo-action destinations are test-pinned via
-    the alien writer; poison payloads yield zero rows."""
-    from pdf_parser_spark.ops.spans import (
-        extract_bookmarks, fixture_outlined_pages_df,
-    )
-    _ensure_pyfiles(spark)
-    return extract_bookmarks(fixture_outlined_pages_df(spark))
-
-
 def _video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video sub-clip containment: hash EVERY decoded Y4M frame, then
     Broder-style asymmetric containment over frame-hash sets (equi-join
@@ -312,9 +249,9 @@ def _video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling (flatMap-shaped mapInPandas): decodes the
-    Y4M container and hashes real frame bytes; oracled against
-    encode-side ground truth."""
+    """Video frame-sampling (a flatMap-shaped ``flat_map_rows`` pass):
+    decodes the Y4M container and hashes real frame bytes; oracled
+    against encode-side ground truth."""
     from pdf_parser_spark.ops.multimodal import (
         fixture_media_df, sample_frames,
     )
@@ -388,19 +325,23 @@ _SIDES: dict[str, tuple[Side, str | None]] = {
     "video_scene_cuts": (_video_scene_cuts, _golden(
         "url, scene_no, start_frame, n_frames",
         "expected_video_scenes.parquet")),
-    "pdf_link_extract": (_pdf_link_extract, _golden(
+    # PDF sidecars over encode-side corpora: all five sibling-writer
+    # layouts, poison payloads yield zero rows; links feed the link graph
+    # when the page is a PDF, outlines/forms/labels/metadata/grids are
+    # the structured layers (alien-writer independence is test-pinned)
+    "pdf_link_extract": (_pdf("extract_links", "linked"), _golden(
         "url, page_no, link_no, uri, uri_host",
         "expected_pdf_links.parquet")),
-    "pdf_outline_extract": (_pdf_outline_extract, _golden(
+    "pdf_outline_extract": (_pdf("extract_bookmarks", "outlined"), _golden(
         "url, item_no, level, title, page_no",
         "expected_pdf_outline.parquet")),
-    "pdf_form_extract": (_pdf_form_extract, _golden(
+    "pdf_form_extract": (_pdf("extract_form_fields", "form"), _golden(
         "url, field_no, name, value", "expected_pdf_forms.parquet")),
-    "pdf_labels_extract": (_pdf_labels_extract, _golden(
+    "pdf_labels_extract": (_pdf("extract_page_labels", "labeled"), _golden(
         "url, page_no, label", "expected_pdf_labels.parquet")),
-    "pdf_meta_extract": (_pdf_meta_extract, _golden(
+    "pdf_meta_extract": (_pdf("extract_doc_metadata", "meta"), _golden(
         "url, field, value, source", "expected_pdf_meta.parquet")),
-    "pdf_grid_extract": (_pdf_grid_extract, _golden(
+    "pdf_grid_extract": (_pdf("extract_table_grids", "table"), _golden(
         "url, page_no, row_no, col_no, cell",
         "expected_pdf_grids.parquet")),
     # persisted-artifact lifecycles (build → persist → serve, or WARC

@@ -279,7 +279,7 @@ def main() -> None:
     shutil.rmtree(proot, ignore_errors=True)
 
     # WARC source ingestion: real gzip-member container files → framed
-    # records (binaryFile scan + mapInPandas; 32 files = 32 tasks)
+    # records (binaryFile scan + mapInArrow; 32 files = 32 tasks)
     from pdf_parser_spark.warc import read_warc, write_warc_files
     wdir = os.path.join(tempfile.gettempdir(), "bench_warc")
     shutil.rmtree(wdir, ignore_errors=True)

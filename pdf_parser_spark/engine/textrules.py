@@ -161,7 +161,7 @@ def strip_trailing_amount(text: str) -> str:
 
 def squeeze(text: str) -> str:
     """Collapse whitespace runs and strip.  ``" ".join(split())`` is
-    character-identical to ``re.sub(r"\s+", " ").strip()`` — both are
+    character-identical to ``re.sub(r"\\s+", " ").strip()`` — both are
     driven by Py_UNICODE_ISSPACE — and ~6x faster (round-6 hot loop:
     squeeze runs once per emitted block)."""
     return " ".join(text.split())

@@ -1,6 +1,7 @@
 """Multimodal columns: images/audio/video as opaque ``binary`` with
-typed metadata; decode / feature-extract / frame-sample as Arrow-
-batched ``mapInPandas`` stages.
+typed metadata; decode / feature-extract / frame-sample as per-document
+``pipeline.flat_map_rows`` stages (``mapInArrow``; each operator keeps
+only its per-row body).
 
 The decode step is REAL (pure-Python/numpy codecs, ops/media_codecs):
 PNG (all five scanline filters), 24-bit BMP, PCM WAV, and YUV4MPEG2
@@ -20,13 +21,13 @@ a missing codec.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator, List, Tuple
+from typing import Callable, List, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..pipeline import flat_map_rows
 from .media_codecs import (
     PNG_SIG, bmp_decode, bmp_encode, mean_from_sum, png_decode, png_encode,
     wav_decode, wav_encode, y4m_decode, y4m_encode,
@@ -123,6 +124,10 @@ def strict_decoder(media_type: str, payload: bytes) -> dict:
 
 
 # ------------------------------------------------------------ operators
+# decoder dict keys, in FEATURES_SCHEMA order
+_FEATURE_KEYS = ("width", "height", "channels", "duration_ms", "mean_luma")
+
+
 def media_features(
     media: DataFrame,
     decoder: Callable[[str, bytes], dict] = sniff_decoder,
@@ -130,35 +135,19 @@ def media_features(
     """Decode+featurize each media row in Arrow batches.  Decoder
     errors never kill the task: they land in ``decode_error``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "url", "media_type", "n_bytes", "width", "height",
-                "channels", "duration_ms", "mean_luma", "sha256",
-                "decode_error")}
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None \
-                    else b""
-                feats, err = None, None
-                try:
-                    feats = decoder(row.media_type, payload)
-                except Exception as exc:
-                    err = "%s: %s" % (type(exc).__name__, exc)
-                out["url"].append(row.url)
-                out["media_type"].append(row.media_type)
-                out["n_bytes"].append(len(payload))
-                out["width"].append(feats["width"] if feats else None)
-                out["height"].append(feats["height"] if feats else None)
-                out["channels"].append(feats["channels"] if feats else None)
-                out["duration_ms"].append(
-                    feats["duration_ms"] if feats else None)
-                out["mean_luma"].append(feats["mean_luma"] if feats else None)
-                out["sha256"].append(hashlib.sha256(payload).hexdigest())
-                out["decode_error"].append(err)
-            yield pd.DataFrame(out)
+    def rows_of(url, media_type, payload):
+        payload = payload if payload is not None else b""
+        feats, err = None, None
+        try:
+            feats = decoder(media_type, payload)
+        except Exception as exc:
+            err = "%s: %s" % (type(exc).__name__, exc)
+        yield (url, media_type, len(payload),
+               *(feats[k] if feats else None for k in _FEATURE_KEYS),
+               hashlib.sha256(payload).hexdigest(), err)
 
-    pruned = media.select("url", "media_type", "payload")
-    return pruned.mapInPandas(batches, schema=FEATURES_SCHEMA)
+    return flat_map_rows(media.select("url", "media_type", "payload"),
+                         FEATURES_SCHEMA, rows_of)
 
 
 def frame_plan(duration_ms: int, n_frames: int, fps_num: int, fps_den: int,
@@ -180,35 +169,24 @@ def sample_frames(media: DataFrame, every_ms: int = 1000,
                   max_frames: int = 32) -> DataFrame:
     """REAL frame sampling for Y4M video rows: decodes the container,
     picks the frame on-screen at each sample instant, hashes its raw
-    C420 bytes.  A flatMap-shaped mapInPandas — output cardinality
-    greater than input, same Arrow batching.  Undecodable videos emit
-    no frames (their error surfaces in media_features)."""
+    C420 bytes.  A flatMap-shaped ``flat_map_rows`` pass — output
+    cardinality greater than input, same Arrow batching.  Undecodable
+    videos emit no frames (their error surfaces in media_features)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, nos, tss, shas = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.media_type != "video" or row.payload is None:
-                    continue
-                payload = bytes(row.payload)
-                try:
-                    w, h, num, den, frames = y4m_decode(payload)
-                except Exception:
-                    continue
-                duration_ms = len(frames) * 1000 * den // num
-                for k, ts, src in frame_plan(duration_ms, len(frames),
-                                             num, den, every_ms, max_frames):
-                    urls.append(row.url)
-                    nos.append(k)
-                    tss.append(ts)
-                    shas.append(hashlib.sha256(frames[src]).hexdigest())
-            yield pd.DataFrame({
-                "url": urls, "frame_no": nos, "ts_ms": tss,
-                "frame_sha256": shas,
-            })
+    def rows_of(url, media_type, payload):
+        if media_type != "video" or payload is None:
+            return
+        try:
+            w, h, num, den, frames = y4m_decode(payload)
+        except Exception:
+            return
+        duration_ms = len(frames) * 1000 * den // num
+        for k, ts, src in frame_plan(duration_ms, len(frames),
+                                     num, den, every_ms, max_frames):
+            yield url, k, ts, hashlib.sha256(frames[src]).hexdigest()
 
-    return media.select("url", "media_type", "payload") \
-        .mapInPandas(batches, schema=FRAMES_SCHEMA)
+    return flat_map_rows(media.select("url", "media_type", "payload"),
+                         FRAMES_SCHEMA, rows_of)
 
 
 # ------------------------------------------------------------ fixtures
@@ -407,36 +385,27 @@ def ahash64(pixels: np.ndarray) -> int:
 
 def image_ahash(media: DataFrame) -> DataFrame:
     """Decode each image payload (real PNG/BMP codecs) and emit its
-    ``ahash64`` — Arrow-batched ``mapInPandas``, column-pruned to
+    ``ahash64`` — one ``flat_map_rows`` pass, column-pruned to
     (url, payload); decoder errors land in ``decode_error`` rows with
     a NULL hash (poison bytes are data at 10^12 scale, never task
     kills)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, hashes, errs = [], [], []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None \
-                    else b""
-                val, err = None, None
-                try:
-                    if payload[:8] == PNG_SIG:
-                        val = ahash64(png_decode(payload))
-                    elif payload[:2] == b"BM":
-                        val = ahash64(bmp_decode(payload))
-                    else:
-                        raise ValueError("not a PNG/BMP payload")
-                except Exception as exc:
-                    err = "%s: %s" % (type(exc).__name__, exc)
-                urls.append(row.url)
-                hashes.append(val)
-                errs.append(err)
-            yield pd.DataFrame(
-                {"url": urls, "ahash": pd.array(hashes, dtype="Int64"),
-                 "decode_error": errs})
+    def rows_of(url, payload):
+        payload = payload if payload is not None else b""
+        val, err = None, None
+        try:
+            if payload[:8] == PNG_SIG:
+                val = ahash64(png_decode(payload))
+            elif payload[:2] == b"BM":
+                val = ahash64(bmp_decode(payload))
+            else:
+                raise ValueError("not a PNG/BMP payload")
+        except Exception as exc:
+            err = "%s: %s" % (type(exc).__name__, exc)
+        yield url, val, err
 
-    return media.select("url", "payload").mapInPandas(
-        batches, schema=AHASH_SCHEMA)
+    return flat_map_rows(media.select("url", "payload"), AHASH_SCHEMA,
+                         rows_of)
 
 
 def ahash_neardup(hashes: DataFrame,
@@ -611,35 +580,26 @@ def audio_fp64(samples: np.ndarray) -> int:
 
 def audio_fingerprint(media: DataFrame) -> DataFrame:
     """Decode each WAV payload (real codec) and emit ``audio_fp64`` —
-    Arrow-batched ``mapInPandas``, column-pruned to (url, payload);
+    one ``flat_map_rows`` pass, column-pruned to (url, payload);
     decoder errors land in decode_error rows with a NULL hash.  Serve
     near-dups with ``ahash_neardup(..., hash_col='afp')`` — the image
     tier's banded-Hamming join is hash-agnostic."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, fps, errs = [], [], []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None \
-                    else b""
-                val, err = None, None
-                try:
-                    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-                        samples, _, _ = wav_decode(payload)
-                        val = audio_fp64(samples)
-                    else:
-                        raise ValueError("not a WAV payload")
-                except Exception as exc:
-                    err = "%s: %s" % (type(exc).__name__, exc)
-                urls.append(row.url)
-                fps.append(val)
-                errs.append(err)
-            yield pd.DataFrame(
-                {"url": urls, "afp": pd.array(fps, dtype="Int64"),
-                 "decode_error": errs})
+    def rows_of(url, payload):
+        payload = payload if payload is not None else b""
+        val, err = None, None
+        try:
+            if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
+                samples, _, _ = wav_decode(payload)
+                val = audio_fp64(samples)
+            else:
+                raise ValueError("not a WAV payload")
+        except Exception as exc:
+            err = "%s: %s" % (type(exc).__name__, exc)
+        yield url, val, err
 
-    return media.select("url", "payload").mapInPandas(
-        batches, schema=AUDIO_FP_SCHEMA)
+    return flat_map_rows(media.select("url", "payload"), AUDIO_FP_SCHEMA,
+                         rows_of)
 
 
 def _neardup_audio_arrays(i: int) -> np.ndarray:
@@ -732,28 +692,22 @@ def video_frame_hashes(media: DataFrame) -> DataFrame:
     the exhaustive sibling of ``sample_frames`` that clip containment
     needs (time-sampled instants of a cut clip land on different
     source frames, so the sampled tier cannot prove subset-ness).
-    flatMap-shaped mapInPandas; undecodable videos emit no rows."""
+    flatMap-shaped ``flat_map_rows`` pass; undecodable videos emit no
+    rows."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, nos, shas = [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.payload is None:
-                    continue
-                try:
-                    _, _, _, _, frames = y4m_decode(bytes(row.payload))
-                except Exception:
-                    continue
-                for k, fb in enumerate(frames):
-                    urls.append(row.url)
-                    nos.append(k)
-                    shas.append(hashlib.sha256(fb).hexdigest())
-            yield pd.DataFrame({
-                "url": urls, "frame_no": nos, "frame_sha256": shas,
-            })
+    def rows_of(url, payload):
+        if payload is None:
+            return
+        try:
+            _, _, _, _, frames = y4m_decode(payload)
+        except Exception:
+            return
+        for k, fb in enumerate(frames):
+            yield url, k, hashlib.sha256(fb).hexdigest()
 
-    return media.select("url", "payload").mapInPandas(
-        batches, schema="url string, frame_no int, frame_sha256 string")
+    return flat_map_rows(
+        media.select("url", "payload"),
+        "url string, frame_no int, frame_sha256 string", rows_of)
 
 
 def video_clip_containment(frames: DataFrame,

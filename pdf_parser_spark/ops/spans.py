@@ -15,17 +15,22 @@ text INDEPENDENTLY of the extractor):
 * the per-line sha256 makes spans addressable for span-level lineage
   (training-data attribution, span-dedup) without shipping the text.
 
-Arrow-batched ``mapInPandas``; flatMap-shaped (≫1 row out per doc);
-same single-scan/no-per-row-Python rules as the pipeline.
+Every operator here is one ``pipeline.flat_map_rows`` pass
+(``mapInArrow``; flatMap-shaped, ≫1 row out per doc) and keeps only its
+per-document body; same single-scan/no-per-row-Python rules as the
+pipeline.  The PDF sidecars share one fixture skeleton (``_pdf_corpus``
+over the five sibling-writer ``_LAYOUTS``) and one pages frame
+(``pdf_pages_df``).
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, List, Tuple
+from typing import Callable, List, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..pipeline import flat_map_rows
 
 SPANS_SCHEMA = (
     "url string, span_no int, start bigint, end bigint,"
@@ -50,32 +55,77 @@ def extract_spans(pages: DataFrame) -> DataFrame:
     """pages(url, html, text) → one row per non-empty extracted line."""
     from ..pdfio.extract import extract_document
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, nos, starts, ends, lens, shas = [], [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is not None:
-                    payload = (bytes(row.html)
-                               if not isinstance(row.html, bytes)
-                               else row.html)
-                    text = extract_document(payload).text
-                else:
-                    text = row.text or ""
-                for k, (s, e) in enumerate(line_spans(text)):
-                    urls.append(row.url)
-                    nos.append(k)
-                    starts.append(s)
-                    ends.append(e)
-                    lens.append(e - s)
-                    shas.append(hashlib.sha256(
-                        text[s:e].encode("utf-8")).hexdigest())
-            yield pd.DataFrame({
-                "url": urls, "span_no": nos, "start": starts, "end": ends,
-                "n_chars": lens, "line_sha256": shas,
-            })
+    def rows_of(url, html, text):
+        if html is not None:
+            text = extract_document(html).text
+        else:
+            text = text or ""
+        for k, (s, e) in enumerate(line_spans(text)):
+            yield (url, k, s, e, e - s,
+                   hashlib.sha256(text[s:e].encode("utf-8")).hexdigest())
 
-    return pages.select("url", "html", "text").mapInPandas(
-        batches, schema=SPANS_SCHEMA)
+    return flat_map_rows(pages.select("url", "html", "text"),
+                         SPANS_SCHEMA, rows_of)
+
+
+# ------------------------------------------------- PDF sidecar skeleton
+
+# the five sibling-writer layouts every PDF fixture corpus cycles through
+_LAYOUTS = [
+    dict(),
+    dict(objstm=True),
+    dict(xref_stream=True, objstm=True),
+    dict(xref_stream=True, xref_predictor=True),
+    dict(cid_font=True),
+]
+
+
+def _pdf_corpus(tag: str, poison: bytes,
+                build: Callable[[int, str, dict], tuple]) -> List[tuple]:
+    """The skeleton of every PDF fixture corpus: the fixture docs under
+    100k chars in order, url ``doc["url"] + tag``; every 10th row is
+    ``(url, poison, [])`` (the extractor must yield zero rows, not fail
+    the batch), every other row ``(url, *build(i, text, layout))`` with
+    ``layout`` cycled through ``_LAYOUTS`` by doc index."""
+    from ..fixtures import fixture_docs
+
+    out = []
+    for i, doc in enumerate(d for d in fixture_docs()
+                            if len(d["text"]) < 100_000):
+        url = doc["url"] + tag
+        if i % 10 == 9:
+            out.append((url, poison, []))
+        else:
+            lay = _LAYOUTS[i % len(_LAYOUTS)]
+            out.append((url, *build(i, doc["text"], lay)))
+    return out
+
+
+def pdf_pages_df(spark, corpus: List[tuple]) -> DataFrame:
+    """pages(url, html) of a PDF fixture corpus (the ``fixture_*_pages``
+    triples; the expected rows stay on the driver)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("html", T.BinaryType(), True),
+    ])
+    rows = [(u, bytearray(p)) for u, p, _ in corpus]
+    return spark.createDataFrame(rows, schema=schema)
+
+
+def _pdf_sidecar(pages: DataFrame, schema: str, extract,
+                 numbered: bool) -> DataFrame:
+    """pages(url, html) → one row per item ``extract(pdf_bytes)``
+    returns, as (url, [item_no,] *item); NULL payloads yield no rows
+    (poison payloads yield none either: the readers never raise)."""
+
+    def rows_of(url, html):
+        for k, item in enumerate(extract(html) if html is not None
+                                 else ()):
+            yield (url, k, *item) if numbered else (url, *item)
+
+    return flat_map_rows(pages.select("url", "html"), schema, rows_of)
 
 
 # ------------------------------------------------- PDF link annotations
@@ -102,25 +152,11 @@ def fixture_linked_pages() -> List[tuple]:
     extractor must yield zero rows, not fail the batch).  Returns
     (url, pdf_bytes, expected_links) with expected_links the ENCODE-
     side request — ground truth independent of the reader."""
-    from ..fixtures import fixture_docs
     from ..pdfio.writer import PAGE_LINES, text_to_pdf
 
-    layouts = [
-        dict(),
-        dict(objstm=True),
-        dict(xref_stream=True, objstm=True),
-        dict(xref_stream=True, xref_predictor=True),
-        dict(cid_font=True),
-    ]
-    out = []
-    for i, doc in enumerate(d for d in fixture_docs()
-                            if len(d["text"]) < 100_000):
-        url = doc["url"] + "#links"
-        if i % 10 == 9:
-            out.append((url, b"%PDF-1.4 poison " + b"\xff" * 64, []))
-            continue
+    def build(i, text, lay):
         n_pages = 0
-        for ptext in doc["text"].split("\f"):
+        for ptext in text.split("\f"):
             n_lines = max(1, len(ptext.split("\n")))
             n_pages += (n_lines + PAGE_LINES - 1) // PAGE_LINES
         links = {}
@@ -129,24 +165,11 @@ def fixture_linked_pages() -> List[tuple]:
                         "https://H%d.EXAMPLE/q%d?s=1" % ((i * 3 + 2) % 40, i)]
             if n_pages > 1:
                 links[1] = ["https://h%d.example/r%d" % ((i * 11 + 5) % 40, i)]
-        pdf = text_to_pdf(doc["text"], links=links,
-                          **layouts[i % len(layouts)])
-        expected = [(pno, k, uri)
-                    for pno in sorted(links)
-                    for k, uri in enumerate(links[pno])]
-        out.append((url, pdf, expected))
-    return out
+        return (text_to_pdf(text, links=links, **lay),
+                [(pno, k, uri) for pno in sorted(links)
+                 for k, uri in enumerate(links[pno])])
 
-
-def fixture_linked_pages_df(spark) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("html", T.BinaryType(), True),
-    ])
-    rows = [(u, bytearray(p)) for u, p, _ in fixture_linked_pages()]
-    return spark.createDataFrame(rows, schema=schema)
+    return _pdf_corpus("#links", b"%PDF-1.4 poison " + b"\xff" * 64, build)
 
 
 def extract_links(pages: DataFrame) -> DataFrame:
@@ -155,37 +178,21 @@ def extract_links(pages: DataFrame) -> DataFrame:
     extraction — what feeds the link graph when the corpus is PDF
     rather than HTML (anchor hrefs).
 
-    Arrow-batched ``mapInPandas``, flatMap-shaped, zero per-row
-    Python on the Spark side; poison payloads yield no rows (the
-    reader never raises).  At 10^12 docs this rides the same
-    single-scan partitioning as the text pass — in production the two
-    extractors share one scan of the payload column."""
+    One ``flat_map_rows`` pass, flatMap-shaped, zero per-row Python on
+    the Spark side; poison payloads yield no rows (the reader never
+    raises).  At 10^12 docs this rides the same single-scan
+    partitioning as the text pass — in production the two extractors
+    share one scan of the payload column."""
     from ..pdfio.tokenizer import extract_pdf_links
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, pnos, lnos, uris, hosts = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is None:
-                    continue
-                payload = (bytes(row.html)
-                           if not isinstance(row.html, bytes) else row.html)
-                last_page, k = None, 0
-                for pno, uri in extract_pdf_links(payload):
-                    k = k + 1 if pno == last_page else 0
-                    last_page = pno
-                    urls.append(row.url)
-                    pnos.append(pno)
-                    lnos.append(k)
-                    uris.append(uri)
-                    hosts.append(uri_host(uri))
-            yield pd.DataFrame({
-                "url": urls, "page_no": pnos, "link_no": lnos,
-                "uri": uris, "uri_host": hosts,
-            })
+    def rows_of(url, html):
+        last_page, k = None, 0
+        for pno, uri in extract_pdf_links(html) if html is not None else ():
+            k = k + 1 if pno == last_page else 0
+            last_page = pno
+            yield url, pno, k, uri, uri_host(uri)
 
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=LINKS_SCHEMA)
+    return flat_map_rows(pages.select("url", "html"), LINKS_SCHEMA, rows_of)
 
 
 # ------------------------------------------------- PDF outline tree
@@ -201,27 +208,11 @@ def fixture_outlined_pages() -> List[tuple]:
     1-3, a UTF-16BE title on every 4th doc, no outline on every 6th,
     poison payload on every 10th.  Returns (url, pdf_bytes,
     expected_items) with expected the ENCODE-side request."""
-    from ..fixtures import fixture_docs
     from ..pdfio.writer import text_to_pdf
 
-    layouts = [
-        dict(),
-        dict(objstm=True),
-        dict(xref_stream=True, objstm=True),
-        dict(xref_stream=True, xref_predictor=True),
-        dict(cid_font=True),
-    ]
-    out = []
-    for i, doc in enumerate(d for d in fixture_docs()
-                            if len(d["text"]) < 100_000):
-        url = doc["url"] + "#outline"
-        if i % 10 == 9:
-            out.append((url, b"%PDF-1.4 poison " + b"\x00" * 48, []))
-            continue
+    def build(i, text, lay):
         if i % 6 == 5:
-            pdf = text_to_pdf(doc["text"], **layouts[i % len(layouts)])
-            out.append((url, pdf, []))
-            continue
+            return text_to_pdf(text, **lay), []
         bms = [(1, "Chapter %d" % i, 0),
                (2, "Section %d.1" % i, 0)]
         if i % 2 == 0:
@@ -229,53 +220,22 @@ def fixture_outlined_pages() -> List[tuple]:
         if i % 4 == 0:
             bms.append((2, "Résumé — 概 %d" % i, 0))   # UTF-16BE leg
         bms.append((1, "Chapter %d+" % i, 0))
-        pdf = text_to_pdf(doc["text"], bookmarks=bms,
-                          **layouts[i % len(layouts)])
-        out.append((url, pdf, [(k,) + bm for k, bm in enumerate(bms)]))
-    return out
+        return (text_to_pdf(text, bookmarks=bms, **lay),
+                [(k,) + bm for k, bm in enumerate(bms)])
 
-
-def fixture_outlined_pages_df(spark) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("html", T.BinaryType(), True),
-    ])
-    rows = [(u, bytearray(p)) for u, p, _ in fixture_outlined_pages()]
-    return spark.createDataFrame(rows, schema=schema)
+    return _pdf_corpus("#outline", b"%PDF-1.4 poison " + b"\x00" * 48,
+                       build)
 
 
 def extract_bookmarks(pages: DataFrame) -> DataFrame:
     """pages(url, html) → one row per outline item: (url, item_no,
     level, title, page_no) in depth-first document order — the PDF
     twin of the HTML ``headings_outline`` (section-aware chunkers key
-    on either).  Arrow-batched ``mapInPandas``; poison payloads yield
-    no rows."""
+    on either).  Poison payloads yield no rows."""
     from ..pdfio.tokenizer import extract_pdf_bookmarks
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, nos, lvls, titles, pnos = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is None:
-                    continue
-                payload = (bytes(row.html)
-                           if not isinstance(row.html, bytes) else row.html)
-                for k, (lv, title, pg) in enumerate(
-                        extract_pdf_bookmarks(payload)):
-                    urls.append(row.url)
-                    nos.append(k)
-                    lvls.append(lv)
-                    titles.append(title)
-                    pnos.append(pg)
-            yield pd.DataFrame({
-                "url": urls, "item_no": nos, "level": lvls,
-                "title": titles, "page_no": pnos,
-            })
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=OUTLINE_SCHEMA)
+    return _pdf_sidecar(pages, OUTLINE_SCHEMA, extract_pdf_bookmarks,
+                        numbered=True)
 
 
 # ------------------------------------------------- AcroForm fields
@@ -289,47 +249,20 @@ def fixture_form_pages() -> List[tuple]:
     derived from the doc index — a flat field, a dotted-name nested
     field (inherited /V), a UTF-16BE value on every 3rd doc, no form
     on every 6th, poison on every 10th."""
-    from ..fixtures import fixture_docs
     from ..pdfio.writer import text_to_pdf
 
-    layouts = [
-        dict(),
-        dict(objstm=True),
-        dict(xref_stream=True, objstm=True),
-        dict(xref_stream=True, xref_predictor=True),
-        dict(cid_font=True),
-    ]
-    out = []
-    for i, doc in enumerate(d for d in fixture_docs()
-                            if len(d["text"]) < 100_000):
-        url = doc["url"] + "#form"
-        if i % 10 == 9:
-            out.append((url, b"%PDF-1.4 poison form " + b"\x7f" * 40, []))
-            continue
+    def build(i, text, lay):
         if i % 6 == 5:
-            pdf = text_to_pdf(doc["text"], **layouts[i % len(layouts)])
-            out.append((url, pdf, []))
-            continue
+            return text_to_pdf(text, **lay), []
         fields = [("account_no", "%07d-%02d" % (i * 991, i % 97)),
                   ("holder.name", "Holder (%d)" % i)]
         if i % 3 == 0:
             fields.append(("city", "São Paulo — 都 %d" % i))
-        pdf = text_to_pdf(doc["text"], form_fields=fields,
-                          **layouts[i % len(layouts)])
-        out.append((url, pdf,
-                    [(k,) + f for k, f in enumerate(fields)]))
-    return out
+        return (text_to_pdf(text, form_fields=fields, **lay),
+                [(k,) + f for k, f in enumerate(fields)])
 
-
-def fixture_form_pages_df(spark) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("html", T.BinaryType(), True),
-    ])
-    rows = [(u, bytearray(p)) for u, p, _ in fixture_form_pages()]
-    return spark.createDataFrame(rows, schema=schema)
+    return _pdf_corpus("#form", b"%PDF-1.4 poison form " + b"\x7f" * 40,
+                       build)
 
 
 def extract_form_fields(pages: DataFrame) -> DataFrame:
@@ -337,31 +270,11 @@ def extract_form_fields(pages: DataFrame) -> DataFrame:
     field_no, name, value) in field-tree order — the structured-data
     sidecar of PDF extraction (filled statements, applications,
     invoices all carry their key facts in the form layer, not the
-    glyph layer).  Arrow-batched ``mapInPandas``; poison payloads
-    yield no rows."""
+    glyph layer).  Poison payloads yield no rows."""
     from ..pdfio.tokenizer import extract_pdf_form_fields
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, nos, names, vals = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is None:
-                    continue
-                payload = (bytes(row.html)
-                           if not isinstance(row.html, bytes) else row.html)
-                for k, (nm, v) in enumerate(
-                        extract_pdf_form_fields(payload)):
-                    urls.append(row.url)
-                    nos.append(k)
-                    names.append(nm)
-                    vals.append(v)
-            yield pd.DataFrame({
-                "url": urls, "field_no": nos, "name": names,
-                "value": vals,
-            })
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=FORM_SCHEMA)
+    return _pdf_sidecar(pages, FORM_SCHEMA, extract_pdf_form_fields,
+                        numbered=True)
 
 
 # ------------------------------------------------- page labels
@@ -389,24 +302,10 @@ def fixture_labeled_pages() -> List[tuple]:
     doc, poison on every 10th.  Returns (url, pdf_bytes,
     expected_labels) with expected computed from the request via the
     lookup tables above."""
-    from ..fixtures import fixture_docs
     from ..pdfio.writer import text_to_pdf
 
-    layouts = [
-        dict(),
-        dict(objstm=True),
-        dict(xref_stream=True, objstm=True),
-        dict(xref_stream=True, xref_predictor=True),
-        dict(cid_font=True),
-    ]
-    out = []
-    for i, doc in enumerate(d for d in fixture_docs()
-                            if len(d["text"]) < 100_000):
-        url = doc["url"] + "#labels"
-        if i % 10 == 9:
-            out.append((url, b"%PDF-1.4 poison " + b"\x00" * 48, []))
-            continue
-        lines = doc["text"].split("\n")
+    def build(i, text, lay):
+        lines = text.split("\n")
         n_pages = 4 + i % 3
         per = max(1, (len(lines) + n_pages - 1) // n_pages)
         chunks = ["\n".join(lines[k:k + per])
@@ -415,9 +314,7 @@ def fixture_labeled_pages() -> List[tuple]:
             chunks.append("filler %d" % len(chunks))
         text = "\f".join(chunks)
         if i % 6 == 5:
-            pdf = text_to_pdf(text, **layouts[i % len(layouts)])
-            out.append((url, pdf, []))
-            continue
+            return text_to_pdf(text, **lay), []
         front = 2
         labels = [(0, {"S": "r"}), (front, {"S": "D", "St": 1})]
         expect = [(p, _ROMANS[p + 1]) for p in range(front)]
@@ -444,49 +341,21 @@ def fixture_labeled_pages() -> List[tuple]:
             else:
                 lab = pre
             expect.append((p, lab))
-        pdf = text_to_pdf(text, page_labels=labels,
-                          **layouts[i % len(layouts)])
-        out.append((url, pdf, expect))
-    return out
+        return text_to_pdf(text, page_labels=labels, **lay), expect
 
-
-def fixture_labeled_pages_df(spark) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("html", T.BinaryType(), True),
-    ])
-    rows = [(u, bytearray(p)) for u, p, _ in fixture_labeled_pages()]
-    return spark.createDataFrame(rows, schema=schema)
+    return _pdf_corpus("#labels", b"%PDF-1.4 poison " + b"\x00" * 48,
+                       build)
 
 
 def extract_page_labels(pages: DataFrame) -> DataFrame:
     """pages(url, html) → one row per physical page carrying a
     DECLARED label: (url, page_no, label) — §12.4.2 number-tree
-    expansion (see pdfio.tokenizer.extract_pdf_page_labels).
-    Arrow-batched ``mapInPandas``; poison and label-free documents
-    yield no rows."""
+    expansion (see pdfio.tokenizer.extract_pdf_page_labels).  Poison
+    and label-free documents yield no rows."""
     from ..pdfio.tokenizer import extract_pdf_page_labels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, pnos, labs = [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is None:
-                    continue
-                payload = (bytes(row.html)
-                           if not isinstance(row.html, bytes) else row.html)
-                for pno, lab in extract_pdf_page_labels(payload):
-                    urls.append(row.url)
-                    pnos.append(pno)
-                    labs.append(lab)
-            yield pd.DataFrame({
-                "url": urls, "page_no": pnos, "label": labs,
-            })
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=LABELS_SCHEMA)
+    return _pdf_sidecar(pages, LABELS_SCHEMA, extract_pdf_page_labels,
+                        numbered=False)
 
 
 # ------------------------------------------------- document metadata
@@ -504,27 +373,11 @@ def fixture_meta_pages() -> List[tuple]:
     every 6th, poison on every 10th.  Expected rows are the
     encode-side request with the ISO date written out literally (not
     via the reader's parser)."""
-    from ..fixtures import fixture_docs
     from ..pdfio.writer import text_to_pdf
 
-    layouts = [
-        dict(),
-        dict(objstm=True),
-        dict(xref_stream=True, objstm=True),
-        dict(xref_stream=True, xref_predictor=True),
-        dict(cid_font=True),
-    ]
-    out = []
-    for i, doc in enumerate(d for d in fixture_docs()
-                            if len(d["text"]) < 100_000):
-        url = doc["url"] + "#meta"
-        lay = layouts[i % len(layouts)]
-        if i % 10 == 9:
-            out.append((url, b"%PDF-1.4 poison " + b"\x00" * 48, []))
-            continue
+    def build(i, text, lay):
         if i % 6 == 5:
-            out.append((url, text_to_pdf(doc["text"], **lay), []))
-            continue
+            return text_to_pdf(text, **lay), []
         title = ("Résumé — 概 %d" % i) if i % 3 == 0 else "Doc %d" % i
         author = "Writer %d" % i
         producer = "engine %d.1" % i
@@ -539,7 +392,7 @@ def fixture_meta_pages() -> List[tuple]:
         if i % 5 == 0:
             xmp_t = ("<New & Better> %d" % i if i % 4 == 0
                      else "XMP Title %d" % i)
-            pdf = text_to_pdf(doc["text"],
+            pdf = text_to_pdf(text,
                               xmp={"title": xmp_t,
                                    "creator": "XMP Writer %d" % i},
                               **lay)
@@ -548,7 +401,7 @@ def fixture_meta_pages() -> List[tuple]:
         elif i % 5 == 1:
             xmp_t = "Maintained %d" % i
             pdf = text_to_pdf(
-                doc["text"],
+                text,
                 doc_info={"Title": title, "Author": author,
                           "Producer": producer,
                           "CreationDate": raw_date},
@@ -560,7 +413,7 @@ def fixture_meta_pages() -> List[tuple]:
                    ("created", iso_date, "info")]
         else:
             pdf = text_to_pdf(
-                doc["text"],
+                text,
                 doc_info={"Title": title, "Author": author,
                           "Producer": producer,
                           "CreationDate": raw_date},
@@ -569,49 +422,20 @@ def fixture_meta_pages() -> List[tuple]:
                    ("author", author, "info"),
                    ("producer", producer, "info"),
                    ("created", iso_date, "info")]
-        out.append((url, pdf, exp))
-    return out
+        return pdf, exp
 
-
-def fixture_meta_pages_df(spark) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("html", T.BinaryType(), True),
-    ])
-    rows = [(u, bytearray(p)) for u, p, _ in fixture_meta_pages()]
-    return spark.createDataFrame(rows, schema=schema)
+    return _pdf_corpus("#meta", b"%PDF-1.4 poison " + b"\x00" * 48, build)
 
 
 def extract_doc_metadata(pages: DataFrame) -> DataFrame:
     """pages(url, html) → one row per resolved metadata field:
     (url, field, value, source) with the documented /Info-vs-XMP
-    precedence (pdfio.tokenizer.extract_pdf_metadata).  Arrow-batched
-    ``mapInPandas``; poison and metadata-free documents yield no
-    rows."""
+    precedence (pdfio.tokenizer.extract_pdf_metadata).  Poison and
+    metadata-free documents yield no rows."""
     from ..pdfio.tokenizer import extract_pdf_metadata
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, fields, vals, srcs = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is None:
-                    continue
-                payload = (bytes(row.html)
-                           if not isinstance(row.html, bytes) else row.html)
-                for f, v, src in extract_pdf_metadata(payload):
-                    urls.append(row.url)
-                    fields.append(f)
-                    vals.append(v)
-                    srcs.append(src)
-            yield pd.DataFrame({
-                "url": urls, "field": fields, "value": vals,
-                "source": srcs,
-            })
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=META_SCHEMA)
+    return _pdf_sidecar(pages, META_SCHEMA, extract_pdf_metadata,
+                        numbered=False)
 
 
 # ------------------------------------------------- PDF table grids
@@ -629,27 +453,12 @@ def fixture_table_pages() -> List[tuple]:
     cells emitted in the writer's shuffled stream order always; no
     table on every 6th, poison on every 10th.  Expected rows are the
     request grid (empty cells dropped)."""
-    from ..fixtures import fixture_docs
+    from ..pdfio.tokenizer import extract_pdf_text
     from ..pdfio.writer import text_to_pdf
 
-    layouts = [
-        dict(),
-        dict(objstm=True),
-        dict(xref_stream=True, objstm=True),
-        dict(xref_stream=True, xref_predictor=True),
-        dict(cid_font=True),
-    ]
-    out = []
-    for i, doc in enumerate(d for d in fixture_docs()
-                            if len(d["text"]) < 100_000):
-        url = doc["url"] + "#grid"
-        lay = layouts[i % len(layouts)]
-        if i % 10 == 9:
-            out.append((url, b"%PDF-1.4 poison " + b"\x00" * 48, []))
-            continue
+    def build(i, text, lay):
         if i % 6 == 5:
-            out.append((url, text_to_pdf(doc["text"], **lay), []))
-            continue
+            return text_to_pdf(text, **lay), []
         n_rows, n_cols = 3 + i % 3, 2 + i % 2
         rows = [["R%dC%d-%d" % (r, c, i) for c in range(n_cols)]
                 for r in range(n_rows)]
@@ -658,27 +467,14 @@ def fixture_table_pages() -> List[tuple]:
             rows[-1] = rows[-1][:-1]          # ragged tail
         if i % 4 == 0 and n_cols == 3:
             rows[1][1] = ""                   # absent mid-cell
-        pdf = text_to_pdf(doc["text"], table_rows=rows, **lay)
         # the table page follows the text pages
-        from ..pdfio.tokenizer import extract_pdf_text
-        n_text_pages = extract_pdf_text(
-            text_to_pdf(doc["text"], **lay)).pages
-        exp = [(n_text_pages, r, c, cell)
-               for r, row in enumerate(rows)
-               for c, cell in enumerate(row) if cell != ""]
-        out.append((url, pdf, exp))
-    return out
+        n_text_pages = extract_pdf_text(text_to_pdf(text, **lay)).pages
+        return (text_to_pdf(text, table_rows=rows, **lay),
+                [(n_text_pages, r, c, cell)
+                 for r, row in enumerate(rows)
+                 for c, cell in enumerate(row) if cell != ""])
 
-
-def fixture_table_pages_df(spark) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("html", T.BinaryType(), True),
-    ])
-    rows = [(u, bytearray(p)) for u, p, _ in fixture_table_pages()]
-    return spark.createDataFrame(rows, schema=schema)
+    return _pdf_corpus("#grid", b"%PDF-1.4 poison " + b"\x00" * 48, build)
 
 
 def extract_table_grids(pages: DataFrame) -> DataFrame:
@@ -686,29 +482,8 @@ def extract_table_grids(pages: DataFrame) -> DataFrame:
     (url, page_no, row_no, col_no, cell) by y-sweep row clustering +
     x-sweep column clustering over glyph positions (stream order
     carries nothing — see pdfio.tokenizer.extract_pdf_table_grid).
-    Arrow-batched ``mapInPandas``; prose-only and poison documents
-    yield no rows."""
+    Prose-only and poison documents yield no rows."""
     from ..pdfio.tokenizer import extract_pdf_table_grid
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            urls, pnos, rnos, cnos, cells = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.html is None:
-                    continue
-                payload = (bytes(row.html)
-                           if not isinstance(row.html, bytes) else row.html)
-                for pno, rno, cno, cell in \
-                        extract_pdf_table_grid(payload):
-                    urls.append(row.url)
-                    pnos.append(pno)
-                    rnos.append(rno)
-                    cnos.append(cno)
-                    cells.append(cell)
-            yield pd.DataFrame({
-                "url": urls, "page_no": pnos, "row_no": rnos,
-                "col_no": cnos, "cell": cells,
-            })
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=GRID_SCHEMA)
+    return _pdf_sidecar(pages, GRID_SCHEMA, extract_pdf_table_grid,
+                        numbered=False)

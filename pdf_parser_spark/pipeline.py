@@ -198,6 +198,39 @@ def _parse_arrow_batches(batches):
         ], schema=schema)
 
 
+def flat_map_rows(df: DataFrame, schema: str, rows_of) -> DataFrame:
+    """The per-document worker loop of every sidecar operator:
+    ``rows_of(*values)`` runs once per input row, with the values in
+    ``df``'s column order (binary as ``bytes``, NULL as ``None``), and
+    each tuple it yields becomes one output row in ``schema``'s column
+    order — zero, one or many rows per document.
+
+    Runs as ``mapInArrow``: each output column is one typed Arrow array
+    built against the Arrow form of ``schema`` (derived once, on the
+    driver), so a ``bigint`` keeps all 64 bits next to NULLs and no
+    pandas frame is built.  The worker applies the same per-task setup
+    as ``_parse_arrow_batches``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
+
+    def batches(it):
+        _skip_unchanged_zip_rereads()
+        import pyarrow as pa
+
+        for batch in it:
+            rows = [out for values in zip(*(c.to_pylist()
+                                            for c in batch.columns))
+                    for out in rows_of(*values)]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
+
+    return df.mapInArrow(batches, schema)
+
+
 def salted_repartition(
     df: DataFrame,
     partitions: int,

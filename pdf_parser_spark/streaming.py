@@ -12,6 +12,11 @@ the batch semantics.
 the batch job; the streaming checkpoint adds source-offset tracking on
 top (files already drained are never re-read, even without the
 anti-join).
+
+Stateless per-document stages (the MinHash band keys) run through
+``pipeline.flat_map_rows`` (``mapInArrow``); only the
+``applyInPandasWithState`` state functions see pandas frames, because
+Spark's stateful API hands them pandas.
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .io_tables import TableIO
 from .pages_source import PAGES_SCHEMA
-from .pipeline import parse_pages, split_outputs
+from .pipeline import flat_map_rows, parse_pages, split_outputs
 
 
 def stream_extraction(
@@ -239,37 +244,31 @@ LSH_PAIR_SCHEMA = "left_id bigint, right_id bigint, band_no int"
 LSH_STATE_SCHEMA = "ids array<bigint>"
 
 
-def _minhash_band_rows(pdf_iter):
-    """mapInPandas: per document, the 4 LSH band keys — the exact
-    Python mirror of ops/dedup's SQL chain (shingle tail semantics
-    included: <=4 words collapse to one whole-text shingle)."""
+def _minhash_band_rows(doc_id, text):
+    """flat_map_rows body: per document, the 4 LSH band keys — the
+    exact Python mirror of ops/dedup's SQL chain (shingle tail
+    semantics included: <=4 words collapse to one whole-text
+    shingle)."""
     import hashlib
 
-    import pandas as pd
-
-    for pdf in pdf_iter:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            if not isinstance(text, str):
-                continue  # NULL text: the batch twin's
-                # posexplode(split(NULL)) yields no shingles either
-            words = text.split(" ")
-            if len(words) <= 4:
-                shingles = [" ".join(words)]
-            else:
-                shingles = [" ".join(words[i:i + 4])
-                            for i in range(len(words) - 3)]
-            sigs = [
-                min(hashlib.md5(("%d:%s" % (i, s)).encode())
-                    .hexdigest() for s in shingles)
-                for i in range(8)
-            ]
-            for b in range(4):
-                key = hashlib.md5(
-                    (sigs[2 * b] + sigs[2 * b + 1]).encode()).hexdigest()
-                rows.append((b, key, int(doc_id)))
-        yield pd.DataFrame(rows,
-                           columns=["band_no", "band_key", "doc_id"])
+    if text is None:
+        return  # the batch twin's posexplode(split(NULL)) yields no
+        # shingles either
+    words = text.split(" ")
+    if len(words) <= 4:
+        shingles = [" ".join(words)]
+    else:
+        shingles = [" ".join(words[i:i + 4])
+                    for i in range(len(words) - 3)]
+    sigs = [
+        min(hashlib.md5(("%d:%s" % (i, s)).encode()).hexdigest()
+            for s in shingles)
+        for i in range(8)
+    ]
+    for b in range(4):
+        key = hashlib.md5(
+            (sigs[2 * b] + sigs[2 * b + 1]).encode()).hexdigest()
+        yield b, key, doc_id
 
 
 def lsh_bucket_state_func(key, pdf_iter, state, bucket_cap=None):
@@ -330,7 +329,8 @@ def stream_lsh_candidates(spark: SparkSession, input_dir: str,
     stream = (spark.readStream.schema(DOCS_SCHEMA)
               .option("maxFilesPerTrigger", 1)
               .parquet(input_dir))
-    banded = stream.mapInPandas(_minhash_band_rows, LSH_BAND_SCHEMA)
+    banded = flat_map_rows(stream.select("doc_id", "text"),
+                           LSH_BAND_SCHEMA, _minhash_band_rows)
     func = functools.partial(lsh_bucket_state_func,
                              bucket_cap=bucket_cap)
     pairs = banded.groupBy("band_no", "band_key").applyInPandasWithState(

@@ -15,11 +15,12 @@ Spark shape at crawl scale (100k+ WARC files, ~1 GB each):
   Crawl's own tooling parallelises per file too).  File count, not
   file size, is the parallelism unit, so a crawl's natural 100k-file
   layout gives 100k tasks — far more than any executor count.
-* record parsing runs in ``mapInPandas`` (Arrow-batched; the per-row
-  work is bytes-slicing, there is no per-row Python *row* overhead —
-  one Python call per batch of files).  Parsing is Content-Length
-  driven (the WARC contract), never delimiter scanning, so payloads
-  containing blank lines cannot desynchronise the reader.
+* record parsing is one ``pipeline.flat_map_rows`` pass
+  (``mapInArrow``; the per-file work is bytes-slicing, and each
+  file's records become typed Arrow columns, no pandas frame).
+  Parsing is Content-Length driven (the WARC contract), never
+  delimiter scanning, so payloads containing blank lines cannot
+  desynchronise the reader.
 * gzip members are decompressed incrementally with
   ``zlib.decompressobj`` — ``unused_data`` hands the next member's
   offset over without ever materialising more than one record beyond
@@ -186,8 +187,9 @@ def _iter_members(blob: bytes):
 
 
 def _parse_warc_blob(path: str, blob: bytes):
-    """Yield per-record dict rows (url, warc_date, html, error) from
-    one WARC file's bytes.  Content-Length-driven; a record that
+    """Yield per-record dict rows (url, warc_date, html, warc_file,
+    rec_no, error — keys in ``_READ_SCHEMA`` column order) from one
+    WARC file's bytes.  Content-Length-driven; a record that
     cannot be framed or lacks mandatory headers yields an error row
     and parsing continues at the next resynchronisation point."""
     rec_no = 0
@@ -253,28 +255,22 @@ _READ_SCHEMA = ("url string, warc_date string, html binary, "
 def read_warc(spark, path: str):
     """Directory (or glob) of ``.warc`` / ``.warc.gz`` files → one
     DataFrame row per record.  binaryFile scan (a task per file) +
-    mapInPandas framing; error rows instead of task failures."""
-
-    def parse(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                rows.extend(_parse_warc_blob(p, bytes(blob)))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_date", "html", "warc_file",
-                               "rec_no", "error"])
+    ``flat_map_rows`` framing; error rows instead of task failures."""
+    from .pipeline import flat_map_rows
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.warc*").load(path)
              .select("path", "content"))
-    return files.mapInPandas(parse, schema=_READ_SCHEMA)
+    return flat_map_rows(
+        files, _READ_SCHEMA,
+        lambda path, blob: (tuple(r.values())
+                            for r in _parse_warc_blob(path, blob)))
 
 
 def warc_ingest_demo(spark, out_dir: str = None):
     """Registered end-to-end lifecycle: render ``documents`` into real
     gzip-member WARC files, read them back through the binaryFile +
-    mapInPandas path, and emit the verifiable projection
+    flat_map_rows path, and emit the verifiable projection
     (url, warc_date, n_bytes, html_md5).  The DuckDB oracle rebuilds
     identical rows from ``documents`` with pure string math — so
     framing, CRLF handling, gzip member iteration, and Content-Length

@@ -196,14 +196,15 @@ def test_mega_doc_explodes_into_many_tasks(spark):
     from pdf_parser_spark.megadoc import _phase1, CHUNK_SCHEMA
     from pdf_parser_spark.megadoc import parse_pages_mega
     from pdf_parser_spark.fixtures import mega_statement_text
+    from pdf_parser_spark.pipeline import flat_map_rows
 
     text = mega_statement_text(2)  # ~34k lines
     pages = spark.createDataFrame(
         [("https://mega.test/x", None, None, text, "en")],
         "url string, warc_ts timestamp, html binary, text string,"
         " lang string")
-    chunks = pages.select("url", "warc_ts", "html", "text") \
-        .mapInPandas(_phase1, schema=CHUNK_SCHEMA)
+    chunks = flat_map_rows(pages.select("url", "warc_ts", "html", "text"),
+                           CHUNK_SCHEMA, _phase1)
     n_chunks = chunks.filter("chunk_no >= 0").count()
     assert n_chunks == 1  # 34k lines < default chunk; now force chunks
 

@@ -97,7 +97,7 @@ def main(sf_dir="/root/testdata/sf0.001"):
     from pdf_parser_spark.pipeline import parse_pages
     df = parse_pages(fixture_pages_df(spark))
     plan = df._jdf.queryExecution().explainString(mode)
-    chunks.append("\n## fidelity_pipeline (mapInPandas)\n\n```\n%s\n```\n"
+    chunks.append("\n## fidelity_pipeline (mapInArrow)\n\n```\n%s\n```\n"
                   % plan.strip())
     out = REPO / "PLANS.md"
     out.write_text("".join(chunks))
