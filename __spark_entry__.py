@@ -124,9 +124,9 @@ def _pdf(extract: str, corpus: str) -> Side:
         from pdf_parser_spark.ops import spans
 
         _ensure_pyfiles(spark)
-        corpus_rows = getattr(spans, "fixture_%s_pages" % corpus)()
-        return getattr(spans, extract)(spans.pdf_pages_df(spark,
-                                                          corpus_rows))
+        pages = spans.pdf_pages_df(
+            spark, getattr(spans, "fixture_%s_pages" % corpus)())
+        return getattr(spans, extract)(pages)
     return side
 
 
