@@ -716,8 +716,9 @@ def _ms_ctes(d: str) -> str:
 
 def _ms_tail() -> str:
     """The MaxScore pruning tail (``ub`` … ``cand``), referencing
-    ``wgts`` — as a CTE in the oracle form, as a checkpointed temp
-    view in the production twin (identical text either way)."""
+    ``wgts`` — in the oracle form the CTE computing the weights, in
+    the production twin a one-line CTE over the checkpointed
+    ``ms_wgts`` view (identical tail text either way)."""
     return """ub AS (
   SELECT query_id, term, CAST(MAX(w) AS BIGINT) AS ub
   FROM wgts GROUP BY query_id, term
@@ -803,9 +804,11 @@ def bm25_maxscore_df(spark):
     wgts = spark.sql(
         "WITH %s\nSELECT query_id, term, doc_id, w FROM wgts"
         % _ms_ctes_head(SPARK)).localCheckpoint()
-    wgts.createOrReplaceTempView("wgts")
+    # prefixed view, bridged to the tail's ``wgts`` by one CTE: a bare
+    # session-global ``wgts`` would bind any later unqualified reference
+    wgts.createOrReplaceTempView("ms_wgts")
     return spark.sql(
-        "WITH " + _ms_tail() + ",\n"
+        "WITH wgts AS (SELECT * FROM ms_wgts),\n" + _ms_tail() + ",\n"
         + _MS_FINAL.strip().replace("{k}", str(_TOP_K)))
 
 

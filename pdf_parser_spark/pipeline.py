@@ -4,9 +4,11 @@ table + lineage sidecar.
     scan(url, warc_ts, html, text, lang)
       → salted skew-aware repartition                 (one shuffle)
       → mapInArrow extract+detect+parse               (Arrow batches)
-      → split: transactions / per-document metrics    (one cached pass)
-      → snapshot-committed append (io_tables.TableIO: parquet+manifest
-        here, Iceberg on a real cluster)
+      → split: transactions / per-document metrics    (one persisted pass)
+      → two url-rebalanced writes, counts observed    (one file per
+        table at this size; AQE sizes and splits them)
+      → ONE snapshot commit over both (io_tables.TableIO: parquet +
+        manifest here, Iceberg on a real cluster)
 
 Design notes (SURVEY.md §4, BASELINE north star):
 * Extraction and parsing happen in ONE pass over the payload — the
@@ -29,7 +31,7 @@ import os
 import sys
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .engine.document import parse_document
@@ -275,7 +277,10 @@ def parse_pages(
 
 
 def split_outputs(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One cached pass → (transactions, doc_metrics)."""
+    """Union rows → (transactions, doc_metrics), two filters over the
+    same input.  ``run_extraction_job`` persists that input, so its
+    commit is two url-rebalanced writes over one persisted pass, counts
+    observed."""
     txs = parsed.filter(F.col("record") == "tx").select(*TX_COLUMNS)
     docs = parsed.filter(F.col("record") == "doc").select(*DOC_COLUMNS)
     return txs, docs
@@ -311,21 +316,40 @@ def run_extraction_job(
     left no manifest, hence nothing visible.  transactions and
     doc_metrics land in ONE cross-table commit (``append_many``), so a
     crash can never leave committed transactions whose urls the
-    doc_metrics-keyed anti-join would replay."""
+    doc_metrics-keyed anti-join would replay.
+
+    The commit is two url-rebalanced writes over one persisted pass,
+    counts observed:
+
+    * each table's frame gets ``hint("rebalance", "url")`` above the
+      persisted union, so the Python stage keeps its salted partitions
+      while AQE sizes the written files by the session's advisory
+      partition size (splitting skewed urls), and hashing on url keeps
+      a document's rows in one file, as the Iceberg DDL's
+      ``bucket(url)`` does (the small-file cost this removes is
+      measured in ``io_tables``);
+    * the row counts come from one ``Observation`` per written frame,
+      recorded in the manifest's ``metrics``; no ``count()`` job runs;
+    * a run with nothing left to extract (an empty url projection of
+      the anti-joined input) returns ``docs=0`` before any payload
+      shuffle or Python stage, and commits no snapshot."""
     io = TableIO.from_conf(spark, out_dir)
     if resume:
         done = io.committed_keys(spark, "doc_metrics", "url")
         if done is not None:
             pages = pages.join(done, "url", "left_anti")
+    if pages.select("url").isEmpty():  # nothing to do → no snapshot
+        return {"docs": 0, "txs": 0, "io": io, "out_dir": out_dir}
     parsed = parse_pages(pages, partitions).persist()
+    seen = {"transactions": Observation(), "doc_metrics": Observation()}
     try:
-        txs, docs = split_outputs(parsed)
-        n_txs = txs.count()
-        n_docs = docs.count()
-        if n_docs:  # empty resume run → no empty snapshot
-            io.append_many({"transactions": txs, "doc_metrics": docs},
-                           run_id=run_id)
+        io.append_many(
+            {t: df.observe(seen[t], F.count(F.lit(1)).alias("rows"))
+                  .hint("rebalance", "url")
+             for t, df in zip(seen, split_outputs(parsed))},
+            run_id=run_id, metrics=seen)
     finally:
         parsed.unpersist()
-    return {"docs": n_docs, "txs": n_txs, "io": io,
+    return {"docs": seen["doc_metrics"].get["rows"],
+            "txs": seen["transactions"].get["rows"], "io": io,
             "out_dir": out_dir}

@@ -29,6 +29,30 @@ def test_append_many_is_one_commit(spark, tmp_path, two_tables):
     assert io.read(spark, "tb").count() == 1
 
 
+def test_manifest_metrics_are_additive(spark, tmp_path, two_tables):
+    """``metrics`` maps a table to the Observation on its frame, and
+    the observed values land under the manifest's ``metrics`` key.
+    Manifests written without it (all of them before the key existed)
+    lack the key and still read, time-travel and mix with newer ones."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    a, b = two_tables
+    io = TableIO(str(tmp_path))
+    io.append_many({"ta": a, "tb": b}, run_id="old")
+    seen = {"ta": Observation(), "tb": Observation()}
+    io.append_many(
+        {t: df.observe(seen[t], F.count(F.lit(1)).alias("rows"))
+         for t, df in (("ta", a), ("tb", b))}, metrics=seen)
+    fresh = TableIO(str(tmp_path))  # no manifest cache
+    old, new = fresh.snapshots()
+    assert "metrics" not in old
+    assert new["metrics"] == {"ta": {"rows": 2}, "tb": {"rows": 1}}
+    assert fresh.read(spark, "ta", as_of=0).count() == 2
+    assert fresh.read(spark, "ta").count() == 4
+    assert fresh.read(spark, "tb").count() == 2
+
+
 def test_crashed_commit_leaves_nothing_visible(spark, tmp_path,
                                                two_tables, monkeypatch):
     """A crash AFTER all parquet writes but BEFORE the manifest rename

@@ -42,3 +42,16 @@ def test_bm25_maxscore_df_plan_bounded(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "FileScan parquet" not in plan  # only checkpointed leaves
+
+
+def test_bm25_maxscore_df_leaves_no_bare_wgts_view(spark):
+    """The checkpointed weights are registered under a prefixed view;
+    no session-global ``wgts`` is left for a later query to bind."""
+    from pdf_parser_spark.ops.retrieval import bm25_maxscore_df
+
+    _register(spark)
+    spark.catalog.dropTempView("wgts")
+    bm25_maxscore_df(spark).collect()
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert "wgts" not in views
+    assert "ms_wgts" in views
