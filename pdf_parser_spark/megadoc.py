@@ -63,7 +63,7 @@ from .engine.direction import classify_direction
 from .engine.textrules import (
     any_date, mmm_first_date, slash_date, split_lines, year_of,
 )
-from .pipeline import flat_map_rows
+from .pipeline import flat_map_rows, stage_width
 
 # banks whose state decomposes across the split points above.
 # wf/bofa/citi added in round 4 (verdict ask #4):
@@ -394,12 +394,10 @@ def parse_pages_mega(pages: DataFrame,
     document size.  Output order/content matches the engine exactly:
     the window's (date, chunk_no, within_no) key IS finalize_records'
     stable date-sort."""
-    spark = pages.sparkSession
-    partitions = partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
     pruned = pages.select("url", "warc_ts", "html", "text")
     chunks = flat_map_rows(pruned, CHUNK_SCHEMA, _phase1)
-    chunks = chunks.repartition(partitions * 2, "url", "chunk_no")
+    chunks = chunks.repartition(stage_width(pages.sparkSession, partitions),
+                                "url", "chunk_no")
     # persist BOTH intermediates (ADVICE r4): chunks feeds three
     # consumers (phase-2 parse, the bank join, the doc skeleton) across
     # the two returned DataFrames' separate actions — without this the

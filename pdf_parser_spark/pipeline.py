@@ -26,6 +26,7 @@ Design notes (SURVEY.md §4, BASELINE north star):
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import os
 import sys
@@ -109,6 +110,29 @@ def _skip_unchanged_zip_rereads() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _worker_task_setup() -> None:
+    """Per-task set-up of every Python worker this module serves
+    (``_parse_arrow_batches`` and ``flat_map_rows``).
+
+    * ``_skip_unchanged_zip_rereads`` (installed once per process).
+    * ``gc.freeze()``, inside a Spark task only.  With worker reuse
+      on, PySpark's daemon runs ``gc.collect()`` after every task.
+      The worker's heap is mostly what importing ``pyspark.sql``,
+      ``pyarrow`` and this package left behind (about 74k tracked
+      objects), so each of those collections cost 23–24 ms of CPU
+      against about 5 ms for the task body itself (4-core host,
+      CPython 3.11, PySpark 4.1.2).  The daemon has just collected
+      when the next task starts, so freezing then moves only live
+      objects out of the collector's scan; the task's own garbage is
+      still collected.  The driver, and any in-process caller of the
+      worker functions (no ``TaskContext``), is never frozen."""
+    _skip_unchanged_zip_rereads()
+    from pyspark import TaskContext
+
+    if TaskContext.get() is not None:
+        gc.freeze()
+
+
 def _parse_arrow_batches(batches):
     """Executor-side worker: Arrow batches of pages → union rows,
     assembled as pyarrow RecordBatches directly — ``pa.nulls`` makes
@@ -117,7 +141,7 @@ def _parse_arrow_batches(batches):
     18-column pandas frames + Arrow conversion cost ~2.3 s of worker
     CPU; arrow-native is ~0.28 s (hand whole batches to native
     code)."""
-    _skip_unchanged_zip_rereads()
+    _worker_task_setup()
     import pyarrow as pa
 
     from pyspark import TaskContext
@@ -210,15 +234,15 @@ def flat_map_rows(df: DataFrame, schema: str, rows_of) -> DataFrame:
     Runs as ``mapInArrow``: each output column is one typed Arrow array
     built against the Arrow form of ``schema`` (derived once, on the
     driver), so a ``bigint`` keeps all 64 bits next to NULLs and no
-    pandas frame is built.  The worker applies the same per-task setup
-    as ``_parse_arrow_batches``."""
+    pandas frame is built.  The worker runs ``_worker_task_setup``
+    first, as ``_parse_arrow_batches`` does."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
     arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
 
     def batches(it):
-        _skip_unchanged_zip_rereads()
+        _worker_task_setup()
         import pyarrow as pa
 
         for batch in it:
@@ -233,13 +257,23 @@ def flat_map_rows(df: DataFrame, schema: str, rows_of) -> DataFrame:
     return df.mapInArrow(batches, schema)
 
 
+def stage_width(spark: SparkSession,
+                partitions: Optional[int] = None) -> int:
+    """Task count of a per-document Python stage: 2 × ``partitions``
+    when given, else 2 × the executors' cores (``defaultParallelism``),
+    not ``spark.sql.shuffle.partitions``, whose floor of 8
+    (``session.get_spark``) is for SQL shuffles.  Each task has a fixed
+    cost (see ``salted_repartition``)."""
+    return 2 * (partitions or spark.sparkContext.defaultParallelism)
+
+
 def salted_repartition(
     df: DataFrame,
-    partitions: int,
+    partitions: Optional[int] = None,
     seed: int = 42,
 ) -> DataFrame:
     """Skew-aware shuffle: ONE pass, 2× over-partitioning by seeded
-    url-hash.
+    url-hash, ``stage_width`` tasks (2 × cores by default).
 
     Design history (measured, 32 cores, 4920-doc corpus with 360
     mega-documents): an explicit two-branch plan (small docs hashed,
@@ -249,13 +283,18 @@ def salted_repartition(
     payloads once and still spreads megas (hash-uniform) with small
     tasks bounding the tail — 523 docs/sec, matching the raw
     multiprocessing ceiling of this host.  At 100 TB the double scan
-    is strictly worse (payload bytes dominate); over-partitioning cost
-    is a few thousand extra tasks, each with a fixed Python-worker CPU
-    cost: 0.23 s per task before ``_skip_unchanged_zip_rereads`` and
-    0.04 s after (near-empty tasks, 4-core host, CPython 3.11).  The seed
-    decorrelates from any upstream partitioning (same rationale as
-    salting)."""
-    return df.repartition(partitions * 2, F.xxhash64("url", F.lit(seed)))
+    is strictly worse (payload bytes dominate).
+
+    Each task has a fixed cost (near-empty tasks, 4-core host, CPython
+    3.11, PySpark 4.1.2): about 5 ms of task body in the Python worker,
+    about 18 ms of JVM CPU, and the daemon's post-task ``gc.collect()``,
+    which cost 23–24 ms over the worker's ~74k imported objects until
+    ``_worker_task_setup`` froze them.  So the default width follows
+    the cores, not the data; a large job sizes its tasks by data by
+    passing ``partitions=``.  The seed decorrelates from any upstream
+    partitioning (same rationale as salting)."""
+    return df.repartition(stage_width(df.sparkSession, partitions),
+                          F.xxhash64("url", F.lit(seed)))
 
 
 def parse_pages(
@@ -263,11 +302,12 @@ def parse_pages(
     partitions: Optional[int] = None,
     salt_seed: int = 42,
 ) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → union parsed rows."""
-    spark = pages.sparkSession
-    partitions = partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    """pages(url, warc_ts, html, text, lang) → union parsed rows, in
+    ``salted_repartition``'s 2 × ``partitions`` tasks; without
+    ``partitions``, 2 × the executors' cores (each Python task costs
+    about 5 ms of worker CPU, 18 ms of JVM CPU and, before the worker
+    heap was frozen, a 23–24 ms post-task ``gc.collect()``).  Pass
+    ``partitions=`` to size tasks by data on a large job."""
     pruned = pages.select("url", "warc_ts", "html", "text")
     salted = salted_repartition(pruned, partitions, salt_seed)
     # mapInArrow, not mapInPandas: the worker builds output

@@ -23,6 +23,9 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # the floor of 8 is for SQL shuffles (joins, aggregates); it does
+    # not set the extraction width, which follows the cores
+    # (pipeline.stage_width)
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # local-mode python workers inherit the driver env: make sure the
     # package resolves on executors regardless of launch cwd.  On a
