@@ -8,7 +8,7 @@ state machines are small explicit loops.
 
 Every function here takes ``(lines, year, tally=None)`` and returns raw
 records ``{date, description, amount[, direction]}`` in emission order;
-``direction.finalize_records`` applies abs/backfill/stable-sort.
+``chunking.parse_document_columnar`` applies abs/backfill/stable-sort.
 
 ``tally`` (optional dict) accumulates lineage counters for the metrics
 sidecar: ``blocks_total`` (candidate blocks with a date), ``blocks_kept``

@@ -55,7 +55,10 @@ def classify_direction(description: str) -> str:
 
 def finalize_records(records: List[Dict[str, Any]]) -> List[Dict[str, Any]]:
     """abs(amount), strip desc, backfill direction, stable date sort
-    (reference common.py:43-57 ``normalize_transactions``)."""
+    (reference common.py:43-57 ``normalize_transactions``), one dict per
+    record.  The engine runs the same rule as a columnar fold
+    (``chunking._Columnar``); this dict form is the reference the
+    relational and chunked-parse tests compare against."""
     out = []
     for rec in records:
         amt = float(rec["amount"])

@@ -12,10 +12,7 @@ from __future__ import annotations
 
 from typing import Any, Dict, List, Optional, Tuple
 
-from .banks import ALL_PARSERS, PARSERS, parse_generic
-from .detect import detect_issuer
-from .direction import finalize_records
-from .textrules import split_lines, year_of
+from .chunking import parse_document_columnar
 
 
 def parse_document(
@@ -32,13 +29,11 @@ def parse_document(
     ``bofa_relationship`` layout is reached).
 
     Returns ``(issuer_key, records)`` where records are
-    ``{date, description, amount, direction}`` stable-sorted by date.
+    ``{date, description, amount, direction}`` stable-sorted by date:
+    one dict per row of ``chunking.parse_document_columnar``, the parse
+    the extraction worker runs.
     """
-    lines = split_lines(text)
-    year = year_of(text, fallback_year)
-    key = issuer or detect_issuer(text)
-    parse_fn = ALL_PARSERS.get(key) or parse_generic
-    if tally is not None:
-        tally["n_lines"] = len(lines)
-    raw = parse_fn(lines, year, tally)
-    return key, finalize_records(raw)
+    key, cols = parse_document_columnar(text, fallback_year, issuer=issuer,
+                                        tally=tally)
+    return key, [{"date": d, "description": s, "amount": a, "direction": r}
+                 for d, s, a, r in zip(*cols)]

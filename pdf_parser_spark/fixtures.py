@@ -493,8 +493,8 @@ def mega_statement_text(target_mb: int = 512, seed: int = 7) -> str:
     (SURVEY §4 worst-case document): deterministic pseudo-random
     transaction lines with section headers and noise interleaved, page
     breaks every 60 lines — the document that must neither OOM a 4 GB
-    Python worker nor stall its task (tools/megadoc_bench.py measures;
-    tests/test_megadoc.py pins a scaled-down bound)."""
+    Python worker (tools/megadoc_bench.py measures; tests/test_megadoc.py
+    pins a scaled-down bound)."""
     import random
 
     rng = random.Random(seed)

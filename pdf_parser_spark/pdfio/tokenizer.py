@@ -39,8 +39,11 @@ _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 _WS = b" \t\r\n\f\x00"
 _DELIM = b"()<>[]{}/%"
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
-# whitespace runs + %-to-EOL comments in one C-level match
-_WSCMT_RE = re.compile(rb"(?:[ \t\r\n\f\x00]|%[^\r\n]*)*")
+# whitespace runs + %-to-EOL comments in one C-level match.  Runs are
+# matched whole (``+``) and the outer loop is possessive (``*+``): with
+# one byte per iteration and backtracking kept, ``sre`` held ~120 bytes
+# of state per whitespace byte (+976 MB over 8 MiB of spaces).
+_WSCMT_RE = re.compile(rb"(?:[ \t\r\n\f\x00]+|%[^\r\n]*)*+")
 _KEYWORD_RE = re.compile(rb"[A-Za-z'\"*]+")
 _GEN_R_RE = re.compile(rb"\s+(\d+)\s+R\b")
 # the bytes a literal-string scan must stop at (escape / nest / close)

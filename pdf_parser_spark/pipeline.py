@@ -17,9 +17,12 @@ Design notes (SURVEY.md §4, BASELINE north star):
   inside ``mapInArrow`` over Arrow record batches.
 * Skew: documents vary 1000× in size, and one task gets many documents.
   We repartition by a *seeded* url hash (decorrelates from upstream
-  layout), and mega-documents (payload > ``mega_threshold``) are routed
-  to a dedicated repartition so a handful of giants never serialize
-  behind thousands of small docs in the same task.
+  layout), which spreads the giants across tasks.
+* One parse for every document size: the worker runs
+  ``engine.chunking.parse_document_columnar``, which parses a document
+  above ``DEFAULT_CHUNK_LINES`` lines in chunks split at provably safe
+  lines and folds each chunk into columns, so a giant's memory stays
+  bounded inside its task (BENCH/MEGADOC.md).
 * Column pruning: the plan touches only the columns it needs; metrics
   queries on the sidecar never scan payloads.
 """
@@ -35,7 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .engine.document import parse_document
+from .engine.chunking import parse_document_columnar
 from .io_tables import TableIO
 from .pdfio.extract import extract_document
 
@@ -134,12 +137,15 @@ def _worker_task_setup() -> None:
 
 
 def _parse_arrow_batches(batches):
-    """Executor-side worker: Arrow batches of pages → union rows,
-    assembled as pyarrow RecordBatches directly — ``pa.nulls`` makes
-    the 10 all-null union columns O(1) instead of per-cell object
-    conversion.  Measured: building the bench corpus's output as
-    18-column pandas frames + Arrow conversion cost ~2.3 s of worker
-    CPU; arrow-native is ~0.28 s (hand whole batches to native
+    """Executor-side worker: Arrow batches of pages → union rows, per
+    input batch one batch of tx rows, then one of doc rows.  Each
+    document goes through ``parse_document_columnar`` (chunked above
+    ``DEFAULT_CHUNK_LINES`` lines) and its columns are appended whole.
+    Output is assembled as pyarrow RecordBatches directly —
+    ``pa.nulls`` makes the 10 all-null union columns O(1) instead of
+    per-cell object conversion.  Measured: building the bench corpus's
+    output as 18-column pandas frames + Arrow conversion cost ~2.3 s of
+    worker CPU; arrow-native is ~0.28 s (hand whole batches to native
     code)."""
     _worker_task_setup()
     import pyarrow as pa
@@ -174,18 +180,20 @@ def _parse_arrow_batches(batches):
                 text, kind, pages = text0, "text", 1
             tally: dict = {}
             try:
-                bank, txs = parse_document(text, fallback_year, tally=tally)
+                bank, (dates, descs, amounts, dirs) = (
+                    parse_document_columnar(text, fallback_year,
+                                            tally=tally))
             except Exception as exc:  # poison doc: metrics row, no txs
-                bank, txs = "error", []
+                bank, dates, descs, amounts, dirs = "error", [], [], [], []
                 error = "%s: %s" % (type(exc).__name__, exc)
-            for i, t in enumerate(txs):
-                t_url.append(url)
-                t_idx.append(i)
-                t_bank.append(bank)
-                t_date.append(t["date"])
-                t_desc.append(t["description"])
-                t_amt.append(t["amount"])
-                t_dir.append(t["direction"])
+            n = len(dates)
+            t_url.extend([url] * n)
+            t_idx.extend(range(n))
+            t_bank.extend([bank] * n)
+            t_date.extend(dates)
+            t_desc.extend(descs)
+            t_amt.extend(amounts)
+            t_dir.extend(dirs)
             d_url.append(url)
             d_bank.append(bank)
             d_kind.append(kind)
@@ -194,7 +202,7 @@ def _parse_arrow_batches(batches):
             d_chars.append(len(text) if text else 0)
             d_bt.append(tally.get("blocks_total", 0))
             d_bk.append(tally.get("blocks_kept", 0))
-            d_txn.append(len(txs))
+            d_txn.append(n)
             d_sha.append(
                 hashlib.sha256((text or "").encode("utf-8")).hexdigest())
             d_err.append(error)

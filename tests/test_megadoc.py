@@ -1,23 +1,27 @@
-"""Worst-case-document bounds (megadoc.py): the chunked paths must be
-EXACTLY equivalent to the whole-document engine, and the memory fold
-must actually bound the worker.
+"""Worst-case-document bounds (engine/chunking.py): the chunked parse
+must be EXACTLY equivalent to the whole-document reference
+(``finalize_records`` over one parse of every line), and the columnar
+fold must actually bound the worker.
 
 Cites: reference base.py:103-121 (sweep), chase.py:16-68 (section
-state) — the decomposition argument lives in megadoc.py's docstring.
+state) — the decomposition argument lives in chunking.py's docstring.
 """
 
-import json
-import subprocess
-import sys
+import importlib.util
+import pathlib
 
 import pytest
 
-from pdf_parser_spark.engine.document import parse_document
-from pdf_parser_spark.megadoc import (
+from pdf_parser_spark.engine.banks import ALL_PARSERS
+from pdf_parser_spark.engine.chunking import (
     chunk_spans, parse_document_columnar,
 )
+from pdf_parser_spark.engine.detect import detect_issuer
+from pdf_parser_spark.engine.direction import finalize_records
+from pdf_parser_spark.engine.document import parse_document
+from pdf_parser_spark.engine.textrules import split_lines, year_of
 
-REPO = "/root/repo"
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _grow(body: str, reps: int, header: str = "") -> str:
@@ -84,11 +88,31 @@ CASES = [
 ]
 
 
+def _reference(text, issuer=None):
+    """The whole-document reference: ``finalize_records`` over one
+    parse of every line, and that parse's tally."""
+    lines = split_lines(text)
+    tally = {"n_lines": len(lines)}
+    key = issuer or detect_issuer(text)
+    raw = ALL_PARSERS[key](lines, year_of(text, 2024), tally)
+    return key, finalize_records(raw), tally
+
+
+def _assert_columns(cols, want):
+    dates, descs, amounts, dirs = cols
+    assert dates == [t["date"] for t in want]
+    assert descs == [t["description"] for t in want]
+    assert [repr(a) for a in amounts] == [repr(t["amount"]) for t in want]
+    assert dirs == [t["direction"] for t in want]
+
+
 @pytest.mark.parametrize("bank,header,body_tpl",
                          CASES, ids=[c[0] for c in CASES])
 def test_columnar_chunked_equals_whole(bank, header, body_tpl):
-    """parse_document vs parse_document_columnar with aggressively
-    small chunks: identical transactions in identical order."""
+    """The chunked parse with aggressively small chunks vs the
+    whole-document reference: identical transactions in identical
+    order, and identical tallies (production doc_metrics come from
+    this path)."""
     blocks = []
     for i in range(400):
         blocks.append(body_tpl % ((i % 9) + 1, i % 100)
@@ -96,15 +120,18 @@ def test_columnar_chunked_equals_whole(bank, header, body_tpl):
                       body_tpl % ((i % 9) + 1))
     text = header + "\n".join(blocks)
 
-    want_bank, want = parse_document(text, 2024)
-    got_bank, (dates, descs, amounts, dirs) = parse_document_columnar(
-        text, 2024, chunk_lines=97)
+    want_bank, want, want_tally = _reference(text)
+    tally = {}
+    assert parse_document(text, 2024, tally=tally) == (want_bank, want)
+    assert tally == want_tally
+    chunked_tally = {}
+    got_bank, cols = parse_document_columnar(
+        text, 2024, tally=chunked_tally, chunk_lines=97)
     assert got_bank == want_bank == bank
     assert len(want) > 700  # chunking definitely engaged
-    assert dates == [t["date"] for t in want]
-    assert descs == [t["description"] for t in want]
-    assert [repr(a) for a in amounts] == [repr(t["amount"]) for t in want]
-    assert dirs == [t["direction"] for t in want]
+    _assert_columns(cols, want)
+    assert chunked_tally == want_tally
+    assert set(want_tally) == {"n_lines", "blocks_total", "blocks_kept"}
 
 
 def test_columnar_chunked_bofa_relationship_equals_whole():
@@ -113,10 +140,6 @@ def test_columnar_chunked_bofa_relationship_equals_whole():
     section machine must survive split points, including chunks that
     begin inside a CLOSED section (after 'Total …') and glued-line
     markers."""
-    from pdf_parser_spark.engine.banks import parse_bofa_relationship
-    from pdf_parser_spark.engine.direction import finalize_records
-    from pdf_parser_spark.engine.textrules import split_lines
-
     blocks = []
     for i in range(400):
         blocks.append(
@@ -131,21 +154,18 @@ def test_columnar_chunked_bofa_relationship_equals_whole():
             % ((i % 9) + 1, i % 10, i % 100))
     text = "Bank of America Relationship statement 2024\n" + "\n".join(blocks)
 
-    lines = split_lines(text)
-    want = finalize_records(parse_bofa_relationship(lines, 2024))
-    got_bank, (dates, descs, amounts, dirs) = parse_document_columnar(
-        text, 2024, issuer="bofa_relationship", chunk_lines=97)
+    _, want, want_tally = _reference(text, "bofa_relationship")
+    chunked_tally = {}
+    got_bank, cols = parse_document_columnar(
+        text, 2024, issuer="bofa_relationship", tally=chunked_tally,
+        chunk_lines=97)
     assert got_bank == "bofa_relationship"
     assert len(want) > 300  # chunking engaged, sections exercised
-    assert dates == [t["date"] for t in want]
-    assert descs == [t["description"] for t in want]
-    assert [repr(a) for a in amounts] == [repr(t["amount"]) for t in want]
-    assert dirs == [t["direction"] for t in want]
+    _assert_columns(cols, want)
+    assert chunked_tally == want_tally
 
 
 def test_chunk_spans_cover_and_start_on_dates():
-    from pdf_parser_spark.engine.textrules import split_lines
-
     text = _grow("01/05 deposit 10.00\nnoise line", 500,
                  "chase.com statement")
     lines = split_lines(text)
@@ -156,109 +176,24 @@ def test_chunk_spans_cover_and_start_on_dates():
     assert len(spans) > 3
 
 
-def test_parse_pages_mega_equals_parse_pages(spark):
-    """End-to-end: the distributed chunk pipeline over the NORMAL
-    fixture corpus must reproduce parse_pages' transactions (incl.
-    tx_index order) and doc metrics exactly."""
-    from pdf_parser_spark.pages_source import fixture_pages_df
-    from pdf_parser_spark.pipeline import parse_pages, split_outputs
-    from pdf_parser_spark.megadoc import parse_pages_mega
-
-    pages = fixture_pages_df(spark)
-    want_tx, want_docs = split_outputs(parse_pages(pages))
-    got_tx, got_docs = parse_pages_mega(pages)
-
-    key = lambda r: (r.url, r.tx_index)
-    want_rows = sorted(((r.url, r.tx_index, r.bank, r.date,
-                         r.description, repr(r.amount), r.direction)
-                        for r in want_tx.collect()))
-    got_rows = sorted(((r.url, r.tx_index, r.bank, r.date,
-                        r.description, repr(r.amount), r.direction)
-                       for r in got_tx.collect()))
-    assert got_rows == want_rows
-
-    dcols = ("url", "bank", "kind", "pages", "n_lines", "n_chars",
-             "blocks_total", "blocks_kept", "tx_count", "text_sha256",
-             "error")
-    want_d = sorted(tuple(getattr(r, c) for c in dcols)
-                    for r in want_docs.collect())
-    got_d = sorted(tuple(getattr(r, c) for c in dcols)
-                   for r in got_docs.collect())
-    assert got_d == want_d
-
-    from pdf_parser_spark.megadoc import release_mega_cache
-    release_mega_cache()
-
-
-def test_mega_doc_explodes_into_many_tasks(spark):
-    """A multi-chunk giant actually fans out: its chunk rows exceed 4
-    and the reassembled transactions equal the engine run whole."""
-    from pdf_parser_spark.megadoc import _phase1, CHUNK_SCHEMA
-    from pdf_parser_spark.megadoc import parse_pages_mega
-    from pdf_parser_spark.fixtures import mega_statement_text
-    from pdf_parser_spark.pipeline import flat_map_rows
-
-    text = mega_statement_text(2)  # ~34k lines
-    pages = spark.createDataFrame(
-        [("https://mega.test/x", None, None, text, "en")],
-        "url string, warc_ts timestamp, html binary, text string,"
-        " lang string")
-    chunks = flat_map_rows(pages.select("url", "warc_ts", "html", "text"),
-                           CHUNK_SCHEMA, _phase1)
-    n_chunks = chunks.filter("chunk_no >= 0").count()
-    assert n_chunks == 1  # 34k lines < default chunk; now force chunks
-
-    import pdf_parser_spark.megadoc as M
-    old = M.DEFAULT_CHUNK_LINES
-    M.DEFAULT_CHUNK_LINES = 5000
-    try:
-        txs, docs = parse_pages_mega(pages)
-        got = [(r.tx_index, r.date, r.description, repr(r.amount),
-                r.direction) for r in txs.collect()]
-        got.sort()
-        _, want = parse_document(text, 1970)
-        wantt = sorted((i, t["date"], t["description"], repr(t["amount"]),
-                        t["direction"]) for i, t in enumerate(want))
-        assert got == wantt
-        d = docs.collect()[0]
-        assert d.bank == "chase" and d.tx_count == len(want)
-    finally:
-        M.DEFAULT_CHUNK_LINES = old
-        M.release_mega_cache()
-
-
-_RSS_CHILD = r"""
-import json, resource, sys
-sys.path.insert(0, %(repo)r)
-from pdf_parser_spark.fixtures import mega_statement_text
-text = mega_statement_text(24)
-if %(columnar)d:
-    from pdf_parser_spark.megadoc import parse_document_columnar
-    bank, cols = parse_document_columnar(text, 2024)
-    n = len(cols[0])
-else:
-    from pdf_parser_spark.engine.document import parse_document
-    bank, txs = parse_document(text, 2024)
-    n = len(txs)
-print(json.dumps({"n": n,
-    "rss": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0}))
-"""
-
-
 def test_columnar_bounds_worker_memory():
     """The columnar fold must hold a 24 MB document under the
-    whole-document path's RSS — the linear extrapolation that keeps a
-    512 MB doc inside a 4 GB worker (BENCH/MEGADOC.md has the measured
-    curve)."""
-    def run(columnar):
-        out = subprocess.run(
-            [sys.executable, "-c",
-             _RSS_CHILD % {"repo": REPO, "columnar": columnar}],
-            capture_output=True, text=True, check=True)
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
-    whole = run(0)
-    col = run(1)
-    assert col["n"] == whole["n"] > 100_000
-    assert col["rss"] < whole["rss"], (col, whole)
-    assert col["rss"] < 1024, col  # 24 MB doc ≪ 1 GB worker share
+    whole-document reference's RSS — the linear extrapolation that
+    keeps a 512 MB doc inside a 4 GB worker (BENCH/MEGADOC.md has the
+    measured curve) — and the production worker
+    (``_parse_arrow_batches`` over one Arrow batch) must peak at most
+    16 MB of RSS per MB of document above its RSS before the document
+    exists (the input batch included); the whole-document parse it
+    ran before took about 19 MB per MB.  Each mode runs in a fresh
+    child process (tools/megadoc_bench.py)."""
+    spec = importlib.util.spec_from_file_location(
+        "megadoc_bench", REPO / "tools" / "megadoc_bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    whole, col, doc, worker = (bench.measure(24, mode)
+                               for mode in bench.MODES)
+    assert col["txs"] == whole["txs"] == doc["txs"] == worker["txs"]
+    assert worker["txs"] > 100_000
+    assert col["peak_rss_mb"] < whole["peak_rss_mb"], (col, whole)
+    assert col["peak_rss_mb"] < 1024, col  # 24 MB doc ≪ 1 GB worker share
+    assert worker["mb_rss_per_doc_mb"] <= 16, worker

@@ -496,3 +496,46 @@ def test_table_grid_fixture_reader_matches_request():
         assert extract_pdf_table_grid(pdf) == exp, url
         n += len(exp)
     assert n >= 150
+
+
+_WS_BOMB_CHILD = r"""
+import json, resource, sys, zlib
+sys.path.insert(0, %(repo)r)
+from pdf_parser_spark.pdfio.extract import extract_document
+from pdf_parser_spark.pdfio.writer import _Builder
+
+# one page whose content stream inflates, through two Flate passes,
+# to 8 MiB of spaces
+data = zlib.compress(zlib.compress(b" " * (8 << 20), 9), 9)
+b = _Builder()
+root, pages, content, page = (b.reserve() for _ in range(4))
+b.set(root, b"<< /Type /Catalog /Pages %%d 0 R >>" %% pages)
+b.set(pages, b"<< /Type /Pages /Kids [%%d 0 R] /Count 1 >>" %% page)
+b.set(content, b"<< /Length %%d /Filter [/FlateDecode /FlateDecode] >>\n"
+      b"stream\n" %% len(data) + data + b"\nendstream")
+b.set(page, b"<< /Type /Page /Parent %%d 0 R /MediaBox [0 0 612 792]"
+      b" /Contents %%d 0 R >>" %% (pages, content))
+pdf = b.render(compress=False)
+pre = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+doc = extract_document(pdf)
+print(json.dumps({"bytes": len(pdf), "chars": len(doc.text), "pre": pre,
+    "rss": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0}))
+"""
+
+
+def test_whitespace_bomb_bounded_memory():
+    """A 543-byte PDF whose content stream is 8 MiB of spaces: the
+    lexer's whitespace/comment skip must not keep regex backtracking
+    state per byte (it once grew RSS by ~976 MB here)."""
+    import json
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = str(pathlib.Path(__file__).resolve().parent.parent)
+    out = subprocess.run([sys.executable, "-c",
+                          _WS_BOMB_CHILD % {"repo": repo}],
+                         capture_output=True, text=True, check=True)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["bytes"] < 1024 and got["chars"] == 0, got
+    assert got["rss"] - got["pre"] < 64, got

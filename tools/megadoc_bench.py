@@ -1,11 +1,21 @@
-"""Worst-case-document bound (SURVEY §4 / round-2 verdict ask #3):
-measure (a) the whole-document engine path's linear RSS/wall curve —
-which locates the 4 GB-worker knee, (b) the columnar chunked path
-(megadoc.parse_document_columnar) at 512 MB, (c) the distributed chunk
-pipeline (megadoc.parse_pages_mega) at 512 MB with per-task stats from
-the Spark REST API.  Results → BENCH/MEGADOC.md.
+"""Worst-case-document bound: peak RSS and parse CPU of one giant
+chase-shaped statement (fixtures.mega_statement_text), each size and
+mode in a fresh child process.  Modes:
 
-Usage: python tools/megadoc_bench.py [mb] [out_md]
+* ``whole`` — the whole-document reference: ``finalize_records`` over
+  one parse of every line (what the engine ran before it chunked);
+* ``columnar`` — ``chunking.parse_document_columnar``, the one parse;
+* ``parse_document`` — the engine's dict view, as ``serve.py`` calls it;
+* ``worker`` — the production extraction worker,
+  ``pipeline._parse_arrow_batches``, over one Arrow batch holding the
+  document (what one Spark task runs for it).
+
+``base_rss_mb`` is the child's RSS once imports are done and before the
+document exists; ``mb_rss_per_doc_mb`` is (peak − base) / doc MB, the
+input batch included.  Results feed BENCH/MEGADOC.md;
+tests/test_megadoc.py runs ``measure`` at 24 MB.
+
+Usage: python tools/megadoc_bench.py [mb ...]   (default: 32 64)
 """
 
 from __future__ import annotations
@@ -14,189 +24,79 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
-_WORKER = r"""
+_CHILD = r"""
 import json, resource, sys, time
 sys.path.insert(0, %(repo)r)
+import pyarrow as pa
+from pdf_parser_spark.engine.banks import ALL_PARSERS
+from pdf_parser_spark.engine.chunking import parse_document_columnar
+from pdf_parser_spark.engine.detect import detect_issuer
+from pdf_parser_spark.engine.direction import finalize_records
+from pdf_parser_spark.engine.document import parse_document
+from pdf_parser_spark.engine.textrules import split_lines, year_of
 from pdf_parser_spark.fixtures import mega_statement_text
+from pdf_parser_spark.pipeline import _parse_arrow_batches
 
-mb = %(mb)d
 def rss_mb():
-    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+    with open("/proc/self/statm") as fh:
+        return int(fh.read().split()[1]) * resource.getpagesize() / 2**20
 
+mb, mode = %(mb)d, %(mode)r
+base = rss_mb()
 text = mega_statement_text(mb)
-t0 = time.time()
-if %(columnar)d:
-    from pdf_parser_spark.megadoc import parse_document_columnar
-    bank, cols = parse_document_columnar(text, 2024)
-    n = len(cols[0])
+t0 = time.process_time()
+if mode == "worker":
+    batch = pa.RecordBatch.from_pydict({
+        "url": ["https://mega.test/doc0"],
+        "warc_ts": pa.array([None], pa.timestamp("us")),
+        "html": pa.array([None], pa.binary()),
+        "text": [text]})
+    del text
+    t0 = time.process_time()
+    n = sum(b.num_rows for b in _parse_arrow_batches([batch])
+            if b.num_rows and b.column(1)[0].as_py() == "tx")
+elif mode == "whole":
+    parse_fn = ALL_PARSERS[detect_issuer(text)]
+    n = len(finalize_records(parse_fn(split_lines(text),
+                                      year_of(text, 2024))))
+elif mode == "columnar":
+    n = len(parse_document_columnar(text, 2024)[1][0])
 else:
-    from pdf_parser_spark.engine.document import parse_document
-    bank, txs = parse_document(text, 2024)
-    n = len(txs)
-print(json.dumps({"mb": mb, "mode": "columnar" if %(columnar)d else
-                  "whole", "txs": n, "t_parse_s": round(time.time()-t0, 1),
-                  "peak_rss_mb": round(rss_mb(), 1)}))
+    n = len(parse_document(text, 2024)[1])
+peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+print(json.dumps({"mb": mb, "mode": mode, "txs": n,
+                  "cpu_s": round(time.process_time() - t0, 1),
+                  "base_rss_mb": round(base, 1),
+                  "peak_rss_mb": round(peak, 1),
+                  "mb_rss_per_doc_mb": round((peak - base) / mb, 1)}))
 """
 
 
-def engine_phase(mb: int, columnar: bool = False) -> dict:
+MODES = ("whole", "columnar", "parse_document", "worker")
+
+
+def measure(mb: int, mode: str) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c",
-         _WORKER % {"repo": REPO, "mb": mb, "columnar": int(columnar)}],
+        [sys.executable, "-c", _CHILD % {"repo": REPO, "mb": mb,
+                                         "mode": mode}],
         capture_output=True, text=True, check=True)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def distributed_phase(mb: int) -> dict:
-    """parse_pages_mega over one ``mb``-MB text document + the normal
-    corpus; task stats from the REST API."""
-    import urllib.request
-
-    from pdf_parser_spark.fixtures import mega_statement_text
-    from pdf_parser_spark.megadoc import parse_pages_mega
-    from pdf_parser_spark.pages_source import fixture_pages_df
-    from pdf_parser_spark.session import get_spark
-
-    spark = get_spark(app="megadoc-dist", cores=16, shuffle_partitions=16,
-                      extra_conf={"spark.ui.enabled": "true"})
-    spark.conf.set(
-        "spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
-    spark.sparkContext.setLogLevel("ERROR")
-    mega = spark.createDataFrame(
-        [("https://mega.test/doc0", None, None,
-          mega_statement_text(mb), "en")],
-        "url string, warc_ts timestamp, html binary, text string,"
-        " lang string")
-    pages = fixture_pages_df(spark).unionByName(mega)
-
-    t0 = time.time()
-    txs, docs = parse_pages_mega(pages)
-    n_tx = txs.count()
-    doc_rows = docs.collect()
-    wall = time.time() - t0
-    from pdf_parser_spark.megadoc import release_mega_cache
-    release_mega_cache()
-    mega_row = [r for r in doc_rows if r.url.startswith("https://mega")][0]
-
-    durs = []
-    try:
-        ui = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-                "%s/api/v1/applications/%s/stages?status=complete"
-                % (ui, app_id)) as resp:
-            stages = json.loads(resp.read())
-        stage = max(stages, key=lambda s: s.get("executorRunTime", 0))
-        with urllib.request.urlopen(
-                "%s/api/v1/applications/%s/stages/%d/%d/taskList"
-                "?length=2000" % (ui, app_id, stage["stageId"],
-                                  stage["attemptId"])) as resp:
-            tasks = json.loads(resp.read())
-        durs = sorted(t["duration"] / 1000.0 for t in tasks)
-    except Exception as exc:
-        print("REST API unavailable: %s" % exc, file=sys.stderr)
-    spark.stop()
-    med = durs[len(durs) // 2] if durs else None
-    return {"job_wall_s": round(wall, 1), "n_tx": n_tx,
-            "mega_txs": mega_row.tx_count, "mega_error": mega_row.error,
-            "task_median_s": round(med, 2) if durs else None,
-            "task_max_s": round(durs[-1], 2) if durs else None,
-            "straggler_ratio": (round(durs[-1] / med, 1)
-                                if durs and med else None),
-            "n_tasks": len(durs)}
-
-
-def main(mb: int = 512, out_md: str = "BENCH/MEGADOC.md") -> None:
-    # each phase is expensive (minutes): cache raw results so a crash
-    # or interrupt resumes instead of re-measuring everything
-    raw_path = os.path.join(REPO, "BENCH", "megadoc_raw.json")
-    raw = {}
-    if os.path.exists(raw_path):
-        raw = json.loads(open(raw_path).read())
-
-    def cached(key, fn):
-        if key not in raw:
-            raw[key] = fn()
-            with open(raw_path, "w") as fh:
-                json.dump(raw, fh, indent=1)
-        print("%s: %s" % (key, json.dumps(raw[key])))
-        return raw[key]
-
-    curve = [cached("whole_%d" % m, lambda m=m: engine_phase(m))
-             for m in (32, 64, 128)]
-    slope = ((curve[-1]["peak_rss_mb"] - curve[0]["peak_rss_mb"])
-             / (curve[-1]["mb"] - curve[0]["mb"]))
-    intercept = curve[0]["peak_rss_mb"] - slope * curve[0]["mb"]
-    knee_mb = (4096 - intercept) / slope
-
-    col = cached("columnar_%d" % mb,
-                 lambda: engine_phase(mb, columnar=True))
-    dist = cached("dist_%d" % mb, lambda: distributed_phase(mb))
-
-    rows = "\n".join(
-        "| %d | %d | %.0f | %.0f |" % (c["mb"], c["txs"],
-                                       c["t_parse_s"], c["peak_rss_mb"])
-        for c in curve)
-    with open(os.path.join(REPO, out_md), "w") as fh:
-        fh.write("""# Worst-case document bound (round 3)
-
-Synthetic chase-shaped statements (fixtures.mega_statement_text);
-"whole" = the unmodified engine path one worker runs.
-
-## Whole-document path: linear in document size
-
-| doc MB | txs | parse s | peak RSS MB |
-|---|---|---|---|
-%(rows)s
-
-Fit: RSS ≈ %(intercept).0f + %(slope).1f·MB → a 4 GB worker tops out
-at **~%(knee).0f MB/document**.  A 512 MB document would need ~%(rss512).1f GB
-and hold its task for minutes: it BOTH OOMs and stalls — the round-2
-open question, now measured.
-
-## Columnar chunked path (megadoc.parse_document_columnar), %(mb)d MB
-
-* %(col_txs)d transactions, %(col_wall).0f s, peak RSS
-  **%(col_rss).0f MB** — inside the 4 GB bound with %(col_head).1fx
-  headroom.  Chunk boundaries sit on block-opening date lines
-  (provably exact for the sweep family + chase/truist; equivalence is
-  test-pinned at aggressive chunk sizes, tests/test_megadoc.py).
-
-## Distributed chunk pipeline (megadoc.parse_pages_mega), %(mb)d MB + normal corpus
-
-* job wall %(job_wall_s)s s for %(n_tx)d transactions
-  (mega doc: %(mega_txs)s txs, error=%(mega_error)s)
-* parse-stage tasks: %(n_tasks)s; median %(task_median_s)s s,
-  max %(task_max_s)s s → straggler ratio **%(straggler_ratio)s×**
-  (the whole-doc path's straggler at this size would be the full
-  ~%(whole512).0f s single task — the chunk explosion converts the
-  stall into ordinary tasks)
-* text extraction of ONE payload stays sequential (a single PDF's
-  byte stream has no parallel structure in our tokenizer); the chunk
-  explosion distributes the PARSE, which dominates the fit above.
-
-## Deployment rule
-
-Route payloads above ~64 MB through parse_pages_mega; below it the
-single-shuffle parse_pages path is strictly cheaper (no second
-shuffle).  wf/bofa/citi mega-documents fall back to the whole path
-(state does not decompose at split points) — their documented bound is
-the ~%(knee).0f MB knee.
-""" % {"rows": rows, "intercept": intercept, "slope": slope,
-            "knee": knee_mb, "rss512": (intercept + slope * 512) / 1024,
-            "mb": mb, "col_txs": col["txs"],
-            "col_wall": col["t_parse_s"], "col_rss": col["peak_rss_mb"],
-            "col_head": 4096 / col["peak_rss_mb"],
-            "whole512": curve[-1]["t_parse_s"] * 512 / curve[-1]["mb"],
-            **dist})
-    print("wrote", out_md)
+def main(sizes) -> None:
+    print("| mode | doc MB | txs | CPU s | base RSS MB | peak RSS MB"
+          " | MB RSS / doc MB |")
+    print("|---|---|---|---|---|---|---|")
+    for mb in sizes:
+        for mode in MODES:
+            r = measure(mb, mode)
+            print("| %(mode)s | %(mb)d | %(txs)d | %(cpu_s).1f"
+                  " | %(base_rss_mb).0f | %(peak_rss_mb).0f"
+                  " | %(mb_rss_per_doc_mb).1f |" % r, flush=True)
 
 
 if __name__ == "__main__":
-    main(int(sys.argv[1]) if len(sys.argv) > 1 else 512,
-         sys.argv[2] if len(sys.argv) > 2 else "BENCH/MEGADOC.md")
+    main([int(a) for a in sys.argv[1:]] or [32, 64])
