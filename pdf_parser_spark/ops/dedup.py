@@ -143,31 +143,12 @@ SELECT doc_id, {sigs} FROM exploded GROUP BY doc_id
            sigs=_minhash_agg())
 
 
-# the 4 band keys over the 8 signature slots and their Spark unpivot —
-# module-level so the SQL form (_lsh_ctes) and the persisted twin
-# (span_neardup_df) can never disagree on banding semantics
-_BAND_EXPRS = ", ".join(
-    "md5(m%d || m%d) AS band%d" % (2 * b, 2 * b + 1, b)
-    for b in range(4)
-)
-
-
-def _band_long_spark(src: str = "banded") -> str:
-    return ("SELECT doc_id, band_no, band_key FROM %s "
-            "LATERAL VIEW stack(4, 0, band0, 1, band1, 2, band2,"
-            " 3, band3) s AS band_no, band_key" % src)
-
-
-def _lsh_ctes(d: str, corpus0_sql: str = None,
-              bucket_cap: int = None) -> str:
-    """Shared CTE chain: corpus → shingles → minhash signatures → band
-    unpivot → distinct LSH candidate pairs (``cand``).  The join
-    fan-in is bounded by band-bucket sizes, never n².
-
-    ``corpus0_sql``: optional replacement for the default near-dup
-    document corpus — any CTE chain ending in
-    ``corpus0(doc_id, text)`` (span_neardup feeds spans through the
-    identical machinery this way; doc_id may be any orderable type).
+def _band_ctes(d: str, sigs: str = "sigs", bucket_cap: int = None) -> str:
+    """The LSH tail over a signature table ``{sigs}(doc_id, m0..m7)``:
+    band unpivot → distinct candidate pairs (``cand``).  The join
+    fan-in is bounded by band-bucket sizes, never n².  Shared by
+    ``_lsh_ctes`` and the persisted twins, which pass their
+    checkpointed signature view.
 
     ``bucket_cap``: the standard at-scale SUPER-BUCKET guard — band
     buckets holding more than this many items are dropped from
@@ -182,12 +163,13 @@ def _lsh_ctes(d: str, corpus0_sql: str = None,
     corpus size, which is what production dedup pipelines do.
     Document-level dedup (long texts, well-spread signatures) keeps
     the uncapped default."""
-    bands = _BAND_EXPRS
     if d == SPARK:
         # unpivot via stack(): one pass over sigs + one self-join on
         # (band_no, band_key); a UNION-ALL-per-band shape would rescan
         # the whole signature pipeline once per band
-        long_form = _band_long_spark()
+        long_form = ("SELECT doc_id, band_no, band_key FROM banded "
+                     "LATERAL VIEW stack(4, 0, band0, 1, band1, 2, band2,"
+                     " 3, band3) s AS band_no, band_key")
     else:
         long_form = ("SELECT doc_id, u['band_no'] AS band_no, "
                      "u['band_key'] AS band_key FROM ("
@@ -197,19 +179,6 @@ def _lsh_ctes(d: str, corpus0_sql: str = None,
                      "{'band_no': 2, 'band_key': band2},"
                      "{'band_no': 3, 'band_key': band3}]) AS u"
                      " FROM banded) t")
-    # widen the corpus before the shingle+8-digest pipeline: that CPU
-    # burns at the input scan's parallelism otherwise (a tiny parquet
-    # is 1-3 partitions), and AQE would coalesce a bare repartition —
-    # same rationale, measurement and env override as
-    # relational.with_lines(barrier=True).  2.5s → 1.2s at sf0.1.
-    # The narrow single-pass queries (simhash, minhash_sigs) stay
-    # un-widened: for them the extra exchange measured as pure cost.
-    wide = ("corpus AS (SELECT /*+ REPARTITION(%d, doc_id) */ * "
-            "FROM corpus0)" % LINE_PARTITIONS) if d == SPARK else \
-        "corpus AS (SELECT * FROM corpus0)"
-    corpus = (corpus0_sql if corpus0_sql is not None else
-              _near_corpus(d).replace("corpus AS (", "corpus0 AS (", 1)) \
-        + ",\n" + wide
     if bucket_cap is not None:
         guard = """
 bucket_ok AS (
@@ -233,13 +202,42 @@ cand AS (
     ON a.band_no = b.band_no AND a.band_key = b.band_key
     AND a.doc_id < b.doc_id
 )"""
+    # the 4 band keys over the 8 signature slots
+    bands = ", ".join("md5(m%d || m%d) AS band%d" % (2 * b, 2 * b + 1, b)
+                      for b in range(4))
+    return """banded AS (SELECT doc_id, {bands} FROM {sigs}),
+banded_long AS ({long_form}),{guard}""".format(
+        bands=bands, sigs=sigs, long_form=long_form, guard=guard)
+
+
+def _lsh_ctes(d: str, corpus0_sql: str = None,
+              bucket_cap: int = None) -> str:
+    """Shared CTE chain: corpus → shingles → minhash signatures →
+    ``_band_ctes`` (band unpivot → LSH candidate pairs ``cand``).
+
+    ``corpus0_sql``: optional replacement for the default near-dup
+    document corpus — any CTE chain ending in
+    ``corpus0(doc_id, text)`` (span_neardup feeds spans through the
+    identical machinery this way; doc_id may be any orderable type).
+    ``bucket_cap``: see ``_band_ctes``."""
+    # widen the corpus before the shingle+8-digest pipeline: that CPU
+    # burns at the input scan's parallelism otherwise (a tiny parquet
+    # is 1-3 partitions), and AQE would coalesce a bare repartition —
+    # same rationale, measurement and env override as
+    # relational.with_lines(barrier=True).  2.5s → 1.2s at sf0.1.
+    # The narrow single-pass queries (simhash, minhash_sigs) stay
+    # un-widened: for them the extra exchange measured as pure cost.
+    wide = ("corpus AS (SELECT /*+ REPARTITION(%d, doc_id) */ * "
+            "FROM corpus0)" % LINE_PARTITIONS) if d == SPARK else \
+        "corpus AS (SELECT * FROM corpus0)"
+    corpus = (corpus0_sql if corpus0_sql is not None else
+              _near_corpus(d).replace("corpus AS (", "corpus0 AS (", 1)) \
+        + ",\n" + wide
     return """{corpus},{expl},
 sigs AS (SELECT doc_id, {sigs} FROM exploded GROUP BY doc_id),
-banded AS (SELECT doc_id, {bands} FROM sigs),
-banded_long AS ({long_form}),{guard}""".format(
-        corpus=corpus, expl=_exploded_shingles(d),
-        sigs=_minhash_agg(), bands=bands, long_form=long_form,
-        guard=guard)
+{bands}""".format(corpus=corpus, expl=_exploded_shingles(d),
+                  sigs=_minhash_agg(), bands=_band_ctes(d, "sigs",
+                                                         bucket_cap))
 
 
 # the exact-Jaccard expression every verify tier applies to a row of
@@ -248,26 +246,27 @@ _JACCARD = ("CAST(i.inter AS DOUBLE) / "
             "CAST(sa.n + sb.n - i.inter AS DOUBLE)")
 
 
-def _jaccard_ctes(cand: str = "cand") -> str:
+def _jaccard_ctes(cand: str = "cand", shingled: str = None) -> str:
     """The shared verify core over ``exploded``: distinct shingle
     sets, per-key sizes, and the pairwise intersection counts for the
     pairs in ``{cand}(left_id, right_id)``.  Consumers join ``inter
     i`` back to ``sizes sa/sb`` and apply ``_JACCARD`` (with or
     without a τ cut).  One definition for all five verify tiers
     (lsh_verified, ngram_jaccard, verified-pairs, span_neardup,
-    incremental) so shingle/Jaccard semantics can only change in one
-    place."""
-    return """
-shingled AS (SELECT DISTINCT doc_id, s FROM exploded),
-sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-          FROM shingled GROUP BY doc_id),
+    incremental) and their persisted twins, which pass their
+    checkpointed distinct ``shingled`` view instead of deriving it, so
+    shingle/Jaccard semantics can only change in one place."""
+    head = ("" if shingled else
+            "shingled AS (SELECT DISTINCT doc_id, s FROM exploded),\n")
+    return head + """sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+          FROM {sh} GROUP BY doc_id),
 inter AS (
   SELECT c.left_id, c.right_id, CAST(COUNT(*) AS BIGINT) AS inter
   FROM {cand} c
-  JOIN shingled a ON a.doc_id = c.left_id
-  JOIN shingled b ON b.doc_id = c.right_id AND b.s = a.s
+  JOIN {sh} a ON a.doc_id = c.left_id
+  JOIN {sh} b ON b.doc_id = c.right_id AND b.s = a.s
   GROUP BY c.left_id, c.right_id
-)""".format(cand=cand).strip()
+)""".format(cand=cand, sh=shingled or "shingled")
 
 
 @query("dedup_lsh_pairs")
@@ -595,30 +594,8 @@ SELECT doc_id, s FROM exploded""" % (
     # stage 4: band → capped candidates → exact-Jaccard verify — the
     # verbatim tail of the span_neardup SQL over the persisted views
     return spark.sql("""
-WITH banded AS (SELECT doc_id, {bands} FROM snd_sigs),
-banded_long AS ({long_form}),
-bucket_ok AS (
-  SELECT band_no, band_key FROM banded_long
-  GROUP BY band_no, band_key HAVING COUNT(*) <= {cap}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM banded_long a
-  JOIN bucket_ok s
-    ON s.band_no = a.band_no AND s.band_key = a.band_key
-  JOIN banded_long b
-    ON a.band_no = b.band_no AND a.band_key = b.band_key
-    AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-          FROM snd_shingled GROUP BY doc_id),
-inter AS (
-  SELECT c.left_id, c.right_id, CAST(COUNT(*) AS BIGINT) AS inter
-  FROM cand c
-  JOIN snd_shingled a ON a.doc_id = c.left_id
-  JOIN snd_shingled b ON b.doc_id = c.right_id AND b.s = a.s
-  GROUP BY c.left_id, c.right_id
-)
+WITH {bands},
+{jac}
 SELECT i.left_id AS left_key, i.right_id AS right_key,
   {jexpr} AS jaccard,
   oa.n_occurrences AS left_occ, ob.n_occurrences AS right_occ
@@ -628,8 +605,8 @@ JOIN sizes sb ON sb.doc_id = i.right_id
 JOIN snd_dspan oa ON oa.span_key = i.left_id
 JOIN snd_dspan ob ON ob.span_key = i.right_id
 WHERE {jexpr} >= 0.5
-""".format(bands=_BAND_EXPRS, long_form=_band_long_spark(),
-           cap=cap, jexpr=_JACCARD))
+""".format(bands=_band_ctes(d, "snd_sigs", cap),
+           jac=_jaccard_ctes("cand", "snd_shingled"), jexpr=_JACCARD))
 
 
 def _simhash_parts(d: str, n_bits: int = 16) -> str:
@@ -681,6 +658,40 @@ _SIMHAM_BLOCKS = 4   # split into 4 disjoint 12-bit blocks
 _SIMHAM_MAXHAM = 3   # pigeonhole-exhaustive Hamming radius (see below)
 
 
+def _simham_tail(d: str) -> str:
+    """The Manku banding tail over ``sh(doc_id, simhash)``: 4-block
+    unpivot → candidate pairs sharing a block → Hamming verify.  The
+    oracle form follows it after the ``sh`` CTE chain; the production
+    twin after a one-line ``sh`` CTE over its checkpointed view."""
+    bpb = _SIMHAM_BITS // _SIMHAM_BLOCKS
+    mask = (1 << bpb) - 1
+    if d == SPARK:
+        bandrows = ("SELECT explode(sequence(0, %d)) AS b"
+                    % (_SIMHAM_BLOCKS - 1))
+        bandval = "(shiftright(s.simhash, r.b * %d) & %d)" % (bpb, mask)
+        hamming = "bit_count(sa.simhash ^ sb.simhash)"
+    else:
+        bandrows = "SELECT unnest(range(0, %d)) AS b" % _SIMHAM_BLOCKS
+        bandval = "((s.simhash >> (r.b * %d)) & %d)" % (bpb, mask)
+        hamming = "bit_count(xor(sa.simhash, sb.simhash))"
+    return """bands AS (
+  SELECT s.doc_id, r.b, {bandval} AS bv
+  FROM sh s CROSS JOIN ({bandrows}) r
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
+  FROM bands a JOIN bands b
+    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
+)
+SELECT c.left_id, c.right_id, CAST({hamming} AS INT) AS hamming
+FROM cand c
+JOIN sh sa ON sa.doc_id = c.left_id
+JOIN sh sb ON sb.doc_id = c.right_id
+WHERE {hamming} <= {maxham}
+""".format(bandval=bandval, bandrows=bandrows, hamming=hamming,
+           maxham=_SIMHAM_MAXHAM)
+
+
 def simhash_hamming_df(spark):
     """PRODUCTION SimHash banded near-dup — the persisted-intermediate
     twin of the ``simhash_hamming`` SQL, row-identical (the unrolled
@@ -701,29 +712,8 @@ def simhash_hamming_df(spark):
         % (_near_corpus(d).strip(),
            _simhash_parts(d, _SIMHAM_BITS).strip())).localCheckpoint()
     sh.createOrReplaceTempView("shm_sh")
-    bpb = _SIMHAM_BITS // _SIMHAM_BLOCKS
-    mask = (1 << bpb) - 1
-    bandrows = ("SELECT explode(sequence(0, %d)) AS b"
-                % (_SIMHAM_BLOCKS - 1))
-    bandval = "(shiftright(s.simhash, r.b * %d) & %d)" % (bpb, mask)
-    hamming = "bit_count(sa.simhash ^ sb.simhash)"
-    return spark.sql("""
-WITH bands AS (
-  SELECT s.doc_id, r.b, {bandval} AS bv
-  FROM shm_sh s CROSS JOIN ({bandrows}) r
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM bands a JOIN bands b
-    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-)
-SELECT c.left_id, c.right_id, CAST({hamming} AS INT) AS hamming
-FROM cand c
-JOIN shm_sh sa ON sa.doc_id = c.left_id
-JOIN shm_sh sb ON sb.doc_id = c.right_id
-WHERE {hamming} <= {maxham}
-""".format(bandval=bandval, bandrows=bandrows, hamming=hamming,
-           maxham=_SIMHAM_MAXHAM))
+    return spark.sql("\nWITH sh AS (SELECT * FROM shm_sh),\n"
+                     + _simham_tail(d))
 
 
 @query("simhash_hamming")
@@ -749,37 +739,8 @@ def q_simhash_hamming(d: str) -> str:
     hashing — the same bounded-bucket contract as the MinHash/LSH
     tier, with the radius/recall/volume trade dialed by bits-per-block
     (Manku's d/(k+1)-bit split for radius k)."""
-    bpb = _SIMHAM_BITS // _SIMHAM_BLOCKS
-    mask = (1 << bpb) - 1
-    if d == SPARK:
-        bandrows = ("SELECT explode(sequence(0, %d)) AS b"
-                    % (_SIMHAM_BLOCKS - 1))
-        bandval = "(shiftright(s.simhash, r.b * %d) & %d)" % (bpb, mask)
-        hamming = "bit_count(sa.simhash ^ sb.simhash)"
-    else:
-        bandrows = "SELECT unnest(range(0, %d)) AS b" % _SIMHAM_BLOCKS
-        bandval = "((s.simhash >> (r.b * %d)) & %d)" % (bpb, mask)
-        hamming = "bit_count(xor(sa.simhash, sb.simhash))"
-    return """
-WITH {corpus},
-{sh},
-bands AS (
-  SELECT s.doc_id, r.b, {bandval} AS bv
-  FROM sh s CROSS JOIN ({bandrows}) r
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM bands a JOIN bands b
-    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-)
-SELECT c.left_id, c.right_id, CAST({hamming} AS INT) AS hamming
-FROM cand c
-JOIN sh sa ON sa.doc_id = c.left_id
-JOIN sh sb ON sb.doc_id = c.right_id
-WHERE {hamming} <= {maxham}
-""".format(corpus=_near_corpus(d), sh=_simhash_parts(d, _SIMHAM_BITS),
-           bandval=bandval, bandrows=bandrows, hamming=hamming,
-           maxham=_SIMHAM_MAXHAM)
+    return "\nWITH %s,\n%s,\n%s" % (
+        _near_corpus(d), _simhash_parts(d, _SIMHAM_BITS), _simham_tail(d))
 
 
 @query("dedup_ngram_jaccard")
@@ -801,38 +762,16 @@ JOIN sizes sb ON sb.doc_id = i.right_id
 """.format(lsh=_lsh_ctes(d), jac=_jaccard_ctes(), jexpr=_JACCARD)
 
 
-@query("dedup_incremental")
-def q_incremental(d: str) -> str:
-    """Incremental crawl dedup — the daily-snapshot contract: a NEW
-    batch of arrivals is screened against the ALREADY-DEDUPED corpus
-    (and against earlier arrivals in the same batch) without ever
-    re-comparing old×old.  Verdict ladder per new doc:
-    ``exact_dup`` (content hash hits an older doc) → ``near_dup``
-    (LSH candidate verified at 4-gram Jaccard ≥ 0.5) → ``kept``;
-    the best near match is (jaccard DESC, match_id ASC).
-
-    Batch synthesis in-plan (ids encode arrival order, old < new):
-    old = documents; new = every 4th doc re-crawled with its first
-    word dropped (+1000000, the near tier), every 7th verbatim
-    (+2000000, the exact tier), every 9th with word order reversed
-    (+3000000 — all 4-gram shingles change, a genuinely new page).
-
-    Shape at 10^12 docs: the candidate set is ``cand`` filtered to
-    pairs whose RIGHT side is new before the expensive Jaccard
-    verify, so the pairwise work is new-sized, not corpus-sized.  In
-    production the old side is a PERSISTED band-bucket table (the
-    bm25_serve_persisted append pattern: new signatures append as
-    fragments, band-key-partitioned): the screen is then |new_bands|
-    joined against bucket partitions — old×old pairs never form at
-    all rather than being filtered, and the verify join reads only
-    bucket-matched old shingle sets."""
+def _inc_corpus(d: str) -> str:
+    """The arrival batch of ``dedup_incremental`` as one UNION ALL of
+    ``(doc_id, text)``: old documents plus the near, exact and
+    reordered tiers (see ``q_incremental``)."""
     if d == SPARK:
         rev = "array_join(reverse(split(text, ' ')), ' ')"
     else:
         rev = "array_to_string(list_reverse(string_split(text, ' ')), ' ')"
     drop1 = "substring(text, instr(text, ' ') + 1)"
-    corpus0 = """
-corpus0 AS (
+    return """
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + 1000000 AS doc_id, {drop1} AS text
@@ -842,11 +781,16 @@ corpus0 AS (
   FROM documents WHERE doc_id % 7 = 0
   UNION ALL
   SELECT doc_id + 3000000 AS doc_id, {rev} AS text
-  FROM documents WHERE doc_id % 9 = 0
-)""".format(drop1=drop1, rev=rev).strip()
-    return """
-WITH {lsh},
-hashes AS (SELECT doc_id, md5(text) AS h FROM corpus),
+  FROM documents WHERE doc_id % 9 = 0""".format(drop1=drop1, rev=rev)
+
+
+def _inc_tail(shingled: str = None) -> str:
+    """The screen → verify → verdict tail of ``dedup_incremental``
+    over ``corpus`` and the LSH ``cand`` pairs: content-hash exact
+    hits, new-sided candidates verified by ``_jaccard_ctes`` (over
+    ``shingled`` when given, else derived from ``exploded``), the best
+    near match, and one verdict row per new doc."""
+    return """hashes AS (SELECT doc_id, md5(text) AS h FROM corpus),
 exact_hit AS (
   SELECT n.doc_id, MIN(o.doc_id) AS match_id
   FROM hashes n JOIN hashes o ON o.h = n.h AND o.doc_id < n.doc_id
@@ -882,8 +826,37 @@ FROM corpus c
 LEFT JOIN exact_hit e ON e.doc_id = c.doc_id
 LEFT JOIN near_best nb ON nb.doc_id = c.doc_id
 WHERE c.doc_id >= 1000000
-""".format(lsh=_lsh_ctes(d, corpus0_sql=corpus0),
-           jac=_jaccard_ctes("inc_cand"), jexpr=_JACCARD)
+""".format(jac=_jaccard_ctes("inc_cand", shingled), jexpr=_JACCARD)
+
+
+@query("dedup_incremental")
+def q_incremental(d: str) -> str:
+    """Incremental crawl dedup — the daily-snapshot contract: a NEW
+    batch of arrivals is screened against the ALREADY-DEDUPED corpus
+    (and against earlier arrivals in the same batch) without ever
+    re-comparing old×old.  Verdict ladder per new doc:
+    ``exact_dup`` (content hash hits an older doc) → ``near_dup``
+    (LSH candidate verified at 4-gram Jaccard ≥ 0.5) → ``kept``;
+    the best near match is (jaccard DESC, match_id ASC).
+
+    Batch synthesis in-plan (ids encode arrival order, old < new):
+    old = documents; new = every 4th doc re-crawled with its first
+    word dropped (+1000000, the near tier), every 7th verbatim
+    (+2000000, the exact tier), every 9th with word order reversed
+    (+3000000 — all 4-gram shingles change, a genuinely new page).
+
+    Shape at 10^12 docs: the candidate set is ``cand`` filtered to
+    pairs whose RIGHT side is new before the expensive Jaccard
+    verify, so the pairwise work is new-sized, not corpus-sized.  In
+    production the old side is a PERSISTED band-bucket table (the
+    bm25_serve_persisted append pattern: new signatures append as
+    fragments, band-key-partitioned): the screen is then |new_bands|
+    joined against bucket partitions — old×old pairs never form at
+    all rather than being filtered, and the verify join reads only
+    bucket-matched old shingle sets."""
+    corpus0 = "corpus0 AS (%s\n)" % _inc_corpus(d)
+    return "\nWITH %s,\n%s" % (_lsh_ctes(d, corpus0_sql=corpus0),
+                               _inc_tail())
 
 
 def dedup_incremental_df(spark):
@@ -904,20 +877,7 @@ def dedup_incremental_df(spark):
     oracle docstring describes: the old side's bands/shingles are a
     persisted artifact, only the new-sided screen recomputes."""
     d = SPARK
-    rev = "array_join(reverse(split(text, ' ')), ' ')"
-    drop1 = "substring(text, instr(text, ' ') + 1)"
-    corpus = spark.sql("""
-SELECT doc_id, text FROM documents
-UNION ALL
-SELECT doc_id + 1000000 AS doc_id, {drop1} AS text
-FROM documents WHERE doc_id % 4 = 0
-UNION ALL
-SELECT doc_id + 2000000 AS doc_id, text
-FROM documents WHERE doc_id % 7 = 0
-UNION ALL
-SELECT doc_id + 3000000 AS doc_id, {rev} AS text
-FROM documents WHERE doc_id % 9 = 0""".format(
-        drop1=drop1, rev=rev)).localCheckpoint()
+    corpus = spark.sql(_inc_corpus(d)).localCheckpoint()
     corpus.createOrReplaceTempView("inc_corpus")
     exploded = spark.sql("""
 WITH corpus AS (
@@ -939,61 +899,8 @@ SELECT doc_id, s FROM exploded""" % (
         sigs, shingled = f_sigs.result(), f_shingled.result()
     sigs.createOrReplaceTempView("inc_sigs")
     shingled.createOrReplaceTempView("inc_shingled")
-    return spark.sql("""
-WITH banded AS (SELECT doc_id, {bands} FROM inc_sigs),
-banded_long AS ({long_form}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM banded_long a JOIN banded_long b
-    ON a.band_no = b.band_no AND a.band_key = b.band_key
-    AND a.doc_id < b.doc_id
-),
-hashes AS (SELECT doc_id, md5(text) AS h FROM inc_corpus),
-exact_hit AS (
-  SELECT n.doc_id, MIN(o.doc_id) AS match_id
-  FROM hashes n JOIN hashes o ON o.h = n.h AND o.doc_id < n.doc_id
-  WHERE n.doc_id >= 1000000 GROUP BY n.doc_id
-),
-inc_cand AS (
-  SELECT left_id, right_id FROM cand WHERE right_id >= 1000000
-),
-sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-          FROM inc_shingled GROUP BY doc_id),
-inter AS (
-  SELECT c.left_id, c.right_id, CAST(COUNT(*) AS BIGINT) AS inter
-  FROM inc_cand c
-  JOIN inc_shingled a ON a.doc_id = c.left_id
-  JOIN inc_shingled b ON b.doc_id = c.right_id AND b.s = a.s
-  GROUP BY c.left_id, c.right_id
-),
-near AS (
-  SELECT i.right_id AS doc_id, i.left_id AS match_id,
-    {jexpr} AS jaccard
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.left_id
-  JOIN sizes sb ON sb.doc_id = i.right_id
-  WHERE {jexpr} >= 0.5
-),
-near_best AS (
-  SELECT doc_id, match_id, jaccard FROM (
-    SELECT doc_id, match_id, jaccard,
-      ROW_NUMBER() OVER (PARTITION BY doc_id
-                         ORDER BY jaccard DESC, match_id) AS rn
-    FROM near
-  ) t WHERE rn = 1
-)
-SELECT c.doc_id,
-  CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
-       WHEN nb.doc_id IS NOT NULL THEN 'near_dup'
-       ELSE 'kept' END AS verdict,
-  COALESCE(e.match_id, nb.match_id) AS match_id,
-  CASE WHEN e.doc_id IS NULL THEN nb.jaccard END AS jaccard
-FROM inc_corpus c
-LEFT JOIN exact_hit e ON e.doc_id = c.doc_id
-LEFT JOIN near_best nb ON nb.doc_id = c.doc_id
-WHERE c.doc_id >= 1000000
-""".format(bands=_BAND_EXPRS, long_form=_band_long_spark(),
-           jexpr=_JACCARD))
+    return spark.sql("\nWITH corpus AS (SELECT * FROM inc_corpus),\n%s,\n%s"
+                     % (_band_ctes(d, "inc_sigs"), _inc_tail("inc_shingled")))
 
 
 # ------------------------------------------------ production CC form

@@ -123,8 +123,9 @@ def _worker_task_setup() -> None:
       The worker's heap is mostly what importing ``pyspark.sql``,
       ``pyarrow`` and this package left behind (about 74k tracked
       objects), so each of those collections cost 23–24 ms of CPU
-      against about 5 ms for the task body itself (4-core host,
-      CPython 3.11, PySpark 4.1.2).  The daemon has just collected
+      against about 5 ms for the task body itself and about 18 ms of
+      JVM CPU per task (near-empty tasks, 4-core host, CPython 3.11,
+      PySpark 4.1.2).  The daemon has just collected
       when the next task starts, so freezing then moves only live
       objects out of the collector's scan; the task's own garbage is
       still collected.  The driver, and any in-process caller of the
@@ -271,7 +272,7 @@ def stage_width(spark: SparkSession,
     when given, else 2 × the executors' cores (``defaultParallelism``),
     not ``spark.sql.shuffle.partitions``, whose floor of 8
     (``session.get_spark``) is for SQL shuffles.  Each task has a fixed
-    cost (see ``salted_repartition``)."""
+    cost (see ``_worker_task_setup``)."""
     return 2 * (partitions or spark.sparkContext.defaultParallelism)
 
 
@@ -293,14 +294,11 @@ def salted_repartition(
     multiprocessing ceiling of this host.  At 100 TB the double scan
     is strictly worse (payload bytes dominate).
 
-    Each task has a fixed cost (near-empty tasks, 4-core host, CPython
-    3.11, PySpark 4.1.2): about 5 ms of task body in the Python worker,
-    about 18 ms of JVM CPU, and the daemon's post-task ``gc.collect()``,
-    which cost 23–24 ms over the worker's ~74k imported objects until
-    ``_worker_task_setup`` froze them.  So the default width follows
-    the cores, not the data; a large job sizes its tasks by data by
-    passing ``partitions=``.  The seed decorrelates from any upstream
-    partitioning (same rationale as salting)."""
+    Each task has a fixed cost (``_worker_task_setup`` measures it), so
+    the default width follows the cores, not the data; a large job
+    sizes its tasks by data by passing ``partitions=``.  The seed
+    decorrelates from any upstream partitioning (same rationale as
+    salting)."""
     return df.repartition(stage_width(df.sparkSession, partitions),
                           F.xxhash64("url", F.lit(seed)))
 
@@ -312,10 +310,9 @@ def parse_pages(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → union parsed rows, in
     ``salted_repartition``'s 2 × ``partitions`` tasks; without
-    ``partitions``, 2 × the executors' cores (each Python task costs
-    about 5 ms of worker CPU, 18 ms of JVM CPU and, before the worker
-    heap was frozen, a 23–24 ms post-task ``gc.collect()``).  Pass
-    ``partitions=`` to size tasks by data on a large job."""
+    ``partitions``, 2 × the executors' cores (each task's fixed cost is
+    in ``_worker_task_setup``).  Pass ``partitions=`` to size tasks by
+    data on a large job."""
     pruned = pages.select("url", "warc_ts", "html", "text")
     salted = salted_repartition(pruned, partitions, salt_seed)
     # mapInArrow, not mapInPandas: the worker builds output

@@ -1,5 +1,5 @@
 """pipeline.flat_map_rows: the per-document Arrow worker loop shared by
-the sidecar operators (spans, multimodal, warc, streaming)."""
+the sidecar operators (spans, multimodal, warc)."""
 
 from pdf_parser_spark.pipeline import flat_map_rows
 

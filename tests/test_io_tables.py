@@ -600,105 +600,6 @@ def test_incremental_read_applies_as_of_schema(spark, tmp_path):
     assert rows == {2: None, 3: "en"}
 
 
-# ------------------------------------------- exactly-once consumer
-
-def _consume_setup(spark, tmp_path):
-    from pdf_parser_spark.consume import consume_incremental
-    io = TableIO(str(tmp_path))
-    mk = lambda *ids: spark.createDataFrame(
-        [(i, i * 10) for i in ids], "id int, x int")
-    double = lambda df: df.selectExpr("id", "x * 2 AS y")
-    return io, mk, double, consume_incremental
-
-
-def test_consume_incremental_exactly_once(spark, tmp_path):
-    """Each source append is transformed into the output exactly once
-    across repeated runs; a no-op run commits nothing."""
-    io, mk, double, consume = _consume_setup(spark, tmp_path)
-    io.append(mk(1, 2), "src")
-    io.append(mk(3), "src")
-    r1 = consume(spark, io, "src", "out", double)
-    assert r1["committed"] and r1["n_commits"] == 2
-    assert sorted((r.id, r.y) for r in io.read(spark, "out").collect()) \
-        == [(1, 20), (2, 40), (3, 60)]
-    # nothing new → nothing committed
-    r2 = consume(spark, io, "src", "out", double)
-    assert not r2["committed"]
-    assert len(io.snapshots("out")) == 1
-    # one more append → only its rows land
-    io.append(mk(4), "src")
-    consume(spark, io, "src", "out", double)
-    assert sorted((r.id, r.y) for r in io.read(spark, "out").collect()) \
-        == [(1, 20), (2, 40), (3, 60), (4, 80)]
-
-
-def test_consume_survives_crash_at_commit_point(spark, tmp_path,
-                                                monkeypatch):
-    """Crash BEFORE the output manifest rename: no rows visible, the
-    cursor unmoved; the rerun produces the delta exactly once."""
-    import os as _os
-    io, mk, double, consume = _consume_setup(spark, tmp_path)
-    io.append(mk(1), "src")
-    consume(spark, io, "src", "out", double)
-    io.append(mk(2), "src")
-
-    real_link = _os.link
-
-    def crash(src, dst):
-        if "snapshot-" in dst:
-            raise RuntimeError("simulated crash at commit point")
-        return real_link(src, dst)
-
-    monkeypatch.setattr(_os, "link", crash)
-    with pytest.raises(RuntimeError):
-        consume(spark, io, "src", "out", double)
-    monkeypatch.undo()
-    assert sorted(r.y for r in io.read(spark, "out").collect()) == [20]
-    consume(spark, io, "src", "out", double)
-    assert sorted(r.y for r in io.read(spark, "out").collect()) \
-        == [20, 40]
-    # and converged: another run is a no-op
-    assert not consume(spark, io, "src", "out", double)["committed"]
-
-
-def test_consume_skips_interleaved_compaction(spark, tmp_path):
-    """A source compaction in the backlog neither duplicates nor
-    drops rows — its snapshot is skipped, the cursor advances past
-    it (including the rewrites-only backlog case)."""
-    io, mk, double, consume = _consume_setup(spark, tmp_path)
-    io.append(mk(1), "src")
-    consume(spark, io, "src", "out", double)
-    io.append(mk(2), "src")
-    io.compact(spark, "src")
-    io.append(mk(3), "src")
-    r = consume(spark, io, "src", "out", double)
-    assert r["n_commits"] == 2  # the two appends, not the rewrite
-    assert sorted(r.y for r in io.read(spark, "out").collect()) \
-        == [20, 40, 60]
-    # rewrites-only backlog: cursor-only zero-row commit, then no-op
-    io.compact(spark, "src")
-    r2 = consume(spark, io, "src", "out", double)
-    assert r2["committed"] and r2["n_commits"] == 0
-    assert sorted(r.y for r in io.read(spark, "out").collect()) \
-        == [20, 40, 60]
-    assert not consume(spark, io, "src", "out", double)["committed"]
-
-
-def test_consume_independent_consumers(spark, tmp_path):
-    """Two consumer names track independent cursors over one source."""
-    io, mk, double, consume = _consume_setup(spark, tmp_path)
-    io.append(mk(1), "src")
-    consume(spark, io, "src", "out_a", double, consumer="a")
-    io.append(mk(2), "src")
-    consume(spark, io, "src", "out_b", double, consumer="b")
-    assert sorted(r.y for r in io.read(spark, "out_a").collect()) == [20]
-    assert sorted(r.y for r in io.read(spark, "out_b").collect()) \
-        == [20, 40]
-    consume(spark, io, "src", "out_a", double, consumer="a")
-    assert sorted(r.y for r in io.read(spark, "out_a").collect()) \
-        == [20, 40]
-
-
 # ----------------------------------------------- tags (Iceberg refs)
 
 def test_tags_pin_history_through_expiry(spark, tmp_path):

@@ -2376,9 +2376,8 @@ def test_embed_srp_bucket_cap_bounds_candidates(spark, entry_mod):
     band bucket per band, 160 > cap) must contribute ZERO output
     pairs on BOTH engines — without the cap it alone would emit
     160·159/2 = 12,720 — while the three well-spread twin pairs in
-    the same corpus are still recovered (recall unharmed).  This is
-    the embedding-tier twin of
-    test_stream_lsh_bucket_cap_bounds_state_and_emissions."""
+    the same corpus are still recovered (recall unharmed) — the
+    embedding-tier analogue of the text LSH tier's ``bucket_cap``."""
     import duckdb as _duck
     import pandas as pd
 

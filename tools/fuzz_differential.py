@@ -14,12 +14,13 @@ Usage: python tools/fuzz_differential.py [n_docs] [seed]
 
 from __future__ import annotations
 
+import pathlib
 import random
 import sys
 
 from gen_goldens import run_reference  # noqa: E402  (same dir)
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from pdf_parser_spark.engine.document import parse_document  # noqa: E402
 

@@ -23,10 +23,11 @@ Usage: python tools/fuzz_relational.py [n_docs] [seed] [batch]
 
 from __future__ import annotations
 
+import pathlib
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from pdf_parser_spark.engine.banks import (  # noqa: E402
     parse_bofa, parse_bofa_relationship, parse_chase, parse_citi,

@@ -15,7 +15,8 @@ loaders do: ``"pdf_parser_spark.relational"`` or ``"ops.dedup:fn"``.
 Importing a module also imports its parent packages.
 
 Usage: python tools/reachability.py   (prints the modules that only
-tests/tools reach, then those nothing reaches)
+tests/tools reach, then those nothing reaches; exits 1 if either list
+is not empty, so it can run as a pre-commit check)
 """
 
 from __future__ import annotations
@@ -113,13 +114,14 @@ def test_only_modules(repo: str = REPO) -> Set[str]:
     return reach(TEST_TOOL_ROOTS, repo) - reach(PRODUCTION_ROOTS, repo)
 
 
-def main() -> None:
-    production = reach(PRODUCTION_ROOTS)
-    tested = reach(TEST_TOOL_ROOTS)
-    unreached = set(package_modules()) - production - tested
-    print("only tests/tools reach:", " ".join(sorted(tested - production))
-          or "-")
+def main(repo: str = REPO) -> int:
+    production = reach(PRODUCTION_ROOTS, repo)
+    tested = reach(TEST_TOOL_ROOTS, repo)
+    test_only = tested - production
+    unreached = set(package_modules(repo)) - production - tested
+    print("only tests/tools reach:", " ".join(sorted(test_only)) or "-")
     print("nothing reaches:", " ".join(sorted(unreached)) or "-")
+    return 1 if test_only or unreached else 0
 
 
 if __name__ == "__main__":
