@@ -521,10 +521,6 @@ def _chase_section_low(low: str) -> Optional[str]:
     return None
 
 
-def _chase_section(line: str) -> Optional[str]:
-    return _chase_section_low(line.lower().strip())
-
-
 def _chase_noise_low(line: str, low: str) -> bool:
     """reference chase.py:94-118 (_is_basic_noise)."""
     if "*start*" in low or "*end*" in low:
@@ -538,10 +534,6 @@ def _chase_noise_low(line: str, low: str) -> bool:
     if low.startswith("en caso de errores") or low.startswith("in case of errors"):
         return True
     return False
-
-
-def _chase_noise(line: str) -> bool:
-    return _chase_noise_low(line, line.lower().strip())
 
 
 def _chase_date_low(stripped: str, low: str, year: int) -> Optional[str]:
@@ -558,11 +550,6 @@ def _chase_date_low(stripped: str, low: str, year: int) -> Optional[str]:
     if 1 <= mm <= 12 and 1 <= dd <= 31:
         return "%04d-%02d-%02d" % (year, mm, dd)
     return None
-
-
-def _chase_date(line: str, year: int) -> Optional[str]:
-    stripped = line.strip()
-    return _chase_date_low(stripped, stripped.lower(), year)
 
 
 def _chase_legal_block(text: str, low: Optional[str] = None) -> bool:

@@ -31,6 +31,7 @@ pick the same merge deterministically.
 from __future__ import annotations
 
 from ..relational import DUCK, SPARK, REREPL
+from ..stages import scope
 
 QUERIES = {}
 
@@ -208,15 +209,14 @@ def bpe_train_df(spark, rounds: int = _ROUNDS, docs=None):
     persisted; the 1-row argmax collected and bound as literals — the
     same k-row driver-side legitimacy class as IVF's centroid
     collect).  A test pins row-identity with the unrolled SQL."""
-    merges, syms = _bpe_train_core(spark, rounds, docs)
-    syms.unpersist()
-    return merges
+    with scope(spark) as st:
+        return _bpe_train_core(st, spark, rounds, docs)[0]
 
 
-def _bpe_train_core(spark, rounds: int = _ROUNDS, docs=None):
-    """Shared trainer: returns (merge-table DataFrame, the PERSISTED
-    final symbol table) — encode needs the latter, train the former.
-    Caller owns unpersisting the symbol table."""
+def _bpe_train_core(st, spark, rounds: int = _ROUNDS, docs=None):
+    """Shared trainer: returns (merge-table DataFrame, the final symbol
+    table, cached in the scope ``st``) — encode needs the latter,
+    train the former."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -229,7 +229,7 @@ def _bpe_train_core(spark, rounds: int = _ROUNDS, docs=None):
         "sym", F.expr("substr(s0, 1, length(s0) - 2)")).drop("s0")
     out = []
     for r in range(rounds):
-        syms = syms.persist()
+        syms = st.cache(syms)
         pairs = (syms
                  .select("c", F.posexplode(F.split("sym", "  "))
                          .alias("pos", "s"),
@@ -250,9 +250,8 @@ def _bpe_train_core(spark, rounds: int = _ROUNDS, docs=None):
                 % (_slit(" %s  %s " % (a, b)), _slit(" %s%s " % (a, b))))
         ).withColumn(
             "sym", F.expr("substr(p0, 2, length(p0) - 2)")).drop("p0")
-        syms.unpersist()
         syms = nxt
-    syms = syms.persist()
+    syms = st.cache(syms)
     merges = spark.createDataFrame(
         out, "rnd long, left_sym string, right_sym string, "
              "merged string, pair_count long")
@@ -270,25 +269,22 @@ def bpe_encode_df(spark, rounds: int = _ROUNDS, docs=None):
     from pyspark.sql import functions as F
 
     src = docs if docs is not None else spark.table("documents")
-    _, syms = _bpe_train_core(spark, rounds, docs)
-    enc = syms.select(
-        "w",
-        F.expr("CAST(size(split(sym, '  ')) AS LONG)").alias("ntok"),
-        F.expr("CAST(length(w) AS LONG)").alias("nchr"))
-    dtoks = src.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w"))
-    out = (dtoks.join(enc, "w")
-           .groupBy("doc_id")
-           .agg(F.count("*").cast("long").alias("n_words"),
-                F.sum("nchr").cast("long").alias("n_chars"),
-                F.sum("ntok").cast("long").alias("n_bpe_tokens"),
-                (F.sum("nchr") - F.sum("ntok")).cast("long")
-                .alias("saved")))
-    # materialize before releasing the symbol table the plan reads
-    out = out.persist()
-    out.count()
-    syms.unpersist()
-    return out
+    with scope(spark) as st:
+        _, syms = _bpe_train_core(st, spark, rounds, docs)
+        enc = syms.select(
+            "w",
+            F.expr("CAST(size(split(sym, '  ')) AS LONG)").alias("ntok"),
+            F.expr("CAST(length(w) AS LONG)").alias("nchr"))
+        dtoks = src.select(
+            "doc_id", F.explode(F.split("text", " ")).alias("w"))
+        return st.result(
+            dtoks.join(enc, "w")
+            .groupBy("doc_id")
+            .agg(F.count("*").cast("long").alias("n_words"),
+                 F.sum("nchr").cast("long").alias("n_chars"),
+                 F.sum("ntok").cast("long").alias("n_bpe_tokens"),
+                 (F.sum("nchr") - F.sum("ntok")).cast("long")
+                 .alias("saved")))
 
 
 def _slit(s: str) -> str:

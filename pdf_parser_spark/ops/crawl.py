@@ -42,6 +42,7 @@ on grouped rows, not raw links, same as ops/webgraph.py.
 from __future__ import annotations
 
 from ..relational import DUCK, SPARK, REALL, lit
+from ..stages import scope
 from .webgraph import CSTR, HOST, IDIV
 
 QUERIES = {}
@@ -412,28 +413,23 @@ verdicts AS (
 
 def crawl_frontier_production_df(spark):
     """PRODUCTION crawl_frontier: the edge list materialized ONCE and
-    PageRank computed by the iterative ``pagerank_df`` (per-round
+    PageRank computed by the iterative ``pagerank_frame`` (per-round
     persisted joins) instead of the unrolled CTE chain the oracle SQL
     carries — same verdict CTEs verbatim, row-identical output
     (test-pinned).  The composition stays one declarative plan over
     two registered host-granularity relations."""
-    from .webgraph import link_graph_df, pagerank_df
+    from .webgraph import link_graph_df, pagerank_frame
 
-    edges = link_graph_df(spark).persist()
-    edges.count()
-    pr = pagerank_df(edges).localCheckpoint()
-    edges.createOrReplaceTempView("_cf_edges")
-    pr.createOrReplaceTempView("_cf_pr")
-    sql = """
+    with scope(spark) as st:
+        edges = st.checkpoint(link_graph_df(spark), view="_cf_edges")
+        st.checkpoint(pagerank_frame(st, edges), view="_cf_pr")
+        return st.result(spark.sql("""
 WITH {rules},
 {ctes}
 {final}""".format(rules=_rules_cte(SPARK),
                   ctes=",\n".join(_frontier_tail_parts(
                       "_cf_edges", "_cf_pr", "rank_ppb")),
-                  final=_FRONTIER_FINAL)
-    out = spark.sql(sql).localCheckpoint()
-    edges.unpersist()
-    return out
+                  final=_FRONTIER_FINAL)))
 
 
 # ------------------------------------------------- crawler-trap filter

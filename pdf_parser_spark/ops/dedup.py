@@ -21,6 +21,7 @@ from __future__ import annotations
 from ..relational import (
     DUCK, SPARK, HEX2INT, LEN, LINE_PARTITIONS, ORD_ARRAY, SLICE, JOINA,
 )
+from ..stages import materialized, scope
 
 QUERIES = {}
 
@@ -530,7 +531,38 @@ WHERE {jexpr} >= 0.5
            jac=_jaccard_ctes(), jexpr=_JACCARD)
 
 
-def span_neardup_df(spark):
+def _shingle_leaves(st, spark, prefix: str, corpus: str) -> None:
+    """Checkpoint the shingles of ``SELECT {corpus}`` (doc_id, text)
+    as ``{prefix}_exploded``, then their MinHash signatures and
+    distinct shingle sets as ``{prefix}_sigs`` and
+    ``{prefix}_shingled``.  The expensive shingle pass (posexplode +
+    lead windows) runs once, at full width (same REPARTITION rationale
+    as _lsh_ctes).  The two aggregations are INDEPENDENT consumers of
+    the exploded leaf, so they are materialized from two driver
+    threads (guide §2.6, same overlap as the trustrank chains): the
+    second job's tasks back-fill executors freed by the first job's
+    tail."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    st.checkpoint(spark.sql("""
+WITH corpus AS (
+  SELECT /*+ REPARTITION(%d, doc_id) */ %s
+),%s
+SELECT doc_id, s FROM exploded""" % (
+        LINE_PARTITIONS, corpus, _exploded_shingles(SPARK))),
+        view=prefix + "_exploded")
+    sql = {"sigs": "SELECT doc_id, %s FROM %s_exploded GROUP BY doc_id"
+                   % (_minhash_agg(), prefix),
+           "shingled": "SELECT DISTINCT doc_id, s FROM %s_exploded"
+                       % prefix}
+    with ThreadPoolExecutor(2) as pool:
+        for f in [pool.submit(st.checkpoint, spark.sql(q),
+                              "%s_%s" % (prefix, name))
+                  for name, q in sql.items()]:
+            f.result()
+
+
+def span_neardup_frame(st, spark):
     """PRODUCTION span near-dup — the persisted-intermediate twin of
     the ``span_neardup`` SQL, row-identical (the unrolled SQL stays as
     the cross-engine DuckDB oracle; a test pins row-identity).
@@ -551,46 +583,20 @@ def span_neardup_df(spark):
     re-derive them per reference."""
     d = SPARK
     cap = 64  # == the bucket_cap the span_neardup SQL passes
-    # stage 1: distinct span corpus + jitter twin — ONE derivation
-    # localCheckpoint (NOT persist): Spark 4.1's cache substitution
-    # does not fire for a cached view referenced from inside a WITH
-    # CTE (measured: 0 InMemoryTableScans, full re-derivation), while
-    # a checkpointed DataFrame is a LogicalRDD leaf that every
-    # downstream SQL shape scans directly — same discipline as
-    # kcore_df's per-round state
-    dspan = spark.sql(
+    # stage 1: distinct span corpus + jitter twin — ONE derivation,
+    # checkpointed (not cached: Spark 4.1's cache substitution does
+    # not fire for a cached view referenced from inside a WITH CTE —
+    # measured: 0 InMemoryTableScans, full re-derivation — while a
+    # checkpointed DataFrame is a LogicalRDD leaf that every
+    # downstream SQL shape scans directly; same discipline as
+    # kcore_df's per-round state)
+    st.checkpoint(spark.sql(
         "WITH %s SELECT span_key, line, n_occurrences FROM dspan"
-        % _span_corpus0(d)).localCheckpoint()
-    dspan.createOrReplaceTempView("snd_dspan")
-    # stage 2: the expensive shingle pass (posexplode + lead windows),
-    # once, at full width (same REPARTITION rationale as _lsh_ctes)
-    exploded = spark.sql("""
-WITH corpus AS (
-  SELECT /*+ REPARTITION(%d, doc_id) */ span_key AS doc_id,
-         line AS text
-  FROM snd_dspan
-),%s
-SELECT doc_id, s FROM exploded""" % (
-        LINE_PARTITIONS, _exploded_shingles(d))).localCheckpoint()
-    exploded.createOrReplaceTempView("snd_exploded")
-    # stage 3: signatures + distinct shingle sets (narrow, reused) —
-    # the two aggregations are INDEPENDENT consumers of the exploded
-    # leaf, so materialize them from two driver threads (guide §2.6,
-    # same overlap as the trustrank chains): the second job's tasks
-    # back-fill executors freed by the first job's tail
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(2) as pool:
-        f_sigs = pool.submit(
-            lambda: spark.sql(
-                "SELECT doc_id, %s FROM snd_exploded GROUP BY doc_id"
-                % _minhash_agg()).localCheckpoint())
-        f_shingled = pool.submit(
-            lambda: spark.sql(
-                "SELECT DISTINCT doc_id, s FROM snd_exploded")
-            .localCheckpoint())
-        sigs, shingled = f_sigs.result(), f_shingled.result()
-    sigs.createOrReplaceTempView("snd_sigs")
-    shingled.createOrReplaceTempView("snd_shingled")
+        % _span_corpus0(d)), view="snd_dspan")
+    # stages 2-3: shingles, then signatures + distinct shingle sets
+    # (narrow, reused)
+    _shingle_leaves(st, spark, "snd",
+                    "span_key AS doc_id, line AS text FROM snd_dspan")
     # stage 4: band → capped candidates → exact-Jaccard verify — the
     # verbatim tail of the span_neardup SQL over the persisted views
     return spark.sql("""
@@ -607,6 +613,9 @@ JOIN snd_dspan ob ON ob.span_key = i.right_id
 WHERE {jexpr} >= 0.5
 """.format(bands=_band_ctes(d, "snd_sigs", cap),
            jac=_jaccard_ctes("cand", "snd_shingled"), jexpr=_JACCARD))
+
+
+span_neardup_df = materialized(span_neardup_frame)
 
 
 def _simhash_parts(d: str, n_bits: int = 16) -> str:
@@ -692,7 +701,7 @@ WHERE {hamming} <= {maxham}
            maxham=_SIMHAM_MAXHAM)
 
 
-def simhash_hamming_df(spark):
+def simhash_hamming_frame(st, spark):
     """PRODUCTION SimHash banded near-dup — the persisted-intermediate
     twin of the ``simhash_hamming`` SQL, row-identical (the unrolled
     SQL stays as the cross-engine DuckDB oracle; a test pins
@@ -707,13 +716,15 @@ def simhash_hamming_df(spark):
     checkpointed ONCE and the banding/verify tail reuses the same SQL
     text over that leaf."""
     d = SPARK
-    sh = spark.sql(
+    st.checkpoint(spark.sql(
         "WITH %s,\n%s\nSELECT doc_id, simhash FROM sh"
         % (_near_corpus(d).strip(),
-           _simhash_parts(d, _SIMHAM_BITS).strip())).localCheckpoint()
-    sh.createOrReplaceTempView("shm_sh")
+           _simhash_parts(d, _SIMHAM_BITS).strip())), view="shm_sh")
     return spark.sql("\nWITH sh AS (SELECT * FROM shm_sh),\n"
                      + _simham_tail(d))
+
+
+simhash_hamming_df = materialized(simhash_hamming_frame)
 
 
 @query("simhash_hamming")
@@ -859,7 +870,7 @@ def q_incremental(d: str) -> str:
                                _inc_tail())
 
 
-def dedup_incremental_df(spark):
+def dedup_incremental_frame(st, spark):
     """PRODUCTION incremental dedup — the persisted-intermediate twin
     of the ``dedup_incremental`` SQL, row-identical (the unrolled SQL
     stays as the cross-engine DuckDB oracle; a test pins
@@ -877,30 +888,13 @@ def dedup_incremental_df(spark):
     oracle docstring describes: the old side's bands/shingles are a
     persisted artifact, only the new-sided screen recomputes."""
     d = SPARK
-    corpus = spark.sql(_inc_corpus(d)).localCheckpoint()
-    corpus.createOrReplaceTempView("inc_corpus")
-    exploded = spark.sql("""
-WITH corpus AS (
-  SELECT /*+ REPARTITION(%d, doc_id) */ doc_id, text FROM inc_corpus
-),%s
-SELECT doc_id, s FROM exploded""" % (
-        LINE_PARTITIONS, _exploded_shingles(d))).localCheckpoint()
-    exploded.createOrReplaceTempView("inc_exploded")
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(2) as pool:
-        f_sigs = pool.submit(
-            lambda: spark.sql(
-                "SELECT doc_id, %s FROM inc_exploded GROUP BY doc_id"
-                % _minhash_agg()).localCheckpoint())
-        f_shingled = pool.submit(
-            lambda: spark.sql(
-                "SELECT DISTINCT doc_id, s FROM inc_exploded")
-            .localCheckpoint())
-        sigs, shingled = f_sigs.result(), f_shingled.result()
-    sigs.createOrReplaceTempView("inc_sigs")
-    shingled.createOrReplaceTempView("inc_shingled")
+    st.checkpoint(spark.sql(_inc_corpus(d)), view="inc_corpus")
+    _shingle_leaves(st, spark, "inc", "doc_id, text FROM inc_corpus")
     return spark.sql("\nWITH corpus AS (SELECT * FROM inc_corpus),\n%s,\n%s"
                      % (_band_ctes(d, "inc_sigs"), _inc_tail("inc_shingled")))
+
+
+dedup_incremental_df = materialized(dedup_incremental_frame)
 
 
 # ------------------------------------------------ production CC form
@@ -924,29 +918,24 @@ def neardup_components_df(pairs, iters: int = _CC_ROUNDS):
                       F.col("left_id").alias("dst"))
     vs = (pairs.select(F.col("left_id").alias("v"))
           .union(pairs.select(F.col("right_id").alias("v"))).distinct())
-    edges = e1.unionAll(e2).unionAll(
-        vs.select(F.col("v").alias("src"), F.col("v").alias("dst"))
-    ).persist()
-    labels = (edges.select("src").distinct()
-              .select(F.col("src").alias("doc_id"),
-                      F.col("src").alias("label"))).persist()
-    labels.count()
-    for _ in range(iters):
-        nxt = (edges.join(labels.withColumnRenamed("doc_id", "src"),
-                          "src")
-               .groupBy("dst").agg(F.min("label").alias("label"))
-               .withColumnRenamed("dst", "doc_id")).persist()
-        nxt.count()  # materialize: bound the lineage per round
-        labels.unpersist()
-        labels = nxt
-    out = labels.select(
-        "doc_id", F.col("label").alias("cluster_keeper"),
-        F.when(F.col("doc_id") > F.col("label"), 1).otherwise(0)
-        .cast("int").alias("is_duplicate"))
-    # edges stays persisted until the caller materializes `out`; it is
-    # tiny (2·|pairs| + |vertices| rows) and dies with the session —
-    # callers needing strict hygiene can unpersist via out's lineage
-    return out
+    with scope(pairs.sparkSession) as st:
+        edges = st.cache(e1.unionAll(e2).unionAll(
+            vs.select(F.col("v").alias("src"), F.col("v").alias("dst"))))
+        labels = st.checkpoint(
+            edges.select("src").distinct()
+            .select(F.col("src").alias("doc_id"),
+                    F.col("src").alias("label")))
+        for _ in range(iters):
+            # checkpointed: bound the lineage per round
+            labels = st.checkpoint(
+                edges.join(labels.withColumnRenamed("doc_id", "src"),
+                           "src")
+                .groupBy("dst").agg(F.min("label").alias("label"))
+                .withColumnRenamed("dst", "doc_id"))
+        return st.result(labels.select(
+            "doc_id", F.col("label").alias("cluster_keeper"),
+            F.when(F.col("doc_id") > F.col("label"), 1).otherwise(0)
+            .cast("int").alias("is_duplicate")))
 
 
 def verified_pairs_df(spark):
@@ -1430,7 +1419,7 @@ FROM pairs WHERE shared_fps >= {tau}
 _AP_TAU_NUM, _AP_TAU_DEN = 6, 10   # Jaccard threshold τ = 0.6
 
 
-def allpairs_prefix_df(spark):
+def allpairs_prefix_frame(st, spark):
     """PRODUCTION AllPairs prefix-filter join — the persisted-
     intermediate twin of the ``dedup_allpairs_prefix`` SQL,
     row-identical (the unrolled SQL stays as the cross-engine DuckDB
@@ -1452,16 +1441,14 @@ def allpairs_prefix_df(spark):
     # uses (single-sourced semantics); the lead-window already forces
     # a hashpartitioning(doc_id) exchange, so the explode runs at
     # full shuffle width without an extra repartition
-    toks = spark.sql(
+    st.checkpoint(spark.sql(
         "WITH %s,%s\nSELECT DISTINCT doc_id, s AS w FROM exploded"
-        % (_near_corpus(d).strip(), _exploded_shingles(d).strip())
-    ).localCheckpoint()
-    toks.createOrReplaceTempView("ap_toks")
-    sizes = spark.sql(
+        % (_near_corpus(d).strip(), _exploded_shingles(d).strip())),
+        view="ap_toks")
+    st.checkpoint(spark.sql(
         "SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n"
-        " FROM ap_toks GROUP BY doc_id").localCheckpoint()
-    sizes.createOrReplaceTempView("ap_sizes")
-    prefix = spark.sql("""
+        " FROM ap_toks GROUP BY doc_id"), view="ap_sizes")
+    st.checkpoint(spark.sql("""
 WITH df AS (SELECT w, COUNT(*) AS dfreq FROM ap_toks GROUP BY w),
 ranked AS (
   SELECT t.doc_id, t.w,
@@ -1472,8 +1459,7 @@ ranked AS (
 SELECT r.doc_id, r.w
 FROM ranked r JOIN ap_sizes s ON s.doc_id = r.doc_id
 WHERE r.rn <= s.n - CAST(({tn} * s.n + {td} - 1) / {td} AS BIGINT) + 1
-""".format(tn=tn, td=td)).localCheckpoint()
-    prefix.createOrReplaceTempView("ap_prefix")
+""".format(tn=tn, td=td)), view="ap_prefix")
     return spark.sql("""
 WITH cand AS (
   SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
@@ -1496,6 +1482,9 @@ JOIN ap_sizes sa ON sa.doc_id = i.left_id
 JOIN ap_sizes sb ON sb.doc_id = i.right_id
 WHERE {td} * i.inter >= {tn} * (sa.n + sb.n - i.inter)
 """.format(tn=tn, td=td))
+
+
+allpairs_prefix_df = materialized(allpairs_prefix_frame)
 
 
 @query("dedup_allpairs_prefix")

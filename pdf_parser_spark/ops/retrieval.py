@@ -35,6 +35,7 @@ groups, each already reduced to matching docs).
 from __future__ import annotations
 
 from ..relational import TOKS_CTE, DUCK, SPARK
+from ..stages import materialized, scope
 from .webgraph import IDIV
 
 QUERIES = {}
@@ -166,56 +167,55 @@ def _append_data(spark, index_dir: str, docs, aid: str) -> None:
 
     from pyspark.sql import functions as F
 
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " "))
-        .alias("pos", "term"))
-    docstats = (toks.groupBy("doc_id")
-                .agg(F.count("*").cast("long").alias("dl"))).persist()
-    docstats.count()
-    # dl rides ON the postings rows (denormalized at append time) so
-    # the serve path never has to re-join a corpus-sized docstats
-    # table — it reads |matching postings| and nothing else
-    postings = (toks.groupBy("term", "doc_id")
-                .agg(F.count("*").cast("long").alias("tf"))
-                .join(docstats, "doc_id")
-                .withColumn("shard", _shard_col())
-                .withColumn("append_id", F.lit(aid))).persist()
-    postings.count()
-    # append_id is a PARTITION key (not just a column): serve's
-    # committed-only filter becomes partition pruning (uncommitted and
-    # superseded generations are never even opened), and vacuum after
-    # compaction is an O(1) directory delete per retired generation
-    (postings.repartition(_N_SHARDS, "shard")
-     .write.mode("append").partitionBy("shard", "append_id")
-     .parquet(os.path.join(index_dir, "postings")))
-    # positional postings: the sorted in-document positions of each
-    # (term, doc) as ONE array row — what phrase adjacency needs.  A
-    # document is ingested whole by exactly one append, so a (term,
-    # doc) position array can never straddle generations (compaction
-    # may therefore retag these rows verbatim, like postings)
-    (toks.groupBy("term", "doc_id")
-     .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-     .withColumn("shard", _shard_col())
-     .withColumn("append_id", F.lit(aid))
-     .repartition(_N_SHARDS, "shard")
-     .write.mode("append").partitionBy("shard", "append_id")
-     .parquet(os.path.join(index_dir, "positions")))
-    (docstats.withColumn("append_id", F.lit(aid))
-     .write.mode("append").partitionBy("append_id")
-     .parquet(os.path.join(index_dir, "docstats")))
-    # df delta per term: postings are unique per (term, doc) already
-    (postings.groupBy("term")
-     .agg(F.count("*").cast("long").alias("df_delta"))
-     .withColumn("append_id", F.lit(aid))
-     .write.mode("append").partitionBy("append_id")
-     .parquet(os.path.join(index_dir, "termstats")))
-    (docstats.agg(F.count("*").cast("long").alias("n_delta"),
-                  F.sum("dl").cast("long").alias("s_delta"))
-     .withColumn("append_id", F.lit(aid))
-     .write.mode("append").partitionBy("append_id")
-     .parquet(os.path.join(index_dir, "corpusstats")))
-    postings.unpersist()
-    docstats.unpersist()
+    with scope(spark) as st:
+        toks = docs.select(
+            "doc_id", F.posexplode(F.split("text", " "))
+            .alias("pos", "term"))
+        docstats = st.checkpoint(
+            toks.groupBy("doc_id")
+            .agg(F.count("*").cast("long").alias("dl")))
+        # dl rides ON the postings rows (denormalized at append time) so
+        # the serve path never has to re-join a corpus-sized docstats
+        # table — it reads |matching postings| and nothing else
+        postings = st.checkpoint(
+            toks.groupBy("term", "doc_id")
+            .agg(F.count("*").cast("long").alias("tf"))
+            .join(docstats, "doc_id")
+            .withColumn("shard", _shard_col())
+            .withColumn("append_id", F.lit(aid)))
+        # append_id is a PARTITION key (not just a column): serve's
+        # committed-only filter becomes partition pruning (uncommitted and
+        # superseded generations are never even opened), and vacuum after
+        # compaction is an O(1) directory delete per retired generation
+        (postings.repartition(_N_SHARDS, "shard")
+         .write.mode("append").partitionBy("shard", "append_id")
+         .parquet(os.path.join(index_dir, "postings")))
+        # positional postings: the sorted in-document positions of each
+        # (term, doc) as ONE array row — what phrase adjacency needs.  A
+        # document is ingested whole by exactly one append, so a (term,
+        # doc) position array can never straddle generations (compaction
+        # may therefore retag these rows verbatim, like postings)
+        (toks.groupBy("term", "doc_id")
+         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+         .withColumn("shard", _shard_col())
+         .withColumn("append_id", F.lit(aid))
+         .repartition(_N_SHARDS, "shard")
+         .write.mode("append").partitionBy("shard", "append_id")
+         .parquet(os.path.join(index_dir, "positions")))
+        (docstats.withColumn("append_id", F.lit(aid))
+         .write.mode("append").partitionBy("append_id")
+         .parquet(os.path.join(index_dir, "docstats")))
+        # df delta per term: postings are unique per (term, doc) already
+        (postings.groupBy("term")
+         .agg(F.count("*").cast("long").alias("df_delta"))
+         .withColumn("append_id", F.lit(aid))
+         .write.mode("append").partitionBy("append_id")
+         .parquet(os.path.join(index_dir, "termstats")))
+        (docstats.agg(F.count("*").cast("long").alias("n_delta"),
+                      F.sum("dl").cast("long").alias("s_delta"))
+         .withColumn("append_id", F.lit(aid))
+         .write.mode("append").partitionBy("append_id")
+         .parquet(os.path.join(index_dir, "corpusstats")))
 
 
 def _commit(index_dir: str, aid: str, replaces=None) -> None:
@@ -788,7 +788,7 @@ WHERE rk <= {k}
 """
 
 
-def bm25_maxscore_df(spark):
+def bm25_maxscore_frame(st, spark):
     """PRODUCTION MaxScore — the persisted-intermediate twin of the
     ``bm25_maxscore`` SQL, row-identical (the unrolled SQL stays as
     the cross-engine DuckDB oracle; a test pins row-identity).
@@ -801,15 +801,17 @@ def bm25_maxscore_df(spark):
     computed ONCE (checkpointed leaf — exactly what a real index
     stores next to its postings) and the pruning tail + final scoring
     reuse the same SQL text as the oracle form over that leaf."""
-    wgts = spark.sql(
-        "WITH %s\nSELECT query_id, term, doc_id, w FROM wgts"
-        % _ms_ctes_head(SPARK)).localCheckpoint()
     # prefixed view, bridged to the tail's ``wgts`` by one CTE: a bare
-    # session-global ``wgts`` would bind any later unqualified reference
-    wgts.createOrReplaceTempView("ms_wgts")
+    # ``wgts`` would bind any unqualified reference while it exists
+    st.checkpoint(spark.sql(
+        "WITH %s\nSELECT query_id, term, doc_id, w FROM wgts"
+        % _ms_ctes_head(SPARK)), view="ms_wgts")
     return spark.sql(
         "WITH wgts AS (SELECT * FROM ms_wgts),\n" + _ms_tail() + ",\n"
         + _MS_FINAL.strip().replace("{k}", str(_TOP_K)))
+
+
+bm25_maxscore_df = materialized(bm25_maxscore_frame)
 
 
 @query("bm25_maxscore")

@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from ..relational import (
     DUCK, SPARK, LEN, LINE_PARTITIONS, ORD_ARRAY, SLICE,
 )
+from ..stages import materialized, scope
 
 QUERIES = {}
 
@@ -704,9 +705,9 @@ def _ivf_fit_impl(embeddings: DataFrame, k: int = 8,
     Scale shape per round: ONE broadcast hash join of the vectors
     against the k-row centroid set (constant join key — the broadcast
     side is k rows, so this is the legal spelling of a tiny cross
-    join), then ONE (cell, pos) shuffle of partial sums.  ``base`` and
-    ``comps`` are persisted once and reused every round instead of
-    being re-derived — the property the inlined-CTE SQL form cannot
+    join), then ONE (cell, pos) shuffle of partial sums.  The training
+    sample is cached once and reused every round instead of being
+    re-derived — the property the inlined-CTE SQL form cannot
     express.
 
     ``quantized=True``: input already carries ``(vec_id, qv)``.
@@ -732,18 +733,6 @@ def _ivf_fit_impl(embeddings: DataFrame, k: int = 8,
                "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
                " * 1000000.0) AS BIGINT))")
     base = embeddings.select("vec_id", F.expr(qv_expr).alias("qv"))
-    # the Lloyd SAMPLE is deliberately small (FAISS-style); partition
-    # it at sample-appropriate width instead of inheriting the corpus
-    # width — a 64-wide persisted 2.5k-row sample made every round's
-    # jobs mostly-empty tasks (measured 2.2 -> 1.5 s per fit at
-    # fixture scale); width scales with LINE_PARTITIONS, floor k
-    train = (base.filter(train_filter)
-             .repartition(max(k, LINE_PARTITIONS // 8), "vec_id")
-             if train_filter else base).persist()
-    cent0 = seed_df if seed_df is not None else train.filter(
-        F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cell"), F.col("qv").alias("cv"))
-    cent_rows = sorted((r.cell, list(r.cv)) for r in cent0.collect())
     spark = embeddings.sparkSession
     sqdist = F.expr(_SQDIST_EXPR)
 
@@ -768,32 +757,50 @@ def _ivf_fit_impl(embeddings: DataFrame, k: int = 8,
         return out.select("vec_id", "qv", "cell") if carry else \
             out.select("vec_id", "cell")
 
-    for _ in range(iters):
-        # round 6: the assignment CARRIES qv through the min_by agg and
-        # the mean explodes it afterwards — the previous form joined the
-        # assignment back to a persisted pre-exploded components table,
-        # an extra shuffle join per round (measured ~1 s/round of stage
-        # latency at fixture scale for identical math; at corpus scale
-        # it is one fewer shuffle of the sample per round)
-        assigned = assign_join(cent_rows, train, carry=True)
-        means = (
-            assigned.select("cell", F.posexplode("qv").alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(F.expr("CAST(floor(SUM(v) / CAST(COUNT(*) AS DOUBLE))"
-                        " AS BIGINT)").alias("m"))
-        )
-        # k·dim mean rows → the next round's centroids (the same
-        # driver materialization the original per-round collect did)
-        by_cell: dict = {}
-        for r in means.collect():
-            by_cell.setdefault(r.cell, []).append((r.pos, r.m))
-        cent_rows = sorted(
-            (cell, [m for _, m in sorted(pms)])
-            for cell, pms in by_cell.items())
+    with scope(spark) as st:
+        # the Lloyd SAMPLE is deliberately small (FAISS-style);
+        # partition it at sample-appropriate width instead of
+        # inheriting the corpus width — a 64-wide persisted 2.5k-row
+        # sample made every round's jobs mostly-empty tasks (measured
+        # 2.2 -> 1.5 s per fit at fixture scale); width scales with
+        # LINE_PARTITIONS, floor k
+        train = st.cache(
+            base.filter(train_filter)
+            .repartition(max(k, LINE_PARTITIONS // 8), "vec_id")
+            if train_filter else base)
+        cent0 = seed_df if seed_df is not None else train.filter(
+            F.col("vec_id") < k).select(
+            F.col("vec_id").cast("int").alias("cell"),
+            F.col("qv").alias("cv"))
+        cent_rows = sorted((r.cell, list(r.cv)) for r in cent0.collect())
+        for _ in range(iters):
+            # round 6: the assignment CARRIES qv through the min_by agg
+            # and the mean explodes it afterwards — the previous form
+            # joined the assignment back to a persisted pre-exploded
+            # components table, an extra shuffle join per round
+            # (measured ~1 s/round of stage latency at fixture scale
+            # for identical math; at corpus scale it is one fewer
+            # shuffle of the sample per round)
+            assigned = assign_join(cent_rows, train, carry=True)
+            means = (
+                assigned.select("cell",
+                                F.posexplode("qv").alias("pos", "v"))
+                .groupBy("cell", "pos")
+                .agg(F.expr("CAST(floor(SUM(v) / CAST(COUNT(*) AS"
+                            " DOUBLE)) AS BIGINT)").alias("m"))
+            )
+            # k·dim mean rows → the next round's centroids (the same
+            # driver materialization the original per-round collect
+            # did)
+            by_cell: dict = {}
+            for r in means.collect():
+                by_cell.setdefault(r.cell, []).append((r.pos, r.m))
+            cent_rows = sorted(
+                (cell, [m for _, m in sorted(pms)])
+                for cell, pms in by_cell.items())
 
     final = assign_join(cent_rows, base, carry=carry_qv)
     cent = spark.createDataFrame(cent_rows, "cell int, cv array<bigint>")
-    train.unpersist()
     return final, cent
 
 
@@ -846,6 +853,8 @@ def amortized_ivf_demo(spark, index_dir: str = None) -> DataFrame:
     import tempfile
 
     reps, k = _AMORT_REPS, _AMORT_K
+    root = index_dir or os.path.join(tempfile.gettempdir(),
+                                     "pdf_parser_spark_ivf_index")
     # cache the expanded corpus for the fit+index-build window: the
     # in-plan ×100 expansion costs ~3s per pass at 50k and would
     # otherwise be recomputed by the seed collect, every Lloyd round's
@@ -855,40 +864,35 @@ def amortized_ivf_demo(spark, index_dir: str = None) -> DataFrame:
     # the final full-corpus assignment) otherwise runs one-task; the
     # one ~13 MB shuffle buys fit-wide parallelism (guide §2.5 input-
     # skew fix — repartition right after the skewed read).
-    base = big_base_df(spark, reps) \
-        .repartition(LINE_PARTITIONS, "vec_id").persist()
-    seed = base.filter(
-        "vec_id %% %d = 0 AND vec_id < %d" % (reps, k * reps)).select(
-        F.expr("CAST(vec_id / %d AS INT)" % reps).alias("cell"),
-        F.col("qv").alias("cv"))
-    fitted, centroids = _ivf_fit_impl(
-        base, k, 2, quantized=True, train_filter=_AMORT_TRAIN,
-        seed_df=seed, carry_qv=True)
-
-    # persist the index: centroids (k rows) + the cell-keyed vector
-    # table — the artifact later query batches scan without refitting
-    # (a real IVF index stores the vectors bucketed by cell);
-    # repartition BY cell first so the partitioned write emits one
-    # file per cell instead of tasks×cells small files
-    root = index_dir or os.path.join(tempfile.gettempdir(),
-                                     "pdf_parser_spark_ivf_index")
-    # the two index writes are independent — submit them from two
-    # driver threads so the tiny centroid write back-fills executors
-    # during the vector write's tail (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(2) as pool:
-        f_c = pool.submit(
-            lambda: centroids.write.mode("overwrite")
-            .parquet(os.path.join(root, "centroids")))
-        f_v = pool.submit(
-            lambda: fitted.repartition(k, "cell").write.mode("overwrite")
-            .partitionBy("cell").parquet(os.path.join(root, "vectors")))
-        f_c.result(), f_v.result()
-    base.unpersist()
+    with scope(spark) as st:
+        base = st.cache(big_base_df(spark, reps)
+                        .repartition(LINE_PARTITIONS, "vec_id"))
+        seed = base.filter(
+            "vec_id %% %d = 0 AND vec_id < %d" % (reps, k * reps)).select(
+            F.expr("CAST(vec_id / %d AS INT)" % reps).alias("cell"),
+            F.col("qv").alias("cv"))
+        fitted, centroids = _ivf_fit_impl(
+            base, k, 2, quantized=True, train_filter=_AMORT_TRAIN,
+            seed_df=seed, carry_qv=True)
+        # persist the index: centroids (k rows) + the cell-keyed vector
+        # table — the artifact later query batches scan without
+        # refitting (a real IVF index stores the vectors bucketed by
+        # cell); repartition BY cell first so the partitioned write
+        # emits one file per cell instead of tasks×cells small files.
+        # The two index writes are independent — submit them from two
+        # driver threads so the tiny centroid write back-fills
+        # executors during the vector write's tail (guide §2.6)
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(2) as pool:
+            f_c = pool.submit(
+                lambda: centroids.write.mode("overwrite")
+                .parquet(os.path.join(root, "centroids")))
+            f_v = pool.submit(
+                lambda: fitted.repartition(k, "cell").write
+                .mode("overwrite").partitionBy("cell")
+                .parquet(os.path.join(root, "vectors")))
+            f_c.result(), f_v.result()
     vectors = spark.read.parquet(os.path.join(root, "vectors"))
-    vectors.createOrReplaceTempView("ivf_vectors")
-    spark.read.parquet(os.path.join(root, "centroids")) \
-        .createOrReplaceTempView("ivf_centroids")
 
     # serve: per-vector norms hoisted (computed once per candidate /
     # query instead of once per scored pair), queries broadcast into a
@@ -1360,6 +1364,16 @@ def _pq_subs(embeddings: DataFrame, m: int, sub: int) -> DataFrame:
 def pq_fit_df(embeddings: DataFrame, m: int = _PQ_M,
               sub: int = _PQ_SUBDIM, k: int = _PQ_K,
               iters: int = _PQ_ITERS) -> tuple:
+    """``pq_fit_frame`` in its own scope: materialized codes and the
+    codebook."""
+    with scope(embeddings.sparkSession) as st:
+        codes, codebook = pq_fit_frame(st, embeddings, m, sub, k, iters)
+        return st.result(codes), codebook
+
+
+def pq_fit_frame(st, embeddings: DataFrame, m: int = _PQ_M,
+                 sub: int = _PQ_SUBDIM, k: int = _PQ_K,
+                 iters: int = _PQ_ITERS) -> tuple:
     """PRODUCTION PQ training + encoding — the iterative, persisted
     form of the ``ann_pq_codes`` oracle SQL (code-for-code identical,
     test-pinned).  Returns ``(codes, codebook)``: codes is
@@ -1372,8 +1386,7 @@ def pq_fit_df(embeddings: DataFrame, m: int = _PQ_M,
     round.  Codebook rows round-trip through the driver between
     rounds — a BOUNDED M·K-row collect, like the IVF centroids."""
     spark = embeddings.sparkSession
-    subs = _pq_subs(embeddings, m, sub).select("vec_id", "m", "sv") \
-        .persist()
+    subs = st.cache(_pq_subs(embeddings, m, sub).select("vec_id", "m", "sv"))
     seed = subs.filter(F.col("vec_id") < k).select(
         "m", F.col("vec_id").cast("int").alias("code"),
         F.col("sv").alias("cv"))
@@ -1417,14 +1430,13 @@ def pq_fit_df(embeddings: DataFrame, m: int = _PQ_M,
     codes = assign_join(cb_rows)
     codebook = spark.createDataFrame(
         cb_rows, "m int, code int, cv array<bigint>")
-    subs.unpersist()
     return codes, codebook
 
 
-def pq_topk_df(embeddings: DataFrame, m: int = _PQ_M,
-               sub: int = _PQ_SUBDIM, k: int = _PQ_K,
-               iters: int = _PQ_ITERS, shortlist: int = _PQ_SHORTLIST,
-               topn: int = 5, n_queries: int = 8) -> DataFrame:
+def pq_topk_frame(st, embeddings: DataFrame, m: int = _PQ_M,
+                  sub: int = _PQ_SUBDIM, k: int = _PQ_K,
+                  iters: int = _PQ_ITERS, shortlist: int = _PQ_SHORTLIST,
+                  topn: int = 5, n_queries: int = 8) -> DataFrame:
     """PRODUCTION IVFADC-style search — row-identical to the
     ``ann_pq_adc`` oracle SQL (test-pinned).  The per-query distance
     table (n_queries·M·K rows) is broadcast into the ADC scan, which
@@ -1432,7 +1444,7 @@ def pq_topk_df(embeddings: DataFrame, m: int = _PQ_M,
     plus a partial-agg SUM — the only pass that touches all n rows
     reads codes, never vectors; raw vectors are re-read for the
     ``shortlist``-row exact-cosine refine only."""
-    codes, codebook = pq_fit_df(embeddings, m, sub, k, iters)
+    codes, codebook = pq_fit_frame(st, embeddings, m, sub, k, iters)
     qsubs = _pq_subs(embeddings, m, sub) \
         .filter(F.col("vec_id") < n_queries)
     dtab = (qsubs.join(F.broadcast(codebook), "m")
@@ -1463,3 +1475,6 @@ def pq_topk_df(embeddings: DataFrame, m: int = _PQ_M,
             .filter(F.col("rank") <= topn)
             .select("query_id", F.col("cand_id").alias("neighbor_id"),
                     "rank", "cosine", "adc_dist"))
+
+
+pq_topk_df = materialized(pq_topk_frame)

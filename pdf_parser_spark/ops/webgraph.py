@@ -38,6 +38,7 @@ lands on one grouped row per source, not one row per raw link.
 from __future__ import annotations
 
 from ..relational import DUCK, SPARK, ORD_CONCAT, RLIKE, lit
+from ..stages import materialized, scope
 
 QUERIES = {}
 
@@ -460,7 +461,7 @@ q_cocitation_pairs.__doc__ = q_cocitation_pairs.__doc__.replace(
 
 # ------------------------------------------- production iterative form
 
-def pagerank_df(edges, rounds: int = _PR_ROUNDS, seeds=None):
+def pagerank_frame(st, edges, rounds: int = _PR_ROUNDS, seeds=None):
     """The PRODUCTION iterative PageRank over an ``edges(src_host,
     dst_host, n_links)`` DataFrame — per-round persisted DataFrames
     (Catalyst inlines CTE references, so the unrolled SQL form
@@ -484,7 +485,7 @@ def pagerank_df(edges, rounds: int = _PR_ROUNDS, seeds=None):
     rows and the extra setup join cost more than the anti-join saves,
     and at host granularity (~1e7 rows) the anti-join's small side is
     the same persisted frame every round.  Rounds are LAZY (same
-    measured finding as hits_df: each eager per-round .count() was a
+    measured finding as hits_frame: each eager per-round .count() was a
     full job of scheduler overhead — ~1.3 s/job at local[32] over
     host-granularity state); the per-round persists still deduplicate
     the doubled ranks reference (contrib join + dangling anti-join)
@@ -496,9 +497,9 @@ def pagerank_df(edges, rounds: int = _PR_ROUNDS, seeds=None):
     def idiv(a, b):
         return F.expr(IDIV(a, b))
 
-    nodes = (edges.select(F.col("src_host").alias("host"))
-             .union(edges.select(F.col("dst_host").alias("host")))
-             .distinct().persist())
+    nodes = st.cache(
+        edges.select(F.col("src_host").alias("host"))
+        .union(edges.select(F.col("dst_host").alias("host"))).distinct())
     if seeds is not None:
         seeds = sorted(set(seeds))
         is_seed = F.col("host").isin(seeds)
@@ -507,12 +508,12 @@ def pagerank_df(edges, rounds: int = _PR_ROUNDS, seeds=None):
         is_seed = F.lit(True)
         nt = nodes.count()
     n = nodes.count()           # one tiny scalar, outside the loop
-    outw = (edges.groupBy("src_host")
-            .agg(F.sum("n_links").cast("long").alias("w")).persist())
+    outw = st.cache(edges.groupBy("src_host")
+                      .agg(F.sum("n_links").cast("long").alias("w")))
     base = _PR_SCALE * (100 - _DAMP_PCT) // 100
-    ranks = nodes.select(
+    ranks = st.cache(nodes.select(
         "host", F.when(is_seed, F.lit((_PR_SCALE - _PR_SCALE % nt) // nt))
-        .otherwise(F.lit(0)).cast("long").alias("rank")).persist()
+        .otherwise(F.lit(0)).cast("long").alias("rank")))
     for _ in range(rounds):
         contrib = (
             edges.join(ranks, edges.src_host == ranks.host)
@@ -524,7 +525,7 @@ def pagerank_df(edges, rounds: int = _PR_ROUNDS, seeds=None):
         dang = (ranks.join(outw, ranks.host == outw.src_host, "left_anti")
                 .agg(F.coalesce(F.sum("rank"), F.lit(0))
                      .cast("long").alias("dm")))
-        new = (
+        ranks = st.cache(
             nodes.join(contrib, nodes.host == contrib.dst_host, "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -534,14 +535,11 @@ def pagerank_df(edges, rounds: int = _PR_ROUNDS, seeds=None):
                         + idiv("dm * %d" % _DAMP_PCT, "%d * 100" % nt))
                  .otherwise(F.lit(0))
                  + F.coalesce(F.col("c"), F.lit(0))
-                 ).cast("long").alias("rank"))
-            .persist()
-        )
-        ranks = new
-    # nodes/outw/round frames stay persisted for the caller's action
-    # (host-granularity, bounded); unpersisting here would force the
-    # lazy chain to recompute them from scratch
+                 ).cast("long").alias("rank")))
     return ranks.select("host", F.col("rank").alias("rank_ppb"))
+
+
+pagerank_df = materialized(pagerank_frame)
 
 
 # -------------------------------------- per-host boilerplate-line dedup
@@ -643,10 +641,10 @@ def link_graph_df(spark):
     return spark.sql(QUERIES["link_graph"](SPARK))
 
 
-def trustrank_df(spark, edges=None):
+def trustrank_df(spark):
     """PRODUCTION TrustRank — the iterative form of the
     ``trustrank_seeds`` oracle SQL, row-identical (test-pinned): two
-    ``pagerank_df`` chains over one persisted edge list (uniform
+    ``pagerank_frame`` chains over one checkpointed edge list (uniform
     teleport for rank, seed-whitelist teleport for trust) + the exact
     cross-multiplication verdict.  The unrolled SQL re-derives the
     edge pipeline once per CTE reference (Catalyst inlining doubles
@@ -656,76 +654,69 @@ def trustrank_df(spark, edges=None):
     pages."""
     from pyspark.sql import functions as F
 
-    own_edges = edges is None
-    if own_edges:
-        edges = link_graph_df(spark).persist()
-        edges.count()
-    nodes = (edges.select(F.col("src_host").alias("host"))
-             .union(edges.select(F.col("dst_host").alias("host")))
-             .distinct())
-    # Intersect the O(100) whitelist with the vertex set via a
-    # broadcast SEMI-join — the ~10^7-host vertex set never leaves
-    # the executors; only the ≤|whitelist| surviving seed rows are
-    # collected (a bounded k-row collect, like the IVF centroids).
-    seeds_df = spark.createDataFrame(
-        [(h,) for h in sorted(set(_seed_hosts()))], "host string")
-    present = nodes.join(F.broadcast(seeds_df), "host", "semi")
-    seeds = sorted(r.host for r in present.collect())
-    # The two chains are INDEPENDENT (uniform vs seed teleport), so
-    # submit them from two driver threads: each round's stages are
-    # small relative to the cluster (10 tiny stages/round/chain), and
-    # Spark schedules concurrent jobs from separate threads onto idle
-    # slots — measured 15.1 s -> 9.8 s at sf0.1 local[32], and on a
-    # real cluster it halves the trust-propagation critical path the
-    # same way.  Result DataFrames are deterministic either way
-    # (row-identity to the unrolled SQL stays test-pinned).
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(2) as pool:
-        # round 6: each thread MATERIALIZES its chain (localCheckpoint
-        # is eager) — previously the threads only built lazy plans and
-        # the single final action executed both lineages in one job,
-        # so the overlap was limited to whatever independent stages the
-        # DAG scheduler happened to co-schedule; two eager jobs from
-        # two threads overlap fully (guide §2.6), and the final verdict
-        # join runs over two checkpointed leaves.  Rows unchanged.
-        f_pr = pool.submit(lambda: pagerank_df(edges)
-                           .withColumnRenamed("rank_ppb", "r")
-                           .localCheckpoint())
-        f_tr = pool.submit(lambda: pagerank_df(edges, seeds=seeds)
-                           .withColumnRenamed("rank_ppb", "t")
-                           .withColumnRenamed("host", "thost")
-                           .localCheckpoint())
-        pr, tr = f_pr.result(), f_tr.result()
-    # seed membership as a broadcast left join on the same tiny
-    # DataFrame (not a driver-built isin literal over vertex rows)
-    seed_mark = (present.withColumn("m", F.lit(1))
-                 .withColumnRenamed("host", "shost"))
-    both = (pr.join(tr, pr.host == tr.thost)
+    with scope(spark) as st:
+        edges = st.checkpoint(link_graph_df(spark))
+        nodes = (edges.select(F.col("src_host").alias("host"))
+                 .union(edges.select(F.col("dst_host").alias("host")))
+                 .distinct())
+        # Intersect the O(100) whitelist with the vertex set via a
+        # broadcast SEMI-join — the ~10^7-host vertex set never leaves
+        # the executors; only the ≤|whitelist| surviving seed rows are
+        # collected (a bounded k-row collect, like the IVF centroids).
+        seeds_df = spark.createDataFrame(
+            [(h,) for h in sorted(set(_seed_hosts()))], "host string")
+        present = nodes.join(F.broadcast(seeds_df), "host", "semi")
+        seeds = sorted(r.host for r in present.collect())
+        # The two chains are INDEPENDENT (uniform vs seed teleport), so
+        # submit them from two driver threads: each round's stages are
+        # small relative to the cluster (10 tiny stages/round/chain),
+        # and Spark schedules concurrent jobs from separate threads
+        # onto idle slots — measured 15.1 s -> 9.8 s at sf0.1
+        # local[32], and on a real cluster it halves the
+        # trust-propagation critical path the same way.  Each thread
+        # MATERIALIZES its chain (a checkpoint is eager): two eager
+        # jobs from two threads overlap fully (guide §2.6), where two
+        # lazy plans run by one final action overlap only in the
+        # independent stages the DAG scheduler happens to co-schedule;
+        # the verdict join then runs over two checkpointed leaves.
+        # Both threads register in the one scope.  Result DataFrames
+        # are deterministic either way (row-identity to the unrolled
+        # SQL stays test-pinned).
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(2) as pool:
+            f_pr = pool.submit(lambda: st.checkpoint(
+                pagerank_frame(st, edges)
+                .withColumnRenamed("rank_ppb", "r")))
+            f_tr = pool.submit(lambda: st.checkpoint(
+                pagerank_frame(st, edges, seeds=seeds)
+                .withColumnRenamed("rank_ppb", "t")
+                .withColumnRenamed("host", "thost")))
+            pr, tr = f_pr.result(), f_tr.result()
+        # seed membership as a broadcast left join on the same tiny
+        # DataFrame (not a driver-built isin literal over vertex rows)
+        seed_mark = (present.withColumn("m", F.lit(1))
+                     .withColumnRenamed("host", "shost"))
+        both = st.cache(
+            pr.join(tr, pr.host == tr.thost)
             .join(F.broadcast(seed_mark),
                   pr.host == F.col("shost"), "left")
             .select("host", "r", "t",
-                    F.coalesce("m", F.lit(0)).cast("int").alias("sm"))
-            .persist())
-    tot = both.agg(F.sum("r").cast("long").alias("rsum"),
-                   F.sum("t").cast("long").alias("tsum"))
-    out = (both.crossJoin(F.broadcast(tot)).select(
-        "host",
-        F.col("r").alias("rank_ppb"),
-        F.col("t").alias("trust_ppb"),
-        F.col("sm").alias("is_seed"),
-        F.when(F.col("sm") == 1, "seed")
-        .when(F.col("t") * F.col("rsum") >= F.col("r") * F.col("tsum"),
-              "trusted")
-        .when(F.col("t") > 0, "demoted")
-        .otherwise("untrusted").alias("verdict")))
-    if own_edges:
-        out = out.localCheckpoint()
-        edges.unpersist()
-        both.unpersist()
-    return out
+                    F.coalesce("m", F.lit(0)).cast("int").alias("sm")))
+        tot = both.agg(F.sum("r").cast("long").alias("rsum"),
+                       F.sum("t").cast("long").alias("tsum"))
+        return st.result(both.crossJoin(F.broadcast(tot)).select(
+            "host",
+            F.col("r").alias("rank_ppb"),
+            F.col("t").alias("trust_ppb"),
+            F.col("sm").alias("is_seed"),
+            F.when(F.col("sm") == 1, "seed")
+            .when(F.col("t") * F.col("rsum")
+                  >= F.col("r") * F.col("tsum"), "trusted")
+            .when(F.col("t") > 0, "demoted")
+            .otherwise("untrusted").alias("verdict")))
 
 
-def hits_df(edges, rounds: int = _HITS_ROUNDS):
+def hits_frame(st, edges, rounds: int = _HITS_ROUNDS):
     """PRODUCTION HITS — the iterative form of the ``hits_scores``
     oracle SQL, row-identical (test-pinned).  Identical exact-integer
     alternating I/O recurrence with floor L1 normalization; per
@@ -737,10 +728,10 @@ def hits_df(edges, rounds: int = _HITS_ROUNDS):
     def idiv(a, b):
         return F.expr(IDIV(a, b))
 
-    dedges = edges.select("src_host", "dst_host").distinct().persist()
-    nodes = (dedges.select(F.col("src_host").alias("host"))
-             .union(dedges.select(F.col("dst_host").alias("host")))
-             .distinct().persist())
+    dedges = st.cache(edges.select("src_host", "dst_host").distinct())
+    nodes = st.cache(
+        dedges.select(F.col("src_host").alias("host"))
+        .union(dedges.select(F.col("dst_host").alias("host"))).distinct())
     n = nodes.count()
     # LAZY rounds: every eager per-half-round .count() used to cost a
     # full job of scheduler overhead (measured ~1.5 s/job at local[32]
@@ -748,14 +739,13 @@ def hits_df(edges, rounds: int = _HITS_ROUNDS):
     # the jobs are not).  The persisted frames still deduplicate work
     # inside the ONE final action: Spark materializes each cached plan
     # the first time a stage needs it and reuses it thereafter, and
-    # the normalizer branch sharing hr/ar resolves via ReusedExchange.
-    # Frames stay persisted for the caller's action (k rounds x ~n
-    # hosts of long pairs — bounded; a real deployment would
-    # checkpoint every ~30 rounds like pagerank_df documents).
-    a = nodes.select(
+    # the normalizer branch sharing hr/ar resolves via ReusedExchange
+    # (a real deployment would checkpoint every ~30 rounds like
+    # pagerank_frame documents).
+    a = st.cache(nodes.select(
         "host",
         F.lit((_HITS_SCALE - _HITS_SCALE % n) // n)
-        .cast("long").alias("s")).persist()
+        .cast("long").alias("s")))
     h = None
     for _ in range(rounds):
         hr = (dedges.join(a, dedges.dst_host == a.host)
@@ -763,55 +753,52 @@ def hits_df(edges, rounds: int = _HITS_ROUNDS):
               .agg(F.sum("s").cast("long").alias("s"))
               .withColumnRenamed("src_host", "host"))
         ht = hr.agg(F.sum("s").cast("long").alias("t"))
-        h_new = (hr.crossJoin(F.broadcast(ht))
-                 .select("host", idiv("s * %d" % _HITS_SCALE, "t")
-                         .cast("long").alias("s")).persist())
+        h_new = st.cache(
+            hr.crossJoin(F.broadcast(ht))
+            .select("host", idiv("s * %d" % _HITS_SCALE, "t")
+                    .cast("long").alias("s")))
         ar = (dedges.join(h_new, dedges.src_host == h_new.host)
               .groupBy("dst_host")
               .agg(F.sum("s").cast("long").alias("s"))
               .withColumnRenamed("dst_host", "host"))
         at = ar.agg(F.sum("s").cast("long").alias("t"))
-        a_new = (ar.crossJoin(F.broadcast(at))
-                 .select("host", idiv("s * %d" % _HITS_SCALE, "t")
-                         .cast("long").alias("s")).persist())
+        a_new = st.cache(
+            ar.crossJoin(F.broadcast(at))
+            .select("host", idiv("s * %d" % _HITS_SCALE, "t")
+                    .cast("long").alias("s")))
         a, h = a_new, h_new
-    out = (nodes
-           .join(h.withColumnRenamed("host", "hh")
-                  .withColumnRenamed("s", "hub"),
-                 nodes.host == F.col("hh"), "left")
-           .join(a.withColumnRenamed("host", "ah")
-                  .withColumnRenamed("s", "auth"),
-                 nodes.host == F.col("ah"), "left")
-           .select("host",
-                   F.coalesce("hub", F.lit(0)).cast("long")
-                   .alias("hub_ppm"),
-                   F.coalesce("auth", F.lit(0)).cast("long")
-                   .alias("auth_ppm")))
-    return out
+    return (nodes
+            .join(h.withColumnRenamed("host", "hh")
+                   .withColumnRenamed("s", "hub"),
+                  nodes.host == F.col("hh"), "left")
+            .join(a.withColumnRenamed("host", "ah")
+                   .withColumnRenamed("s", "auth"),
+                  nodes.host == F.col("ah"), "left")
+            .select("host",
+                    F.coalesce("hub", F.lit(0)).cast("long")
+                    .alias("hub_ppm"),
+                    F.coalesce("auth", F.lit(0)).cast("long")
+                    .alias("auth_ppm")))
 
 
 def pagerank_production_df(spark):
-    """pagerank_df over a persisted one-plan edge list — the retired-
-    special Spark side of the ``host_pagerank`` row since round 6 (the
-    unrolled SQL stays as the DuckDB oracle; row-identity pinned by
-    test_pagerank_df_matches_sql).  Same wrapper shape as
+    """pagerank_frame over a checkpointed one-plan edge list — the
+    retired-special Spark side of the ``host_pagerank`` row since
+    round 6 (the unrolled SQL stays as the DuckDB oracle; row-identity
+    pinned by test_pagerank_df_matches_sql).  Same wrapper shape as
     hits_production_df."""
-    edges = link_graph_df(spark).persist()
-    edges.count()
-    out = pagerank_df(edges).localCheckpoint()
-    edges.unpersist()
-    return out
+    with scope(spark) as st:
+        edges = st.checkpoint(link_graph_df(spark))
+        return st.result(pagerank_frame(st, edges))
 
 
 def hits_production_df(spark):
-    """hits_df over a persisted one-plan edge list — the retired-
-    special Spark side of the ``hits_scores`` row (the SQL stays as
-    the DuckDB oracle)."""
-    edges = link_graph_df(spark).persist()
-    edges.count()
-    out = hits_df(edges).localCheckpoint()
-    edges.unpersist()
-    return out
+    """hits_frame over a checkpointed one-plan edge list — the
+    retired-special Spark side of the ``hits_scores`` row (the SQL
+    stays as the DuckDB oracle)."""
+    with scope(spark) as st:
+        edges = st.checkpoint(link_graph_df(spark))
+        return st.result(hits_frame(st, edges))
 
 
 # ------------------------------------------------- mirror detection
@@ -1042,7 +1029,7 @@ FROM lbl{k}
 """.format(ctes=",\n".join(_lpa_parts(d)), k=_LPA_ROUNDS)
 
 
-def lpa_df(spark, edges=None, rounds: int = _LPA_ROUNDS):
+def lpa_df(spark, rounds: int = _LPA_ROUNDS):
     """PRODUCTION iterative label propagation — the per-round-persisted
     twin of ``label_propagation`` (same rationale as ``pagerank_df``:
     Catalyst inlines CTE references, so the unrolled SQL re-derives
@@ -1056,36 +1043,36 @@ def lpa_df(spark, edges=None, rounds: int = _LPA_ROUNDS):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    own_edges = edges is None
-    if own_edges:
-        edges = link_graph_df(spark).persist()
-        edges.count()
-    e = edges.filter("src_host <> dst_host")
-    und = (e.selectExpr("src_host AS u", "dst_host AS v", "n_links")
-           .union(e.selectExpr("dst_host AS u", "src_host AS v",
-                               "n_links")))
-    adj = (und.groupBy("u", "v")
-           .agg(F.sum("n_links").cast("long").alias("w")).persist())
-    labels = (adj.select(F.col("u").alias("host")).distinct()
-              .withColumn("label", F.col("host")).persist())
-    cut = Window.partitionBy("host").orderBy(
-        F.col("s").desc(), F.col("label").asc())
-    # LAZY rounds (same measured finding as hits_df/pagerank_df: each
-    # eager per-round .count() is a full job of scheduler overhead over
-    # host-granularity state); labels is referenced once per round so
-    # the plan grows linearly, and the per-round persists still bound
-    # executed work to one round inside the caller's single action
-    for _ in range(rounds):
-        neigh = labels.select(F.col("host").alias("v"), "label")
-        scores = (adj.join(neigh, "v")
-                  .groupBy(F.col("u").alias("host"), "label")
-                  .agg(F.sum("w").cast("long").alias("s")))
-        labels = (scores.withColumn("rn", F.row_number().over(cut))
-                  .filter("rn = 1").select("host", "label").persist())
-    return labels.select(
-        "host", F.col("label").alias("community"),
-        F.count("*").over(Window.partitionBy("label"))
-        .cast("long").alias("community_size"))
+    with scope(spark) as st:
+        edges = st.checkpoint(link_graph_df(spark))
+        e = edges.filter("src_host <> dst_host")
+        und = (e.selectExpr("src_host AS u", "dst_host AS v", "n_links")
+               .union(e.selectExpr("dst_host AS u", "src_host AS v",
+                                   "n_links")))
+        adj = st.cache(und.groupBy("u", "v")
+                         .agg(F.sum("n_links").cast("long").alias("w")))
+        labels = st.cache(adj.select(F.col("u").alias("host")).distinct()
+                            .withColumn("label", F.col("host")))
+        cut = Window.partitionBy("host").orderBy(
+            F.col("s").desc(), F.col("label").asc())
+        # LAZY rounds (same measured finding as hits_frame/pagerank_frame:
+        # each eager per-round .count() is a full job of scheduler
+        # overhead over host-granularity state); labels is referenced
+        # once per round so the plan grows linearly, and the per-round
+        # persists still bound executed work to one round inside the
+        # single final action
+        for _ in range(rounds):
+            neigh = labels.select(F.col("host").alias("v"), "label")
+            scores = (adj.join(neigh, "v")
+                      .groupBy(F.col("u").alias("host"), "label")
+                      .agg(F.sum("w").cast("long").alias("s")))
+            labels = st.cache(
+                scores.withColumn("rn", F.row_number().over(cut))
+                .filter("rn = 1").select("host", "label"))
+        return st.result(labels.select(
+            "host", F.col("label").alias("community"),
+            F.count("*").over(Window.partitionBy("label"))
+            .cast("long").alias("community_size")))
 
 
 # ------------------------------------------------------------- SALSA
@@ -1269,7 +1256,7 @@ def kcore_df(spark, k: int = _KCORE_K, edges=None):
     chaining DataFrames would grow the logical plan ~3^rounds and the
     DRIVER's analysis time explodes long before any executor breaks a
     sweat (measured: round 3 already 8 s at sf0.001).  Each round's
-    survivor set is therefore ``localCheckpoint``-ed — lineage resets
+    survivor set is therefore checkpointed — lineage resets
     to a one-node scan per round, the discipline every iterative
     Spark algorithm with multi-reference state needs (GraphFrames
     checkpoints for exactly this reason).  Row-identical to the
@@ -1277,51 +1264,49 @@ def kcore_df(spark, k: int = _KCORE_K, edges=None):
     definition change nothing)."""
     from pyspark.sql import functions as F
 
-    own_edges = edges is None
-    if own_edges:
-        edges = link_graph_df(spark).persist()
-        edges.count()
-    e = edges.filter("src_host <> dst_host")
-    adj = (e.selectExpr("src_host AS u", "dst_host AS v")
-           .union(e.selectExpr("dst_host AS u", "src_host AS v"))
-           .distinct().persist())
-    alive = (adj.select(F.col("u").alias("host")).distinct()
-             .localCheckpoint())
-    n_old = alive.count()
-    peeled = []          # (round, DataFrame[host, degree])
-    rnd = 0
-    while True:
-        rnd += 1
-        cnt = (adj.join(alive.withColumnRenamed("host", "u"), "u")
-               .join(alive.withColumnRenamed("host", "v"), "v")
-               .groupBy(F.col("u").alias("host"))
-               .agg(F.count("*").cast("long").alias("cnt")))
-        deg = (alive.join(cnt, "host", "left")
-               .select("host", F.coalesce("cnt", F.lit(0))
-                       .cast("long").alias("degree"))
-               .localCheckpoint())
-        out = deg.filter(F.col("degree") < k)
-        peeled.append((rnd, out))
-        alive = (deg.filter(F.col("degree") >= k).select("host")
-                 .localCheckpoint())
-        n_new = alive.count()
-        if n_new == n_old:
-            core = deg.filter(F.col("degree") >= k).select(
-                "host", F.lit(0).cast("long").alias("peel_round"),
-                "degree")
-            peeled.pop()   # the no-op round peeled nobody
-            break
-        n_old = n_new
-    parts = [df.select("host",
-                       F.lit(r).cast("long").alias("peel_round"),
-                       "degree")
-             for r, df in peeled] + [core]
-    res = parts[0]
-    for p in parts[1:]:
-        res = res.unionByName(p)
-    if own_edges:
-        edges.unpersist()
-    return res
+    with scope(spark) as st:
+        if edges is None:
+            edges = st.checkpoint(link_graph_df(spark))
+        e = edges.filter("src_host <> dst_host")
+        adj = st.cache(
+            e.selectExpr("src_host AS u", "dst_host AS v")
+            .union(e.selectExpr("dst_host AS u", "src_host AS v"))
+            .distinct())
+        alive = st.checkpoint(adj.select(F.col("u").alias("host"))
+                              .distinct())
+        n_old = alive.count()
+        peeled = []          # (round, DataFrame[host, degree])
+        rnd = 0
+        while True:
+            rnd += 1
+            cnt = (adj.join(alive.withColumnRenamed("host", "u"), "u")
+                   .join(alive.withColumnRenamed("host", "v"), "v")
+                   .groupBy(F.col("u").alias("host"))
+                   .agg(F.count("*").cast("long").alias("cnt")))
+            deg = st.checkpoint(
+                alive.join(cnt, "host", "left")
+                .select("host", F.coalesce("cnt", F.lit(0))
+                        .cast("long").alias("degree")))
+            out = deg.filter(F.col("degree") < k)
+            peeled.append((rnd, out))
+            alive = st.checkpoint(
+                deg.filter(F.col("degree") >= k).select("host"))
+            n_new = alive.count()
+            if n_new == n_old:
+                core = deg.filter(F.col("degree") >= k).select(
+                    "host", F.lit(0).cast("long").alias("peel_round"),
+                    "degree")
+                peeled.pop()   # the no-op round peeled nobody
+                break
+            n_old = n_new
+        parts = [df.select("host",
+                           F.lit(r).cast("long").alias("peel_round"),
+                           "degree")
+                 for r, df in peeled] + [core]
+        res = parts[0]
+        for p in parts[1:]:
+            res = res.unionByName(p)
+        return st.result(res)
 
 
 # ------------------------------- HyperBall neighborhood function
@@ -1452,7 +1437,7 @@ def hyperball_df(spark, edges=None, rounds: int = _HB_ROUNDS):
     materialization anywhere (the exact tier in the SQL twin is
     verification machinery; at 10^12 pages it would be ~quadratic).
     Returns (host, radius, hll_nf) for radius 0..rounds.  Rounds are
-    lazy (hits_df finding); registers are referenced twice per round
+    lazy (hits_frame finding); registers are referenced twice per round
     (self + neighbor side), so round frames are persisted to keep
     executed work one round deep within the final action."""
     from pyspark.sql import functions as F
@@ -1460,54 +1445,53 @@ def hyperball_df(spark, edges=None, rounds: int = _HB_ROUNDS):
     from ..relational import HEX2INT
     from .sketches import _HLL_M, _HLL_WBITS, BITLEN, SHL1
 
-    own_edges = edges is None
-    if own_edges:
-        edges = link_graph_df(spark).persist()
-        edges.count()
-    e = edges.filter("src_host <> dst_host")
-    adj = (e.selectExpr("src_host AS u", "dst_host AS v")
-           .union(e.selectExpr("dst_host AS u", "src_host AS v"))
-           .distinct().persist())
-    hosts = adj.select(F.col("u").alias("host")).distinct()
-    reps = spark.range(_HB_REPS).select(
-        F.col("id").cast("string").alias("rep"))
-    d = SPARK
-    h = HEX2INT("md5(host || '#' || rep)", d)
-    hashed = (hosts.crossJoin(reps)
-              .selectExpr("host", "%s AS h" % h)
-              .selectExpr("host",
-                          "%s AS bucket" % IDIV("h", str(1 << _HLL_WBITS)),
-                          "h %% %d AS w" % (1 << _HLL_WBITS)))
-    regs = (hashed.selectExpr(
-        "host", "bucket",
-        "CASE WHEN w = 0 THEN 55 ELSE 55 - %s END AS m_reg"
-        % BITLEN("w", d))
-        .groupBy("host", "bucket")
-        .agg(F.max("m_reg").alias("m_reg")).persist())
+    with scope(spark) as st:
+        if edges is None:
+            edges = st.checkpoint(link_graph_df(spark))
+        e = edges.filter("src_host <> dst_host")
+        adj = st.cache(
+            e.selectExpr("src_host AS u", "dst_host AS v")
+            .union(e.selectExpr("dst_host AS u", "src_host AS v"))
+            .distinct())
+        hosts = adj.select(F.col("u").alias("host")).distinct()
+        reps = spark.range(_HB_REPS).select(
+            F.col("id").cast("string").alias("rep"))
+        d = SPARK
+        h = HEX2INT("md5(host || '#' || rep)", d)
+        hashed = (hosts.crossJoin(reps)
+                  .selectExpr("host", "%s AS h" % h)
+                  .selectExpr("host",
+                              "%s AS bucket" % IDIV("h", str(1 << _HLL_WBITS)),
+                              "h %% %d AS w" % (1 << _HLL_WBITS)))
+        regs = st.cache(hashed.selectExpr(
+            "host", "bucket",
+            "CASE WHEN w = 0 THEN 55 ELSE 55 - %s END AS m_reg"
+            % BITLEN("w", d))
+            .groupBy("host", "bucket")
+            .agg(F.max("m_reg").alias("m_reg")))
 
-    def estimate(rdf, radius):
-        sums = rdf.groupBy("host").agg(
-            (F.sum(F.expr(SHL1("56 - m_reg", d))).cast("long")
-             + (F.lit(_HLL_M) - F.count("*").cast("long"))
-             * F.lit(72057594037927936)).alias("int_sum"))
-        alpha = 0.7213 / (1.0 + 1.079 / _HLL_M)
-        est = (F.lit(alpha * _HLL_M * _HLL_M * 72057594037927936.0)
-               / F.col("int_sum").cast("double"))
-        return sums.select(
-            "host", F.lit(radius).cast("long").alias("radius"),
-            F.floor(est).cast("long").alias("hll_nf"))
+        def estimate(rdf, radius):
+            sums = rdf.groupBy("host").agg(
+                (F.sum(F.expr(SHL1("56 - m_reg", d))).cast("long")
+                 + (F.lit(_HLL_M) - F.count("*").cast("long"))
+                 * F.lit(72057594037927936)).alias("int_sum"))
+            alpha = 0.7213 / (1.0 + 1.079 / _HLL_M)
+            est = (F.lit(alpha * _HLL_M * _HLL_M * 72057594037927936.0)
+                   / F.col("int_sum").cast("double"))
+            return sums.select(
+                "host", F.lit(radius).cast("long").alias("radius"),
+                F.floor(est).cast("long").alias("hll_nf"))
 
-    out = estimate(regs, 0)
-    for r in range(1, rounds + 1):
-        neigh = (adj.join(regs.withColumnRenamed("host", "v"), "v")
-                 .select(F.col("u").alias("host"), "bucket", "m_reg"))
-        regs = (regs.select("host", "bucket", "m_reg").union(neigh)
+        out = estimate(regs, 0)
+        for r in range(1, rounds + 1):
+            neigh = (adj.join(regs.withColumnRenamed("host", "v"), "v")
+                     .select(F.col("u").alias("host"), "bucket", "m_reg"))
+            regs = st.cache(
+                regs.select("host", "bucket", "m_reg").union(neigh)
                 .groupBy("host", "bucket")
-                .agg(F.max("m_reg").alias("m_reg")).persist())
-        out = out.unionByName(estimate(regs, r))
-    if own_edges:
-        pass  # edges stays persisted for the caller's action
-    return out
+                .agg(F.max("m_reg").alias("m_reg")))
+            out = out.unionByName(estimate(regs, r))
+        return st.result(out)
 
 
 # --------------------------------------------- link-farm spam scoring
@@ -1666,34 +1650,33 @@ def crawl_depth_df(spark, edges=None, rounds: int = _DEPTH_CAP):
     and the driver re-analyzed the whole chain at the single final
     action — measured 12.3 s at sf0.1 on a 42-host graph, pure fixed
     cost.  Same fix as ``kcore_df``: each round's state is
-    ``localCheckpoint``-ed, resetting lineage to a one-node scan per
-    round (the discipline every iterative Spark algorithm with
-    multi-reference state needs)."""
+    checkpointed, resetting lineage to a one-node scan per round (the
+    discipline every iterative Spark algorithm with multi-reference
+    state needs)."""
     from pyspark.sql import functions as F
 
-    own_edges = edges is None
-    if own_edges:
-        edges = link_graph_df(spark).persist()
-        edges.count()
-    e = edges.select("src_host", "dst_host")
-    nodes = (e.select(F.col("src_host").alias("host"))
-             .union(e.select(F.col("dst_host").alias("host")))
-             .distinct())
-    frontier = spark.createDataFrame(
-        [(_DEPTH_SEED,)], "host string").localCheckpoint()
-    settled = frontier.select(
-        "host", F.lit(0).cast("int").alias("depth")).localCheckpoint()
-    for k in range(1, rounds + 1):
-        nxt = (e.join(frontier.withColumnRenamed("host", "src_host"),
-                      "src_host")
-               .select(F.col("dst_host").alias("host")).distinct()
-               .join(settled.select("host"), "host", "left_anti")
-               .localCheckpoint())
-        settled = settled.unionByName(
-            nxt.select("host", F.lit(k).cast("int").alias("depth"))
-        ).localCheckpoint()
-        frontier = nxt
-    return (nodes.join(settled, "host", "left")
+    with scope(spark) as st:
+        if edges is None:
+            edges = st.checkpoint(link_graph_df(spark))
+        e = edges.select("src_host", "dst_host")
+        nodes = (e.select(F.col("src_host").alias("host"))
+                 .union(e.select(F.col("dst_host").alias("host")))
+                 .distinct())
+        frontier = st.checkpoint(spark.createDataFrame(
+            [(_DEPTH_SEED,)], "host string"))
+        settled = st.checkpoint(frontier.select(
+            "host", F.lit(0).cast("int").alias("depth")))
+        for k in range(1, rounds + 1):
+            nxt = st.checkpoint(
+                e.join(frontier.withColumnRenamed("host", "src_host"),
+                       "src_host")
+                .select(F.col("dst_host").alias("host")).distinct()
+                .join(settled.select("host"), "host", "left_anti"))
+            settled = st.checkpoint(settled.unionByName(
+                nxt.select("host", F.lit(k).cast("int").alias("depth"))))
+            frontier = nxt
+        return st.result(
+            nodes.join(settled, "host", "left")
             .select("host", F.coalesce(F.col("depth"), F.lit(-1))
                     .cast("int").alias("depth")))
 
@@ -1794,7 +1777,7 @@ FROM o{k}
 """.format(ctes=",\n".join(_opic_parts(d)), k=_OPIC_ROUNDS)
 
 
-def opic_df(spark, edges=None, rounds: int = _OPIC_ROUNDS):
+def opic_df(spark, rounds: int = _OPIC_ROUNDS):
     """The PRODUCTION iterative OPIC over the link graph — per-round
     persisted DataFrames, row-identical to ``opic_priority``
     (test-pinned).  Same loop discipline as ``pagerank_df``: rounds
@@ -1809,44 +1792,47 @@ def opic_df(spark, edges=None, rounds: int = _OPIC_ROUNDS):
     def idiv(a, b):
         return F.expr(IDIV(a, b))
 
-    if edges is None:
-        edges = link_graph_df(spark).persist()
-        edges.count()
-    nodes = (edges.select(F.col("src_host").alias("host"))
-             .union(edges.select(F.col("dst_host").alias("host")))
-             .distinct().persist())
-    n = nodes.count()
-    outw = (edges.groupBy("src_host")
-            .agg(F.sum("n_links").cast("long").alias("w")).persist())
-    state = nodes.select(
-        "host",
-        F.lit((_PR_SCALE - _PR_SCALE % n) // n).cast("long").alias("cash"),
-        F.lit(0).cast("long").alias("hist")).persist()
-    for _ in range(rounds):
-        contrib = (
-            edges.join(state, edges.src_host == state.host)
-            .join(outw, "src_host")
-            .withColumn("part", idiv("cash * n_links", "w"))
-            .groupBy("dst_host").agg(F.sum("part").cast("long").alias("c"))
-        )
-        dang = (state.join(outw, state.host == outw.src_host, "left_anti")
-                .agg(F.coalesce(F.sum("cash"), F.lit(0))
-                     .cast("long").alias("dm")))
-        state = (
-            state.join(contrib, state.host == contrib.dst_host, "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "host",
-                (F.coalesce(F.col("c"), F.lit(0))
-                 + idiv("dm", "%d" % n)).cast("long").alias("cash"),
-                (F.col("hist") + F.col("cash")).cast("long").alias("hist"))
-            .persist())
-    w = __import__("pyspark.sql.window", fromlist=["Window"]).Window
-    return state.select(
-        "host",
-        F.col("hist").alias("history_ppb"),
-        F.col("cash").alias("cash_ppb"),
-        (F.col("hist") + F.col("cash")).alias("importance_ppb"),
-        F.row_number().over(
-            w.orderBy(F.col("cash").desc(), "host"))
-        .cast("long").alias("fetch_order"))
+    with scope(spark) as st:
+        edges = st.checkpoint(link_graph_df(spark))
+        nodes = st.cache(
+            edges.select(F.col("src_host").alias("host"))
+            .union(edges.select(F.col("dst_host").alias("host")))
+            .distinct())
+        n = nodes.count()
+        outw = st.cache(edges.groupBy("src_host")
+                          .agg(F.sum("n_links").cast("long").alias("w")))
+        state = st.cache(nodes.select(
+            "host",
+            F.lit((_PR_SCALE - _PR_SCALE % n) // n).cast("long")
+            .alias("cash"),
+            F.lit(0).cast("long").alias("hist")))
+        for _ in range(rounds):
+            contrib = (
+                edges.join(state, edges.src_host == state.host)
+                .join(outw, "src_host")
+                .withColumn("part", idiv("cash * n_links", "w"))
+                .groupBy("dst_host")
+                .agg(F.sum("part").cast("long").alias("c"))
+            )
+            dang = (state.join(outw, state.host == outw.src_host,
+                               "left_anti")
+                    .agg(F.coalesce(F.sum("cash"), F.lit(0))
+                         .cast("long").alias("dm")))
+            state = st.cache(
+                state.join(contrib, state.host == contrib.dst_host, "left")
+                .crossJoin(F.broadcast(dang))
+                .select(
+                    "host",
+                    (F.coalesce(F.col("c"), F.lit(0))
+                     + idiv("dm", "%d" % n)).cast("long").alias("cash"),
+                    (F.col("hist") + F.col("cash")).cast("long")
+                    .alias("hist")))
+        w = __import__("pyspark.sql.window", fromlist=["Window"]).Window
+        return st.result(state.select(
+            "host",
+            F.col("hist").alias("history_ppb"),
+            F.col("cash").alias("cash_ppb"),
+            (F.col("hist") + F.col("cash")).alias("importance_ppb"),
+            F.row_number().over(
+                w.orderBy(F.col("cash").desc(), "host"))
+            .cast("long").alias("fetch_order")))

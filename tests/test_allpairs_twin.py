@@ -37,10 +37,12 @@ def test_allpairs_prefix_df_plan_bounded(spark):
     shape: no CartesianProduct, and the shingle pipeline scanned only
     via the checkpointed leaves (no re-derivation of the documents
     scan)."""
-    from pdf_parser_spark.ops.dedup import allpairs_prefix_df
+    from pdf_parser_spark.ops.dedup import allpairs_prefix_frame
+    from pdf_parser_spark.stages import scope
 
     _register(spark)
-    df = allpairs_prefix_df(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with scope(spark) as st:
+        plan = allpairs_prefix_frame(st, spark)._jdf.queryExecution() \
+            .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "FileScan parquet" not in plan  # only checkpointed leaves

@@ -38,10 +38,12 @@ def test_dedup_incremental_df_plan_bounded(spark):
     """The twin's final plan must screen over the checkpointed leaves
     only: no CartesianProduct, no re-derivation of the documents
     scan."""
-    from pdf_parser_spark.ops.dedup import dedup_incremental_df
+    from pdf_parser_spark.ops.dedup import dedup_incremental_frame
+    from pdf_parser_spark.stages import scope
 
     _register(spark)
-    df = dedup_incremental_df(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with scope(spark) as st:
+        plan = dedup_incremental_frame(st, spark)._jdf.queryExecution() \
+            .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "FileScan parquet" not in plan  # only checkpointed leaves

@@ -35,18 +35,21 @@ def test_bm25_maxscore_df_plan_bounded(spark):
     """The twin's final plan must score over the checkpointed weights
     leaf only: no CartesianProduct, no re-derivation of the documents
     scan."""
-    from pdf_parser_spark.ops.retrieval import bm25_maxscore_df
+    from pdf_parser_spark.ops.retrieval import bm25_maxscore_frame
+    from pdf_parser_spark.stages import scope
 
     _register(spark)
-    df = bm25_maxscore_df(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with scope(spark) as st:
+        plan = bm25_maxscore_frame(st, spark)._jdf.queryExecution() \
+            .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "FileScan parquet" not in plan  # only checkpointed leaves
 
 
 def test_bm25_maxscore_df_leaves_no_bare_wgts_view(spark):
-    """The checkpointed weights are registered under a prefixed view;
-    no session-global ``wgts`` is left for a later query to bind."""
+    """The checkpointed weights are registered under a prefixed view
+    that is dropped when the twin returns; no ``wgts`` or ``ms_wgts``
+    is left for a later query to bind."""
     from pdf_parser_spark.ops.retrieval import bm25_maxscore_df
 
     _register(spark)
@@ -54,4 +57,4 @@ def test_bm25_maxscore_df_leaves_no_bare_wgts_view(spark):
     bm25_maxscore_df(spark).collect()
     views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
     assert "wgts" not in views
-    assert "ms_wgts" in views
+    assert "ms_wgts" not in views

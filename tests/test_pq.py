@@ -7,7 +7,10 @@ vector bytes)."""
 
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.ops.similarity import pq_fit_df, pq_topk_df
+from pdf_parser_spark.ops.similarity import (
+    pq_fit_df, pq_topk_df, pq_topk_frame,
+)
+from pdf_parser_spark.stages import scope
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -72,7 +75,9 @@ def test_pq_topk_plan_broadcasts_small_sides(spark):
     shipped); the only wide exchanges hash-partition on the agg /
     window keys.  No CartesianProduct anywhere."""
     emb = _emb(spark)
-    plan = pq_topk_df(emb)._jdf.queryExecution().executedPlan().toString()
+    with scope(spark) as st:
+        plan = pq_topk_frame(st, emb)._jdf.queryExecution() \
+            .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 

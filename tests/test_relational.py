@@ -99,14 +99,26 @@ def _norm(cols, rows):
     return sorted(out), [cols[i] for i in order]
 
 
+def _retained(spark):
+    """(persistent RDD count, temp views other than the sf tables)."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    return (spark.sparkContext._jsc.getPersistentRDDs().size(),
+            views - set(TABLES))
+
+
 @pytest.mark.parametrize("name", _SUBSET)
 def test_oracle_parity(spark, duck, entry_mod, name):
+    rdds0, views0 = _retained(spark)
     sdf = entry_mod.all_queries()[name](spark, SF_DIR)
     s_rows, s_cols = _norm(sdf.columns, [tuple(r) for r in sdf.collect()])
+    rdds1, views1 = _retained(spark)
     dres = duck.sql(entry_mod.all_oracles()[name])
     d_rows, d_cols = _norm(dres.columns, dres.fetchall())
     assert s_cols == d_cols
     assert s_rows == d_rows
+    # a query leaves nothing behind in the session but its own output
+    assert views1 - views0 == set()
+    assert rdds1 - rdds0 <= 1
 
 
 def test_relational_generic_matches_engine(spark, entry_mod):

@@ -35,9 +35,11 @@ def test_simhash_hamming_df_plan_bounded(spark):
     """The twin's final plan must stay the banded equi-join shape: no
     CartesianProduct beyond the deliberate 4-row band explode, and the
     fingerprint pipeline scanned only via the checkpointed leaf."""
-    from pdf_parser_spark.ops.dedup import simhash_hamming_df
+    from pdf_parser_spark.ops.dedup import simhash_hamming_frame
+    from pdf_parser_spark.stages import scope
 
     _register(spark)
-    df = simhash_hamming_df(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with scope(spark) as st:
+        plan = simhash_hamming_frame(st, spark)._jdf.queryExecution() \
+            .executedPlan().toString()
     assert "FileScan parquet" not in plan  # only checkpointed leaves

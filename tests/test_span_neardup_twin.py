@@ -33,10 +33,12 @@ def test_span_neardup_df_plan_bounded(spark):
     """The twin's final plan must be the banded equi-join shape: no
     CartesianProduct, and the span pipeline scanned only via the
     persisted views (no re-derivation of the documents scan)."""
-    from pdf_parser_spark.ops.dedup import span_neardup_df
+    from pdf_parser_spark.ops.dedup import span_neardup_frame
+    from pdf_parser_spark.stages import scope
 
     _register(spark)
-    df = span_neardup_df(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with scope(spark) as st:
+        plan = span_neardup_frame(st, spark)._jdf.queryExecution() \
+            .executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "FileScan parquet" not in plan  # only InMemoryTableScans
