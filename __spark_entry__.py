@@ -33,9 +33,7 @@ if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
 from query_registry import QUERY_SQL  # noqa: E402
-from pdf_parser_spark.ops.similarity import (  # noqa: E402
-    pq_fit_df, pq_topk_df,
-)
+from pdf_parser_spark.ops.similarity import pq_topk_df  # noqa: E402
 from pdf_parser_spark.warc import warc_oracle_sql  # noqa: E402
 
 _TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -365,13 +363,13 @@ _SIDES: dict[str, tuple[Side, str | None]] = {
     # crawl_frontier 694 parquet scans / 1444 Exchanges in one plan,
     # bpe_train_merges 284 / 568, bm25_maxscore 114 scans,
     # dedup_incremental 72, dedup_allpairs_prefix 40, ann_pq_adc 28 / 80,
-    # simhash_hamming 16, ann_pq_codes 12 / 36, span_neardup 10 scans in
-    # a 260-operator plan, kcore_peel 55 s vs 2.0 s for the twin,
-    # trustrank_seeds 3191 Exchanges vs 713 for plain PageRank.
+    # simhash_hamming 16, span_neardup 10 scans in a 260-operator plan,
+    # kcore_peel 55 s vs 2.0 s for the twin, trustrank_seeds 3191
+    # Exchanges vs 713 for plain PageRank.  A twin stays only while it
+    # beats its SQL in timed pairs (tools/twin_ab.py, BENCH/twins.json).
     "trustrank_seeds": (_twin("ops.webgraph:trustrank_df"), None),
     "hits_scores": (_twin("ops.webgraph:hits_production_df"), None),
     "host_pagerank": (_twin("ops.webgraph:pagerank_production_df"), None),
-    "label_propagation": (_twin("ops.webgraph:lpa_df"), None),
     "kcore_peel": (_twin("ops.webgraph:kcore_df"), None),
     "opic_priority": (_twin("ops.webgraph:opic_df"), None),
     "crawl_frontier": (_twin("ops.crawl:crawl_frontier_production_df"),
@@ -383,8 +381,6 @@ _SIDES: dict[str, tuple[Side, str | None]] = {
     "simhash_hamming": (_twin("ops.dedup:simhash_hamming_df"), None),
     "dedup_incremental": (_twin("ops.dedup:dedup_incremental_df"), None),
     "bm25_maxscore": (_twin("ops.retrieval:bm25_maxscore_df"), None),
-    "ann_pq_codes": (
-        _twin(lambda spark: pq_fit_df(spark.table("embeddings"))[0]), None),
     "ann_pq_adc": (
         _twin(lambda spark: pq_topk_df(spark.table("embeddings"))), None),
 }

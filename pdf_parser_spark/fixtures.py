@@ -526,36 +526,3 @@ def mega_statement_text(target_mb: int = 512, seed: int = 7) -> str:
     head = "chase.com statement period 01/01/2024 - 12/31/2024\n"
     reps = max(1, (target - len(head)) // len(block) + 1)
     return (head + block * reps)[:target]
-
-
-def wf_mega_statement_text(target_mb: int = 512, seed: int = 11) -> str:
-    """WF-shaped sibling of ``mega_statement_text`` (round-4 verdict
-    ask #4): the stateful-parser mega-document for the wf chunked-path
-    bound in BENCH/MEGADOC.md.  Same 48k-line tiled-pool construction;
-    lines exercise the wf block gather (continuation lines), the noise
-    gate, and the date-fragment lexer."""
-    import random
-
-    rng = random.Random(seed)
-    target = target_mb * 1024 * 1024
-    merchants = ("Costco Whse #0482", "Morgan Stanley Bank",
-                 "Acrux Global Logistics LLC", "Lafeber Company",
-                 "Rivera Paula", "Nguyen Minh", "Overseas Supplier Ltd")
-    pool = []
-    for i in range(48000):
-        if i % 97 == 13:
-            ln = "Page %d of 99999" % (i // 60 + 1)
-        elif i % 11 == 5:
-            ln = "continuation words describing the wire beneficiary"
-        else:
-            ln = "%d/%d Purchase authorized on %02d/%02d %s %d.%02d %s.%02d" % (
-                rng.randint(1, 12), rng.randint(1, 28),
-                rng.randint(1, 12), rng.randint(1, 28),
-                rng.choice(merchants), rng.randint(10, 9999),
-                rng.randint(0, 99),
-                format(9000 + rng.randint(0, 999), ","), rng.randint(0, 99))
-        pool.append(ln)
-    block = "\n".join(pool) + "\n"
-    head = "Wells Fargo Navigate Business Checking 2024 wellsfargo.com\n"
-    reps = max(1, (target - len(head)) // len(block) + 1)
-    return (head + block * reps)[:target]

@@ -21,7 +21,7 @@ from __future__ import annotations
 from ..relational import (
     DUCK, SPARK, HEX2INT, LEN, LINE_PARTITIONS, ORD_ARRAY, SLICE, JOINA,
 )
-from ..stages import materialized, scope
+from ..stages import materialized
 
 QUERIES = {}
 
@@ -314,8 +314,8 @@ verified AS (
 # propagation rounds for the unrolled connected-components SQL: the
 # near-dup graph's components are duplicate CLUSTERS (diameter is
 # small by construction — a chain of near-dups longer than this means
-# the tier's threshold is mis-set); a test pins that one extra round
-# is a fixpoint on the fixture corpus, so 4 is proven sufficient there
+# the tier's threshold is mis-set); a test pins the labels against a
+# union-find over the verified pairs, so 4 is proven sufficient there
 _CC_ROUNDS = 4
 
 
@@ -330,13 +330,10 @@ def q_components(d: str) -> str:
     Shape: min-label propagation, ``_CC_ROUNDS`` unrolled rounds over
     the (symmetrized + self-loop) edge list — each round is one
     equi-join + min-aggregate, the alternating-star/label-propagation
-    family every distributed CC algorithm at 10^12 scale uses.  This
-    unrolled SQL is the cross-engine oracle twin of the production
-    iterative form ``neardup_components_df`` (per-round persisted
-    DataFrames — Catalyst inlines CTE references, so the SQL form
-    re-derives the pair pipeline once per round and exists for
-    verification, not for scale); a test pins row-identical output of
-    the two forms plus the fixpoint."""
+    family every distributed CC algorithm at 10^12 scale uses.  Both
+    engines run this SQL; a test pins that its labels are the fixpoint
+    of a Python union-find over the verified pairs, so ``_CC_ROUNDS``
+    suffices for this corpus's cluster diameters."""
     return """
 WITH {ctes}
 SELECT doc_id, label AS cluster_keeper,
@@ -895,54 +892,6 @@ def dedup_incremental_frame(st, spark):
 
 
 dedup_incremental_df = materialized(dedup_incremental_frame)
-
-
-# ------------------------------------------------ production CC form
-def neardup_components_df(pairs, iters: int = _CC_ROUNDS):
-    """Connected components over near-dup ``pairs(left_id, right_id)``
-    — the PRODUCTION iterative form of ``dedup_components``: min-label
-    propagation with each round's labels persisted and materialized
-    (on a cluster: checkpointed / written per round), because Catalyst
-    inlines plan references and an unrolled lineage re-derives the
-    pair pipeline once per round (the same reason ivf_fit_df exists
-    next to the ann_ivf_fit SQL).  Per round: ONE equi-join on src +
-    ONE min-aggregate shuffle on dst — the label-propagation shape
-    distributed CC uses at any scale.  Returns (doc_id,
-    cluster_keeper, is_duplicate); the SQL twin is the cross-engine
-    oracle and a test pins row-identical output + the fixpoint."""
-    from pyspark.sql import functions as F
-
-    e1 = pairs.select(F.col("left_id").alias("src"),
-                      F.col("right_id").alias("dst"))
-    e2 = pairs.select(F.col("right_id").alias("src"),
-                      F.col("left_id").alias("dst"))
-    vs = (pairs.select(F.col("left_id").alias("v"))
-          .union(pairs.select(F.col("right_id").alias("v"))).distinct())
-    with scope(pairs.sparkSession) as st:
-        edges = st.cache(e1.unionAll(e2).unionAll(
-            vs.select(F.col("v").alias("src"), F.col("v").alias("dst"))))
-        labels = st.checkpoint(
-            edges.select("src").distinct()
-            .select(F.col("src").alias("doc_id"),
-                    F.col("src").alias("label")))
-        for _ in range(iters):
-            # checkpointed: bound the lineage per round
-            labels = st.checkpoint(
-                edges.join(labels.withColumnRenamed("doc_id", "src"),
-                           "src")
-                .groupBy("dst").agg(F.min("label").alias("label"))
-                .withColumnRenamed("dst", "doc_id"))
-        return st.result(labels.select(
-            "doc_id", F.col("label").alias("cluster_keeper"),
-            F.when(F.col("doc_id") > F.col("label"), 1).otherwise(0)
-            .cast("int").alias("is_duplicate")))
-
-
-def verified_pairs_df(spark):
-    """The τ ≥ 0.5 near-dup pairs as a DataFrame (input for
-    neardup_components_df) — same pair set as dedup_lsh_verified."""
-    return spark.sql("WITH %s SELECT left_id, right_id FROM verified"
-                     % _verified_pairs_ctes("spark"))
 
 
 # ------------------------------------------- exact substring dedup

@@ -23,12 +23,10 @@ Queries:
   10^12 rows the cross join is infeasible and this cell-pruned join
   (plus broadcast of the tiny query set) is the shape that survives.
 
-``ivf_fit_df`` is the PRODUCTION form of the same fit: an iterative
-DataFrame loop with the per-round inputs persisted, because Catalyst
-inlines (re-evaluates) every CTE reference — fine at fixture scale,
-catastrophic at 10^12 vectors.  The unrolled SQL stays as the
-cross-engine oracle; a test pins cell-for-cell agreement between the
-two forms.
+``_ivf_fit_impl`` is the iterative form of the same fit, with the
+Lloyd sample cached across rounds, because Catalyst inlines
+(re-evaluates) every CTE reference.  ``amortized_ivf_demo`` fits with
+it; a test pins cell-for-cell agreement with the ``ann_ivf_fit`` SQL.
 """
 
 from __future__ import annotations
@@ -390,8 +388,8 @@ def q_ivf_amortized(d: str) -> str:
     """IVF in its WINNING regime (round-4 ask #7): one sample-trained
     fit serves FOUR query batches over the 50k corpus (break-even is
     2.6 batches — BENCH/IVF.md).  This SQL is the cross-engine oracle
-    twin of ``amortized_ivf_demo`` (the production path: ivf_index_df
-    machinery for the fit, centroids + cell-bucketed vectors persisted
+    twin of ``amortized_ivf_demo`` (the production path: _ivf_fit_impl
+    for the fit, centroids + cell-bucketed vectors persisted
     as tables, batches served from the persisted index); a test pins
     row-for-row agreement between the two forms.  BENCH_r04 measures
     this against ``ann_brute_big`` — the brute twin at the same scale
@@ -622,75 +620,6 @@ FROM ordered o LEFT JOIN prior p ON p.vec_id = o.vec_id
 
 
 # ------------------------------------------------------- production fit
-def ivf_index_df(embeddings: DataFrame, k: int = 8,
-                 iters: int = 2) -> tuple:
-    """Fit AND return the index: ``(assignment, centroids)`` — the
-    centroid table is what query-time cell ranking (nprobe) needs.
-    Same math as ``ivf_fit_df`` (which wraps this)."""
-    return _ivf_fit_impl(embeddings, k, iters)
-
-
-def ivf_fit_df(embeddings: DataFrame, k: int = 8,
-               iters: int = 2) -> DataFrame:
-    """Assignment only (the ``ann_ivf_fit``-parity form)."""
-    return _ivf_fit_impl(embeddings, k, iters)[0]
-
-
-def ivf_topk_df(embeddings: DataFrame, k: int = 8, iters: int = 2,
-                nprobe: int = 1, topn: int = 5,
-                n_queries: int = 8) -> DataFrame:
-    """Production IVF query with an ``nprobe`` knob: each query probes
-    its ``nprobe`` nearest cells (by centroid distance) instead of only
-    its own — the standard recall/cost dial.  nprobe=k degenerates to
-    brute force; nprobe=1 matches the ``ann_ivf_topk`` SQL.
-
-    Scale shape: centroids are k rows (broadcast); the candidate join
-    is an equi-join on ``cell`` — candidates touched ≈ n·nprobe/k, the
-    factor tests/test_similarity_fit.py::test_ivf_candidate_reduction
-    asserts on real data."""
-    assignment, centroids = ivf_index_df(embeddings, k, iters)
-    base = embeddings.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
-               " * 1000000.0) AS BIGINT))").alias("qv"))
-    sqdist = F.expr(_SQDIST_EXPR)
-    queries = base.filter(F.col("vec_id") < n_queries)
-    probed = (
-        queries.withColumn("_one", F.lit(1))
-        .join(F.broadcast(centroids.withColumn("_one", F.lit(1))), "_one")
-        .select("vec_id", "qv", "cell", sqdist.alias("sq_dist"))
-        .withColumn("cell_rank", F.row_number().over(
-            Window.partitionBy("vec_id").orderBy("sq_dist", "cell")))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("qv").alias("q_qv"), "cell")
-    )
-    cands = base.join(assignment, "vec_id").select(
-        F.col("vec_id").alias("cand_id"), F.col("qv").alias("c_qv"),
-        "cell")
-    cosine = F.expr(
-        "CAST(aggregate(zip_with(q_qv, c_qv, (x, y) -> x * y),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)"
-        " / (sqrt(CAST(aggregate(zip_with(q_qv, q_qv, (x, y) -> x * y),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE))"
-        " * sqrt(CAST(aggregate(zip_with(c_qv, c_qv, (x, y) -> x * y),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)))")
-    scored = (
-        probed.join(cands, "cell")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", cosine.alias("cosine"))
-        # a vector can sit in two probed cells of the same query after
-        # nprobe > 1 only if it was assigned once — cells partition the
-        # space, so no dedup needed
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
-    return (scored.withColumn("rank",
-                              F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= topn)
-            .select("query_id", F.col("cand_id").alias("neighbor_id"),
-                    "rank", "cosine"))
-
-
 def _ivf_fit_impl(embeddings: DataFrame, k: int = 8,
                   iters: int = 2, *, quantized: bool = False,
                   train_filter: str = None,
@@ -837,7 +766,7 @@ def big_base_df(spark, reps: int = _AMORT_REPS):
 
 def amortized_ivf_demo(spark, index_dir: str = None) -> DataFrame:
     """The production amortized-IVF path (round-4 ask #7): fit ONCE via
-    ivf_index_df's machinery (sample-trained on every 10th vector,
+    _ivf_fit_impl (sample-trained on every 10th vector,
     _AMORT_TRAIN), persist centroids AND the cell-bucketed vector table,
     then serve FOUR query batches from the persisted index — past
     BENCH/IVF.md's 2.6-batch break-even, where IVF beats the brute twin
@@ -848,13 +777,18 @@ def amortized_ivf_demo(spark, index_dir: str = None) -> DataFrame:
     pass (rounds run on the persisted 5k sample); the index write needs
     no self-join (carry_qv); all four batches are served by ONE plan —
     union the tagged query sets, one cell equi-join, one window — so
-    serve cost is one candidate pass regardless of batch count."""
+    serve cost is one candidate pass regardless of batch count.
+
+    The default root is a fresh ``mkdtemp`` per call: the returned
+    frame reads the index lazily, so an overwrite of a shared root by
+    a later call would delete the files it lists.  It is recorded as
+    ``amortized_ivf_demo.last_root``."""
     import os
     import tempfile
 
     reps, k = _AMORT_REPS, _AMORT_K
-    root = index_dir or os.path.join(tempfile.gettempdir(),
-                                     "pdf_parser_spark_ivf_index")
+    root = index_dir or tempfile.mkdtemp(prefix="pdf_parser_spark_ivf_")
+    amortized_ivf_demo.last_root = root
     # cache the expanded corpus for the fit+index-build window: the
     # in-plan ×100 expansion costs ~3s per pass at 50k and would
     # otherwise be recomputed by the seed collect, every Lloyd round's
@@ -1361,23 +1295,16 @@ def _pq_subs(embeddings: DataFrame, m: int, sub: int) -> DataFrame:
         F.expr("slice(qv, m * %d + 1, %d)" % (sub, sub)).alias("sv"))
 
 
-def pq_fit_df(embeddings: DataFrame, m: int = _PQ_M,
-              sub: int = _PQ_SUBDIM, k: int = _PQ_K,
-              iters: int = _PQ_ITERS) -> tuple:
-    """``pq_fit_frame`` in its own scope: materialized codes and the
-    codebook."""
-    with scope(embeddings.sparkSession) as st:
-        codes, codebook = pq_fit_frame(st, embeddings, m, sub, k, iters)
-        return st.result(codes), codebook
-
-
 def pq_fit_frame(st, embeddings: DataFrame, m: int = _PQ_M,
                  sub: int = _PQ_SUBDIM, k: int = _PQ_K,
                  iters: int = _PQ_ITERS) -> tuple:
-    """PRODUCTION PQ training + encoding — the iterative, persisted
-    form of the ``ann_pq_codes`` oracle SQL (code-for-code identical,
+    """PQ training + encoding for ``pq_topk_frame`` — the iterative,
+    cached form of the ``ann_pq_codes`` SQL (code-for-code identical,
     test-pinned).  Returns ``(codes, codebook)``: codes is
-    (vec_id, m, code), codebook is (m, code, cv).
+    (vec_id, m, code), codebook is (m, code, cv).  The ``ann_pq_codes``
+    row itself runs its SQL on Spark: alone, this fit measured no
+    faster (BENCH/twins.json); inside the ADC search it wins at 10×
+    the sf0.1 vector count.
 
     Scale shape per Lloyd round: ONE broadcast hash join of the n·M
     sub-vector rows against the M·K = 128-row codebook (equi-key m),

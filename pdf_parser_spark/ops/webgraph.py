@@ -1020,59 +1020,17 @@ lbl{r} AS (SELECT host, label FROM rk{r} WHERE rn = 1)"""
 def q_label_propagation(d: str) -> str:
     """Community detection by weighted label propagation (see
     _lpa_parts for the recurrence and per-round shape).  Output: every
-    host with its final community label and the community's size."""
+    host with its final community label and the community's size.
+
+    Spark runs this unrolled form too: an iterative form with each
+    round's labels cached lost every timed pair to it at sf0.1
+    (BENCH/twins.json)."""
     return """
 WITH {ctes}
 SELECT host, label AS community,
   CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS community_size
 FROM lbl{k}
 """.format(ctes=",\n".join(_lpa_parts(d)), k=_LPA_ROUNDS)
-
-
-def lpa_df(spark, rounds: int = _LPA_ROUNDS):
-    """PRODUCTION iterative label propagation — the per-round-persisted
-    twin of ``label_propagation`` (same rationale as ``pagerank_df``:
-    Catalyst inlines CTE references, so the unrolled SQL re-derives
-    the anchor-extraction pipeline once per round and exists for
-    cross-engine verification, not for scale).  Row-identical output
-    (test-pinned).
-
-    Per round: one v-side equi-join against the persisted previous
-    labels + one (host, label) hash-agg + one per-host window cut; the
-    lineage stays one round deep."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    with scope(spark) as st:
-        edges = st.checkpoint(link_graph_df(spark))
-        e = edges.filter("src_host <> dst_host")
-        und = (e.selectExpr("src_host AS u", "dst_host AS v", "n_links")
-               .union(e.selectExpr("dst_host AS u", "src_host AS v",
-                                   "n_links")))
-        adj = st.cache(und.groupBy("u", "v")
-                         .agg(F.sum("n_links").cast("long").alias("w")))
-        labels = st.cache(adj.select(F.col("u").alias("host")).distinct()
-                            .withColumn("label", F.col("host")))
-        cut = Window.partitionBy("host").orderBy(
-            F.col("s").desc(), F.col("label").asc())
-        # LAZY rounds (same measured finding as hits_frame/pagerank_frame:
-        # each eager per-round .count() is a full job of scheduler
-        # overhead over host-granularity state); labels is referenced
-        # once per round so the plan grows linearly, and the per-round
-        # persists still bound executed work to one round inside the
-        # single final action
-        for _ in range(rounds):
-            neigh = labels.select(F.col("host").alias("v"), "label")
-            scores = (adj.join(neigh, "v")
-                      .groupBy(F.col("u").alias("host"), "label")
-                      .agg(F.sum("w").cast("long").alias("s")))
-            labels = st.cache(
-                scores.withColumn("rn", F.row_number().over(cut))
-                .filter("rn = 1").select("host", "label"))
-        return st.result(labels.select(
-            "host", F.col("label").alias("community"),
-            F.count("*").over(Window.partitionBy("label"))
-            .cast("long").alias("community_size")))
 
 
 # ------------------------------------------------------------- SALSA
@@ -1246,7 +1204,7 @@ WITH {ctes}
 
 def kcore_df(spark, k: int = _KCORE_K, edges=None):
     """PRODUCTION iterative k-core — the fixpoint-looped twin of
-    ``kcore_peel`` (same rationale as ``pagerank_df``/``lpa_df``: the
+    ``kcore_peel`` (same rationale as ``pagerank_df``: the
     unrolled SQL re-derives the edge pipeline per round and exists for
     cross-engine verification).  Loops until a round peels nobody —
     no fixed round count.

@@ -13,16 +13,14 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 from pdf_parser_spark import relational, relational_banks  # noqa: E402
 
-_MODULES = [relational, relational_banks]
-try:
-    from pdf_parser_spark.ops import (  # noqa: E402
-        bpe, c4clean, crawl, decontam, dedup, packing, retrieval,
-        similarity, sketches, textstats, webgraph, weburl,
-    )
-    _MODULES += [bpe, c4clean, crawl, decontam, dedup, packing, retrieval,
-                 similarity, sketches, textstats, webgraph, weburl]
-except ImportError:
-    pass
+from pdf_parser_spark.ops import (  # noqa: E402
+    bpe, c4clean, crawl, decontam, dedup, packing, retrieval,
+    similarity, sketches, textstats, webgraph, weburl,
+)
+
+_MODULES = [relational, relational_banks, bpe, c4clean, crawl, decontam,
+            dedup, packing, retrieval, similarity, sketches, textstats,
+            webgraph, weburl]
 
 QUERY_SQL = {}
 for _mod in _MODULES:

@@ -8,7 +8,7 @@ vector bytes)."""
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.ops.similarity import (
-    pq_fit_df, pq_topk_df, pq_topk_frame,
+    pq_fit_frame, pq_topk_df, pq_topk_frame,
 )
 from pdf_parser_spark.stages import scope
 
@@ -21,11 +21,13 @@ def _emb(spark):
     return emb
 
 
-def test_pq_fit_df_matches_sql_codes(spark):
+def test_pq_fit_frame_matches_sql_codes(spark):
     import query_registry
 
     emb = _emb(spark)
-    got = {(r.vec_id, r.m): r.code for r in pq_fit_df(emb)[0].collect()}
+    with scope(spark) as st:
+        got = {(r.vec_id, r.m): r.code
+               for r in pq_fit_frame(st, emb)[0].collect()}
     want = {(r.vec_id, r.m): r.code
             for r in spark.sql(
                 query_registry.QUERY_SQL["ann_pq_codes"]["spark"])
@@ -86,9 +88,10 @@ def test_pq_codes_are_byte_small(spark):
     """The representation claim: every code fits a single byte
     (code < 256 — here K=16), M=8 codes per vector."""
     emb = _emb(spark)
-    codes, codebook = pq_fit_df(emb)
-    stats = codes.agg(F.max("code").alias("mx"),
-                      F.min("code").alias("mn"),
-                      F.countDistinct("m").alias("ms")).collect()[0]
-    assert 0 <= stats.mn and stats.mx < 16 and stats.ms == 8
-    assert codebook.count() <= 8 * 16
+    with scope(spark) as st:
+        codes, codebook = pq_fit_frame(st, emb)
+        stats = codes.agg(F.max("code").alias("mx"),
+                          F.min("code").alias("mn"),
+                          F.countDistinct("m").alias("ms")).collect()[0]
+        assert 0 <= stats.mn and stats.mx < 16 and stats.ms == 8
+        assert codebook.count() <= 8 * 16

@@ -42,12 +42,14 @@ def test_registry_fingerprints():
     assert _h(sorted([k, v.replace(repo, "<repo>")]
                      for k, v in all_o.items())) == (
         "d7e84c21eba8c4cca3550daacfb3087a20da48f9159c3210a6acbeb7ed6fd9ae")
-    # 144 rows run QUERY_SQL[name]["spark"]; the other 37 are callables
+    # 146 rows run QUERY_SQL[name]["spark"]; the other 35 are callables.
+    # label_propagation and ann_pq_codes run their SQL: their twins lost
+    # every timed pair to it at sf0.1 (BENCH/twins.json)
     plain = sorted(n for n in all_q if n not in m._SIDES)
-    assert len(plain) == 144 and set(plain) <= set(m.QUERY_SQL)
+    assert len(plain) == 146 and set(plain) <= set(m.QUERY_SQL)
     assert _h(plain) == (
-        "2aac83a5c6a1b70982a35694728ca9af2f50fe57e986e43690fcfd08f21a94d8")
-    assert len(m._SIDES) == 37
+        "dd0caaa4afa3b64ae0f8f0a90d5a0a18491ceb4d322a2017fc07711234bf7b11")
+    assert len(m._SIDES) == 35
     assert all(all_q[n] is side for n, (side, _) in m._SIDES.items())
 
 

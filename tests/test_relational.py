@@ -210,34 +210,36 @@ def test_driver_contract_shape(entry_mod):
     assert final_out < set(entry_mod.all_queries())
 
 
-def test_neardup_components_df_matches_sql_and_converges(spark,
-                                                         entry_mod):
-    """The production iterative CC form (per-round persisted
-    DataFrames) must be row-identical to the unrolled-SQL oracle twin,
-    AND one extra propagation round must be a fixpoint — proving
-    _CC_ROUNDS suffices for this corpus's near-dup cluster diameters
-    (the SQL twin is only exact when converged)."""
-    from pdf_parser_spark.ops.dedup import (
-        _CC_ROUNDS, neardup_components_df, verified_pairs_df,
-    )
+def test_dedup_components_is_union_find_fixpoint(spark, entry_mod):
+    """The unrolled min-label propagation must have converged: its
+    labels equal the connected components of a Python union-find over
+    the same verified pairs (keeper = a component's min doc_id),
+    proving _CC_ROUNDS suffices for this corpus's near-dup cluster
+    diameters (the SQL is only exact when converged)."""
+    from pdf_parser_spark.ops.dedup import _verified_pairs_ctes
 
     sql_rows = sorted(
         tuple(r) for r in
         entry_mod.all_queries()["dedup_components"](spark, SF_DIR)
         .collect())
+    pairs = spark.sql("WITH %s SELECT left_id, right_id FROM verified"
+                      % _verified_pairs_ctes("spark")).collect()
 
-    entry_mod._register(spark, SF_DIR)
-    pairs = verified_pairs_df(spark).persist()
-    df_rows = sorted(tuple(r) for r in
-                     neardup_components_df(pairs).collect())
-    assert df_rows == sql_rows
-    assert len(df_rows) > 0
+    parent = {}
 
-    plus_one = sorted(tuple(r) for r in
-                      neardup_components_df(
-                          pairs, iters=_CC_ROUNDS + 1).collect())
-    pairs.unpersist()
-    assert plus_one == sql_rows  # fixpoint reached within _CC_ROUNDS
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = sorted((v, find(v), int(v > find(v))) for v in list(parent))
+    assert sql_rows == want
+    assert len(want) > 0 and any(dup for _, _, dup in want)
 
 
 def test_d13_dollar_priority_beats_1e8_bare(spark, entry_mod):
@@ -2972,17 +2974,6 @@ def test_label_propagation_semantics(duck, entry_mod):
     assert set(map(tuple, rows)) == truth
     n_comm = len(cnt)
     assert 1 < n_comm < len(hosts)  # non-degenerate clustering
-
-
-def test_lpa_df_matches_sql(spark, entry_mod):
-    """Iterative weighted LPA ≡ the unrolled SQL chain on Spark."""
-    from query_registry import QUERY_SQL
-
-    got = sorted(tuple(r) for r in entry_mod.all_queries()[
-        "label_propagation"](spark, SF_DIR).collect())
-    exp = sorted(tuple(r) for r in spark.sql(
-        QUERY_SQL["label_propagation"]["spark"]).collect())
-    assert got == exp
 
 
 def test_headings_outline_semantics(duck, entry_mod):

@@ -1,18 +1,21 @@
 """The production (iterative, persisted) IVF fit must agree
 cell-for-cell with the unrolled-SQL oracle form, and must plan as
-broadcast joins — never a CartesianProduct."""
+broadcast joins — never a CartesianProduct; the persisted index serves
+the ``nprobe`` dial between the SQL IVF and brute force."""
 
-from pdf_parser_spark.ops.similarity import ivf_fit_df
+from pdf_parser_spark.ops.similarity import (
+    _ivf_fit_impl, ivf_index_write, ivf_persisted_topk,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_ivf_fit_df_matches_sql_fit(spark):
+def test_ivf_fit_impl_matches_sql_fit(spark):
     import query_registry
 
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     emb.createOrReplaceTempView("embeddings")
-    got = {r.vec_id: r.cell for r in ivf_fit_df(emb).collect()}
+    got = {r.vec_id: r.cell for r in _ivf_fit_impl(emb)[0].collect()}
     want = {
         r.vec_id: r.cell
         for r in spark.sql(
@@ -23,9 +26,9 @@ def test_ivf_fit_df_matches_sql_fit(spark):
     assert len(set(got.values())) == 8  # all cells populated
 
 
-def test_ivf_fit_df_plan_shape(spark):
+def test_ivf_fit_impl_plan_shape(spark):
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
-    fit = ivf_fit_df(emb, iters=1)
+    fit = _ivf_fit_impl(emb, iters=1)[0]
     plan = fit._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     # the k-row centroid side must be broadcast (Catalyst folds the
@@ -35,40 +38,38 @@ def test_ivf_fit_df_plan_shape(spark):
         or "BroadcastHashJoin" in plan
 
 
-def test_ivf_topk_nprobe1_matches_sql(spark):
-    """The production nprobe operator at nprobe=1 must reproduce the
-    ann_ivf_topk SQL exactly (same fit, same ranking math)."""
-    import query_registry
-
-    from pdf_parser_spark.ops.similarity import ivf_topk_df
-
+def _served(spark, tmp_path, nprobe):
+    """Top-5 of the first 8 vectors, served from an index persisted
+    from the full-corpus ``ann_ivf_fit`` fit."""
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     emb.createOrReplaceTempView("embeddings")
-    got = sorted((r.query_id, r.rank, r.neighbor_id, repr(r.cosine))
-                 for r in ivf_topk_df(emb, nprobe=1).collect())
-    want = sorted((r.query_id, r.rank, r.neighbor_id, repr(r.cosine))
-                  for r in spark.sql(
-                      query_registry.QUERY_SQL["ann_ivf_topk"]["spark"])
+    vectors, centroids = _ivf_fit_impl(emb, carry_qv=True)
+    idx = str(tmp_path / "ivf_idx")
+    ivf_index_write(spark, idx, vectors, centroids, 8)
+    return sorted((r.query_id, r.rank, r.neighbor_id, repr(r.cosine))
+                  for r in ivf_persisted_topk(spark, idx, nprobe=nprobe)
                   .collect())
-    assert got == want and len(got) == 40
 
 
-def test_ivf_nprobe_k_recovers_brute_force(spark):
+def _sql(spark, name):
+    import query_registry
+
+    return sorted((r.query_id, r.rank, r.neighbor_id, repr(r.cosine))
+                  for r in spark.sql(query_registry.QUERY_SQL[name]
+                                     ["spark"]).collect())
+
+
+def test_ivf_topk_nprobe1_matches_sql(spark, tmp_path):
+    """nprobe=1 probes only each query's fitted cell: exactly the
+    ann_ivf_topk SQL (same fit, same ranking math)."""
+    got = _served(spark, tmp_path, 1)
+    assert got == _sql(spark, "ann_ivf_topk") and len(got) == 40
+
+
+def test_ivf_nprobe_k_recovers_brute_force(spark, tmp_path):
     """nprobe=k probes every cell — identical results to the
-    brute-force baseline (the recall dial's upper end)."""
-    import query_registry
-
-    from pdf_parser_spark.ops.similarity import ivf_topk_df
-
-    emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
-    emb.createOrReplaceTempView("embeddings")
-    got = sorted((r.query_id, r.rank, r.neighbor_id, repr(r.cosine))
-                 for r in ivf_topk_df(emb, nprobe=8).collect())
-    want = sorted((r.query_id, r.rank, r.neighbor_id, repr(r.cosine))
-                  for r in spark.sql(
-                      query_registry.QUERY_SQL["ann_cosine_topk"]["spark"])
-                  .collect())
-    assert got == want
+    brute-force SQL baseline (the recall dial's upper end)."""
+    assert _served(spark, tmp_path, 8) == _sql(spark, "ann_cosine_topk")
 
 
 def test_ivf_candidate_reduction(spark):
@@ -76,11 +77,9 @@ def test_ivf_candidate_reduction(spark):
     cells and nprobe=1, candidates touched are the queries' own cells
     only — assert >= 3x below brute force on the real fit (cells are
     k-means-balanced, not perfectly uniform)."""
-    from pdf_parser_spark.ops.similarity import ivf_index_df
-
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     n = emb.count()
-    assignment, _ = ivf_index_df(emb)
+    assignment, _ = _ivf_fit_impl(emb)
     sizes = {r.cell: r.n for r in
              assignment.groupBy("cell").count()
              .withColumnRenamed("count", "n").collect()}
@@ -99,10 +98,7 @@ def test_ivf_index_append_then_serve_exact(spark, tmp_path):
     against fresh top-k over the full corpus computed independently.
     Also: the appended vectors must land in the same cells the
     persisted centroids imply."""
-    from pdf_parser_spark.ops.similarity import (
-        _ivf_fit_impl, ivf_index_append, ivf_index_write,
-        ivf_persisted_topk,
-    )
+    from pdf_parser_spark.ops.similarity import ivf_index_append
     from pyspark.sql import functions as F
 
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
@@ -153,3 +149,23 @@ def test_ivf_index_append_then_serve_exact(spark, tmp_path):
         for rank, (negc, c) in enumerate(scored[:5], 1):
             want.append((q, rank, c, repr(-negc)))
     assert got == sorted(want)
+
+
+def test_amortized_ivf_frames_keep_their_own_index(spark):
+    """Each call persists its index under a fresh root: building the
+    frame twice, then collecting the second and after it the first,
+    must not read files the second call's index write deleted."""
+    import shutil
+
+    from pdf_parser_spark.ops.similarity import amortized_ivf_demo
+
+    spark.read.parquet(SF_DIR + "/embeddings.parquet") \
+        .createOrReplaceTempView("embeddings")
+    first = amortized_ivf_demo(spark)
+    first_root = amortized_ivf_demo.last_root
+    second = amortized_ivf_demo(spark)
+    assert amortized_ivf_demo.last_root != first_root
+    rows = sorted(map(tuple, second.collect()))
+    assert sorted(map(tuple, first.collect())) == rows and rows
+    for root in (first_root, amortized_ivf_demo.last_root):
+        shutil.rmtree(root)

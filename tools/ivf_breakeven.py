@@ -112,15 +112,16 @@ def main(sf_dir: str = "/root/testdata/sf0.1") -> None:
   whole cost.  The per-batch QUERY cost is %(q_speedup).1fx below
   brute (%(ivf_big_query_only).2f s vs %(brute_big).2f s), so the
   measured break-even is **%(breakeven).1f query batches**: an index
-  fitted once (ivf_index_df) pays for itself from the second batch of
+  fitted once (amortized_ivf_demo) pays for itself from the second batch of
   queries on.  At larger n both sides grow ~linearly but the gap
   widens with k (candidates/batch = n·nprobe/k vs n·Q).
 * Candidate arithmetic: brute scores 8·(n-1) = 400k pairs; IVF with
   k=8 scores ~n = 50k pairs (queries' own cells) — the 8x pruning the
   candidate-reduction test asserts on real fitted cells
   (tests/test_similarity_fit.py::test_ivf_candidate_reduction).
-* The nprobe dial (ivf_topk_df) trades candidates for recall:
-  nprobe=k reproduces brute force exactly (test-pinned).
+* The nprobe dial (ivf_persisted_topk, served from the persisted
+  index) trades candidates for recall: nprobe=1 reproduces the
+  ann_ivf_topk SQL and nprobe=k brute force exactly (test-pinned).
 * At 10^12 rows brute force is infeasible (10^13 pairs/query-batch);
   the fitted-cell equi-join with broadcast centroids is the only shape
   that survives — fit cost amortizes over every query batch.
