@@ -33,7 +33,9 @@ would destroy the lineage the sidecar metrics contract requires.
 
 from __future__ import annotations
 
-from ..relational import DUCK, JOINA, LEN, ORD_CONCAT, REALL, SLICE, SPARK
+from ..relational import (
+    DUCK, JOINA, LEN, ORD_CONCAT, POS_TOKS_CTE, REALL, SLICE, SPARK,
+)
 
 QUERIES = {}
 
@@ -50,18 +52,7 @@ def q_c4_clean(d: str) -> str:
     """Per page: line tallies, the kept-sentence digest, the page
     verdict and its drop reason (precedence: lorem_ipsum > brace >
     few_sentences > kept)."""
-    if d == SPARK:
-        toks = """
-toks AS (
-  SELECT doc_id, pos, w FROM documents
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)"""
-    else:
-        toks = """
-ws AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-toks AS (SELECT doc_id, unnest(ws) AS w,
-                generate_subscripts(ws, 1) - 1 AS pos
-         FROM ws)"""
+    toks = POS_TOKS_CTE(d)
     n_words = "CAST(%s AS BIGINT)" % LEN(REALL("line", r"\S+", d), d)
     terminal = ("(line LIKE '%.' OR line LIKE '%!' OR line LIKE '%?' "
                 "OR line LIKE '%\"')")
@@ -167,15 +158,6 @@ toks AS (
   SELECT doc_id, pos, w FROM twinned
   LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
 )"""
-        leads = ", ".join("lead(w, %d) OVER wd" % i for i in range(1, k))
-        grams = """
-grams AS (
-  SELECT doc_id, pos, w,
-    CASE WHEN lead(w, {km1}) OVER wd IS NOT NULL
-         THEN concat_ws(' ', w, {leads}) END AS g
-  FROM toks
-  WINDOW wd AS (PARTITION BY doc_id ORDER BY pos)
-)""".format(km1=k - 1, leads=leads)
     else:
         toks = """
 toks AS (
@@ -184,8 +166,8 @@ toks AS (
                unnest(range(1, len(string_split(text, ' ')) + 1)) AS pos
         FROM twinned) t
 )"""
-        leads = ", ".join("lead(w, %d) OVER wd" % i for i in range(1, k))
-        grams = """
+    leads = ", ".join("lead(w, %d) OVER wd" % i for i in range(1, k))
+    grams = """
 grams AS (
   SELECT doc_id, pos, w,
     CASE WHEN lead(w, {km1}) OVER wd IS NOT NULL

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from ..relational import (
     DUCK, SPARK, HEX2INT, LEN, LINE_PARTITIONS, ORD_ARRAY, SLICE, JOINA,
+    WPOS_CTE,
 )
 from ..stages import materialized
 
@@ -284,17 +285,7 @@ def q_lsh_verified(d: str) -> str:
     pairwise set intersection runs ONLY over LSH candidates (bounded
     by band-bucket fan-in), never all pairs — the shape that survives
     10^12 documents."""
-    return """
-WITH {lsh},
-{jac}
-SELECT i.left_id, i.right_id, i.inter,
-  sa.n AS left_n, sb.n AS right_n,
-  {jexpr} AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.left_id
-JOIN sizes sb ON sb.doc_id = i.right_id
-WHERE {jexpr} >= 0.5
-""".format(lsh=_lsh_ctes(d), jac=_jaccard_ctes(), jexpr=_JACCARD)
+    return q_jaccard(d) + "WHERE %s >= 0.5\n" % _JACCARD
 
 
 def _verified_pairs_ctes(d: str) -> str:
@@ -499,6 +490,22 @@ corpus0 AS (SELECT span_key AS doc_id, line AS text FROM dspan)""" \
         .format(sel=sel, wc=wc)
 
 
+def _span_verify(jac: str, dspan: str) -> str:
+    """The exact-Jaccard verify tail of ``span_neardup`` after the
+    ``jac`` CTEs, weighted by the occurrence counts in ``dspan``."""
+    return """{jac}
+SELECT i.left_id AS left_key, i.right_id AS right_key,
+  {jexpr} AS jaccard,
+  oa.n_occurrences AS left_occ, ob.n_occurrences AS right_occ
+FROM inter i
+JOIN sizes sa ON sa.doc_id = i.left_id
+JOIN sizes sb ON sb.doc_id = i.right_id
+JOIN {dspan} oa ON oa.span_key = i.left_id
+JOIN {dspan} ob ON ob.span_key = i.right_id
+WHERE {jexpr} >= 0.5
+""".format(jac=jac, jexpr=_JACCARD, dspan=dspan)
+
+
 @query("span_neardup")
 def q_span_neardup(d: str) -> str:
     """Span-level NEAR-dup (round-4 ask #8): the exact-digest
@@ -511,21 +518,9 @@ def q_span_neardup(d: str) -> str:
     6.37M candidates to 31.5k at sf0.1 with the jitter-twin class
     fully retained) → exact 4-gram Jaccard ≥ 0.5 verification,
     weighted by how often each span text occurs in the corpus."""
-    return """
-WITH {lsh},
-{jac}
-SELECT i.left_id AS left_key, i.right_id AS right_key,
-  {jexpr} AS jaccard,
-  oa.n_occurrences AS left_occ, ob.n_occurrences AS right_occ
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.left_id
-JOIN sizes sb ON sb.doc_id = i.right_id
-JOIN dspan oa ON oa.span_key = i.left_id
-JOIN dspan ob ON ob.span_key = i.right_id
-WHERE {jexpr} >= 0.5
-""".format(lsh=_lsh_ctes(d, corpus0_sql=_span_corpus0(d),
-                         bucket_cap=64),
-           jac=_jaccard_ctes(), jexpr=_JACCARD)
+    return "\nWITH %s,\n%s" % (
+        _lsh_ctes(d, corpus0_sql=_span_corpus0(d), bucket_cap=64),
+        _span_verify(_jaccard_ctes(), "dspan"))
 
 
 def _shingle_leaves(st, spark, prefix: str, corpus: str) -> None:
@@ -596,20 +591,9 @@ def span_neardup_frame(st, spark):
                     "span_key AS doc_id, line AS text FROM snd_dspan")
     # stage 4: band → capped candidates → exact-Jaccard verify — the
     # verbatim tail of the span_neardup SQL over the persisted views
-    return spark.sql("""
-WITH {bands},
-{jac}
-SELECT i.left_id AS left_key, i.right_id AS right_key,
-  {jexpr} AS jaccard,
-  oa.n_occurrences AS left_occ, ob.n_occurrences AS right_occ
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.left_id
-JOIN sizes sb ON sb.doc_id = i.right_id
-JOIN snd_dspan oa ON oa.span_key = i.left_id
-JOIN snd_dspan ob ON ob.span_key = i.right_id
-WHERE {jexpr} >= 0.5
-""".format(bands=_band_ctes(d, "snd_sigs", cap),
-           jac=_jaccard_ctes("cand", "snd_shingled"), jexpr=_JACCARD))
+    return spark.sql("\nWITH %s,\n%s" % (
+        _band_ctes(d, "snd_sigs", cap),
+        _span_verify(_jaccard_ctes("cand", "snd_shingled"), "snd_dspan")))
 
 
 span_neardup_df = materialized(span_neardup_frame)
@@ -1169,23 +1153,10 @@ def q_cdc_chunks(d: str) -> str:
     if d == SPARK:
         twin_text = ("array_join(concat(slice(ws, 1, 3), {ins}, "
                      "slice(ws, 4, size(ws))), ' ')").format(ins=ins)
-        wsplit = """
-wpos AS (
-  SELECT doc_id, pos, w FROM corpus
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)""".strip()
         bigram = "concat(w, '|', lead(w, 1, '') OVER (PARTITION BY doc_id ORDER BY pos))"
     else:
         twin_text = ("array_to_string(ws[1:3] || {ins} || "
                      "ws[4:len(ws)], ' ')").format(ins=ins)
-        wsplit = """
-wpos AS (
-  SELECT doc_id, u.pos - 1 AS pos, u.w
-  FROM (SELECT doc_id,
-          unnest(string_split(text, ' ')) AS w,
-          generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM corpus) u(doc_id, w, pos)
-)""".strip()
         bigram = "w || '|' || COALESCE(lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos), '')"
     from ..relational import HEX2INT
     bhash = HEX2INT("md5(%s)" % bigram, d)
@@ -1248,7 +1219,7 @@ FROM counts c
 LEFT JOIN cdc_shared cs ON cs.doc_id = c.doc_id
 LEFT JOIN fixed_shared fs ON fs.doc_id = c.doc_id
 WHERE c.doc_id < 1000000 AND c.doc_id % 6 = 0
-""".format(twin=twin_text, ws=_split_ws(d), wsplit=wsplit,
+""".format(twin=twin_text, ws=_split_ws(d), wsplit=WPOS_CTE(d, "corpus"),
            bhash=bhash, m=_CDC_MOD, ctext=chunk_text,
            ftext=chunk_text)
 
@@ -1368,6 +1339,33 @@ FROM pairs WHERE shared_fps >= {tau}
 _AP_TAU_NUM, _AP_TAU_DEN = 6, 10   # Jaccard threshold τ = 0.6
 
 
+def _ap_verify(prefix: str, toks: str, sizes: str) -> str:
+    """The candidate → exact-Jaccard verify tail of the prefix-filtered
+    join, over the named prefix, distinct-token and set-size tables."""
+    return """cand AS (
+  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
+  FROM {prefix} a JOIN {prefix} b
+    ON a.w = b.w AND a.doc_id < b.doc_id
+),
+inter AS (
+  SELECT c.left_id, c.right_id, CAST(COUNT(*) AS BIGINT) AS inter
+  FROM cand c
+  JOIN {toks} a ON a.doc_id = c.left_id
+  JOIN {toks} b ON b.doc_id = c.right_id AND b.w = a.w
+  GROUP BY c.left_id, c.right_id
+)
+SELECT i.left_id, i.right_id, i.inter,
+  sa.n AS left_n, sb.n AS right_n,
+  CAST(i.inter AS DOUBLE)
+    / CAST(sa.n + sb.n - i.inter AS DOUBLE) AS jaccard
+FROM inter i
+JOIN {sizes} sa ON sa.doc_id = i.left_id
+JOIN {sizes} sb ON sb.doc_id = i.right_id
+WHERE {td} * i.inter >= {tn} * (sa.n + sb.n - i.inter)
+""".format(prefix=prefix, toks=toks, sizes=sizes,
+           tn=_AP_TAU_NUM, td=_AP_TAU_DEN)
+
+
 def allpairs_prefix_frame(st, spark):
     """PRODUCTION AllPairs prefix-filter join — the persisted-
     intermediate twin of the ``dedup_allpairs_prefix`` SQL,
@@ -1409,28 +1407,8 @@ SELECT r.doc_id, r.w
 FROM ranked r JOIN ap_sizes s ON s.doc_id = r.doc_id
 WHERE r.rn <= s.n - CAST(({tn} * s.n + {td} - 1) / {td} AS BIGINT) + 1
 """.format(tn=tn, td=td)), view="ap_prefix")
-    return spark.sql("""
-WITH cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM ap_prefix a JOIN ap_prefix b
-    ON a.w = b.w AND a.doc_id < b.doc_id
-),
-inter AS (
-  SELECT c.left_id, c.right_id, CAST(COUNT(*) AS BIGINT) AS inter
-  FROM cand c
-  JOIN ap_toks a ON a.doc_id = c.left_id
-  JOIN ap_toks b ON b.doc_id = c.right_id AND b.w = a.w
-  GROUP BY c.left_id, c.right_id
-)
-SELECT i.left_id, i.right_id, i.inter,
-  sa.n AS left_n, sb.n AS right_n,
-  CAST(i.inter AS DOUBLE)
-    / CAST(sa.n + sb.n - i.inter AS DOUBLE) AS jaccard
-FROM inter i
-JOIN ap_sizes sa ON sa.doc_id = i.left_id
-JOIN ap_sizes sb ON sb.doc_id = i.right_id
-WHERE {td} * i.inter >= {tn} * (sa.n + sb.n - i.inter)
-""".format(tn=tn, td=td))
+    return spark.sql(
+        "\nWITH " + _ap_verify("ap_prefix", "ap_toks", "ap_sizes"))
 
 
 allpairs_prefix_df = materialized(allpairs_prefix_frame)
@@ -1482,25 +1460,6 @@ prefix AS (
   -- prefix length = n - ceil(τ·n) + 1; ceil(τ·n) = (τnum·n + τden - 1) DIV τden
   WHERE r.rn <= s.n - CAST(({tn} * s.n + {td} - 1) / {td} AS BIGINT) + 1
 ),
-cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM prefix a JOIN prefix b
-    ON a.w = b.w AND a.doc_id < b.doc_id
-),
-inter AS (
-  SELECT c.left_id, c.right_id, CAST(COUNT(*) AS BIGINT) AS inter
-  FROM cand c
-  JOIN toks a ON a.doc_id = c.left_id
-  JOIN toks b ON b.doc_id = c.right_id AND b.w = a.w
-  GROUP BY c.left_id, c.right_id
-)
-SELECT i.left_id, i.right_id, i.inter,
-  sa.n AS left_n, sb.n AS right_n,
-  CAST(i.inter AS DOUBLE)
-    / CAST(sa.n + sb.n - i.inter AS DOUBLE) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.left_id
-JOIN sizes sb ON sb.doc_id = i.right_id
-WHERE {td} * i.inter >= {tn} * (sa.n + sb.n - i.inter)
-""".format(corpus=_near_corpus(d).strip().lstrip(),
-           expl=_exploded_shingles(d).strip(), tn=tn, td=td)
+{verify}""".format(corpus=_near_corpus(d).strip().lstrip(),
+                   expl=_exploded_shingles(d).strip(), tn=tn, td=td,
+                   verify=_ap_verify("prefix", "toks", "sizes"))

@@ -12,10 +12,8 @@ comparison is a genuine encode→decode round trip, not a replay of the
 decoder.  Unknown formats surface as ``decode_error`` rows (poison
 payloads are data, not exceptions, at 10^12 scale).
 
-``fake_decoder`` (digest-derived pseudo-features) remains available as
-an explicit stand-in for formats that need native codecs on a real
-cluster; ``strict_decoder`` raises the way a production build surfaces
-a missing codec.
+``strict_decoder`` raises the way a production build surfaces a
+missing codec.
 """
 
 from __future__ import annotations
@@ -100,20 +98,6 @@ def sniff_decoder(media_type: str, payload: bytes) -> dict:
             "mean_luma": mean_from_sum(ysum, len(frames) * w * h, 255.0),
         }
     raise ValueError("unsupported media format")
-
-
-def fake_decoder(media_type: str, payload: bytes) -> dict:
-    """Digest-derived pseudo-features — the documented stand-in for
-    formats whose codecs only exist on a real cluster."""
-    digest = hashlib.sha256(payload).digest()
-    return {
-        "width": 64 + digest[0] * 8,
-        "height": 64 + digest[1] * 8,
-        "channels": 1 + digest[2] % 4,
-        "duration_ms": (int.from_bytes(digest[3:6], "big") % 600000
-                        if media_type in ("audio", "video") else 0),
-        "mean_luma": digest[6] / 255.0,
-    }
 
 
 def strict_decoder(media_type: str, payload: bytes) -> dict:

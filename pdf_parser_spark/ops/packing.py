@@ -21,7 +21,7 @@ q_packing carries the plan note.
 
 from __future__ import annotations
 
-from ..relational import DUCK, SPARK, LEN
+from ..relational import DUCK, SPARK, LEN, POS_TOKS_CTE
 
 QUERIES = {}
 
@@ -48,18 +48,7 @@ def q_chunking(d: str) -> str:
     an md5 over the space-joined window.  Tokens are split-by-space
     positions — the SAME universe sequence_packing counts, so the two
     maps compose."""
-    if d == SPARK:
-        toks = """
-toks AS (
-  SELECT doc_id, pos, w FROM documents
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)"""
-    else:
-        toks = """
-ws AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-toks AS (SELECT doc_id, unnest(ws) AS w,
-                generate_subscripts(ws, 1) - 1 AS pos
-         FROM ws)"""
+    toks = POS_TOKS_CTE(d)
     # token at pos belongs to chunk c iff c*stride <= pos < c*stride +
     # chunk, i.e. c in [max(0, ceil((pos-chunk+1)/stride)) ..
     # floor(pos/stride)]; membership is 1 or 2 chunks for

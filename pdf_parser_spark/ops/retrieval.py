@@ -34,7 +34,7 @@ groups, each already reduced to matching docs).
 
 from __future__ import annotations
 
-from ..relational import TOKS_CTE, DUCK, SPARK
+from ..relational import ORD_CONCAT, TOKS_CTE, WPOS_CTE, SPARK
 from ..stages import materialized, scope
 from .webgraph import IDIV
 
@@ -63,8 +63,8 @@ _QUERY_TERMS = [
 ]
 
 
-def _qterms(d: str) -> str:
-    vals = ", ".join("(%d, '%s')" % qt for qt in _QUERY_TERMS)
+def _qterms(d: str, terms=_QUERY_TERMS) -> str:
+    vals = ", ".join("(%d, '%s')" % qt for qt in terms)
     if d == SPARK:
         return ("SELECT CAST(query_id AS BIGINT) AS query_id, term "
                 "FROM VALUES %s AS t(query_id, term)" % vals)
@@ -72,20 +72,21 @@ def _qterms(d: str) -> str:
             "FROM (VALUES %s) AS t(query_id, term)" % vals)
 
 
-def _bm25_scored_ctes(d: str) -> str:
-    """The qterms→toks→dl→stats→matched→docfreq→scored CTE chain of
-    ``bm25_topk`` — ONE definition of the integer-exact BM25 scorer,
-    shared by ``bm25_topk`` and the ``hard_negatives`` training-pair
-    miner (a refactor test pins the generated SQL byte-identical to
-    the pre-factor form)."""
-    toks = TOKS_CTE(d)
+def _bm25_weight() -> str:
+    """The integer-exact BM25 weight of one ``matched m`` row (module
+    docstring), over the ``docfreq f``, ``dl d`` and ``stats`` CTEs."""
     idf = IDIV("((SELECT n FROM stats) - f.df) * %d" % _IDF_SCALE,
                "f.df + 1")
-    wgt = IDIV(
+    return IDIV(
         "(%s) * m.tf * 22 * (SELECT s FROM stats)" % idf,
         "10 * (SELECT s FROM stats) * m.tf"
         " + 3 * (SELECT s FROM stats)"
         " + 9 * d.dl * (SELECT n FROM stats)")
+
+
+def _bm25_matched_ctes(d: str, qterms: str) -> str:
+    """The qterms→toks→dl→stats→matched→docfreq prefix every BM25
+    scorer over the query set ``qterms`` starts from."""
     return """qterms AS ({qterms}),{toks},
 dl AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks
@@ -103,7 +104,15 @@ matched AS (
 docfreq AS (
   SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
   FROM matched GROUP BY term
-),
+)""".format(qterms=qterms, toks=TOKS_CTE(d).strip())
+
+
+def _bm25_scored_ctes(d: str) -> str:
+    """The qterms→toks→dl→stats→matched→docfreq→scored CTE chain of
+    ``bm25_topk`` — ONE definition of the integer-exact BM25 scorer,
+    shared by ``bm25_topk``, ``search_snippets``, ``rocchio_expand``
+    and the ``hard_negatives`` training-pair miner."""
+    return _bm25_matched_ctes(d, _qterms(d)) + """,
 scored AS (
   SELECT m.query_id, m.doc_id,
          CAST(SUM({wgt}) AS BIGINT) AS score_scaled
@@ -111,7 +120,7 @@ scored AS (
   JOIN docfreq f ON f.term = m.term
   JOIN dl d ON d.doc_id = m.doc_id
   GROUP BY m.query_id, m.doc_id
-)""".format(qterms=_qterms(d), toks=toks.strip(), wgt=wgt)
+)""".format(wgt=_bm25_weight())
 
 
 @query("bm25_topk")
@@ -347,24 +356,21 @@ def bm25_serve(spark, index_dir: str, query_terms=None, top_k=_TOP_K):
             .select("query_id", "doc_id", "score_scaled", "rk"))
 
 
-def bm25_index_demo(spark, index_dir: str = None):
+def bm25_index_demo(spark):
     """The registered end-to-end lifecycle: build the index from the
     ``documents`` view (one append call), then serve the standard
     query set from the persisted artifact.  Row-identical to the
     ``bm25_topk`` in-plan SQL (the DuckDB oracle twin) — so the whole
-    build→persist→prune→serve path is hash-checked.
-
-    The default root is a fresh ``mkdtemp`` per call (a fixed shared
-    path would let concurrent sessions rmtree each other mid-read);
-    it is recorded as ``bm25_index_demo.last_root`` for tests that
-    inspect the artifact."""
+    build→persist→prune→serve path is hash-checked.  The index lives
+    in a temporary directory of its own, removed once the output is
+    checkpointed."""
     import tempfile
 
-    root = index_dir or tempfile.mkdtemp(prefix="pdf_parser_spark_bm25_")
-    bm25_index_demo.last_root = root
-    text_index_append(spark, root, spark.table("documents")
-                      .select("doc_id", "text"))
-    return bm25_serve(spark, root)
+    with scope(spark) as st, tempfile.TemporaryDirectory(
+            prefix="pdf_parser_spark_bm25_") as root:
+        text_index_append(spark, root, spark.table("documents")
+                          .select("doc_id", "text"))
+        return st.result(bm25_serve(spark, root))
 
 
 # --------------------------------------------- compaction (LSM merge)
@@ -460,28 +466,28 @@ def text_index_vacuum(index_dir: str) -> list:
     return superseded
 
 
-def bm25_compact_demo(spark, index_dir: str = None):
+def bm25_compact_demo(spark):
     """The registered full index-maintenance lifecycle: two
     incremental appends (halves of the ``documents`` view), compact
     them into one generation, vacuum the retired fragments, then
     serve the standard query batch from the compacted artifact.
     Row-identical to the in-plan ``bm25_topk`` SQL (the DuckDB oracle
     twin), so build→append→compact→vacuum→prune→serve is hash-checked
-    end-to-end.  Fresh ``mkdtemp`` per call (recorded as
-    ``bm25_compact_demo.last_root``)."""
+    end-to-end.  The index lives in a temporary directory of its own,
+    removed once the output is checkpointed."""
     import tempfile
 
     from pyspark.sql import functions as F
 
-    root = index_dir or tempfile.mkdtemp(prefix="pdf_parser_spark_bm25c_")
-    bm25_compact_demo.last_root = root
-    docs = spark.table("documents").select("doc_id", "text")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    text_index_append(spark, root, docs.filter(F.col("doc_id") <= mid))
-    text_index_append(spark, root, docs.filter(F.col("doc_id") > mid))
-    text_index_compact(spark, root)
-    text_index_vacuum(root)
-    return bm25_serve(spark, root)
+    with scope(spark) as st, tempfile.TemporaryDirectory(
+            prefix="pdf_parser_spark_bm25c_") as root:
+        docs = spark.table("documents").select("doc_id", "text")
+        mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
+        text_index_append(spark, root, docs.filter(F.col("doc_id") <= mid))
+        text_index_append(spark, root, docs.filter(F.col("doc_id") > mid))
+        text_index_compact(spark, root)
+        text_index_vacuum(root)
+        return st.result(bm25_serve(spark, root))
 
 
 # ------------------------------------------------------- phrase search
@@ -621,22 +627,22 @@ def phrase_serve(spark, index_dir: str, phrases=None,
             .select("pid", "phrase", "doc_id", "n_hits", "rk"))
 
 
-def phrase_serve_demo(spark, index_dir: str = None):
+def phrase_serve_demo(spark):
     """The registered lifecycle row: build the positional index from
     the ``documents`` view (one append — positions are written by
     every append), then serve the standard phrase set from the
     persisted artifact.  Row-identical to the in-plan
     ``phrase_search`` SQL (the DuckDB oracle twin), so the
-    tokenize→persist→prune→adjacency-join path is hash-checked.
-    Fresh ``mkdtemp`` per call (recorded as
-    ``phrase_serve_demo.last_root``)."""
+    tokenize→persist→prune→adjacency-join path is hash-checked.  The
+    index lives in a temporary directory of its own, removed once the
+    output is checkpointed."""
     import tempfile
 
-    root = index_dir or tempfile.mkdtemp(prefix="pdf_parser_spark_pos_")
-    phrase_serve_demo.last_root = root
-    text_index_append(spark, root, spark.table("documents")
-                      .select("doc_id", "text"))
-    return phrase_serve(spark, root)
+    with scope(spark) as st, tempfile.TemporaryDirectory(
+            prefix="pdf_parser_spark_pos_") as root:
+        text_index_append(spark, root, spark.table("documents")
+                          .select("doc_id", "text"))
+        return st.result(phrase_serve(spark, root))
 
 
 # --------------------------------------------- MaxScore-pruned top-k
@@ -655,54 +661,19 @@ _MS_QUERY_TERMS = [
 ]
 
 
-def _ms_qterms(d: str) -> str:
-    vals = ", ".join("(%d, '%s')" % qt for qt in _MS_QUERY_TERMS)
-    if d == SPARK:
-        return ("SELECT CAST(query_id AS BIGINT) AS query_id, term "
-                "FROM VALUES %s AS t(query_id, term)" % vals)
-    return ("SELECT CAST(query_id AS BIGINT) AS query_id, term "
-            "FROM (VALUES %s) AS t(query_id, term)" % vals)
-
-
 def _ms_ctes_head(d: str) -> str:
     """The corpus-stats → weights prefix of the MaxScore chain
     (``qterms`` … ``wgts``) — split out so the production twin can
     checkpoint ``wgts`` once (see bm25_maxscore_df); _ms_ctes
     concatenates head + tail back into the byte-identical oracle
     text."""
-    toks = TOKS_CTE(d)
-    idf = IDIV("((SELECT n FROM stats) - f.df) * %d" % _IDF_SCALE,
-               "f.df + 1")
-    wgt = IDIV(
-        "(%s) * m.tf * 22 * (SELECT s FROM stats)" % idf,
-        "10 * (SELECT s FROM stats) * m.tf"
-        " + 3 * (SELECT s FROM stats)"
-        " + 9 * d.dl * (SELECT n FROM stats)")
-    return """
-qterms AS ({qterms}),{toks},
-dl AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks
-  GROUP BY doc_id
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS s
-  FROM dl
-),
-matched AS (
-  SELECT q.query_id, q.term, t.doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM toks t JOIN qterms q ON q.term = t.w
-  GROUP BY q.query_id, q.term, t.doc_id
-),
-docfreq AS (
-  SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-  FROM matched GROUP BY term
-),
+    return _bm25_matched_ctes(d, _qterms(d, _MS_QUERY_TERMS)) + """,
 wgts AS (
   SELECT m.query_id, m.term, m.doc_id, {wgt} AS w
   FROM matched m
   JOIN docfreq f ON f.term = m.term
   JOIN dl d ON d.doc_id = m.doc_id
-)""".format(qterms=_ms_qterms(d), toks=toks.strip(), wgt=wgt).strip()
+)""".format(wgt=_bm25_weight())
 
 
 def _ms_ctes(d: str) -> str:
@@ -771,13 +742,8 @@ cand AS (
 )""".format(k=_TOP_K).strip()
 
 
-_MS_FINAL = """
-final AS (
-  SELECT w.query_id, w.doc_id, CAST(SUM(w.w) AS BIGINT) AS score_scaled
-  FROM wgts w
-  JOIN cand c ON c.query_id = w.query_id AND c.doc_id = w.doc_id
-  GROUP BY w.query_id, w.doc_id
-)
+# the top-k window over ``final(query_id, doc_id, score_scaled)``
+_MS_TOPK = """
 SELECT query_id, doc_id, score_scaled, rk FROM (
   SELECT query_id, doc_id, score_scaled,
     CAST(ROW_NUMBER() OVER (PARTITION BY query_id
@@ -786,6 +752,13 @@ SELECT query_id, doc_id, score_scaled, rk FROM (
   FROM final) t
 WHERE rk <= {k}
 """
+_MS_FINAL = """
+final AS (
+  SELECT w.query_id, w.doc_id, CAST(SUM(w.w) AS BIGINT) AS score_scaled
+  FROM wgts w
+  JOIN cand c ON c.query_id = w.query_id AND c.doc_id = w.doc_id
+  GROUP BY w.query_id, w.doc_id
+)""" + _MS_TOPK
 
 
 def bm25_maxscore_frame(st, spark):
@@ -847,42 +820,20 @@ def q_bm25_maxscore(d: str) -> str:
     lists at the cost of two tiny aggs (ub, suffix sums) and one
     k-row window — the same candidates-then-verify economics as the
     IVF and LSH tiers."""
-    return """
-WITH {ctes},
-final AS (
-  SELECT w.query_id, w.doc_id, CAST(SUM(w.w) AS BIGINT) AS score_scaled
-  FROM wgts w
-  JOIN cand c ON c.query_id = w.query_id AND c.doc_id = w.doc_id
-  GROUP BY w.query_id, w.doc_id
-)
-SELECT query_id, doc_id, score_scaled, rk FROM (
-  SELECT query_id, doc_id, score_scaled,
-    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY score_scaled DESC, doc_id)
-         AS BIGINT) AS rk
-  FROM final) t
-WHERE rk <= {k}
-""".format(ctes=_ms_ctes(d), k=_TOP_K)
+    return ("\nWITH {ctes}," + _MS_FINAL).format(ctes=_ms_ctes(d),
+                                                k=_TOP_K)
 
 
 def bm25_maxscore_full_twin_sql(d: str) -> str:
     """The UNPRUNED evaluation of the same MaxScore query set — the
     ground truth the exactness test compares against (not registered:
     it exists to prove bm25_maxscore's pruning is lossless)."""
-    return """
+    return ("""
 WITH {ctes},
 final AS (
   SELECT query_id, doc_id, CAST(SUM(w) AS BIGINT) AS score_scaled
   FROM wgts GROUP BY query_id, doc_id
-)
-SELECT query_id, doc_id, score_scaled, rk FROM (
-  SELECT query_id, doc_id, score_scaled,
-    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY score_scaled DESC, doc_id)
-         AS BIGINT) AS rk
-  FROM final) t
-WHERE rk <= {k}
-""".format(ctes=_ms_ctes(d), k=_TOP_K)
+)""" + _MS_TOPK).format(ctes=_ms_ctes(d), k=_TOP_K)
 
 
 def bm25_maxscore_gate_sql(d: str) -> str:
@@ -937,21 +888,6 @@ def q_proximity_search(d: str) -> str:
     economics as bm25_topk), then a per-(query, doc) gap join whose
     fan-in is tf_a x tf_b WITHIN one document (single digits), never
     cross-document; one top-k window per query closes it."""
-    if d == SPARK:
-        wpos = """
-wpos AS (
-  SELECT doc_id, pos, w FROM documents
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)""".strip()
-    else:
-        wpos = """
-wpos AS (
-  SELECT doc_id, u.pos - 1 AS pos, u.w
-  FROM (SELECT doc_id,
-          unnest(string_split(text, ' ')) AS w,
-          generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents) u(doc_id, w, pos)
-)""".strip()
     return """
 WITH q AS ({q}),
 {wpos},
@@ -977,7 +913,7 @@ SELECT query_id, doc_id, min_gap, rk FROM (
                             ORDER BY min_gap, doc_id) AS BIGINT) AS rk
   FROM gaps WHERE min_gap <= win) t
 WHERE rk <= 10
-""".format(q=_prox_q(d), wpos=wpos)
+""".format(q=_prox_q(d), wpos=WPOS_CTE(d))
 
 
 # ------------------------------------------------- spell suggestions
@@ -1117,58 +1053,10 @@ def q_search_snippets(d: str) -> str:
     digits — and the final assembly is one {w}-row group per snippet.
     Everything is integer/string compares: deterministic across
     engines."""
-    toks = TOKS_CTE(d)
-    idf = IDIV("((SELECT n FROM stats) - f.df) * %d" % _IDF_SCALE,
-               "f.df + 1")
-    wgt = IDIV(
-        "(%s) * m.tf * 22 * (SELECT s FROM stats)" % idf,
-        "10 * (SELECT s FROM stats) * m.tf"
-        " + 3 * (SELECT s FROM stats)"
-        " + 9 * d.dl * (SELECT n FROM stats)")
-    if d == SPARK:
-        wpos = """
-wpos AS (
-  SELECT doc_id, pos, w FROM documents
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)""".strip()
-    else:
-        wpos = """
-wpos AS (
-  SELECT doc_id, u.pos - 1 AS pos, u.w
-  FROM (SELECT doc_id,
-          unnest(string_split(text, ' ')) AS w,
-          generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents) u(doc_id, w, pos)
-)""".strip()
     hl = ("CASE WHEN q.term IS NOT NULL THEN '**' || t.w || '**' "
           "ELSE t.w END")
     return """
-WITH qterms AS ({qterms}),{toks},
-dl AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks
-  GROUP BY doc_id
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS s
-  FROM dl
-),
-matched AS (
-  SELECT q.query_id, q.term, t.doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM toks t JOIN qterms q ON q.term = t.w
-  GROUP BY q.query_id, q.term, t.doc_id
-),
-docfreq AS (
-  SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-  FROM matched GROUP BY term
-),
-scored AS (
-  SELECT m.query_id, m.doc_id,
-         CAST(SUM({wgt}) AS BIGINT) AS score_scaled
-  FROM matched m
-  JOIN docfreq f ON f.term = m.term
-  JOIN dl d ON d.doc_id = m.doc_id
-  GROUP BY m.query_id, m.doc_id
-),
+WITH {scored},
 hits AS (
   SELECT query_id, doc_id, rk FROM (
     SELECT query_id, doc_id,
@@ -1215,14 +1103,9 @@ JOIN hpos t ON t.query_id = b.query_id AND t.doc_id = b.doc_id
            AND t.pos >= b.start AND t.pos < b.start + {w}
 LEFT JOIN qterms q ON q.query_id = b.query_id AND q.term = t.w
 GROUP BY b.query_id, b.doc_id, b.start, b.n_terms
-""".format(qterms=_qterms(d), toks=toks.strip(), wgt=wgt,
-           ndocs=_SNIP_DOCS, w=_SNIP_W, wpos=wpos,
-           snip=_ord_concat(hl, " ", "t.pos", d))
-
-
-def _ord_concat(col: str, sep: str, order_by: str, d: str) -> str:
-    from ..relational import ORD_CONCAT
-    return ORD_CONCAT(col, sep, order_by, d)
+""".format(scored=_bm25_scored_ctes(d),
+           ndocs=_SNIP_DOCS, w=_SNIP_W, wpos=WPOS_CTE(d),
+           snip=ORD_CONCAT(hl, " ", "t.pos", d))
 
 
 # -------------------------------- pseudo-relevance feedback (Rocchio)
@@ -1255,43 +1138,10 @@ def q_rocchio_expand(d: str) -> str:
     work is the vocabulary df agg (Heaps-sublinear, the ccnet tf-table
     shape) and the second matched-tf pass over the expanded (still
     tiny) term list.  Both passes reuse ONE tokenize CTE."""
-    toks = TOKS_CTE(d)
-    idf = IDIV("((SELECT n FROM stats) - f.df) * %d" % _IDF_SCALE,
-               "f.df + 1")
-    wgt = IDIV(
-        "(%s) * m.tf * 22 * (SELECT s FROM stats)" % idf,
-        "10 * (SELECT s FROM stats) * m.tf"
-        " + 3 * (SELECT s FROM stats)"
-        " + 9 * d.dl * (SELECT n FROM stats)")
     cand_idf = IDIV("((SELECT n FROM stats) - a.df) * %d" % _IDF_SCALE,
                     "a.df + 1")
     return """
-WITH qterms AS ({qterms}),{toks},
-dl AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks
-  GROUP BY doc_id
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS s
-  FROM dl
-),
-matched AS (
-  SELECT q.query_id, q.term, t.doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM toks t JOIN qterms q ON q.term = t.w
-  GROUP BY q.query_id, q.term, t.doc_id
-),
-docfreq AS (
-  SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-  FROM matched GROUP BY term
-),
-scored AS (
-  SELECT m.query_id, m.doc_id,
-         CAST(SUM({wgt}) AS BIGINT) AS score_scaled
-  FROM matched m
-  JOIN docfreq f ON f.term = m.term
-  JOIN dl d ON d.doc_id = m.doc_id
-  GROUP BY m.query_id, m.doc_id
-),
+WITH {scored},
 fb AS (
   SELECT query_id, doc_id FROM (
     SELECT query_id, doc_id,
@@ -1351,8 +1201,8 @@ SELECT query_id, doc_id, score_scaled, rk FROM (
            ORDER BY score_scaled DESC, doc_id) AS BIGINT) AS rk
   FROM scored2) x
 WHERE rk <= {k}
-""".format(qterms=_qterms(d), toks=toks.strip(), wgt=wgt,
-           cidf=cand_idf, wgt2=wgt, f=_PRF_FB_DOCS, e=_PRF_EXP_TERMS,
+""".format(scored=_bm25_scored_ctes(d), cidf=cand_idf,
+           wgt2=_bm25_weight(), f=_PRF_FB_DOCS, e=_PRF_EXP_TERMS,
            a=_PRF_ALPHA, b=_PRF_BETA, k=_TOP_K)
 
 

@@ -75,6 +75,36 @@ def _ssq(a: str, d: str) -> str:
     return _dot(a, a, d)
 
 
+def _cos(a: str, b: str, d: str) -> str:
+    """Cosine of two quantized vectors from their exact integer dot
+    product and squared norms."""
+    return ("CAST({dot} AS DOUBLE) / (sqrt(CAST({assq} AS DOUBLE)) "
+            "* sqrt(CAST({bssq} AS DOUBLE)))").format(
+                dot=_dot(a, b, d), assq=_ssq(a, d), bssq=_ssq(b, d))
+
+
+def _twinned_base(d: str) -> str:
+    """``base(vec_id, qv)``: the quantized embeddings plus a twin of
+    every 10th vector (id + 1000000, first component nudged by 5% of
+    the quantization unit, cosine ~ 0.999) — the in-plan near-dups
+    the embedding dedup tiers must find."""
+    if d == SPARK:
+        twin = ("concat(array(element_at(qv0, 1) + 50000), "
+                "slice(qv0, 2, size(qv0) - 1))")
+    else:
+        twin = "[qv0[1] + 50000] || qv0[2:len(qv0)]"
+    return """
+base0 AS (
+  SELECT vec_id, {quant} AS qv0 FROM embeddings
+),
+base AS (
+  SELECT vec_id, qv0 AS qv FROM base0
+  UNION ALL
+  SELECT vec_id + 1000000 AS vec_id, {twin} AS qv
+  FROM base0 WHERE vec_id % 10 = 0
+)""".format(quant=_quantized(d), twin=twin).strip()
+
+
 def _sqdist(a: str, b: str, d: str) -> str:
     """Exact integer squared L2 distance.  Components ≤ ~2e6 → diff²
     ≤ 1.6e13, 64-term sum ≤ ~1e15 — comfortably BIGINT."""
@@ -212,6 +242,39 @@ cent{r} AS (
     return ",\n".join(parts)
 
 
+_CELL_ON = "q.cell = c.cell AND q.query_id <> c.cand_id"
+_BATCH_KEYS = "batch, query_id"
+
+
+def _top5_tail(keys: str) -> str:
+    """``ranked`` and the final top-5 over ``scored(keys…, cand_id,
+    cosine)``, cosine DESC with cand_id breaking ties."""
+    return """ranked AS (
+  SELECT {keys}, cand_id, cosine,
+    CAST(ROW_NUMBER() OVER (PARTITION BY {keys}
+                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
+  FROM scored
+)
+SELECT {keys}, cand_id AS neighbor_id, rank, cosine
+FROM ranked WHERE rank <= 5
+""".format(keys=keys)
+
+
+def _cosine_top5(d: str, on: str, keys: str = "query_id",
+                 qv: str = "q.qv", cv: str = "c.cv") -> str:
+    """``scored``: the integer-dot cosine of each query ``q`` and
+    candidate ``c`` joined ON ``on``, then the top-5 tail."""
+    return """scored AS (
+  SELECT {keys}, cand_id,
+    CAST({dot} AS DOUBLE)
+      / (sqrt(CAST({qssq} AS DOUBLE)) * sqrt(CAST({cssq} AS DOUBLE)))
+      AS cosine
+  FROM q JOIN c ON {on}
+),
+""".format(keys=keys, dot=_dot(qv, cv, d), qssq=_ssq(qv, d),
+           cssq=_ssq(cv, d), on=on) + _top5_tail(keys)
+
+
 def _topk_sql(d: str, candidate_filter: str) -> str:
     """Shared shape: quantize → (query × candidates) → integer dot &
     norms → cosine → rank ≤ 5."""
@@ -224,24 +287,8 @@ c AS (
   SELECT vec_id AS cand_id, {quant} AS cv, label AS clabel
   FROM embeddings
 ),
-scored AS (
-  SELECT query_id, cand_id,
-    CAST({dot} AS DOUBLE)
-      / (sqrt(CAST({qssq} AS DOUBLE)) * sqrt(CAST({cssq} AS DOUBLE)))
-      AS cosine
-  FROM q JOIN c ON q.query_id <> c.cand_id {candfilter}
-),
-ranked AS (
-  SELECT query_id, cand_id, cosine,
-    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
-  FROM scored
-)
-SELECT query_id, cand_id AS neighbor_id, rank, cosine
-FROM ranked WHERE rank <= 5
-""".format(quant=_quantized(d), dot=_dot("qv", "cv", d),
-           qssq=_ssq("qv", d), cssq=_ssq("cv", d),
-           candfilter=candidate_filter)
+""".format(quant=_quantized(d)) + _cosine_top5(
+        d, "q.query_id <> c.cand_id " + candidate_filter, qv="qv", cv="cv")
 
 
 @query("ann_cosine_topk")
@@ -264,39 +311,37 @@ JOIN cent2 c ON c.cell = f.cell
 """.format(kmeans=_kmeans_ctes(d), dist=_sqdist("b.qv", "c.cv", d))
 
 
-@query("ann_ivf_topk")
-def q_ivf(d: str) -> str:
-    """IVF-style cell-pruned top-5: candidates share the query's
-    FITTED k-means cell (the ann_ivf_fit assignment, computed
-    in-plan end-to-end)."""
+def _ivf_topk(d: str, kmeans: str, qwhere: str) -> str:
+    """Cell-pruned cosine top-5 of the ``base`` vectors matching
+    ``qwhere`` against every vector in their fitted ``kmeans`` cell."""
     return """
 WITH {kmeans},
 q AS (
   SELECT b.vec_id AS query_id, b.qv, f.cell
   FROM base b JOIN fit f ON b.vec_id = f.vec_id
-  WHERE b.vec_id < 8
+  WHERE {qwhere}
 ),
 c AS (
   SELECT b.vec_id AS cand_id, b.qv AS cv, f.cell
   FROM base b JOIN fit f ON b.vec_id = f.vec_id
 ),
-scored AS (
-  SELECT query_id, cand_id,
-    CAST({dot} AS DOUBLE)
-      / (sqrt(CAST({qssq} AS DOUBLE)) * sqrt(CAST({cssq} AS DOUBLE)))
-      AS cosine
-  FROM q JOIN c ON q.cell = c.cell AND q.query_id <> c.cand_id
-),
-ranked AS (
-  SELECT query_id, cand_id, cosine,
-    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
-  FROM scored
-)
-SELECT query_id, cand_id AS neighbor_id, rank, cosine
-FROM ranked WHERE rank <= 5
-""".format(kmeans=_kmeans_ctes(d), dot=_dot("q.qv", "c.cv", d),
-           qssq=_ssq("q.qv", d), cssq=_ssq("c.cv", d))
+""".format(kmeans=kmeans, qwhere=qwhere) + _cosine_top5(d, _CELL_ON)
+
+
+@query("ann_ivf_topk")
+def q_ivf(d: str) -> str:
+    """IVF-style cell-pruned top-5: candidates share the query's
+    FITTED k-means cell (the ann_ivf_fit assignment, computed
+    in-plan end-to-end)."""
+    return _ivf_topk(d, _kmeans_ctes(d), "b.vec_id < 8")
+
+
+def _rep_seeds(reps: int, k: int) -> str:
+    """``cent0``: one rep of each of the first k distinct vectors of a
+    ``_big_base(d, reps)`` corpus seeds the k-means cells."""
+    return ("cent0 AS (SELECT CAST(vec_id / %d AS INT) AS cell, qv AS cv "
+            "FROM base WHERE vec_id %% %d = 0 AND vec_id < %d)"
+            % (reps, reps, k * reps))
 
 
 @query("ann_ivf_topk_big")
@@ -308,39 +353,10 @@ def q_ivf_big(d: str) -> str:
     oracled like every other query; k-means seeds are one rep of each
     of the first k distinct base vectors."""
     reps, k = 100, 8
-    seed = ("cent0 AS (SELECT CAST(vec_id / %d AS INT) AS cell, qv AS cv "
-            "FROM base WHERE vec_id %% %d = 0 AND vec_id < %d)"
-            % (reps, reps, k * reps))
-    return """
-WITH {kmeans},
-q AS (
-  SELECT b.vec_id AS query_id, b.qv, f.cell
-  FROM base b JOIN fit f ON b.vec_id = f.vec_id
-  WHERE b.vec_id % {reps} = 0 AND b.vec_id < {qmax}
-),
-c AS (
-  SELECT b.vec_id AS cand_id, b.qv AS cv, f.cell
-  FROM base b JOIN fit f ON b.vec_id = f.vec_id
-),
-scored AS (
-  SELECT query_id, cand_id,
-    CAST({dot} AS DOUBLE)
-      / (sqrt(CAST({qssq} AS DOUBLE)) * sqrt(CAST({cssq} AS DOUBLE)))
-      AS cosine
-  FROM q JOIN c ON q.cell = c.cell AND q.query_id <> c.cand_id
-),
-ranked AS (
-  SELECT query_id, cand_id, cosine,
-    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
-  FROM scored
-)
-SELECT query_id, cand_id AS neighbor_id, rank, cosine
-FROM ranked WHERE rank <= 5
-""".format(kmeans=_kmeans_ctes(d, base_cte=_big_base(d, reps),
-                               seed_cte=seed),
-           reps=reps, qmax=8 * reps, dot=_dot("q.qv", "c.cv", d),
-           qssq=_ssq("q.qv", d), cssq=_ssq("c.cv", d))
+    return _ivf_topk(
+        d, _kmeans_ctes(d, base_cte=_big_base(d, reps),
+                        seed_cte=_rep_seeds(reps, k)),
+        "b.vec_id %% %d = 0 AND b.vec_id < %d" % (reps, 8 * reps))
 
 
 # 25k-vector corpus for the amortized pair (ann_ivf_topk_big keeps its
@@ -353,13 +369,6 @@ _AMORT_REPS, _AMORT_K = 50, 8
 # the production IVF recipe (FAISS trains on samples), and the change
 # that moves the measured break-even below two query batches
 _AMORT_TRAIN = "vec_id % 10 = 0"
-
-
-def _amort_seed(d: str) -> str:
-    reps, k = _AMORT_REPS, _AMORT_K
-    return ("cent0 AS (SELECT CAST(vec_id / %d AS INT) AS cell, qv AS cv "
-            "FROM base WHERE vec_id %% %d = 0 AND vec_id < %d)"
-            % (reps, reps, k * reps))
 
 
 # four disjoint 32-query batches: rep-0/13/25/38 copies of base
@@ -402,27 +411,12 @@ c AS (
   SELECT b.vec_id AS cand_id, b.qv AS cv, f.cell
   FROM base b JOIN fit f ON b.vec_id = f.vec_id
 ),
-scored AS (
-  SELECT batch, query_id, cand_id,
-    CAST({dot} AS DOUBLE)
-      / (sqrt(CAST({qssq} AS DOUBLE)) * sqrt(CAST({cssq} AS DOUBLE)))
-      AS cosine
-  FROM q JOIN c ON q.cell = c.cell AND q.query_id <> c.cand_id
-),
-ranked AS (
-  SELECT batch, query_id, cand_id, cosine,
-    CAST(ROW_NUMBER() OVER (PARTITION BY batch, query_id
-                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
-  FROM scored
-)
-SELECT batch, query_id, cand_id AS neighbor_id, rank, cosine
-FROM ranked WHERE rank <= 5
-""".format(kmeans=_kmeans_ctes(d, base_cte=_big_base(d, reps),
-                               seed_cte=_amort_seed(d),
-                               train_where=_AMORT_TRAIN),
-           batches=_amort_batches_sql(d),
-           dot=_dot("q.qv", "c.cv", d),
-           qssq=_ssq("q.qv", d), cssq=_ssq("c.cv", d))
+{tail}""".format(
+        kmeans=_kmeans_ctes(d, base_cte=_big_base(d, reps),
+                            seed_cte=_rep_seeds(reps, _AMORT_K),
+                            train_where=_AMORT_TRAIN),
+        batches=_amort_batches_sql(d),
+        tail=_cosine_top5(d, _CELL_ON, _BATCH_KEYS))
 
 
 @query("ann_brute_big")
@@ -467,40 +461,17 @@ scored AS (
       AS cosine
   FROM q JOIN c ON q.query_id <> c.cand_id
 ),
-ranked AS (
-  SELECT batch, query_id, cand_id, cosine,
-    CAST(ROW_NUMBER() OVER (PARTITION BY batch, query_id
-                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
-  FROM scored
-)
-SELECT batch, query_id, cand_id AS neighbor_id, rank, cosine
-FROM ranked WHERE rank <= 5
-""".format(base=_big_base(d, reps), batches=batches,
+{tail}""".format(base=_big_base(d, reps), batches=batches,
            nparts=len(_AMORT_BATCH_REPS) * nq,
-           dot=_dot("q.qv", "c.cv", d),
+           tail=_top5_tail(_BATCH_KEYS), dot=_dot("q.qv", "c.cv", d),
            qssq0=_ssq("qv", d), cssq0=_ssq("qv", d))
     return """
 WITH {base},
 q AS ({batches}),
 c AS (SELECT vec_id AS cand_id, qv AS cv FROM base),
-scored AS (
-  SELECT batch, query_id, cand_id,
-    CAST({dot} AS DOUBLE)
-      / (sqrt(CAST({qssq} AS DOUBLE)) * sqrt(CAST({cssq} AS DOUBLE)))
-      AS cosine
-  FROM q JOIN c ON q.query_id <> c.cand_id
-),
-ranked AS (
-  SELECT batch, query_id, cand_id, cosine,
-    CAST(ROW_NUMBER() OVER (PARTITION BY batch, query_id
-                            ORDER BY cosine DESC, cand_id) AS INT) AS rank
-  FROM scored
-)
-SELECT batch, query_id, cand_id AS neighbor_id, rank, cosine
-FROM ranked WHERE rank <= 5
-""".format(base=_big_base(d, reps), batches=batches,
-           dot=_dot("q.qv", "c.cv", d),
-           qssq=_ssq("q.qv", d), cssq=_ssq("c.cv", d))
+{tail}""".format(base=_big_base(d, reps), batches=batches,
+                 tail=_cosine_top5(d, "q.query_id <> c.cand_id",
+                                   _BATCH_KEYS))
 
 
 @query("dedup_embedding_cosine")
@@ -571,25 +542,8 @@ def q_semdedup(d: str) -> str:
     target_cell), so the quadratic term stays constant per cell and
     embarrassingly parallel across cells; no global state beyond the
     k-row centroid table."""
-    if d == SPARK:
-        twin = ("concat(array(element_at(qv0, 1) + 50000), "
-                "slice(qv0, 2, size(qv0) - 1))")
-    else:
-        twin = "[qv0[1] + 50000] || qv0[2:len(qv0)]"
-    base = """
-base0 AS (
-  SELECT vec_id, {quant} AS qv0 FROM embeddings
-),
-base AS (
-  SELECT vec_id, qv0 AS qv FROM base0
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id, {twin} AS qv
-  FROM base0 WHERE vec_id % 10 = 0
-)""".format(quant=_quantized(d), twin=twin).strip()
-    cos = ("CAST({dot} AS DOUBLE) / (sqrt(CAST({assq} AS DOUBLE)) "
-           "* sqrt(CAST({bssq} AS DOUBLE)))").format(
-               dot=_dot("a.qv", "b.qv", d), assq=_ssq("a.qv", d),
-               bssq=_ssq("b.qv", d))
+    base = _twinned_base(d)
+    cos = _cos("a.qv", "b.qv", d)
     return """
 WITH {kmeans},
 members AS (
@@ -764,7 +718,7 @@ def big_base_df(spark, reps: int = _AMORT_REPS):
                      % _big_base(SPARK, reps))
 
 
-def amortized_ivf_demo(spark, index_dir: str = None) -> DataFrame:
+def amortized_ivf_demo(spark) -> DataFrame:
     """The production amortized-IVF path (round-4 ask #7): fit ONCE via
     _ivf_fit_impl (sample-trained on every 10th vector,
     _AMORT_TRAIN), persist centroids AND the cell-bucketed vector table,
@@ -779,88 +733,90 @@ def amortized_ivf_demo(spark, index_dir: str = None) -> DataFrame:
     union the tagged query sets, one cell equi-join, one window — so
     serve cost is one candidate pass regardless of batch count.
 
-    The default root is a fresh ``mkdtemp`` per call: the returned
-    frame reads the index lazily, so an overwrite of a shared root by
-    a later call would delete the files it lists.  It is recorded as
-    ``amortized_ivf_demo.last_root``."""
+    The index lives in a temporary directory of its own, removed once
+    the output is checkpointed."""
     import os
     import tempfile
 
     reps, k = _AMORT_REPS, _AMORT_K
-    root = index_dir or tempfile.mkdtemp(prefix="pdf_parser_spark_ivf_")
-    amortized_ivf_demo.last_root = root
-    # cache the expanded corpus for the fit+index-build window: the
-    # in-plan ×100 expansion costs ~3s per pass at 50k and would
-    # otherwise be recomputed by the seed collect, every Lloyd round's
-    # sample scan, and the index write.  Repartition BEFORE the persist
-    # (round 6): the expansion inherits the single partition of the
-    # tiny base-vector scan, so every fit pass (Lloyd assigns, means,
-    # the final full-corpus assignment) otherwise runs one-task; the
-    # one ~13 MB shuffle buys fit-wide parallelism (guide §2.5 input-
-    # skew fix — repartition right after the skewed read).
-    with scope(spark) as st:
-        base = st.cache(big_base_df(spark, reps)
-                        .repartition(LINE_PARTITIONS, "vec_id"))
-        seed = base.filter(
-            "vec_id %% %d = 0 AND vec_id < %d" % (reps, k * reps)).select(
-            F.expr("CAST(vec_id / %d AS INT)" % reps).alias("cell"),
-            F.col("qv").alias("cv"))
-        fitted, centroids = _ivf_fit_impl(
-            base, k, 2, quantized=True, train_filter=_AMORT_TRAIN,
-            seed_df=seed, carry_qv=True)
-        # persist the index: centroids (k rows) + the cell-keyed vector
-        # table — the artifact later query batches scan without
-        # refitting (a real IVF index stores the vectors bucketed by
-        # cell); repartition BY cell first so the partitioned write
-        # emits one file per cell instead of tasks×cells small files.
-        # The two index writes are independent — submit them from two
-        # driver threads so the tiny centroid write back-fills
-        # executors during the vector write's tail (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(2) as pool:
-            f_c = pool.submit(
-                lambda: centroids.write.mode("overwrite")
-                .parquet(os.path.join(root, "centroids")))
-            f_v = pool.submit(
-                lambda: fitted.repartition(k, "cell").write
-                .mode("overwrite").partitionBy("cell")
-                .parquet(os.path.join(root, "vectors")))
-            f_c.result(), f_v.result()
-    vectors = spark.read.parquet(os.path.join(root, "vectors"))
+    with scope(spark) as st, tempfile.TemporaryDirectory(
+            prefix="pdf_parser_spark_ivf_") as root:
+        # cache the expanded corpus for the fit+index-build window: the
+        # in-plan ×100 expansion costs ~3s per pass at 50k and would
+        # otherwise be recomputed by the seed collect, every Lloyd
+        # round's sample scan, and the index write.  Repartition BEFORE
+        # the persist (round 6): the expansion inherits the single
+        # partition of the tiny base-vector scan, so every fit pass
+        # (Lloyd assigns, means, the final full-corpus assignment)
+        # otherwise runs one-task; the one ~13 MB shuffle buys fit-wide
+        # parallelism (guide §2.5 input-skew fix — repartition right
+        # after the skewed read).
+        with scope(spark) as fit:
+            base = fit.cache(big_base_df(spark, reps)
+                             .repartition(LINE_PARTITIONS, "vec_id"))
+            seed = base.filter(
+                "vec_id %% %d = 0 AND vec_id < %d" % (reps, k * reps)
+            ).select(
+                F.expr("CAST(vec_id / %d AS INT)" % reps).alias("cell"),
+                F.col("qv").alias("cv"))
+            fitted, centroids = _ivf_fit_impl(
+                base, k, 2, quantized=True, train_filter=_AMORT_TRAIN,
+                seed_df=seed, carry_qv=True)
+            # persist the index: centroids (k rows) + the cell-keyed
+            # vector table — the artifact later query batches scan
+            # without refitting (a real IVF index stores the vectors
+            # bucketed by cell); repartition BY cell first so the
+            # partitioned write emits one file per cell instead of
+            # tasks×cells small files.  The two index writes are
+            # independent — submit them from two driver threads so the
+            # tiny centroid write back-fills executors during the vector
+            # write's tail (guide §2.6)
+            from concurrent.futures import ThreadPoolExecutor
+            with ThreadPoolExecutor(2) as pool:
+                f_c = pool.submit(
+                    lambda: centroids.write.mode("overwrite")
+                    .parquet(os.path.join(root, "centroids")))
+                f_v = pool.submit(
+                    lambda: fitted.repartition(k, "cell").write
+                    .mode("overwrite").partitionBy("cell")
+                    .parquet(os.path.join(root, "vectors")))
+                f_c.result(), f_v.result()
+        vectors = spark.read.parquet(os.path.join(root, "vectors"))
 
-    # serve: per-vector norms hoisted (computed once per candidate /
-    # query instead of once per scored pair), queries broadcast into a
-    # hash join on cell, candidates repartitioned so the ~400k-pair
-    # scoring stage runs at full width instead of on the few packed
-    # scan partitions of the 8 per-cell index files
-    cands = (vectors.select(
-        F.col("vec_id").alias("cand_id"), F.col("qv").alias("c_qv"),
-        "cell")
-        .repartition(LINE_PARTITIONS, "cand_id")
-        .withColumn("cssq", F.expr(_ssq_unrolled("c_qv"))))
-    nq = _AMORT_QUERIES_PER_BATCH
-    # ONE scan of the index for all four batches (round 6: the
-    # union-of-filters form scanned the vector table once per batch);
-    # batch number derived from vec_id %% reps — identical row set
-    cond = " OR ".join(
-        "(vec_id %% %d = %d AND vec_id < %d)" % (reps, r, nq * reps + r)
-        for r in _AMORT_BATCH_REPS)
-    batch_case = "CASE vec_id %% %d %s END" % (
-        reps, " ".join("WHEN %d THEN %d" % (r, i)
-                       for i, r in enumerate(_AMORT_BATCH_REPS)))
-    qs = (vectors.filter(cond)
-          .select(F.expr(batch_case).cast("int").alias("batch"),
-                  F.col("vec_id").alias("query_id"),
-                  F.col("qv").alias("q_qv"), "cell")
-          .withColumn("qssq", F.expr(_ssq_unrolled("q_qv"))))
-    scored = (cands.join(F.broadcast(qs), "cell")
-              .filter(F.col("query_id") != F.col("cand_id"))
-              .select("batch", "query_id", "cand_id",
-                      F.expr(_COSINE_HOISTED_EXPR).alias("cosine")))
-    w = Window.partitionBy("batch", "query_id").orderBy(
-        F.desc("cosine"), "cand_id")
-    return (scored.withColumn("rank",
-                              F.row_number().over(w).cast("int"))
+        # serve: per-vector norms hoisted (computed once per candidate /
+        # query instead of once per scored pair), queries broadcast into
+        # a hash join on cell, candidates repartitioned so the ~400k-pair
+        # scoring stage runs at full width instead of on the few packed
+        # scan partitions of the 8 per-cell index files
+        cands = (vectors.select(
+            F.col("vec_id").alias("cand_id"), F.col("qv").alias("c_qv"),
+            "cell")
+            .repartition(LINE_PARTITIONS, "cand_id")
+            .withColumn("cssq", F.expr(_ssq_unrolled("c_qv"))))
+        nq = _AMORT_QUERIES_PER_BATCH
+        # ONE scan of the index for all four batches (round 6: the
+        # union-of-filters form scanned the vector table once per
+        # batch); batch number derived from vec_id %% reps — identical
+        # row set
+        cond = " OR ".join(
+            "(vec_id %% %d = %d AND vec_id < %d)" % (reps, r, nq * reps + r)
+            for r in _AMORT_BATCH_REPS)
+        batch_case = "CASE vec_id %% %d %s END" % (
+            reps, " ".join("WHEN %d THEN %d" % (r, i)
+                           for i, r in enumerate(_AMORT_BATCH_REPS)))
+        qs = (vectors.filter(cond)
+              .select(F.expr(batch_case).cast("int").alias("batch"),
+                      F.col("vec_id").alias("query_id"),
+                      F.col("qv").alias("q_qv"), "cell")
+              .withColumn("qssq", F.expr(_ssq_unrolled("q_qv"))))
+        scored = (cands.join(F.broadcast(qs), "cell")
+                  .filter(F.col("query_id") != F.col("cand_id"))
+                  .select("batch", "query_id", "cand_id",
+                          F.expr(_COSINE_HOISTED_EXPR).alias("cosine")))
+        w = Window.partitionBy("batch", "query_id").orderBy(
+            F.desc("cosine"), "cand_id")
+        return st.result(
+            scored.withColumn("rank", F.row_number().over(w).cast("int"))
             .filter(F.col("rank") <= 5)
             .select("batch", "query_id",
                     F.col("cand_id").alias("neighbor_id"),
@@ -1082,31 +1038,17 @@ def q_srp_neardup(d: str) -> str:
     IEEE-double sequence as the rest of this module).
     """
     if d == SPARK:
-        twin = ("concat(array(element_at(qv0, 1) + 50000), "
-                "slice(qv0, 2, size(qv0) - 1))")
         bandrows = "SELECT explode(sequence(0, %d)) AS b" % (
             _SRP_BANDS - 1)
         bandval = "(shiftright(s.sig, r.b * 8) & 255)"
         hamming = "bit_count(sa.sig ^ sb.sig)"
     else:
-        twin = "[qv0[1] + 50000] || qv0[2:len(qv0)]"
         bandrows = "SELECT unnest(range(0, %d)) AS b" % _SRP_BANDS
         bandval = "((s.sig >> (r.b * 8)) & 255)"
         hamming = "bit_count(xor(sa.sig, sb.sig))"
-    cos = ("CAST({dot} AS DOUBLE) / (sqrt(CAST({assq} AS DOUBLE)) "
-           "* sqrt(CAST({bssq} AS DOUBLE)))").format(
-               dot=_dot("sa.qv", "sb.qv", d), assq=_ssq("sa.qv", d),
-               bssq=_ssq("sb.qv", d))
+    cos = _cos("sa.qv", "sb.qv", d)
     return """
-WITH base0 AS (
-  SELECT vec_id, {quant} AS qv0 FROM embeddings
-),
-base AS (
-  SELECT vec_id, qv0 AS qv FROM base0
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id, {twin} AS qv
-  FROM base0 WHERE vec_id % 10 = 0
-),
+WITH {base},
 {sig},
 bands AS (
   SELECT s.vec_id, r.b, {bandval} AS bv
@@ -1130,7 +1072,7 @@ FROM cand c
 JOIN sig sa ON sa.vec_id = c.left_id
 JOIN sig sb ON sb.vec_id = c.right_id
 WHERE {cos} >= {eps}
-""".format(quant=_quantized(d), twin=twin, sig=_srp_sig_cte(d),
+""".format(base=_twinned_base(d), sig=_srp_sig_cte(d),
            bandval=bandval, bandrows=bandrows, hamming=hamming,
            cos=cos, eps=_SRP_EPS, cap=_SRP_BUCKET_CAP)
 
@@ -1233,10 +1175,7 @@ def q_pq_adc(d: str) -> str:
     map-side at any corpus size; raw vectors are touched only for the
     {short}-row shortlist re-rank (FAISS's IVFADC + refine recipe,
     Jegou/Douze/Schmid TPAMI 2011)."""
-    cos = ("CAST({dot} AS DOUBLE) / (sqrt(CAST({qssq} AS DOUBLE)) "
-           "* sqrt(CAST({cssq} AS DOUBLE)))").format(
-               dot=_dot("qb.qv", "cb.qv", d), qssq=_ssq("qb.qv", d),
-               cssq=_ssq("cb.qv", d))
+    cos = _cos("qb.qv", "cb.qv", d)
     return """
 WITH {pq},
 dtab AS (

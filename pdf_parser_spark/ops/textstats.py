@@ -9,7 +9,8 @@ IEEE-deterministic, so both engines emit identical values.
 from __future__ import annotations
 
 from ..relational import (
-    DUCK, SPARK, AMIN, HEX2INT, LEN, REALL, REREPL, TOKS_CTE, TRIMS, lit,
+    DUCK, SPARK, AMIN, HEX2INT, LEN, POS_TOKS_CTE, REALL, REREPL, TOKS_CTE,
+    TRIMS, lit,
 )
 
 QUERIES = {}
@@ -29,30 +30,37 @@ _LANG_MARKERS = [
     ("fr", r"\b(le|les|des|est|une?|dans|pour)\b"),
 ]
 
+# argmax over the marker hit counts, ties to en > es > de > fr, und
+# when no marker hits
+_LANG_ARGMAX = (
+    "CASE WHEN en_hits >= es_hits AND en_hits >= de_hits "
+    "AND en_hits >= fr_hits AND en_hits > 0 THEN 'en' "
+    "WHEN es_hits >= de_hits AND es_hits >= fr_hits AND es_hits > 0 "
+    "THEN 'es' "
+    "WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de' "
+    "WHEN fr_hits > 0 THEN 'fr' ELSE 'und' END"
+)
+
+
+def _lang_hits(text: str, d: str) -> str:
+    """``<lang>_hits`` columns: marker-word hit counts in ``text``."""
+    return ", ".join(
+        "CAST(%s AS BIGINT) AS %s_hits"
+        % (LEN(REALL(text, pat, d), d), lang)
+        for lang, pat in _LANG_MARKERS
+    )
+
 
 @query("lang_id_heuristic")
 def q_lang_id(d: str) -> str:
     """n-gram/stopword language ID: marker-word hit counts per
     language, argmax with fixed tie order (en>es>de>fr, then und)."""
-    cols = ", ".join(
-        "CAST(%s AS BIGINT) AS %s_hits"
-        % (LEN(REALL("lower(text)", pat, d), d), lang)
-        for lang, pat in _LANG_MARKERS
-    )
-    best = (
-        "CASE WHEN en_hits >= es_hits AND en_hits >= de_hits "
-        "AND en_hits >= fr_hits AND en_hits > 0 THEN 'en' "
-        "WHEN es_hits >= de_hits AND es_hits >= fr_hits AND es_hits > 0 "
-        "THEN 'es' "
-        "WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de' "
-        "WHEN fr_hits > 0 THEN 'fr' ELSE 'und' END"
-    )
     return """
 WITH hits AS (SELECT doc_id, {cols} FROM documents)
 SELECT doc_id, en_hits, es_hits, de_hits, fr_hits,
        {best} AS pred_lang
 FROM hits
-""".format(cols=cols, best=best)
+""".format(cols=_lang_hits("lower(text)", d), best=_LANG_ARGMAX)
 
 
 @query("quality_score")
@@ -806,6 +814,24 @@ _PMI_MIN_COUNT = 5   # bigram support threshold (Church & Hanks' rule)
 _PMI_TOPK = 20
 
 
+def _tw_cte(d: str, src: str) -> str:
+    """``tw(doc_id, pos, w)``: the 0-based positional tokens of
+    ``src``, the stream both bigram language statistics read."""
+    if d == SPARK:
+        return """
+tw AS (
+  SELECT doc_id, pos, w FROM {s}
+  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
+)""".format(s=src)
+    return """
+tw AS (
+  SELECT doc_id, generate_subscripts(ws, 1) - 1 AS pos,
+         unnest(ws) AS w
+  FROM (SELECT doc_id, string_split(text, ' ') AS ws
+        FROM {s}) t0
+)""".format(s=src)
+
+
 @query("pmi_collocations")
 def q_pmi_collocations(d: str) -> str:
     """Collocation mining by pointwise mutual information (Church &
@@ -828,24 +854,7 @@ def q_pmi_collocations(d: str) -> str:
     ORDER BY LIMIT (TakeOrdered — no global sort materialized)."""
     from .webgraph import IDIV
 
-    if d == SPARK:
-        toks = """
-tw AS (
-  SELECT doc_id, pos, w FROM documents
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-),
-bg AS (
-  SELECT w AS x, lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS y
-  FROM tw
-)"""
-    else:
-        toks = """
-tw AS (
-  SELECT doc_id, generate_subscripts(ws, 1) - 1 AS pos,
-         unnest(ws) AS w
-  FROM (SELECT doc_id, string_split(text, ' ') AS ws
-        FROM documents) t0
-),
+    toks = _tw_cte(d, "documents") + """,
 bg AS (
   SELECT w AS x, lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS y
   FROM tw
@@ -1097,6 +1106,18 @@ FROM hist
 """.format(inject=inject, counts=counts, n_latin=n_latin, argmax=argmax)
 
 
+# sentence-rich prose swapped in for two of every three documents:
+# ``.``/``!``/``?`` boundaries, a digit non-boundary, an abbreviation
+# and a boundary across a newline
+_PROSE_TWIN = (
+    "CASE CAST(doc_id % 3 AS INT)"
+    " WHEN 0 THEN 'First rule. Second one! A third? Yes. CHECK NO. 12"
+    " stays glued. Mr. Smith splits.'"
+    " WHEN 1 THEN 'Crosses a line' || chr(10) || 'break. New sentence"
+    " starts! Done.'"
+    " ELSE text END")
+
+
 @query("sentence_split")
 def q_sentence_split(d: str) -> str:
     """Sentence segmentation over the REAL text column (no synthesized
@@ -1122,14 +1143,6 @@ def q_sentence_split(d: str) -> str:
     Shape at 10^12 pages: one regexp projection + posexplode — no
     shuffle, no UDF, whole-stage codegen; order within a doc is the
     split position, so no window is needed."""
-    nl = "chr(10)"
-    prose = ("'First rule. Second one! A third? Yes. CHECK NO. 12"
-             " stays glued. Mr. Smith splits.'")
-    multi = ("'Crosses a line' || {nl} || 'break. New sentence"
-             " starts! Done.'").format(nl=nl)
-    twin = ("CASE CAST(doc_id % 3 AS INT)"
-            " WHEN 0 THEN {prose} WHEN 1 THEN {multi}"
-            " ELSE text END").format(prose=prose, multi=multi)
     pat = lit("([.!?])([ \t\n\r]+)([A-Z])", d)
     if d == SPARK:
         marked = ("regexp_replace(txt, %s,"
@@ -1159,7 +1172,7 @@ SELECT doc_id, CAST(pos AS BIGINT) AS sent_no, {ts} AS sentence,
        CAST(length({ts}) AS BIGINT) AS n_chars
 FROM parts
 WHERE {ts} <> ''
-""".format(twin=twin, marked=marked, parts=parts, ts=TRIMS("s", d))
+""".format(twin=_PROSE_TWIN, marked=marked, parts=parts, ts=TRIMS("s", d))
 
 
 @query("readability_score")
@@ -1179,14 +1192,6 @@ def q_readability_score(d: str) -> str:
 
     Shape at 10^12 pages: three regexp_extract_all counts in one
     per-row projection — no shuffle, no UDF, codegen end to end."""
-    nl = "chr(10)"
-    prose = ("'First rule. Second one! A third? Yes. CHECK NO. 12"
-             " stays glued. Mr. Smith splits.'")
-    multi = ("'Crosses a line' || {nl} || 'break. New sentence"
-             " starts! Done.'").format(nl=nl)
-    twin = ("CASE CAST(doc_id % 3 AS INT)"
-            " WHEN 0 THEN {prose} WHEN 1 THEN {multi}"
-            " ELSE text END").format(prose=prose, multi=multi)
     n_words = "CAST(%s AS BIGINT)" % LEN(
         REALL("txt", "[A-Za-z]+", d), d)
     n_bounds = "CAST(%s AS BIGINT)" % LEN(
@@ -1218,7 +1223,7 @@ SELECT doc_id, n_words, n_sentences, n_syllables, flesch,
        WHEN flesch >= 30.0 THEN 'difficult' ELSE 'very_hard' END
     AS band
 FROM scored
-""".format(twin=twin, n_words=n_words, n_bounds=n_bounds,
+""".format(twin=_PROSE_TWIN, n_words=n_words, n_bounds=n_bounds,
            n_syll=n_syll, flesch=flesch)
 
 
@@ -1273,24 +1278,7 @@ def q_bigram_lm_score(d: str) -> str:
             "\n  FROM documents\n)")
     if d == SPARK:
         twin = twin.replace("VARCHAR", "STRING")
-        bg = twin + """,
-tw AS (
-  SELECT doc_id, pos, w FROM twinned
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-),
-bg AS (
-  SELECT doc_id, w AS x,
-         lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS y
-  FROM tw WHERE w <> ''
-)"""
-    else:
-        bg = twin + """,
-tw AS (
-  SELECT doc_id, generate_subscripts(ws, 1) - 1 AS pos,
-         unnest(ws) AS w
-  FROM (SELECT doc_id, string_split(text, ' ') AS ws
-        FROM twinned) t0
-),
+    bg = twin + "," + _tw_cte(d, "twinned") + """,
 bg AS (
   SELECT doc_id, w AS x,
          lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS y
@@ -1639,19 +1627,6 @@ CASE CAST((doc_id + i) % 6 AS INT)
   WHEN 3 THEN 'der hund die und ist nicht ein haus ' || {did}
   WHEN 4 THEN 'the and is el que una casa perro ' || {did}
   ELSE '12345 67890 24680 ' || {did} END""".format(did=did)
-    hits = ", ".join(
-        "CAST(%s AS BIGINT) AS %s_hits"
-        % (LEN(REALL("lower(sent)", pat, d), d), lang)
-        for lang, pat in _LANG_MARKERS
-    )
-    best = (
-        "CASE WHEN en_hits >= es_hits AND en_hits >= de_hits "
-        "AND en_hits >= fr_hits AND en_hits > 0 THEN 'en' "
-        "WHEN es_hits >= de_hits AND es_hits >= fr_hits AND es_hits > 0 "
-        "THEN 'es' "
-        "WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de' "
-        "WHEN fr_hits > 0 THEN 'fr' ELSE 'und' END"
-    )
     return """
 WITH sent_idx AS ({sents}),
 sents AS (
@@ -1684,7 +1659,8 @@ SELECT doc_id, CAST(span_id - 1 AS BIGINT) AS span_no,
   CAST(COUNT(*) AS BIGINT) AS n_sents
 FROM islands
 GROUP BY doc_id, span_id, slang
-""".format(sents=sents, sent=sent.strip(), hits=hits, best=best)
+""".format(sents=sents, sent=sent.strip(),
+           hits=_lang_hits("lower(sent)", d), best=_LANG_ARGMAX)
 
 
 # ------------------------------------- skip-gram co-occurrence pairs
@@ -1718,18 +1694,7 @@ def q_skipgram_pairs(d: str) -> str:
     pair table.  This is the standard distributed co-occurrence
     build; the doc_id equi-key keeps the shuffle hash-partitioned
     and skew bounded by document length."""
-    if d == SPARK:
-        toks = """
-toks AS (
-  SELECT doc_id, pos, w FROM documents
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)"""
-    else:
-        toks = """
-ws AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-toks AS (SELECT doc_id, unnest(ws) AS w,
-                generate_subscripts(ws, 1) - 1 AS pos
-         FROM ws)"""
+    toks = POS_TOKS_CTE(d)
     from .webgraph import IDIV
     dist = "abs(a.pos - b.pos)"
     return """

@@ -37,7 +37,7 @@ lands on one grouped row per source, not one row per raw link.
 
 from __future__ import annotations
 
-from ..relational import DUCK, SPARK, ORD_CONCAT, RLIKE, lit
+from ..relational import DUCK, SPARK, ORD_CONCAT, POS_TOKS_CTE, RLIKE, lit
 from ..stages import materialized, scope
 
 QUERIES = {}
@@ -82,6 +82,20 @@ def _reall_g1(s: str, pattern: str, d: str) -> str:
 
 
 # ------------------------------------------------------- edge list CTE
+
+# the host set of ``edges`` (both endpoints) and its size
+_NODES_CTES = """nodes AS (
+  SELECT DISTINCT host FROM (
+    SELECT src_host AS host FROM edges
+    UNION ALL SELECT dst_host AS host FROM edges) u
+),
+nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes)"""
+# each host's total out-link weight
+_OUTW_CTE = """outw AS (
+  SELECT src_host, CAST(SUM(n_links) AS BIGINT) AS w
+  FROM edges GROUP BY src_host
+)"""
+
 
 def _edges_ctes(d: str) -> str:
     """documents → ``edges(src_host, dst_host, n_links)``.
@@ -171,17 +185,10 @@ def _pr_parts(d: str) -> list:
     base = IDIV("%d" % (_PR_SCALE * (100 - _DAMP_PCT) // 100),
                 "(SELECT n FROM nn)")
     parts = [_edges_ctes(d).strip(), """
-nodes AS (
-  SELECT DISTINCT host FROM (
-    SELECT src_host AS host FROM edges
-    UNION ALL SELECT dst_host AS host FROM edges) u
-),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-outw AS (
-  SELECT src_host, CAST(SUM(n_links) AS BIGINT) AS w
-  FROM edges GROUP BY src_host
-),
+{nodes},
+{outw},
 pr0 AS (SELECT host, {r0} AS rank FROM nodes)""".format(
+        nodes=_NODES_CTES, outw=_OUTW_CTE,
         r0=IDIV("%d" % _PR_SCALE, "(SELECT n FROM nn)")).strip()]
     contrib = IDIV("p.rank * e.n_links * %d" % _DAMP_PCT, "o.w * 100")
     dshare = IDIV("(SELECT dm FROM d{r}) * %d" % _DAMP_PCT,
@@ -370,13 +377,9 @@ def q_hits_scores(d: str) -> str:
     hub-linked h0 and the sinks (linked-to, never linking)."""
     parts = [_edges_ctes(d).strip(), """
 dedges AS (SELECT DISTINCT src_host, dst_host FROM edges),
-nodes AS (
-  SELECT DISTINCT host FROM (
-    SELECT src_host AS host FROM edges
-    UNION ALL SELECT dst_host AS host FROM edges) u
-),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
+{nodes},
 a0 AS (SELECT host, {a0} AS s FROM nodes)""".format(
+        nodes=_NODES_CTES,
         a0=IDIV("%d" % _HITS_SCALE, "(SELECT n FROM nn)")).strip()]
     tpl = """
 hr{r} AS (
@@ -566,18 +569,7 @@ def q_boilerplate_lines(d: str) -> str:
     key and a per-doc re-aggregate.  All group-bys hash-partition;
     the host shard bounds every line's blast radius (CCNet's shard)."""
     host = HOST("doc_id %% %d" % _N_HOSTS, d)
-    if d == SPARK:
-        toks = """
-toks AS (
-  SELECT doc_id, host, pos, w FROM hosted
-  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
-)"""
-    else:
-        toks = """
-ws AS (SELECT doc_id, host, string_split(text, ' ') AS ws FROM hosted),
-toks AS (SELECT doc_id, host, unnest(ws) AS w,
-                generate_subscripts(ws, 1) - 1 AS pos
-         FROM ws)"""
+    toks = POS_TOKS_CTE(d, cols="doc_id, host", src="hosted")
     kept_md5 = ("CASE WHEN is_bp = 0 THEN md5(line) END")
     return """
 WITH hosted AS (
@@ -1674,19 +1666,12 @@ def _opic_parts(d: str) -> list:
     identical shuffle profile to a PageRank round; N and dangling
     mass are 1-row scalar broadcasts."""
     parts = [_edges_ctes(d).strip(), """
-nodes AS (
-  SELECT DISTINCT host FROM (
-    SELECT src_host AS host FROM edges
-    UNION ALL SELECT dst_host AS host FROM edges) u
-),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-outw AS (
-  SELECT src_host, CAST(SUM(n_links) AS BIGINT) AS w
-  FROM edges GROUP BY src_host
-),
+{nodes},
+{outw},
 o0 AS (
   SELECT host, {c0} AS cash, CAST(0 AS BIGINT) AS hist FROM nodes
-)""".format(c0=IDIV("%d" % _PR_SCALE, "(SELECT n FROM nn)")).strip()]
+)""".format(nodes=_NODES_CTES, outw=_OUTW_CTE,
+              c0=IDIV("%d" % _PR_SCALE, "(SELECT n FROM nn)")).strip()]
     contrib = IDIV("p.cash * e.n_links", "o.w")
     dshare = IDIV("(SELECT dm FROM od{r})", "(SELECT n FROM nn)")
     tpl = """

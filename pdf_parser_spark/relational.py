@@ -164,6 +164,41 @@ def TOKS_CTE(d: str, cols: str = "doc_id", alias: str = "toks",
 )""".format(a=alias, c=cols, s=src)
 
 
+def POS_TOKS_CTE(d: str, cols: str = "doc_id",
+                 src: str = "documents") -> str:
+    """The positional form of TOKS_CTE: ``toks(cols…, pos, w)`` with
+    the 0-based token position (DuckDB's 1-based subscripts shifted
+    down by one, so both engines number tokens alike)."""
+    if d == SPARK:
+        return """
+toks AS (
+  SELECT {c}, pos, w FROM {s}
+  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
+)""".format(c=cols, s=src)
+    return """
+ws AS (SELECT {c}, string_split(text, ' ') AS ws FROM {s}),
+toks AS (SELECT {c}, unnest(ws) AS w,
+                generate_subscripts(ws, 1) - 1 AS pos
+         FROM ws)""".format(c=cols, s=src)
+
+
+def WPOS_CTE(d: str, src: str = "documents") -> str:
+    """``wpos(doc_id, pos, w)``: the tokens of ``src`` with their
+    0-based positions, the one-CTE spelling of POS_TOKS_CTE."""
+    if d == SPARK:
+        return """wpos AS (
+  SELECT doc_id, pos, w FROM {s}
+  LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w
+)""".format(s=src)
+    return """wpos AS (
+  SELECT doc_id, u.pos - 1 AS pos, u.w
+  FROM (SELECT doc_id,
+          unnest(string_split(text, ' ')) AS w,
+          generate_subscripts(string_split(text, ' '), 1) AS pos
+        FROM {s}) u(doc_id, w, pos)
+)""".format(s=src)
+
+
 def PRINTF(d: str) -> str:
     return "format_string" if d == SPARK else "printf"
 

@@ -13,10 +13,17 @@ additionally cross-checked against the Python engine in tests
 from __future__ import annotations
 
 from .relational import (
-    DUCK, SPARK, AMOUNT_PATTERN, LEN, LET, PRINTF, REALL, REREPL, RLIKE,
-    lit, _signed_first_amount,
+    DUCK, SPARK, AMOUNT_PATTERN, LEN, LET, ORD_CONCAT, PRINTF, REALL,
+    REREPL, RLIKE, direction_case, lit, _signed_first_amount,
 )
 from .relational import with_lines as _with_lines
+
+
+# a statement-period phrase ("march 3, 2024 through ..."): the Chase
+# and Citi block gates drop the summary blocks that carry one
+_MONTH_THROUGH = (r"\b(january|february|march|april|may|june|july|august"
+                  r"|september|october|november|december)"
+                  r"\s+\d{1,2},\s+\d{4}\s+through\s+")
 
 
 def with_lines(body: str, d: str) -> str:
@@ -224,9 +231,7 @@ SELECT doc_id,
   CASE WHEN amount < 0 THEN 'out' ELSE 'in' END AS direction
 FROM parsed WHERE amount IS NOT NULL
 """.format(isdate=RLIKE("line", r"^\s*\d{1,2}/\d{1,2}(/\d{2,4})?\b", d),
-           cat=("string_agg(line, ' ' ORDER BY line_no)" if d == DUCK else
-                "concat_ws(' ', transform(array_sort(collect_list("
-                "struct(line_no as o, line as v))), x -> x.v))"),
+           cat=ORD_CONCAT("line", " ", "line_no", d),
            p=p, dp=lit(date_pat, d), toks=toks,
            strip_tail=REREPL("block_text",
                              r"\s*" + AMOUNT_PATTERN + r"\s*$", "", d),
@@ -633,9 +638,7 @@ def _chase_block_ctes(d: str) -> tuple:
     inner join.  Halves the plan: both join sides re-derived the whole
     stmt_lines→classification pipeline under Catalyst CTE inlining
     (plans/r06/chase_relational_before.txt: 4 corpus scans)."""
-    ordcat = ("string_agg(line, ' ' ORDER BY line_no)" if d == DUCK else
-              "concat_ws(' ', transform(array_sort(collect_list("
-              "struct(line_no as o, line as v))), x -> x.v))")
+    ordcat = ORD_CONCAT("line", " ", "line_no", d)
     if d == SPARK:
         chain = """runs AS (
   SELECT doc_id, grp, line_no, line, is_date, is_noise, is_sec,
@@ -711,9 +714,7 @@ def q_chase(d: str) -> str:
     against the Python engine on identical inputs."""
     dp = lit(r"^(\d{1,2})/(\d{1,2})(\s|$)", d)
     p = PRINTF(d)
-    ordcat = ("string_agg(line, ' ' ORDER BY line_no)" if d == DUCK else
-              "concat_ws(' ', transform(array_sort(collect_list("
-              "struct(line_no as o, line as v))), x -> x.v))")
+    ordcat = ORD_CONCAT("line", " ", "line_no", d)
     toks = REALL("body", AMOUNT_PATTERN, d)
     _chase_blocks, _chase_gate_head, _chase_opener_gate = \
         _chase_block_ctes(d)
@@ -833,11 +834,7 @@ WHERE {mindesc}
            chase_opener_gate=_chase_opener_gate,
            legal_block=_contains_any("lower(b.body)", _CHASE_LEGAL_BLOCK),
            hotline=RLIKE("b.body", r"1-\d{3}-\d{3}-\d{4}", d),
-           month_through=RLIKE(
-               "lower(b.body)",
-               r"\b(january|february|march|april|may|june|july|august"
-               r"|september|october|november|december)"
-               r"\s+\d{1,2},\s+\d{4}\s+through\s+", d),
+           month_through=RLIKE("lower(b.body)", _MONTH_THROUGH, d),
            tx_words=_contains_any("lower(b.body)", _CHASE_TX_WORDS),
            amount=amount,
            clean=chase_clean_sql("body", d),
@@ -1236,7 +1233,7 @@ parsed AS (
   WHERE {ntok} > 0
 )""".format(p=p, dparts=dparts, toks=toks, lt=last_tok, wo=wo_date,
             bare_last=bare_last, ntok=ntok)
-    ordcat = "string_agg(line, ' ' ORDER BY line_no)"
+    ordcat = ORD_CONCAT("line", " ", "line_no", d)
     return """openers AS (
   SELECT doc_id, grp, line_no AS opener_line, section AS block_section
   FROM grouped WHERE is_opener = 1
@@ -1447,27 +1444,17 @@ parsed AS (
 )""".format(ordcat=ordcat, strip_tail=strip_tail, toks=toks, amt=amt)
 
 
-@query("mercury_relational")
-def q_mercury(d: str) -> str:
-    """The COMPLETE Mercury parser (mercury.py:5-32) relationally:
-    generic block sweep but with Mmm-D date PRIORITY, date taken from
-    the opener line (long dates match anywhere in it).  Mmm dates
-    injected in-plan."""
+def _block_sweep_sql(d: str, date_order: str, src: str) -> str:
+    """The marked→blocked→parsed sweep Mercury and Generic share: a
+    line of ``src`` whose date (``date_order`` priority) parses opens
+    a block, and each block's first amount becomes one transaction."""
     toks = REALL("body", AMOUNT_PATTERN, d)
     strip_tail = REREPL("body", r"\s*" + AMOUNT_PATTERN + r"\s*$", "", d)
-    ordcat = ("string_agg(line, ' ' ORDER BY line_no)" if d == DUCK else
-              "concat_ws(' ', transform(array_sort(collect_list("
-              "struct(line_no as o, line as v))), x -> x.v))")
-    return with_lines("""
-, mercd AS (
-  SELECT doc_id, line_no,
-    CASE WHEN line_no % 7 = 3 THEN 'Feb 7 ' || line ELSE line END AS line
-  FROM stmt_lines
-),
-marked AS (
+    ordcat = ORD_CONCAT("line", " ", "line_no", d)
+    return """marked AS (
   SELECT doc_id, line_no, line,
     {dval} AS date_val
-  FROM mercd
+  FROM {src}
 ),
 blocked AS (
   SELECT doc_id, line_no, line, date_val,
@@ -1483,12 +1470,25 @@ SELECT doc_id,
   date, description, abs(amount) AS amount,
   {dircase} AS direction
 FROM parsed WHERE amount IS NOT NULL
-""".format(dval=_date_value_sql("line", "mmm_first", d),
+""".format(dval=_date_value_sql("line", date_order, d), src=src,
            blocktail=_opener_block_tail(
                d, ordcat, strip_tail, toks, _signed_first_amount(d)),
-           dircase=__import__(
-               "pdf_parser_spark.relational", fromlist=["direction_case"]
-           ).direction_case("description", d)), d)
+           dircase=direction_case("description", d))
+
+
+@query("mercury_relational")
+def q_mercury(d: str) -> str:
+    """The COMPLETE Mercury parser (mercury.py:5-32) relationally:
+    generic block sweep but with Mmm-D date PRIORITY, date taken from
+    the opener line (long dates match anywhere in it).  Mmm dates
+    injected in-plan."""
+    return with_lines("""
+, mercd AS (
+  SELECT doc_id, line_no,
+    CASE WHEN line_no % 7 = 3 THEN 'Feb 7 ' || line ELSE line END AS line
+  FROM stmt_lines
+),
+""" + _block_sweep_sql(d, "mmm_first", "mercd"), d)
 
 
 @query("generic_relational")
@@ -1502,37 +1502,8 @@ def q_generic_parse(d: str) -> str:
     the engine's sweep does.  Cross-checked against the Python engine
     in tests AND tools/fuzz_relational.py (the former slash-only gate
     diverged on month-name opener lines)."""
-    toks = REALL("body", AMOUNT_PATTERN, d)
-    strip_tail = REREPL("body", r"\s*" + AMOUNT_PATTERN + r"\s*$", "", d)
-    ordcat = ("string_agg(line, ' ' ORDER BY line_no)" if d == DUCK else
-              "concat_ws(' ', transform(array_sort(collect_list("
-              "struct(line_no as o, line as v))), x -> x.v))")
-    return with_lines("""
-, marked AS (
-  SELECT doc_id, line_no, line,
-    {dval} AS date_val
-  FROM stmt_lines
-),
-blocked AS (
-  SELECT doc_id, line_no, line, date_val,
-    SUM(CASE WHEN date_val IS NOT NULL THEN 1 ELSE 0 END)
-      OVER (PARTITION BY doc_id ORDER BY line_no
-            ROWS UNBOUNDED PRECEDING) AS block_id
-  FROM marked
-),
-{blocktail}
-SELECT doc_id,
-  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY date, block_id)
-       AS INT) - 1 AS tx_index,
-  date, description, abs(amount) AS amount,
-  {dircase} AS direction
-FROM parsed WHERE amount IS NOT NULL
-""".format(dval=_date_value_sql("line", "slash_first", d),
-           blocktail=_opener_block_tail(
-               d, ordcat, strip_tail, toks, _signed_first_amount(d)),
-           dircase=__import__(
-               "pdf_parser_spark.relational", fromlist=["direction_case"]
-           ).direction_case("description", d)), d)
+    return with_lines("\n, " + _block_sweep_sql(d, "slash_first",
+                                                 "stmt_lines"), d)
 
 
 def _alias_generic(name: str, ref: str):
@@ -1797,9 +1768,7 @@ FROM emitted
            invalid=_wf_invalid_sql("low", "line", d),
            noise=RLIKE("line", _WF_NO_TX, d),
            dval=_date_value_sql("line", "slash_first", d),
-           ordcat=("string_agg(line, ' ' ORDER BY line_no)" if d == DUCK
-                   else "concat_ws(' ', transform(array_sort(collect_list("
-                        "struct(line_no as o, line as v))), x -> x.v))"),
+           ordcat=ORD_CONCAT("line", " ", "line_no", d),
            body_invalid=_wf_invalid_sql("lower(b.body)", "b.body", d),
            kexpr=kexpr,
            ntok=ntok, prefix=prefix, toks=toks, segs=segs,
@@ -2129,16 +2098,9 @@ FROM unioned
            noise=_citi_noise_sql("low", "line", d),
            datep=datep, p=p,
            carry=LAST_IGNULLS("sec_marker", "line_no", "doc_id", d),
-           ordcat=("string_agg(trim(line), ' ' ORDER BY line_no)"
-                   if d == DUCK else
-                   "concat_ws(' ', transform(array_sort(collect_list("
-                   "struct(line_no as o, trim(line) as v))), x -> x.v))"),
+           ordcat=ORD_CONCAT("trim(line)", " ", "line_no", d),
            legal=_contains_any("lower(b.body)", _CITI_LEGAL),
-           month_through=RLIKE(
-               "lower(b.body)",
-               r"\b(january|february|march|april|may|june|july|august"
-               r"|september|october|november|december)"
-               r"\s+\d{1,2},\s+\d{4}\s+through\s+", d),
+           month_through=RLIKE("lower(b.body)", _MONTH_THROUGH, d),
            bal_words=_contains_any("lower(b.body)", _CITI_BAL_WORDS),
            meta_words=_contains_any("lower(b.body)", _CITI_META_WORDS),
            meta_co=RLIKE("b.body", r"^\d{1,2}/\d{1,2}\s+[A-Z\s]+"

@@ -86,6 +86,24 @@ def _record_bytes(url: str, date: str, html: bytes) -> bytes:
     return warc_headers + http + b"\r\n\r\n"
 
 
+def _write_bucket(out_dir: str, k: int, rows, compress: bool) -> str:
+    """Write WARC file ``k`` of ``out_dir``: the ``(doc_id, text)`` rows
+    in doc_id order, one gzip member per record when compressed."""
+    buf = io.BytesIO()
+    for doc_id, text in sorted(rows):
+        rec = _record_bytes(synth_url(doc_id), synth_date(doc_id),
+                            synth_html(doc_id, text).encode("utf-8"))
+        if compress:
+            # mtime=0 → deterministic bytes; one gzip member per record
+            rec = gzip.compress(rec, mtime=0)
+        buf.write(rec)
+    path = os.path.join(out_dir, "crawl-%05d%s"
+                        % (k, ".warc.gz" if compress else ".warc"))
+    with open(path, "wb") as f:
+        f.write(buf.getvalue())
+    return path
+
+
 def write_warc_files(rows, out_dir: str, n_files: int = 4,
                      compress: bool = True) -> list:
     """Render ``(doc_id, text)`` rows into n_files WARC files
@@ -94,22 +112,11 @@ def write_warc_files(rows, out_dir: str, n_files: int = 4,
     generator: runs driver-side on purpose (the scale path is the
     READER; crawls arrive as WARC, they are not produced by us)."""
     os.makedirs(out_dir, exist_ok=True)
-    buckets: dict = {k: io.BytesIO() for k in range(n_files)}
-    for doc_id, text in sorted(rows):
-        rec = _record_bytes(synth_url(doc_id), synth_date(doc_id),
-                            synth_html(doc_id, text).encode("utf-8"))
-        if compress:
-            # mtime=0 → deterministic bytes; one gzip member per record
-            rec = gzip.compress(rec, mtime=0)
-        buckets[doc_id % n_files].write(rec)
-    ext = ".warc.gz" if compress else ".warc"
-    paths = []
-    for k, buf in buckets.items():
-        p = os.path.join(out_dir, "crawl-%05d%s" % (k, ext))
-        with open(p, "wb") as f:
-            f.write(buf.getvalue())
-        paths.append(p)
-    return paths
+    buckets: dict = {k: [] for k in range(n_files)}
+    for doc_id, text in rows:
+        buckets[doc_id % n_files].append((doc_id, text))
+    return [_write_bucket(out_dir, k, bucket_rows, compress)
+            for k, bucket_rows in buckets.items()]
 
 
 def write_warc_files_distributed(df, out_dir: str, n_files: int = 4,
@@ -127,24 +134,13 @@ def write_warc_files_distributed(df, out_dir: str, n_files: int = 4,
     from pyspark.sql import functions as F
 
     os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.gz" if compress else ".warc"
 
     def write_partition(rows):
         by_bucket: dict = {}
         for r in rows:
             by_bucket.setdefault(r.bucket, []).append((r.doc_id, r.text))
         for k, bucket_rows in by_bucket.items():
-            buf = io.BytesIO()
-            for doc_id, text in sorted(bucket_rows):
-                rec = _record_bytes(
-                    synth_url(doc_id), synth_date(doc_id),
-                    synth_html(doc_id, text).encode("utf-8"))
-                if compress:
-                    rec = gzip.compress(rec, mtime=0)
-                buf.write(rec)
-            with open(os.path.join(out_dir, "crawl-%05d%s" % (k, ext)),
-                      "wb") as f:
-                f.write(buf.getvalue())
+            _write_bucket(out_dir, k, bucket_rows, compress)
 
     (df.select("doc_id", "text",
                F.pmod(F.col("doc_id"), F.lit(n_files)).alias("bucket"))
@@ -267,32 +263,32 @@ def read_warc(spark, path: str):
                             for r in _parse_warc_blob(path, blob)))
 
 
-def warc_ingest_demo(spark, out_dir: str = None):
+def warc_ingest_demo(spark):
     """Registered end-to-end lifecycle: render ``documents`` into real
     gzip-member WARC files, read them back through the binaryFile +
     flat_map_rows path, and emit the verifiable projection
     (url, warc_date, n_bytes, html_md5).  The DuckDB oracle rebuilds
     identical rows from ``documents`` with pure string math — so
     framing, CRLF handling, gzip member iteration, and Content-Length
-    arithmetic are all hash-checked.
-
-    The default root is a fresh ``mkdtemp`` per call (a fixed shared
-    path would let two concurrent sessions rmtree each other's files
-    mid-read); the chosen root is recorded on the function object
-    (``warc_ingest_demo.last_root``) for tests that inspect the
-    artifact.  Demo dirs live in /tmp and die with it."""
+    arithmetic are all hash-checked.  The WARC files live in a
+    temporary directory of their own, removed once the output is
+    checkpointed."""
     import tempfile
 
     from pyspark.sql import functions as F
 
-    root = out_dir or tempfile.mkdtemp(prefix="pdf_parser_spark_warc_")
-    warc_ingest_demo.last_root = root
-    # executor-side render (round 6): no driver collect of the corpus —
-    # the fixture files are written by a foreachPartition pass, keeping
-    # the no-unbounded-collect invariant absolute even in demo paths
-    write_warc_files_distributed(
-        spark.table("documents").select("doc_id", "text"), root)
-    return (read_warc(spark, root)
+    from .stages import scope
+
+    with scope(spark) as st, tempfile.TemporaryDirectory(
+            prefix="pdf_parser_spark_warc_") as root:
+        # executor-side render (round 6): no driver collect of the
+        # corpus — the fixture files are written by a foreachPartition
+        # pass, keeping the no-unbounded-collect invariant absolute even
+        # in demo paths
+        write_warc_files_distributed(
+            spark.table("documents").select("doc_id", "text"), root)
+        return st.result(
+            read_warc(spark, root)
             .filter(F.col("error").isNull())
             .select(
                 "url", "warc_date",

@@ -82,3 +82,29 @@ def test_all_queries_order_ignores_hash_seed():
         orders.append(json.loads(res.stdout.strip().splitlines()[-1]))
     assert orders[0] == orders[1]
     assert orders[0][0] == orders[0][1]
+
+
+# LINE_PARTITIONS is read from the host's CPU count at import and is
+# baked into the Spark texts of the line-level parsers, so the texts are
+# hashed in a child process with the width pinned.
+_SPARK_TEXTS = (
+    "import hashlib, importlib.util, json\n"
+    "spec = importlib.util.spec_from_file_location('se', %r)\n"
+    "m = importlib.util.module_from_spec(spec)\n"
+    "spec.loader.exec_module(m)\n"
+    "rows = sorted([k, v['spark'].replace(str(m._REPO), '<repo>')]\n"
+    "              for k, v in m.QUERY_SQL.items())\n"
+    "print(len(rows), hashlib.sha256(json.dumps(rows).encode())"
+    ".hexdigest())\n"
+    % str(REPO / "__spark_entry__.py"))
+
+
+def test_spark_text_fingerprint():
+    res = subprocess.run(
+        [sys.executable, "-c", _SPARK_TEXTS], capture_output=True,
+        text=True, timeout=300, check=True,
+        env={**os.environ, "SPARK_GRAFT_LINE_PARTITIONS": "16"})
+    n, digest = res.stdout.strip().splitlines()[-1].split()
+    assert int(n) == 161
+    assert digest == (
+        "d783d1c0ea6b194d61bc0c2c5aaff5a544c00bbe9f0c66e06cb28fdd618cdc97")

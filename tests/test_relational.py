@@ -121,6 +121,22 @@ def test_oracle_parity(spark, duck, entry_mod, name):
     assert rdds1 - rdds0 <= 1
 
 
+@pytest.mark.parametrize("name", [
+    "bm25_serve_persisted", "bm25_serve_compacted",
+    "phrase_serve_persisted", "warc_ingest", "ann_ivf_amortized"])
+def test_lifecycle_rows_remove_their_artifacts(spark, entry_mod, tmp_path,
+                                               monkeypatch, name):
+    """A persisted-lifecycle row writes its index or WARC files under a
+    temporary root and removes it before returning; the returned rows
+    stay readable without it."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = entry_mod.all_queries()[name](spark, SF_DIR).collect()
+    assert rows
+    assert not list(tmp_path.glob("pdf_parser_spark_*"))
+
+
 def test_relational_generic_matches_engine(spark, entry_mod):
     """Differential: relational plan vs Python engine on identical
     derived lines."""
@@ -999,16 +1015,16 @@ def test_text_index_incremental_append_and_serve(spark, entry_mod, duck,
     assert got_full != got_partial   # the append actually changed ranks
 
 
-def test_bm25_serve_plan_reads_index_only(spark, entry_mod):
+def test_bm25_serve_plan_reads_index_only(spark, tmp_path):
     """Scale gate for the serve path: the plan scans the persisted
     index with shard partition-pruning and broadcasts the query-term
     side — and never rescans the corpus (that is the whole point of
     building the index)."""
-    from pdf_parser_spark.ops.retrieval import bm25_index_demo, bm25_serve
+    from pdf_parser_spark.ops.retrieval import bm25_serve, text_index_append
 
-    # the demo records its fresh per-call root on the function object
-    entry_mod.all_queries()["bm25_serve_persisted"](spark, SF_DIR)
-    root = bm25_index_demo.last_root
+    root = str(tmp_path / "bm25_index")
+    text_index_append(spark, root, spark.read.parquet(
+        SF_DIR + "/documents.parquet").select("doc_id", "text"))
     serve = bm25_serve(spark, root)
     plan = serve._jdf.queryExecution().executedPlan().toString()
     assert "documents" not in plan

@@ -151,21 +151,20 @@ def test_ivf_index_append_then_serve_exact(spark, tmp_path):
     assert got == sorted(want)
 
 
-def test_amortized_ivf_frames_keep_their_own_index(spark):
-    """Each call persists its index under a fresh root: building the
-    frame twice, then collecting the second and after it the first,
-    must not read files the second call's index write deleted."""
-    import shutil
+def test_amortized_ivf_frames_keep_their_own_index(spark, tmp_path,
+                                                   monkeypatch):
+    """Each call's output survives the removal of its own index and a
+    later call's: two frames, collected second then first, agree, and
+    no index root is left behind."""
+    import tempfile
 
     from pdf_parser_spark.ops.similarity import amortized_ivf_demo
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     spark.read.parquet(SF_DIR + "/embeddings.parquet") \
         .createOrReplaceTempView("embeddings")
     first = amortized_ivf_demo(spark)
-    first_root = amortized_ivf_demo.last_root
     second = amortized_ivf_demo(spark)
-    assert amortized_ivf_demo.last_root != first_root
     rows = sorted(map(tuple, second.collect()))
     assert sorted(map(tuple, first.collect())) == rows and rows
-    for root in (first_root, amortized_ivf_demo.last_root):
-        shutil.rmtree(root)
+    assert not list(tmp_path.glob("pdf_parser_spark_*"))

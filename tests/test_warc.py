@@ -58,6 +58,26 @@ def test_warc_roundtrip_gzip_members(spark, tmp_path):
     assert all(r.error is None for r in got)
 
 
+@pytest.mark.parametrize("compress", [False, True])
+def test_warc_writers_render_identical_files(spark, tmp_path, compress):
+    """The executor-side writer produces the driver-side writer's files
+    byte for byte: same names, same record order, same gzip framing."""
+    from pdf_parser_spark.warc import (
+        write_warc_files, write_warc_files_distributed,
+    )
+
+    rows = _docs(spark)
+    local, dist = tmp_path / "local", tmp_path / "dist"
+    write_warc_files(rows, str(local), n_files=3, compress=compress)
+    write_warc_files_distributed(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        str(dist), n_files=3, compress=compress)
+    names = sorted(os.listdir(local))
+    assert len(names) == 3 and sorted(os.listdir(dist)) == names
+    for name in names:
+        assert (local / name).read_bytes() == (dist / name).read_bytes()
+
+
 def test_warc_malformed_records(spark, tmp_path):
     """Breakage becomes error rows, never task failures: a truncated
     payload, a record without Content-Length, and unframed garbage
